@@ -87,10 +87,7 @@ object Bench {
     // bench measures is byte-for-byte the engine Verify verifies.
     val spark = GraftSession.local(cpus)
     val rt = Runtime.getRuntime
-    // SPARK_GRAFT_BENCH_NOFIX=1 disables the big-heap GC-tax mitigation
-    // below (the untimed post-GC settle) — the A/B hook that measured it
-    val bigHeap = rt.maxMemory() > 32L * 1024 * 1024 * 1024 &&
-      !sys.env.contains("SPARK_GRAFT_BENCH_NOFIX")
+    val bigHeap = rt.maxMemory() > 32L * 1024 * 1024 * 1024
     // Large-heap GC-tax fix, round 12 (VERDICT r11 #1): the heap is now
     // pre-COMMITTED at JVM start (-Xms = -Xmx + AlwaysPreTouch >= 32g,
     // build.sbt javaOptions) — G1 never shrinks committed memory below
@@ -260,22 +257,15 @@ object Bench {
         // machine load.
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = true))
-        // escape hatch for heap-behavior experiments: a full GC on a very
-        // large heap UNCOMMITS memory back to the OS (G1 resizes to its
-        // free-ratio band), and the next heavy sample re-pays the page
-        // commit+zero cost inside its timed region — set
-        // SPARK_GRAFT_BENCH_NOGC=1 to measure without the per-sample GC
-        if (!sys.env.contains("SPARK_GRAFT_BENCH_NOGC")) {
-          System.gc()
-          // settle (VERDICT r10 #1b): System.gc() returns when the STW
-          // phase ends, but G1 follow-up work (reference processing,
-          // region cleanup, heap resize bookkeeping) can still be in
-          // flight — on a 90 GiB heap that tail landed inside the next
-          // timed sample as 0.4-2.3 s of gc_ms on the wide-agg keys.
-          // A short untimed pause lets it finish before the timer starts;
-          // big heaps only, so 16g readings keep their historical config.
-          if (bigHeap) Thread.sleep(250)
-        }
+        System.gc()
+        // settle (VERDICT r10 #1b): System.gc() returns when the STW
+        // phase ends, but G1 follow-up work (reference processing,
+        // region cleanup, heap resize bookkeeping) can still be in
+        // flight — on a 90 GiB heap that tail landed inside the next
+        // timed sample as 0.4-2.3 s of gc_ms on the wide-agg keys.
+        // A short untimed pause lets it finish before the timer starts;
+        // big heaps only, so 16g readings keep their historical config.
+        if (bigHeap) Thread.sleep(250)
         (dt, gcDt)
       }
       // and a GC per key: broadcast blocks + shuffle state from earlier

@@ -60,8 +60,10 @@ import graft.ops.{Composite, RelationalOracles}
 object SqlCatalog {
 
   /** Register every harness table under its canonical name. Idempotent;
-    * temp views are metadata only (the scans stay pushed-down parquet
-    * reads — no materialization). */
+    * the scans stay pushed-down parquet reads (no materialization). The
+    * first call in a session runs one schema-inference job per table;
+    * [[graft.core.Tables]] memoizes the schemas, so later calls run no
+    * Spark job. */
   def registerViews(spark: SparkSession, sfDir: String): Unit =
     Tables.All.foreach { t =>
       Tables(spark, sfDir, t).createOrReplaceTempView(t)

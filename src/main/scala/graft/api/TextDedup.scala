@@ -513,6 +513,8 @@ object TextDedup {
     * Convergence is detected via the label-sum invariant: labels only ever
     * decrease, so the sum of labels is strictly monotone while any label
     * changes — one cheap aggregate per round instead of a self-join diff.
+    * The sum is exact `DECIMAL(38,0)` (64-bit ids summed as BIGINT would
+    * overflow past `Long.MaxValue`) and 0 on an empty pair list.
     * Throws if `maxIter` rounds pass without convergence (never silently
     * returns wrong components). Output: (id, component) — component = min
     * doc id reachable. */
@@ -528,8 +530,9 @@ object TextDedup {
       .distinct())
     var labels = trunc(sym.select(col("x").as("id")).distinct()
       .withColumn("component", col("id")))
-    def labelSum(df: DataFrame): Long =
-      df.agg(sum(col("component"))).head.getLong(0)
+    def labelSum(df: DataFrame): java.math.BigDecimal =
+      df.agg(coalesce(sum(col("component").cast("decimal(38,0)")), lit(0)))
+        .head.getDecimal(0)
     var prevSum = labelSum(labels)
     var converged = false
     var i = 0
@@ -549,7 +552,7 @@ object TextDedup {
         .select(prop("id"),
           coalesce(col("__pcomp"), prop("component")).as("component")))
       val s = labelSum(updated)
-      converged = s == prevSum
+      converged = s.compareTo(prevSum) == 0
       prevSum = s
       labels = updated
       i += 1

@@ -27,12 +27,7 @@ import org.apache.spark.sql.DataFrame
   * results are unchanged — the oracle gate re-checks every key.
   */
 object Fanout {
-  /** A/B hook (the SPARK_GRAFT_BENCH_NOFIX precedent): set
-    * SPARK_GRAFT_NO_FANOUT=1 to measure every fanout site as identity. */
-  private val disabled = sys.env.contains("SPARK_GRAFT_NO_FANOUT")
-
   def fanout(df: DataFrame): DataFrame = {
-    if (disabled) return df
     val np = df.sparkSession.sessionState.conf.numShufflePartitions
     if (df.rdd.getNumPartitions < np) df.repartition(np) else df
   }

@@ -1,7 +1,12 @@
 package graft.core
 
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the harness tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -12,10 +17,41 @@ import org.apache.spark.sql.functions._
   * hand-rolled 4 KiB page cache (`db.cpp:127-167`). At cluster scale each
   * table is a directory of many Parquet files; `local[n]` reads the same
   * plan shape against a single file.
+  *
+  * Like `db_open`, a table's layout is learned once per session: the first
+  * read of a file infers its Parquet schema (one Spark job reading the
+  * footer) and every later read passes that schema back to the reader, so
+  * re-registering views or rebuilding a query runs no schema job. The memo
+  * is keyed by the file's qualified path, modification time and length; a
+  * file rewritten in place has a new mtime or length, so its schema is
+  * inferred afresh (a directory table's mtime moves when a file is added,
+  * removed or renamed in it, as Spark's writers do). Each call still
+  * returns a new DataFrame with its own file listing, so self-joins, plans
+  * and statistics are those of a plain `spark.read.parquet`.
   */
 object Tables {
   val All: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Inferred schemas per session; weak keys, so a discarded session drops
+    * its memo with it. */
+  private val schemas = Collections.synchronizedMap(
+    new WeakHashMap[SparkSession, ConcurrentHashMap[(String, Long, Long), StructType]]())
+
+  /** A fresh parquet read of `path`, with its schema from the memo. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = (st.getPath.toString, st.getModificationTime, st.getLen)
+    val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+    Option(memo.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        memo.put(key, df.schema)
+        df
+    }
+  }
 
   /** Read one harness table from `sfDir`.
     *
@@ -41,7 +77,7 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(All.contains(name), s"unknown table: $name")
     if (name == "events") {
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw = readParquet(spark, s"$sfDir/events.parquet")
       val ts = raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           timestamp_micros(expr("ts div 1000"))
@@ -50,7 +86,7 @@ object Tables {
         case _ => col("ts")
       }
       raw.withColumn("ts", ts)
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else readParquet(spark, s"$sfDir/$name.parquet")
     // r14 note (guide §2.5, measured and REVERTED): a reader-level
     // round-robin fan-out for documents/embeddings (their single-row-
     // group files plan 1-task scans) was A/B'd across the full bench —

@@ -1503,14 +1503,11 @@ object LlmPipeline {
     // internal eager checkpoints split them across separate jobs, so
     // ReuseExchange cannot share the normalize+groupBy subtree; without
     // the barrier the corpus scan + dedup shuffle ran three times.
-    val exactLazy = norm
+    val exact = graft.api.CheckpointStrategy.Local.materialize(norm
       .groupBy(md5(col("ntext")).as("__h"))
       .agg(min(struct(col("doc_id"), col("ntext"), col("n_tok"))).as("keep"))
       .select(col("keep.doc_id").as("doc_id"), col("keep.ntext").as("ntext"),
-        col("keep.n_tok").as("n_tok"))
-    val exact =
-      if (sys.env.contains("SPARK_GRAFT_NO_E2E_BARRIER")) exactLazy
-      else graft.api.CheckpointStrategy.Local.materialize(exactLazy)
+        col("keep.n_tok").as("n_tok")))
     // stage 3: near-dedup the incoming variant batch (band >= 200000)
     // against the base corpus (the exact-dup family is already gone —
     // identical after normalization — so only the truncated variants

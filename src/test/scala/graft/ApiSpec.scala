@@ -399,6 +399,26 @@ class ApiSpec extends SparkSpecBase {
     assert(run(graft.api.CheckpointStrategy.Reliable) === expect)
   }
 
+  test("connectedComponents returns no rows for an empty pair frame") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(TextDedup.connectedComponents(pairs, "a", "b").collect().isEmpty)
+  }
+
+  test("connectedComponents handles ids whose sum passes Long.MaxValue") {
+    val s = spark
+    import s.implicits._
+    // six ids near 4e18 sum to ~2.4e19: a BIGINT label sum would overflow
+    val base = 4000000000000000000L
+    val pairs = Seq((base + 1, base), (base + 2, base + 3), (base + 5, base + 4))
+      .toDF("a", "b")
+    val expect = (0L to 5L).map(i => (base + i) -> (base + i - i % 2)).toMap
+    val out = TextDedup.connectedComponents(pairs, "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out === expect)
+  }
+
   test("pagerank and semantic dedup agree across Local and Reliable checkpointing") {
     // the round-6 gap: every iterative/reused-lineage op must take the
     // strategy dial, not hard-code localCheckpoint — on a cluster, Local
