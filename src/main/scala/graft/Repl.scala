@@ -3,6 +3,10 @@ package graft
 import java.io.PrintStream
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Ingest, Meta}
 
@@ -38,51 +42,85 @@ import graft.core.{Ingest, Meta}
   *     physical dual of `.btree`).
   *
   * Persistence mirrors `db_open`/`db_close` (`db.cpp:546,519`): rows load
-  * from the db path at open and flush back at `.exit` — the
-  * keeps-data-after-closing spec (`spec/main_spec.rb:93-109`).
+  * from the db path at open (one job: the db's fixed schema, sorted by
+  * insertion index on the driver) and are written back once at `.exit`,
+  * as `db_close` flushes its pages once — only if the session changed the
+  * table or the file does not exist yet. A read-only session leaves the
+  * file untouched. This is the keeps-data-after-closing spec
+  * (`spec/main_spec.rb:93-109`).
   *
   * Scale note: the REPL is a driver-side interactive shell by contract —
-  * its `users` table is REPL state (like the reference's single page),
-  * while arbitrary SQL it accepts runs as normal distributed plans.
+  * its `users` table is REPL state (like the reference's single page):
+  * an insert appends a row in driver memory, as `leaf_node_insert`
+  * writes into the cached page, and runs no Spark work. The `users` view
+  * is a one-partition local relation over those rows, rebuilt on demand
+  * before the next line that goes through Spark (SQL, `.schema`).
+  * Arbitrary SQL the REPL accepts runs as normal distributed plans.
   */
 object Repl {
+
+  private val UsersSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("username", StringType),
+    StructField("email", StringType)))
+
+  /** The persisted db file: the users table plus its insertion index. */
+  private val DbSchema =
+    StructType(StructField("idx", LongType, nullable = false) +: UsersSchema.fields)
 
   /** One REPL session over explicit input/output streams — the testable
     * core (`ReplSpec` drives it with scripted stdin exactly like the
     * reference's `run_script`). */
   def loop(spark: SparkSession, dbPath: String, sfDir: Option[String],
       in: Iterator[String], out: PrintStream): Unit = {
-    import spark.implicits._
     sfDir.foreach(d => SqlCatalog.registerViews(spark, d))
 
-    // db_open: load the persisted table (insertion order preserved via idx)
-    val buf = scala.collection.mutable.ArrayBuffer[Ingest.User]()
+    // the users table, in insertion order, as the view's Catalyst rows
+    val users = scala.collection.mutable.ArrayBuffer[InternalRow]()
+    def append(u: Ingest.User): Unit =
+      users += InternalRow(u.id, UTF8String.fromString(u.username),
+        UTF8String.fromString(u.email))
+
+    // db_open: only flush writes the db, so its schema is known and read
+    // without inference; the rows are few and sorted by idx on the driver
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(dbPath)))
-      buf ++= spark.read.parquet(dbPath).orderBy("idx")
-        .select("id", "username", "email").as[Ingest.User].collect()
+    val exists = fs.exists(new org.apache.hadoop.fs.Path(dbPath))
+    if (exists)
+      spark.read.schema(DbSchema).parquet(dbPath).collect().sortBy(_.getLong(0))
+        .foreach(r => append(Ingest.User(r.getLong(1), r.getString(2), r.getString(3))))
 
-    def refreshView(): Unit =
-      spark.createDataset(buf.toSeq).toDF("id", "username", "email")
-        .createOrReplaceTempView("users")
-    refreshView()
+    // the users view lags the table until a line that goes through Spark
+    // needs it; one partition, so a global aggregate over it plans no
+    // Exchange
+    var viewStale = true
+    def refreshView(): Unit = if (viewStale) {
+      Bridge.replaceLocalView(spark, "users", UsersSchema, users.toIndexedSeq)
+      viewStale = false
+    }
 
-    def flush(): Unit =
-      spark.createDataset(buf.toSeq.zipWithIndex.map { case (u, i) =>
-        (i.toLong, u.id, u.username, u.email)
-      }).toDF("idx", "id", "username", "email")
-        .coalesce(1).write.mode("overwrite").parquet(dbPath)
+    // db_close: write the table once if this session changed it, or
+    // create the db file db_open would have created
+    var dirty = !exists
+    def flush(): Unit = if (dirty) {
+      val rows = users.indices.map { i =>
+        val u = users(i)
+        InternalRow(i.toLong, u.getLong(0), u.getUTF8String(1), u.getUTF8String(2))
+      }
+      Bridge.localFrame(spark, DbSchema, rows).write.mode("overwrite").parquet(dbPath)
+      dirty = false
+    }
 
     def renderRow(vs: Seq[Any]): String =
       vs.map(v => if (v == null) "NULL" else v.toString)
         .mkString("(", ", ", ")")
 
     var done = false
-    // flush-on-any-exit: .exit and end-of-input flush inline below, but a
-    // fatal error escaping the dispatch (meta-command I/O, OOM) must still
-    // persist this session's inserts — overwrite-mode flush is idempotent,
-    // so the extra call on the normal path is harmless (ADVICE r9)
+    // flush-on-any-exit: .exit and end-of-input flush inline below; a
+    // fatal error escaping the dispatch (meta-command I/O, OOM, a failing
+    // input) must still persist this session's inserts, so the finally
+    // flushes too. After a normal close the table is clean and that call
+    // writes nothing (ADVICE r9)
     try while (!done) {
       out.print("db > ")
       if (!in.hasNext) { flush(); done = true }
@@ -98,11 +136,12 @@ object Repl {
             }
           case ".btree" =>
             out.println("Tree:")
-            out.println(s"leaf (size ${buf.size})")
-            buf.zipWithIndex.foreach { case (u, i) =>
-              out.println(s"  - $i : ${u.id}")
+            out.println(s"leaf (size ${users.size})")
+            users.zipWithIndex.foreach { case (u, i) =>
+              out.println(s"  - $i : ${u.getLong(0)}")
             }
           case ".schema" =>
+            refreshView()
             out.println(s"users(id BIGINT, username STRING, email STRING)")
             spark.catalog.listTables().collect()
               .map(_.name).filterNot(_ == "users").sorted
@@ -117,16 +156,19 @@ object Repl {
           case _ =>
             out.println(s"Unrecognized command '$input'")
         } else if (input.trim == "select") {
-          buf.foreach(u => out.println(renderRow(Seq(u.id, u.username, u.email))))
+          users.foreach(u => out.println(renderRow(Seq(u.getLong(0),
+            u.getUTF8String(1), u.getUTF8String(2)))))
           out.println("Executed.")
         } else if (input.startsWith("insert")) {
           Ingest.parseLine(input) match {
             case Right(u) =>
-              buf += u; refreshView(); out.println("Executed.")
+              append(u); viewStale = true; dirty = true
+              out.println("Executed.")
             case Left(err) => out.println(err)
           }
         } else {
           try {
+            refreshView()
             val rows = spark.sql(input)
             rows.collect().foreach(r => out.println(renderRow(r.toSeq)))
             out.println("Executed.")

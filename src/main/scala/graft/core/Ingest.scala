@@ -24,6 +24,9 @@ object Ingest {
   val MaxUsername = 32 // db.cpp:38
   val MaxEmail = 255   // db.cpp:39
 
+  // compiled once: String.split compiles a multi-char regex on every call
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
   /** Parse + validate statement lines (columnar path, codegen'd): returns
     * (id, username, email, reject_reason) with reason = null for accepted
     * rows — the engine form of the REPL's per-statement error replies. */
@@ -56,7 +59,7 @@ object Ingest {
     * columnar path (IngestSpec pins the two surfaces agree on a grid of
     * inputs). Left = the reference's error reply, Right = the typed row. */
   def parseLine(line: String): Either[String, User] = {
-    val toks = line.trim.split("\\s+", -1)
+    val toks = Whitespace.split(line.trim, -1)
     def tok(i: Int): Option[String] =
       if (i < toks.length && toks(i).nonEmpty) Some(toks(i)) else None
     if (!tok(0).contains("insert"))

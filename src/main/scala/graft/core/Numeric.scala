@@ -47,6 +47,11 @@ object Numeric {
         org.apache.spark.sql.graft.Bridge.expression(a),
         org.apache.spark.sql.graft.Bridge.expression(b)))
 
+  /** `c` as DOUBLE: the cast the statistics keys apply to their exact
+    * integer or decimal aggregates before the one final IEEE expression. */
+  def dbl(c: Column): Column = c.cast(DoubleType)
+  def dbl(c: String): Column = dbl(col(c))
+
   /** SQL-side rendering of [[dsum]] for oracle queries. */
   def dsumSql(e: String): String =
     s"CAST(ROUND(SUM(CAST(($e) AS DECIMAL(20,8))), 2) AS DOUBLE)"

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.core.Bands
+import graft.core.Numeric.dbl
 import graft.core.{Tables => T}
 
 /** Corpus-curation operators — round-7c widening of the declared surface
@@ -168,7 +169,6 @@ object Curation {
     val m = xy.groupBy(col("lang")).agg(count(lit(1)).as("n_terms"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
-    def dbl(c: String): Column = col(c).cast("double")
     val nD = dbl("n_terms")
     val slope = (nD * dbl("sxy") - dbl("sx") * dbl("sy")) /
       (nD * dbl("sxx") - dbl("sx") * dbl("sx"))

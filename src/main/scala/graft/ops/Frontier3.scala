@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Numeric.dbl
 import graft.core.{Tables => T}
 
 /** Round-12 operator batch: the production ANN shape (IVF cell pruning ×
@@ -452,7 +453,6 @@ object Frontier3 {
       seg(a, col("y")).as("sa"), seg(!a, col("y")).as("sb"),
       segD(a, col("y").cast("decimal(38,0)") * col("y")).as("ssa"),
       segD(!a, col("y").cast("decimal(38,0)") * col("y")).as("ssb"))
-    def dbl(c: String) = col(c).cast("double")
     val ma = dbl("sa") / dbl("na"); val mb = dbl("sb") / dbl("nb")
     val va = (dbl("ssa") - dbl("sa") * dbl("sa") / dbl("na")) /
       (dbl("na") - 1.0)
@@ -511,7 +511,6 @@ object Frontier3 {
         sum(dec(col("x")) * dec(col("x"))).as("sxx"),
         sum(dec(col("y")) * dec(col("y"))).as("syy"),
         sum(dec(col("x")) * dec(col("y"))).as("sxy"))
-    def dbl(c: String): Column = col(c).cast("double")
     val rho = mom.select(col("event_type"), col("lag"),
       round((dbl("np") * dbl("sxy") - dbl("sx") * dbl("sy"))
         / (sqrt(dbl("np") * dbl("sxx") - dbl("sx") * dbl("sx"))

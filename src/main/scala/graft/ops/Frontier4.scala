@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Numeric.dsum
+import graft.core.Numeric.{dbl, dsum}
 import graft.core.{Tables => T}
 
 /** Round-13 operator batch: catalog statistics feeding the cost-based
@@ -144,7 +144,6 @@ object Frontier4 {
     val m = pairs.agg(count(lit(1)).as("n"),
       sum(col("dd")).as("sd"),
       sum(col("dd").cast("decimal(38,0)") * col("dd")).as("sdd"))
-    def dbl(c: String) = col(c).cast("double")
     val mean = dbl("sd") / dbl("n")
     val vr = (dbl("sdd") - dbl("sd") * dbl("sd") / dbl("n")) /
       (dbl("n") - 1.0)
@@ -221,7 +220,6 @@ object Frontier4 {
       sum(col("in_a")).as("n_a"), sum(col("in_b")).as("n_b"),
       sum(col("in_a") * col("in_b")).as("overlap"),
       count(lit(1)).as("v_true"))
-    def dbl(c: String) = col(c).cast("double")
     val nHat = (dbl("n_a") + 1.0) * (dbl("n_b") + 1.0) /
       (dbl("overlap") + 1.0) - 1.0
     m.select(col("n_a"), col("n_b"), col("overlap"), col("v_true"),
@@ -283,7 +281,6 @@ object Frontier4 {
     val f = pts.agg(count(lit(1)).as("np"), sum(col("x")).as("sx"),
       sum(col("y")).as("sy"),
       sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
-    def dbl(c: String) = col(c).cast("double")
     val beta = (dbl("np") * dbl("sxy") - dbl("sx") * dbl("sy")) /
       (dbl("np") * dbl("sxx") - dbl("sx") * dbl("sx"))
     val fit = f.select(round(beta, 6).as("beta"),

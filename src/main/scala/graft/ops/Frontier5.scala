@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Numeric.dbl
 import graft.core.{Tables => T}
 
 /** Round-13 second widening batch — the inference/agreement gap in the
@@ -27,8 +28,6 @@ import graft.core.{Tables => T}
   */
 object Frontier5 {
   type Q = (SparkSession, String) => DataFrame
-
-  private def dbl(c: Column): Column = c.cast("double")
 
   /** Exact order-value cents (the `agg_ttest_paired` device): round the
     * double price to 2dp in decimal, scale to integer cents. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.api.CheckpointStrategy
+import graft.core.Numeric.dbl
 import graft.core.{Tables => T}
 
 /** Data-insight / curation operators — round-7 widening of the declared
@@ -158,7 +159,6 @@ object Insights {
         col("n"), col("sp").as("sx"), col("sd").as("sy"),
         col("spp").as("sxx"), col("sdd").as("syy"), col("spd").as("sxy"))))
       .as("p")).select(col("p.*"))
-    def dbl(c: String): Column = col(c).cast("double")
     pairs.select(col("col_x"), col("col_y"),
       round((dbl("n") * dbl("sxy") - dbl("sx") * dbl("sy"))
         / (sqrt(dbl("n") * dbl("sxx") - dbl("sx") * dbl("sx"))
@@ -326,7 +326,6 @@ object Insights {
         sum(dec(col("x")) * dec(col("x"))).as("sxx"),
         sum(dec(col("y")) * dec(col("y"))).as("syy"),
         sum(dec(col("x")) * dec(col("y"))).as("sxy"))
-    def dbl(c: String): Column = col(c).cast("double")
     mom.select(col("event_type"), col("lag").cast("long").as("lag"),
         col("np").as("n_pairs"),
         round((dbl("np") * dbl("sxy") - dbl("sx") * dbl("sy"))
@@ -440,7 +439,6 @@ object Insights {
       sum(p).as("s1"),
       sum(p * p).as("s2"),
       sum((p * p).cast("decimal(19,4)") * p).as("s3"))
-    def dbl(c: String): Column = col(c).cast("double")
     val mu = dbl("s1") / dbl("n")
     val m2 = dbl("s2") / dbl("n") - mu * mu
     val m3 = dbl("s3") / dbl("n") - lit(3) * mu * (dbl("s2") / dbl("n")) +

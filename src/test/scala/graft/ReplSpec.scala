@@ -203,6 +203,101 @@ class ReplSpec extends SparkSpecBase {
     assert(out(layoutIdx + 1).contains("rows=2"))
   }
 
+  /** Every file under `dir` with its length and modification time. */
+  private def listing(dir: String): Map[String, (Long, Long)] =
+    new java.io.File(dir).listFiles().map(f => f.getName -> (f.length, f.lastModified)).toMap
+
+  test("SQL after each insert sees every row inserted before it") {
+    val db = dbDir("lazy_view"); rm(db)
+    val out = runScript(db, Seq(
+      "insert 1 user1 a@example.com",
+      "select count(*) from users",
+      "insert 2 user2 b@example.com",
+      "select count(*) from users",
+      ".exit"))
+    assert(out == Seq(
+      "db > Executed.",
+      "db > (1)",
+      "Executed.",
+      "db > Executed.",
+      "db > (2)",
+      "Executed.",
+      "db > "))
+  }
+
+  test(".schema after inserts lists the views and leaves users queryable") {
+    val db = dbDir("schema"); rm(db)
+    val out = runScript(db, Seq(
+      "insert 1 user1 a@example.com",
+      ".schema",
+      "select username from users",
+      ".exit"), sfDir = Some(sf0001))
+    assert(out.head == "db > Executed.")
+    assert(out(1) == "db > users(id BIGINT, username STRING, email STRING)")
+    assert(Seq("lineitem", "nation", "region").forall(out.contains))
+    assert(out.containsSlice(Seq("db > (user1)", "Executed.")))
+  }
+
+  test("a session with no inserts leaves the db file untouched") {
+    val db = dbDir("read_only"); rm(db)
+    runScript(db, Seq("insert 1 user1 a@example.com", ".exit"))
+    val before = listing(db) // a rewrite also renames the part file
+    val out = runScript(db, Seq("select", "select count(*) from users", ".btree", ".exit"))
+    assert(out.head == "db > (1, user1, a@example.com)")
+    assert(out.contains("db > (1)"))
+    assert(listing(db) == before)
+  }
+
+  test(".exit on a fresh path with no inserts creates a readable empty db") {
+    val db = dbDir("fresh_empty"); rm(db)
+    assert(runScript(db, Seq(".exit")) == Seq("db > "))
+    val stored = spark.read.parquet(db)
+    assert(stored.columns.toSeq == Seq("idx", "id", "username", "email"))
+    assert(stored.count() == 0)
+    assert(runScript(db, Seq("select", ".exit")) == Seq("db > Executed.", "db > "))
+  }
+
+  test("an input that fails after two inserts still persists both rows") {
+    val db = dbDir("input_fails"); rm(db)
+    val in = Iterator("insert 1 user1 a@example.com", "insert 2 user2 b@example.com") ++
+      Iterator.continually[String](throw new java.io.IOException("stdin closed"))
+    val bos = new ByteArrayOutputStream()
+    intercept[java.io.IOException](
+      Repl.loop(spark, db, None, in, new PrintStream(bos, true, "UTF-8")))
+    assert(runScript(db, Seq("select", ".exit")) == Seq(
+      "db > (1, user1, a@example.com)",
+      "(2, user2, b@example.com)",
+      "Executed.",
+      "db > "))
+  }
+
+  test("job counts: inserts run none, a users aggregate and a reopen one each") {
+    // each line's Spark jobs are counted under the group its tag names;
+    // opening the db runs under "open"
+    def session(db: String, lines: (String, String)*): (Seq[String], Map[String, Int]) = {
+      val bos = new ByteArrayOutputStream()
+      val jobs = jobsByGroup {
+        jobGroup("open")
+        val in = lines.iterator.map { case (tag, line) => jobGroup(tag); line }
+        Repl.loop(spark, db, None, in, new PrintStream(bos, true, "UTF-8"))
+      }
+      (bos.toString("UTF-8").split("\n", -1).toSeq, jobs)
+    }
+    val db = dbDir("jobs"); rm(db)
+    val inserts = (1 to 50).map(i => "insert" -> s"insert $i user$i person$i@example.com")
+    val (out, jobs) = session(db, inserts ++ Seq(
+      "count" -> "select count(*) from users", "exit" -> ".exit"): _*)
+    assert(out.containsSlice(Seq("db > (50)", "Executed.")))
+    assert(jobs("insert") == 0, jobs)
+    assert(jobs("count") == 1, jobs)
+    assert(jobs("exit") == 1, jobs) // the one write of the changed table
+    val (reread, rejobs) = session(db, "select" -> "select", "exit" -> ".exit")
+    assert(reread.length == 52, "50 rows + Executed. + prompt")
+    assert(rejobs("open") == 1, rejobs)
+    assert(rejobs("select") == 0, rejobs)
+    assert(rejobs("exit") == 0, rejobs) // read-only: nothing to write
+  }
+
   test("scalar parseLine agrees with the columnar parseStatements surface") {
     val s = spark
     import s.implicits._

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.TimestampType
@@ -15,36 +13,6 @@ import graft.core.Tables
   * Spark job, a rewritten file is inferred again, and every read is still
   * an independent DataFrame. */
 class TablesSpec extends SparkSpecBase {
-
-  /** Spark jobs started by `body`. The body runs under its own job group;
-    * a marker job afterwards drains the listener bus, which delivers in
-    * order, so every job of the body has been counted once the marker's
-    * start is seen. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    @volatile var drained = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach {
-            case "tables-spec-body" => jobs.incrementAndGet()
-            case "tables-spec-drain" => drained = true
-            case _ =>
-          }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tables-spec-body", "body")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("tables-spec-drain", "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!drained && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(drained, "listener bus did not drain")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("memoized schemas equal a plain parquet read for all ten tables") {
     for (t <- Tables.All) {
