@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.expr.FloatDotProduct
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.Percentile
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Engine extension installer (SURVEY §4.3).
   *
@@ -28,143 +28,107 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private val floatDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("float_dot"),
-    new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "float_dot(a, b) takes exactly 2 arguments")
-      FloatDotProduct(children.head, children(1))
-    })
+  private type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private val md548Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("md5_48"),
-    new ExpressionInfo(classOf[graft.expr.Md5Prefix48].getName, "md5_48"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "md5_48(s) takes exactly 1 argument")
-      graft.expr.Md5Prefix48(children.head)
-    })
+  /** One registry row: `sig` names the function and its parameters
+    * (`[...]` marks optional trailing ones), `cls` is the expression
+    * class `DESCRIBE FUNCTION` reports, `build` maps the argument list to
+    * the expression. The arity is checked before building, because SQL
+    * text comes from outside the program. */
+  private def fn(sig: String, cls: Class[_])(
+      build: PartialFunction[Seq[Expression], Expression]): Descriptor = {
+    val name = sig.takeWhile(_ != '(')
+    val max = sig.count(_ == ',') + 1
+    val min = max - sig.count(_ == '[')
+    val arity =
+      if (min == max) s"exactly $max argument${if (max == 1) "" else "s"}"
+      else s"$min to $max arguments"
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expression]) => {
+        require(build.isDefinedAt(children), s"$sig takes $arity")
+        build(children)
+      })
+  }
 
-  private val slidingMinDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("sliding_min"),
-    new ExpressionInfo(classOf[graft.expr.SlidingMin].getName, "sliding_min"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "sliding_min(arr, w) takes exactly 2 arguments")
-      graft.expr.SlidingMin(children.head, children(1))
-    })
+  /** DuckDB's `generate_series`: inclusive like Spark's `sequence`, but an
+    * empty list when the step runs away from `stop` (Spark counts down or
+    * fails). The two-argument form is DuckDB's BIGINT overload; with a
+    * step the element type is `sequence`'s: the widest integral argument,
+    * or TIMESTAMP for TIMESTAMP bounds with an INTERVAL step. */
+  private def generateSeries(start: Expression, stop: Expression,
+      step: Option[Expression]): Expression = step match {
+    case None =>
+      val (a, b) = (Cast(start, LongType), Cast(stop, LongType))
+      If(GreaterThan(a, b), ArrayRepeat(a, Literal(0)), new Sequence(a, b))
+    case Some(s) =>
+      val up = GreaterThan(Add(start, s), start)
+      If(Or(And(up, GreaterThan(start, stop)),
+          And(Not(up), LessThan(start, stop))),
+        ArrayRepeat(start, Literal(0)), new Sequence(start, stop, s))
+  }
 
-  private val gramHashDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("gram_hash48"),
-    new ExpressionInfo(classOf[graft.expr.GramHash48].getName, "gram_hash48"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "gram_hash48(s, k) takes exactly 2 arguments")
-      graft.expr.GramHash48(children.head, children(1))
-    })
+  /** DuckDB's `string_split`: the separator is a literal string, not
+    * Spark's `split` regex, and empty fields are kept; an empty separator
+    * splits into characters. */
+  private def stringSplit(str: Expression, sep: Expression): Expression =
+    If(EqualTo(sep, Literal("")),
+      If(EqualTo(str, Literal("")), CreateArray(Seq(Literal(""))),
+        RegExpExtractAll(str, Literal("(?s)."), Literal(0))),
+      StringSplitSQL(str, sep))
 
-  private val shingleXxDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_xx64"),
-    new ExpressionInfo(classOf[graft.expr.ShingleXx64].getName, "shingle_xx64"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "shingle_xx64(s, n) takes exactly 2 arguments")
-      graft.expr.ShingleXx64(children.head, children(1))
-    })
-
-  private val minhashSigDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_sig"),
-    new ExpressionInfo(classOf[graft.expr.MinHashSig].getName, "minhash_sig"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "minhash_sig(s, n) takes exactly 2 arguments")
-      graft.expr.MinHashSig(children.head, children(1))
-    })
-
-  private val simhash48Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash48"),
-    new ExpressionInfo(classOf[graft.expr.SimHash48].getName, "simhash48"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3, "simhash48(s, n, bits) takes exactly 3 arguments")
-      graft.expr.SimHash48(children.head, children(1), children(2))
-    })
-
-  private val thetaAggDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("theta_sketch_agg"),
-    new ExpressionInfo(classOf[graft.expr.ThetaSketchAgg].getName, "theta_sketch_agg"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "theta_sketch_agg(v) takes exactly 1 argument")
-      graft.expr.ThetaSketchAgg(children.head)
-    })
-
-  private val countMinDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("count_min"),
-    new ExpressionInfo(classOf[graft.expr.CountMinAgg].getName, "count_min"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "count_min(item, depth, width) takes exactly 3 arguments")
-      graft.expr.CountMinAgg(children.head, children(1), children(2))
-    })
-
-  private val misraGriesDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("misra_gries"),
-    new ExpressionInfo(classOf[graft.expr.MisraGriesAgg].getName, "misra_gries"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "misra_gries(item, k) takes exactly 2 arguments")
-      graft.expr.MisraGriesAgg(children.head, children(1))
-    })
-
-  private val thetaEstimateDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("theta_estimate"),
-    new ExpressionInfo(classOf[graft.expr.ThetaEstimate].getName, "theta_estimate"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "theta_estimate(sk) takes exactly 1 argument")
-      graft.expr.ThetaEstimate(children.head)
-    })
-
-  private val thetaIntersectDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("theta_intersect"),
-    new ExpressionInfo(classOf[graft.expr.ThetaIntersect].getName, "theta_intersect"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "theta_intersect(a, b) takes exactly 2 arguments")
-      graft.expr.ThetaIntersect(children.head, children(1))
-    })
-
-  private val bloomAggDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bloom_agg"),
-    new ExpressionInfo(classOf[graft.expr.BloomFilterAgg].getName, "bloom_agg"),
-    (children: Seq[Expression]) => {
-      require(children.size == 3,
-        "bloom_agg(key, numBits, numHashes) takes exactly 3 arguments")
-      graft.expr.BloomFilterAgg(children.head, children(1), children(2))
-    })
-
-  private val kllAggDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("kll_sketch_agg"),
-    new ExpressionInfo(classOf[graft.expr.KllDoublesAgg].getName, "kll_sketch_agg"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "kll_sketch_agg(v) takes exactly 1 argument")
-      graft.expr.KllDoublesAgg(children.head)
-    })
-
-  private val kllQuantileDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("kll_quantile"),
-    new ExpressionInfo(classOf[graft.expr.KllQuantile].getName, "kll_quantile"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "kll_quantile(sk, q) takes exactly 2 arguments")
-      graft.expr.KllQuantile(children.head, children(1))
-    })
-
-  private val kllNDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("kll_n"),
-    new ExpressionInfo(classOf[graft.expr.KllN].getName, "kll_n"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1, "kll_n(sk) takes exactly 1 argument")
-      graft.expr.KllN(children.head)
-    })
-
-  private val bloomContainsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bloom_contains"),
-    new ExpressionInfo(classOf[graft.expr.BloomMightContain].getName, "bloom_contains"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "bloom_contains(bf, key) takes exactly 2 arguments")
-      graft.expr.BloomMightContain(children.head, children(1))
-    })
+  /** Every engine function, registered by BOTH installation routes (the
+    * extensions constructor and [[install]]) — one list, so a new
+    * function can't be visible on one route and missing on the other.
+    * The last six are DuckDB-named functions with DuckDB semantics, so
+    * that oracle texts using them run unchanged in [[SqlCatalog]]. */
+  private val descriptors: Seq[Descriptor] = Seq(
+    fn("float_dot(a, b)", classOf[expr.FloatDotProduct]) {
+      case Seq(a, b) => expr.FloatDotProduct(a, b) },
+    fn("md5_48(s)", classOf[expr.Md5Prefix48]) {
+      case Seq(s) => expr.Md5Prefix48(s) },
+    fn("sliding_min(arr, w)", classOf[expr.SlidingMin]) {
+      case Seq(arr, w) => expr.SlidingMin(arr, w) },
+    fn("gram_hash48(s, k)", classOf[expr.GramHash48]) {
+      case Seq(s, k) => expr.GramHash48(s, k) },
+    fn("shingle_xx64(s, n)", classOf[expr.ShingleXx64]) {
+      case Seq(s, n) => expr.ShingleXx64(s, n) },
+    fn("minhash_sig(s, n)", classOf[expr.MinHashSig]) {
+      case Seq(s, n) => expr.MinHashSig(s, n) },
+    fn("simhash48(s, n, bits)", classOf[expr.SimHash48]) {
+      case Seq(s, n, bits) => expr.SimHash48(s, n, bits) },
+    fn("theta_sketch_agg(v)", classOf[expr.ThetaSketchAgg]) {
+      case Seq(v) => expr.ThetaSketchAgg(v) },
+    fn("theta_estimate(sk)", classOf[expr.ThetaEstimate]) {
+      case Seq(sk) => expr.ThetaEstimate(sk) },
+    fn("theta_intersect(a, b)", classOf[expr.ThetaIntersect]) {
+      case Seq(a, b) => expr.ThetaIntersect(a, b) },
+    fn("misra_gries(item, k)", classOf[expr.MisraGriesAgg]) {
+      case Seq(item, k) => expr.MisraGriesAgg(item, k) },
+    fn("count_min(item, depth, width)", classOf[expr.CountMinAgg]) {
+      case Seq(item, depth, width) => expr.CountMinAgg(item, depth, width) },
+    fn("bloom_agg(key, numBits, numHashes)", classOf[expr.BloomFilterAgg]) {
+      case Seq(key, bits, hashes) => expr.BloomFilterAgg(key, bits, hashes) },
+    fn("bloom_contains(bf, key)", classOf[expr.BloomMightContain]) {
+      case Seq(bf, key) => expr.BloomMightContain(bf, key) },
+    fn("kll_sketch_agg(v)", classOf[expr.KllDoublesAgg]) {
+      case Seq(v) => expr.KllDoublesAgg(v) },
+    fn("kll_quantile(sk, q)", classOf[expr.KllQuantile]) {
+      case Seq(sk, q) => expr.KllQuantile(sk, q) },
+    fn("kll_n(sk)", classOf[expr.KllN]) {
+      case Seq(sk) => expr.KllN(sk) },
+    fn("unnest(list)", classOf[Explode]) {
+      case Seq(list) => Explode(list) },
+    fn("string_split(s, sep)", classOf[StringSplitSQL]) {
+      case Seq(s, sep) => stringSplit(s, sep) },
+    fn("generate_series(start, stop[, step])", classOf[Sequence]) {
+      case Seq(start, stop) => generateSeries(start, stop, None)
+      case Seq(start, stop, step) => generateSeries(start, stop, Some(step)) },
+    fn("quantile_cont(x, q)", classOf[Percentile]) {
+      case Seq(x, q) => new Percentile(x, q) },
+    fn("epoch_us(ts)", classOf[UnixMicros]) {
+      case Seq(ts) => UnixMicros(Cast(ts, TimestampType)) },
+    fn("xor(a, b)", classOf[BitwiseXor]) {
+      case Seq(a, b) => BitwiseXor(a, b) })
 
   /** Runtime-settable confs the engine's operators are tuned for. Applied
     * by [[install]] (the explicit engine-installation entry point); query
@@ -181,17 +145,6 @@ object GraftExtensions {
   val recommendedConfs: Map[String, String] = Map(
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4194304",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
-
-  /** Every engine function, registered by BOTH installation routes (the
-    * extensions constructor and [[install]]) — one list, so a new
-    * function can't be visible on one route and missing on the other. */
-  private val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(floatDotDescriptor, md548Descriptor, slidingMinDescriptor,
-      gramHashDescriptor, shingleXxDescriptor, minhashSigDescriptor,
-      simhash48Descriptor, thetaAggDescriptor, thetaEstimateDescriptor,
-      thetaIntersectDescriptor, misraGriesDescriptor, countMinDescriptor,
-      bloomAggDescriptor, bloomContainsDescriptor,
-      kllAggDescriptor, kllQuantileDescriptor, kllNDescriptor)
 
   /** Idempotently register the engine functions on a live session and
     * apply [[recommendedConfs]]. */

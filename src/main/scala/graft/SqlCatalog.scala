@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Tables
 import graft.core.Numeric.dsumSql
-import graft.ops.{Composite, RelationalOracles}
 
 /** SQL-text front door — the modern analogue of the reference's statement
   * entry point (`/root/reference/db.cpp:428-441`, where every interaction
@@ -17,13 +16,22 @@ import graft.ops.{Composite, RelationalOracles}
   * including the engine's native `float_dot`, `md5_48` and `sliding_min`
   * functions, which [[GraftExtensions]] registers in the SQL registry.
   *
-  * Dialect note: the relational/TPC-H entries reuse the oracle SQL
-  * strings, which are deliberately dual-dialect ANSI (DuckDB for the
-  * correctness gate, Spark for this catalog). Entries whose DuckDB oracle
-  * uses list functions (`string_split`, `list_slice`, `unnest`, 1-based
-  * `p[i]`, `time_bucket`, `quantile_cont`) get a Spark-dialect equivalent
-  * here instead. SqlEntrySpec asserts each entry's SQL result equals the
-  * DataFrame path row-for-row.
+  * Dialect note: one text per key. [[queriesSql]] serves each key's
+  * DuckDB oracle text ([[SparkEntry.oracleSql]]) unless
+  * [[sparkOverrides]] holds a Spark-dialect text for it. An override
+  * exists only where the oracle text cannot run in Spark, does not
+  * return the DataFrame path's exact rows, or plans a partition-less
+  * window (`window_lag`; PlanSpec forbids one in any SQL plan). The
+  * causes are DuckDB-only syntax, sized-type casts, correlated aggregate
+  * subqueries, quoted `date_diff` units, 1-based `p[i]`, `'0x…'` casts
+  * and list functions such as `list_transform`. DuckDB names whose
+  * meaning Spark lacks are registered by [[GraftExtensions]] with DuckDB
+  * semantics — `unnest`, `string_split`, `generate_series`,
+  * `quantile_cont`, `epoch_us` and `xor` — so oracle texts using them run
+  * unchanged. The oracle texts are the correctness check and are never
+  * edited to suit Spark. SqlEntrySpec asserts each entry's SQL result
+  * equals the DataFrame path row-for-row, and that no override repeats
+  * its key's oracle text.
   *
   * Scale note: a few SQL texts (the dedup families) spell out the
   * SEMANTIC form — e.g. an all-pairs SimHash comparison — rather than the
@@ -68,80 +76,6 @@ object SqlCatalog {
     Tables.All.foreach { t =>
       Tables(spark, sfDir, t).createOrReplaceTempView(t)
     }
-
-  /** Declared-query keys whose DuckDB oracle text is dual-dialect ANSI and
-    * runs unchanged under `spark.sql`. */
-  private val sharedWithOracle: Seq[String] = Seq(
-    "scan_full", "scan_project", "scan_ordered", "key_lookup",
-    "insert_append", "filter_pred", "constraint_check",
-    "join_inner", "join_broadcast", "join_left", "join_semi", "join_anti",
-    "join_range", "join_asof", "join_asof_fwd", "join_asof_tol",
-    "join_full", "join_cross",
-    "agg_hash", "agg_distinct", "agg_rollup", "agg_cube",
-    "agg_grouping_sets",
-    "window_rank", "window_running",
-    "sort_limit_topk", "set_union", "set_intersect", "set_except",
-    "set_ops_all",
-    // advanced aggregates / windows whose oracle SQL is already ANSI
-    "agg_conditional",
-    "agg_salted", "agg_stats", "agg_mode", "window_nav", "window_dist",
-    "subq_scalar", "subq_exists", "subq_lateral",
-    "agg_hist", "merge_scd2", "agg_topk", "agg_zscore", "agg_entropy",
-    "events_funnel", "events_path", "events_anomaly", "graph_triangles",
-    "meta_profile", "join_skew_salted", "events_transition", "agg_gini",
-    "merge_mor", "sink_compaction", "agg_ab_test", "graph_jaccard",
-    "merge_cdc", "meta_time_travel", "agg_ohlc", "constraint_fk",
-    // streaming-batch keys whose oracle SQL is already ANSI
-    "stream_tumbling", "stream_dedup_watermark", "stream_stateful",
-    "stream_join",
-    // scalar function packs that parse identically
-    "fn_string", "fn_math", "fn_map", "fn_unpivot",
-    // storage-maintenance keys whose oracle SQL is already ANSI
-    "table_diff", "scan_dpp",
-    // round-7b insight keys whose oracle SQL is already ANSI
-    "meta_skew_report", "agg_corr_matrix", "graph_degree_dist",
-    "graph_kcore", "agg_moments",
-    // round-7c curation keys whose oracle SQL is already ANSI
-    "agg_winsorize", "stream_topk", "agg_bucketize", "events_changepoint",
-    "agg_hist2d", "sink_replace_where",
-    // round-8 statistical keys whose oracle SQL is already ANSI
-    "agg_mannwhitney", "agg_chi2", "text_ks_drift", "sample_systematic",
-    "graph_label_prop", "stream_changelog", "events_markov_stationary",
-    "agg_hhi",
-    // round-8b keys whose oracle SQL is already ANSI
-    "agg_theil_sen", "agg_mad", "graph_modularity", "subq_notin_null",
-    "agg_skyline", "graph_assortativity", "agg_ratio_ci",
-    "agg_weighted_median", "agg_trimmed_mean",
-    // round-9 keys whose oracle SQL is already ANSI
-    "agg_cuped", "events_did",
-    // round-9b keys whose oracle SQL is already ANSI
-    "graph_bfs", "events_ltv", "agg_effect_size", "sample_neyman",
-    "graph_closeness", "events_fano", "events_overlap",
-    "agg_period_growth",
-    "agg_spearman", "agg_cramers_v",
-    // round-10 keys whose oracle SQL is already ANSI
-    "graph_betweenness",
-    // round-11 keys whose oracle SQL is already ANSI
-    "graph_louvain_pass", "graph_louvain_coarsen", "graph_hits",
-    "meta_lineage", "graph_scc",
-    // round-12 keys whose oracle SQL is already ANSI
-    "graph_louvain_multi", "agg_anova", "agg_kruskal", "agg_levene",
-    "agg_ljung_box", "agg_welch",
-    // round-13 keys whose oracle SQL is already ANSI
-    "agg_ttest_paired", "graph_reciprocity",
-    // round-13b keys whose oracle SQL is already ANSI
-    "agg_kendall", "agg_friedman", "agg_mcnemar", "agg_jackknife",
-    "events_sprt", "graph_wcc")
-
-  private def oracleOf(k: String): String =
-    (RelationalOracles.sql ++ graft.ops.Advanced.oracles ++
-      graft.ops.Streaming.oracles ++ graft.ops.Functions.oracles ++
-      graft.ops.Sources.oracles ++ graft.ops.Insights.oracles ++
-      graft.ops.Curation.oracles ++ graft.ops.Stats.oracles ++
-      graft.ops.Selection.oracles ++ graft.ops.Horizon.oracles ++
-      graft.ops.Frontier.oracles ++ graft.ops.Frontier2.oracles ++
-      graft.ops.Frontier3.oracles ++ graft.ops.Frontier4.oracles ++
-      graft.ops.Frontier5.oracles)(k)
 
   // ------------------------------------------------- Spark-dialect helpers
 
@@ -410,7 +344,6 @@ object SqlCatalog {
   private val mediaPx =
     "transform(sequence(1, 16), i -> CAST(conv(substr(md5(text), (i - 1) * 2 + 1, 2), 16, 10) AS INT))"
 
-  /** Spark-dialect SQL for keys whose oracle text is DuckDB-specific. */
   /** Spark-dialect statement for `embed_pca_power` — HOF pair expansion
     * plus the same 4 unrolled ANSI iteration CTEs the oracle uses
     * ([[graft.ops.Stats.pcaIterSql]]). */
@@ -445,334 +378,16 @@ object SqlCatalog {
        |FROM v4 JOIN n4 ON v4.label = n4.label
        |ORDER BY v4.label, dim""".stripMargin
 
+  /** The Spark-dialect texts, one per key (see [[sparkOverrides]]). */
   private val sparkDialect: Map[String, String] = Map(
     // MinHash estimator audit (md5_48 + HOF shingle dialect)
     "dedup_minhash_audit" -> minhashAuditSql,
-
-    // Holt level-trend smoothing: the sequential recursion runs as an
-    // aggregate() HOF over the per-type day array (the DuckDB oracle
-    // replays it as a RECURSIVE CTE — same init, same IEEE op order)
-    "agg_holt" ->
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${dsumSql("value")} AS rev
-         |  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         |ser AS (
-         |  SELECT event_type,
-         |    transform(array_sort(collect_list(struct(day, rev))),
-         |      x -> x.rev) AS ys
-         |  FROM daily GROUP BY event_type),
-         |f AS (
-         |  SELECT event_type, ys,
-         |    ${graft.ops.Horizon.holtFoldSql} AS st
-         |  FROM ser WHERE size(ys) >= 2)
-         |SELECT event_type, CAST(size(ys) AS BIGINT) AS n_days,
-         |  CAST(round(st.l, 6) AS DOUBLE) AS level,
-         |  CAST(round(st.b, 6) AS DOUBLE) AS trend,
-         |  CAST(round(st.l + st.b, 6) AS DOUBLE) AS fc_1,
-         |  CAST(round(st.l + CAST(7 AS DOUBLE) * st.b, 6) AS DOUBLE) AS fc_7
-         |FROM f ORDER BY event_type""".stripMargin,
-
-    // EWMA control chart: the z recursion as a HOF fold that carries the
-    // whole series; exact-decimal moment folds for mu/sigma
-    "events_ewma_chart" ->
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${dsumSql("value")} AS rev
-         |  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         |ser AS (
-         |  SELECT event_type,
-         |    array_sort(collect_list(struct(day, rev))) AS sr,
-         |    transform(array_sort(collect_list(struct(day, rev))),
-         |      x -> x.rev) AS ys
-         |  FROM daily GROUP BY event_type),
-         |mo AS (
-         |  SELECT event_type, sr, ys, CAST(size(ys) AS BIGINT) AS n,
-         |    aggregate(ys, CAST(0 AS DECIMAL(28,8)),
-         |      (a, y) -> CAST(a + CAST(y AS DECIMAL(20,8))
-         |        AS DECIMAL(28,8))) AS sy,
-         |    aggregate(ys, CAST(0 AS DECIMAL(38,8)),
-         |      (a, y) -> CAST(a + CAST(CAST(y AS DECIMAL(20,8))
-         |        * CAST(y AS DECIMAL(20,8)) AS DECIMAL(38,8))
-         |        AS DECIMAL(38,8))) AS syy
-         |  FROM ser WHERE size(ys) >= 2),
-         |lims AS (
-         |  SELECT event_type, sr, ys,
-         |    CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
-         |    CAST(3 AS DOUBLE)
-         |      * sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
-         |        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)))
-         |      * sqrt(CAST(1 AS DOUBLE) / CAST(7 AS DOUBLE)) AS lim
-         |  FROM mo),
-         |zz AS (
-         |  SELECT event_type, sr, mu, lim,
-         |    aggregate(ys,
-         |      named_struct('z', mu, 'arr', CAST(array() AS ARRAY<DOUBLE>)),
-         |      (acc, y) -> named_struct(
-         |        'z', CAST(0.25 AS DOUBLE) * y
-         |          + CAST(0.75 AS DOUBLE) * acc.z,
-         |        'arr', concat(acc.arr, array(CAST(0.25 AS DOUBLE) * y
-         |          + CAST(0.75 AS DOUBLE) * acc.z)))).arr AS zs
-         |  FROM lims),
-         |e AS (
-         |  SELECT event_type, mu, lim, x.day AS day, x.rev AS rev, x.z AS z
-         |  FROM zz LATERAL VIEW explode(zip_with(sr, zs,
-         |    (a, z) -> named_struct('day', a.day, 'rev', a.rev, 'z', z)))
-         |    t AS x)
-         |SELECT event_type, day, rev,
-         |  CAST(round(z, 6) AS DOUBLE) AS ewma,
-         |  CAST(round(mu + lim, 6) AS DOUBLE) AS ucl,
-         |  CAST(round(mu - lim, 6) AS DOUBLE) AS lcl,
-         |  (abs(z - mu) > lim) AS breach
-         |FROM e ORDER BY event_type, day""".stripMargin,
-
-    // CUSUM control chart: the (s+, s-) recursion as a HOF fold carrying
-    // both series; same exact-decimal moment folds as the EWMA chart
-    "events_cusum_chart" ->
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${dsumSql("value")} AS rev
-         |  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         |ser AS (
-         |  SELECT event_type,
-         |    array_sort(collect_list(struct(day, rev))) AS sr,
-         |    transform(array_sort(collect_list(struct(day, rev))),
-         |      x -> x.rev) AS ys
-         |  FROM daily GROUP BY event_type),
-         |mo AS (
-         |  SELECT event_type, sr, ys, CAST(size(ys) AS BIGINT) AS n,
-         |    aggregate(ys, CAST(0 AS DECIMAL(28,8)),
-         |      (a, y) -> CAST(a + CAST(y AS DECIMAL(20,8))
-         |        AS DECIMAL(28,8))) AS sy,
-         |    aggregate(ys, CAST(0 AS DECIMAL(38,8)),
-         |      (a, y) -> CAST(a + CAST(CAST(y AS DECIMAL(20,8))
-         |        * CAST(y AS DECIMAL(20,8)) AS DECIMAL(38,8))
-         |        AS DECIMAL(38,8))) AS syy
-         |  FROM ser WHERE size(ys) >= 2),
-         |lims AS (
-         |  SELECT event_type, sr, ys,
-         |    CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
-         |    CAST(0.5 AS DOUBLE)
-         |      * sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
-         |        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS kk,
-         |    CAST(4 AS DOUBLE)
-         |      * sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
-         |        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS hh
-         |  FROM mo),
-         |cc AS (
-         |  SELECT event_type, sr, hh,
-         |    aggregate(ys,
-         |      named_struct('sp', CAST(0 AS DOUBLE), 'sn', CAST(0 AS DOUBLE),
-         |        'arr', CAST(array() AS ARRAY<STRUCT<sp: DOUBLE, sn: DOUBLE>>)),
-         |      (acc, y) -> named_struct(
-         |        'sp', greatest(CAST(0 AS DOUBLE), acc.sp + (y - mu - kk)),
-         |        'sn', greatest(CAST(0 AS DOUBLE), acc.sn + (mu - y - kk)),
-         |        'arr', concat(acc.arr, array(named_struct(
-         |          'sp', greatest(CAST(0 AS DOUBLE), acc.sp + (y - mu - kk)),
-         |          'sn', greatest(CAST(0 AS DOUBLE),
-         |            acc.sn + (mu - y - kk))))))).arr AS cs
-         |  FROM lims),
-         |e AS (
-         |  SELECT event_type, hh, x.day AS day, x.rev AS rev,
-         |    x.sp AS sp, x.sn AS sn
-         |  FROM cc LATERAL VIEW explode(zip_with(sr, cs,
-         |    (a, c) -> named_struct('day', a.day, 'rev', a.rev,
-         |      'sp', c.sp, 'sn', c.sn))) t AS x)
-         |SELECT event_type, day, rev,
-         |  CAST(round(sp, 6) AS DOUBLE) AS cusum_hi,
-         |  CAST(round(sn, 6) AS DOUBLE) AS cusum_lo,
-         |  CAST(round(hh, 6) AS DOUBLE) AS h_limit,
-         |  (sp > hh OR sn > hh) AS breach
-         |FROM e ORDER BY event_type, day""".stripMargin,
-
-    // Page-Hinkley: the (t, mean, m, min m, u, max u) recursion as a HOF
-    // fold; the running mean inlines into the m/u steps per reference
-    "events_page_hinkley" -> {
-      val meanP = "(acc.mean + (y - acc.mean) / CAST(acc.t + 1 AS DOUBLE))"
-      val mP = s"(acc.m + (y - $meanP - dd))"
-      val uP = s"(acc.u + (y - $meanP + dd))"
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${dsumSql("value")} AS rev
-         |  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         |ser AS (
-         |  SELECT event_type,
-         |    array_sort(collect_list(struct(day, rev))) AS sr,
-         |    transform(array_sort(collect_list(struct(day, rev))),
-         |      x -> x.rev) AS ys
-         |  FROM daily GROUP BY event_type),
-         |mo AS (
-         |  SELECT event_type, sr, ys, CAST(size(ys) AS BIGINT) AS n,
-         |    aggregate(ys, CAST(0 AS DECIMAL(28,8)),
-         |      (a, y) -> CAST(a + CAST(y AS DECIMAL(20,8))
-         |        AS DECIMAL(28,8))) AS sy,
-         |    aggregate(ys, CAST(0 AS DECIMAL(38,8)),
-         |      (a, y) -> CAST(a + CAST(CAST(y AS DECIMAL(20,8))
-         |        * CAST(y AS DECIMAL(20,8)) AS DECIMAL(38,8))
-         |        AS DECIMAL(38,8))) AS syy
-         |  FROM ser WHERE size(ys) >= 2),
-         |lims AS (
-         |  SELECT event_type, sr, ys,
-         |    CAST(0.05 AS DOUBLE)
-         |      * sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
-         |        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS dd,
-         |    CAST(3 AS DOUBLE)
-         |      * sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
-         |        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS lam
-         |  FROM mo),
-         |pp AS (
-         |  SELECT event_type, sr, lam,
-         |    aggregate(ys,
-         |      named_struct('t', CAST(0 AS BIGINT), 'mean', CAST(0 AS DOUBLE),
-         |        'm', CAST(0 AS DOUBLE), 'mmin', CAST(0 AS DOUBLE),
-         |        'u', CAST(0 AS DOUBLE), 'umax', CAST(0 AS DOUBLE),
-         |        'arr', CAST(array() AS ARRAY<STRUCT<pi: DOUBLE, pd: DOUBLE>>)),
-         |      (acc, y) -> named_struct(
-         |        't', acc.t + 1,
-         |        'mean', $meanP,
-         |        'm', $mP,
-         |        'mmin', least(acc.mmin, $mP),
-         |        'u', $uP,
-         |        'umax', greatest(acc.umax, $uP),
-         |        'arr', concat(acc.arr, array(named_struct(
-         |          'pi', $mP - least(acc.mmin, $mP),
-         |          'pd', greatest(acc.umax, $uP) - $uP))))).arr AS ph
-         |  FROM lims),
-         |e AS (
-         |  SELECT event_type, lam, x.day AS day, x.rev AS rev,
-         |    x.pi AS pi, x.pd AS pd
-         |  FROM pp LATERAL VIEW explode(zip_with(sr, ph,
-         |    (a, p) -> named_struct('day', a.day, 'rev', a.rev,
-         |      'pi', p.pi, 'pd', p.pd))) t AS x)
-         |SELECT event_type, day, rev,
-         |  CAST(round(pi, 6) AS DOUBLE) AS ph_up,
-         |  CAST(round(pd, 6) AS DOUBLE) AS ph_down,
-         |  CAST(round(lam, 6) AS DOUBLE) AS lambda,
-         |  (pi > lam OR pd > lam) AS breach
-         |FROM e ORDER BY event_type, day""".stripMargin
-    },
-
-    // Holt-Winters: the same HOF device with the (l, b, s[7]) state
-    "agg_holt_winters" ->
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${dsumSql("value")} AS rev
-         |  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         |ser AS (
-         |  SELECT event_type,
-         |    transform(array_sort(collect_list(struct(day, rev))),
-         |      x -> x.rev) AS ys
-         |  FROM daily GROUP BY event_type),
-         |f AS (
-         |  SELECT event_type, CAST(size(ys) AS BIGINT) AS n_days,
-         |    ${graft.ops.Horizon.hwFoldSql} AS st
-         |  FROM ser WHERE size(ys) >= 15),
-         |e AS (
-         |  SELECT event_type, n_days, st, h
-         |  FROM f LATERAL VIEW explode(sequence(1, 7)) t AS h)
-         |SELECT event_type, n_days, CAST(h AS BIGINT) AS h,
-         |  CAST(round(st.l, 6) AS DOUBLE) AS level,
-         |  CAST(round(st.b, 6) AS DOUBLE) AS trend,
-         |  CAST(round(element_at(st.s,
-         |    CAST(pmod(n_days + h - 1, 7) + 1 AS INT)), 6) AS DOUBLE)
-         |    AS seasonal,
-         |  CAST(round(st.l + CAST(h AS DOUBLE) * st.b + element_at(st.s,
-         |    CAST(pmod(n_days + h - 1, 7) + 1 AS INT)), 6) AS DOUBLE) AS fc
-         |FROM e ORDER BY event_type, h""".stripMargin,
-
-    // cohort-LTV projection: events_ltv's cum grid + the Holt HOF fold
-    "events_ltv_forecast" ->
-      s"""WITH firsts AS (
-         |  SELECT user_id,
-         |    CAST(year(MIN(CAST(ts AS DATE))) * 366
-         |      + dayofyear(MIN(CAST(ts AS DATE))) AS BIGINT) AS cm
-         |  FROM events GROUP BY user_id),
-         |sizes AS (
-         |  SELECT cm, CAST(COUNT(*) AS BIGINT) AS cohort_users
-         |  FROM firsts GROUP BY cm),
-         |cells AS (
-         |  SELECT f.cm,
-         |    CAST(year(CAST(e.ts AS DATE)) * 366
-         |      + dayofyear(CAST(e.ts AS DATE)) AS BIGINT) - f.cm AS age,
-         |    CAST(SUM(CAST(round(e.value * 100) AS BIGINT)) AS BIGINT)
-         |      AS rev_cents
-         |  FROM events e JOIN firsts f ON e.user_id = f.user_id
-         |  WHERE e.event_type = 'purchase'
-         |  GROUP BY f.cm, CAST(year(CAST(e.ts AS DATE)) * 366
-         |      + dayofyear(CAST(e.ts AS DATE)) AS BIGINT) - f.cm),
-         |curve AS (
-         |  SELECT cells.cm, cells.age, sizes.cohort_users,
-         |    CAST(round(CAST(SUM(rev_cents) OVER
-         |        (PARTITION BY cells.cm ORDER BY age) AS DOUBLE) / 100.0
-         |      / CAST(cohort_users AS DOUBLE), 6) AS DOUBLE) AS ltv
-         |  FROM cells JOIN sizes ON cells.cm = sizes.cm),
-         |ser AS (
-         |  SELECT cm AS cohort_day, cohort_users,
-         |    transform(array_sort(collect_list(struct(age, ltv))),
-         |      x -> x.ltv) AS ys
-         |  FROM curve GROUP BY cm, cohort_users),
-         |f AS (
-         |  SELECT cohort_day, cohort_users, ys,
-         |    ${graft.ops.Horizon.holtFoldSql} AS st
-         |  FROM ser WHERE size(ys) >= 2)
-         |SELECT cohort_day, cohort_users, CAST(size(ys) AS BIGINT) AS n_ages,
-         |  element_at(ys, size(ys)) AS ltv_last,
-         |  CAST(round(st.l, 6) AS DOUBLE) AS level,
-         |  CAST(round(st.b, 6) AS DOUBLE) AS trend,
-         |  CAST(round(st.l + CAST(7 AS DOUBLE) * st.b, 6) AS DOUBLE) AS fc_7
-         |FROM f ORDER BY cohort_day""".stripMargin,
-
-    // q-q drift: identical to the oracle except the decile generator
-    "agg_qq_drift" -> graft.ops.Horizon.qqDriftSqlGen(
-      "SELECT explode(sequence(1, 9)) AS dec"),
 
     // greedy k-center: the same 8 unrolled rounds, HOF distance dialect
     "sample_kcenter" -> graft.ops.Horizon.kcenterSqlGen(
       "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT))",
       (a, b) => s"aggregate(zip_with($a.qv, $b.qv, (x, y) -> (x - y) * (x - y)), " +
         "CAST(0 AS BIGINT), (acc, v) -> acc + v)"),
-
-    // Holt backtest: HOF fold on the 20-day prefix, posexplode holdout
-    "events_forecast_eval" ->
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${dsumSql("value")} AS rev
-         |  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         |ser AS (
-         |  SELECT event_type,
-         |    transform(array_sort(collect_list(struct(day, rev))),
-         |      x -> x.rev) AS ysAll
-         |  FROM daily GROUP BY event_type),
-         |f AS (
-         |  SELECT event_type, ysAll, slice(ysAll, 1, 20) AS ys
-         |  FROM ser WHERE size(ysAll) > 21),
-         |stt AS (
-         |  SELECT event_type,
-         |    ${graft.ops.Horizon.holtFoldSql} AS st,
-         |    slice(ysAll, 21, size(ysAll) - 20) AS tail
-         |  FROM f),
-         |scored AS (
-         |  SELECT event_type, CAST(size(tail) AS BIGINT) AS n_test,
-         |    CAST(round(round(y - (st.l + CAST(j + 1 AS DOUBLE) * st.b), 6)
-         |      / CAST(size(tail) AS DOUBLE), 8) AS DECIMAL(20,8)) AS e,
-         |    CAST(round(round(abs(y
-         |        - (st.l + CAST(j + 1 AS DOUBLE) * st.b)), 6)
-         |      / CAST(size(tail) AS DOUBLE), 8) AS DECIMAL(20,8)) AS ae,
-         |    CAST(round(round(abs(y - (st.l + CAST(j + 1 AS DOUBLE) * st.b))
-         |      / abs(y), 6)
-         |      / CAST(size(tail) AS DOUBLE), 8) AS DECIMAL(20,8)) AS ape
-         |  FROM stt LATERAL VIEW posexplode(tail) t AS j, y)
-         |SELECT event_type, CAST(20 AS BIGINT) AS n_train, n_test,
-         |  CAST(round(SUM(ae), 6) AS DOUBLE) AS mae,
-         |  CAST(round(SUM(ape), 6) AS DOUBLE) AS mape,
-         |  CAST(round(SUM(e), 6) AS DOUBLE) AS bias
-         |FROM scored GROUP BY event_type, n_test
-         |ORDER BY event_type""".stripMargin,
 
     // stratified lightweight coreset (posexplode micro-unit dialect; the
     // DuckDB oracle indexes dims via range(1,65) — dim is only an
@@ -819,46 +434,6 @@ object SqlCatalog {
         |    > floor(CAST((cw.cum - cw.s8) * 16 AS DOUBLE)
         |        / CAST(st.st AS DOUBLE))
         |ORDER BY label, vec_id""".stripMargin,
-
-    // additive decomposition: identical to the DuckDB oracle except the
-    // epoch-day index — Spark spells it datediff(day, DATE ...), DuckDB
-    // as date subtraction (the RANGE-frame gap-safety fix, ADVICE r9)
-    "events_trend_decompose" ->
-      s"""WITH daily AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${dsumSql("value")} AS rev
-         |  FROM events GROUP BY event_type, CAST(ts AS DATE)),
-         |d2 AS (
-         |  SELECT event_type, day, rev,
-         |    CAST(datediff(day, DATE '1970-01-01') AS BIGINT) AS di
-         |  FROM daily),
-         |t0 AS (
-         |  SELECT event_type, day, rev, di,
-         |    COUNT(*) OVER (PARTITION BY event_type ORDER BY di
-         |      RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS w_n,
-         |    CAST(SUM(CAST(rev AS DECIMAL(20,8)))
-         |      OVER (PARTITION BY event_type ORDER BY di
-         |        RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS DOUBLE) / 7.0
-         |      AS trend_raw
-         |  FROM d2),
-         |t AS (
-         |  SELECT event_type, day, rev,
-         |    CAST(round(trend_raw, 6) AS DOUBLE) AS trend,
-         |    CAST(round(rev - CAST(round(trend_raw, 6) AS DOUBLE), 6)
-         |      AS DOUBLE) AS det,
-         |    MOD(di, 7) AS phase
-         |  FROM t0 WHERE w_n = 7),
-         |seas AS (
-         |  SELECT event_type, phase,
-         |    CAST(round(CAST(SUM(CAST(det AS DECIMAL(20,8))) AS DOUBLE)
-         |      / CAST(COUNT(*) AS DOUBLE), 6) AS DOUBLE) AS seasonal
-         |  FROM t GROUP BY event_type, phase)
-         |SELECT t.event_type, t.day, t.rev, t.trend, t.phase, seas.seasonal,
-         |  CAST(round(t.rev - t.trend - seas.seasonal, 6) AS DOUBLE)
-         |    AS residual
-         |FROM t JOIN seas
-         |  ON t.event_type = seas.event_type AND t.phase = seas.phase
-         |ORDER BY t.event_type, t.day""".stripMargin,
 
     // VARIANT pack (parse_json/variant_get — Spark 4's semi-structured
     // type; the oracle extracts the same values via DuckDB JSON)
@@ -988,130 +563,6 @@ object SqlCatalog {
         |  CAST(round(LEAST(surv + 1.96 * se, 1.0), 6) AS DOUBLE) AS ci_hi
         |FROM sv WHERE d > 0 ORDER BY cohort, dur""".stripMargin,
 
-    // Tukey fences (Spark's exact `percentile` ≡ DuckDB quantile_cont)
-    "agg_tukey_fences" ->
-      """WITH f AS (
-        |  SELECT o_orderstatus,
-        |    round(percentile(o_totalprice, 0.25), 2) AS q1,
-        |    round(percentile(o_totalprice, 0.75), 2) AS q3
-        |  FROM orders GROUP BY o_orderstatus),
-        |f2 AS (
-        |  SELECT o_orderstatus, q1, q3, round(q3 - q1, 2) AS iqr FROM f),
-        |f3 AS (
-        |  SELECT o_orderstatus, q1, q3, iqr,
-        |    q1 - 1.5 * iqr AS f_lo, q3 + 1.5 * iqr AS f_hi
-        |  FROM f2)
-        |SELECT o.o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(MAX(q1) AS DOUBLE) AS q1, CAST(MAX(q3) AS DOUBLE) AS q3,
-        |  CAST(MAX(iqr) AS DOUBLE) AS iqr,
-        |  CAST(SUM(CASE WHEN o.o_totalprice < f_lo THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_below,
-        |  CAST(SUM(CASE WHEN o.o_totalprice > f_hi THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_above,
-        |  CAST(round(CAST(SUM(CASE WHEN o.o_totalprice < f_lo
-        |      OR o.o_totalprice > f_hi THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE), 6) AS DOUBLE) AS outlier_share
-        |FROM orders o JOIN f3 ON o.o_orderstatus = f3.o_orderstatus
-        |GROUP BY o.o_orderstatus ORDER BY o.o_orderstatus""".stripMargin,
-
-    // vocabulary coverage curve (split/explode dialect; candidates
-    // pre-cut to the top-16 — only they can reach a band, and in-set
-    // strictly-prior ranks equal global ranks; rank by strictly-prior
-    // count — no partition-less window)
-    "text_vocab_coverage" ->
-      """WITH counts AS (
-        |  SELECT tok, COUNT(*) AS c FROM (
-        |    SELECT explode(split(text, ' ')) AS tok FROM documents)
-        |  GROUP BY tok),
-        |top AS (SELECT tok, c FROM counts ORDER BY c DESC, tok LIMIT 16),
-        |ranked AS (
-        |  SELECT /*+ BROADCAST(b) */ a.tok, a.c,
-        |    CAST(COUNT(b.tok) + 1 AS BIGINT) AS rnk
-        |  FROM top a LEFT JOIN top b
-        |    ON b.c > a.c OR (b.c = a.c AND b.tok < a.tok)
-        |  GROUP BY a.tok, a.c),
-        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_tok,
-        |    CAST(COUNT(*) AS BIGINT) AS n_vocab FROM counts),
-        |bands AS (
-        |  SELECT n_tok, n_vocab,
-        |    CAST(SUM(CASE WHEN rnk <= 4 THEN c ELSE 0L END) AS BIGINT) AS c4,
-        |    CAST(SUM(CASE WHEN rnk <= 8 THEN c ELSE 0L END) AS BIGINT) AS c8,
-        |    CAST(SUM(CASE WHEN rnk <= 16 THEN c ELSE 0L END) AS BIGINT)
-        |      AS c16
-        |  FROM ranked CROSS JOIN tot GROUP BY n_tok, n_vocab),
-        |stacked AS (
-        |  SELECT CAST(4 AS BIGINT) AS band, c4 AS covered, n_tok, n_vocab
-        |    FROM bands
-        |  UNION ALL
-        |  SELECT CAST(8 AS BIGINT), c8, n_tok, n_vocab FROM bands
-        |  UNION ALL
-        |  SELECT CAST(16 AS BIGINT), c16, n_tok, n_vocab FROM bands)
-        |SELECT band, covered, n_tok, n_vocab,
-        |  CAST(round(CAST(covered AS DOUBLE) / CAST(n_tok AS DOUBLE), 6)
-        |    AS DOUBLE) AS coverage
-        |FROM stacked ORDER BY band""".stripMargin,
-
-    // token burstiness on the top-64 grid (split/explode dialect)
-    "text_burstiness" ->
-      """WITH dt AS (
-        |  SELECT doc_id, tok, COUNT(*) AS c FROM (
-        |    SELECT doc_id, explode(split(text, ' ')) AS tok
-        |    FROM documents)
-        |  GROUP BY doc_id, tok),
-        |tg AS (
-        |  SELECT tok, CAST(SUM(c) AS BIGINT) AS tf,
-        |    CAST(COUNT(*) AS BIGINT) AS df
-        |  FROM dt GROUP BY tok),
-        |top AS (SELECT tok, tf, df FROM tg ORDER BY tf DESC, tok LIMIT 64),
-        |nd AS (SELECT COUNT(*) AS n_docs FROM documents)
-        |SELECT tok, tf, df,
-        |  CAST(round(CAST(tf AS DOUBLE) / CAST(df AS DOUBLE), 6) AS DOUBLE)
-        |    AS burst,
-        |  CAST(round(CAST(df AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-        |    AS DOUBLE) AS doc_share
-        |FROM top CROSS JOIN nd ORDER BY burst DESC, tok""".stripMargin,
-
-    // bounded-vocab Jensen-Shannon drift (split/explode dialect)
-    "text_jsd_drift" ->
-      """WITH toks AS (
-        |  SELECT source, explode(split(text, ' ')) AS tok FROM documents),
-        |gcounts AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
-        |vocab AS (SELECT tok FROM gcounts ORDER BY c DESC, tok LIMIT 256),
-        |mapped AS (
-        |  SELECT source,
-        |    CASE WHEN vocab.tok IS NULL THEN '<oov>' ELSE toks.tok END AS term
-        |  FROM toks LEFT JOIN vocab ON toks.tok = vocab.tok),
-        |sc AS (SELECT source, term, COUNT(*) AS cs
-        |       FROM mapped GROUP BY source, term),
-        |gc AS (SELECT term, COUNT(*) AS cg FROM mapped GROUP BY term),
-        |ns AS (SELECT source, SUM(cs) AS ns FROM sc GROUP BY source),
-        |ng AS (SELECT SUM(cg) AS ng FROM gc),
-        |grid AS (
-        |  SELECT /*+ BROADCAST(gc, ng) */
-        |    ns.source, ns.ns, COALESCE(sc.cs, 0L) AS cs, gc.cg, ng.ng
-        |  FROM ns CROSS JOIN gc CROSS JOIN ng
-        |  LEFT JOIN sc ON sc.source = ns.source AND sc.term = gc.term),
-        |cells AS (
-        |  SELECT source, ns, CAST(round(
-        |      CASE WHEN cs > 0 THEN
-        |        (CAST(cs AS DOUBLE) / CAST(ns AS DOUBLE))
-        |        * ln((CAST(cs AS DOUBLE) / CAST(ns AS DOUBLE))
-        |          / ((CAST(cs AS DOUBLE) / CAST(ns AS DOUBLE)
-        |            + CAST(cg AS DOUBLE) / CAST(ng AS DOUBLE)) / 2.0))
-        |      ELSE 0.0 END * 0.5
-        |    + CASE WHEN cg > 0 THEN
-        |        (CAST(cg AS DOUBLE) / CAST(ng AS DOUBLE))
-        |        * ln((CAST(cg AS DOUBLE) / CAST(ng AS DOUBLE))
-        |          / ((CAST(cs AS DOUBLE) / CAST(ns AS DOUBLE)
-        |            + CAST(cg AS DOUBLE) / CAST(ng AS DOUBLE)) / 2.0))
-        |      ELSE 0.0 END * 0.5, 8) AS DECIMAL(20,8)) AS cell
-        |  FROM grid)
-        |SELECT source, CAST(MAX(ns) AS BIGINT) AS n_tokens,
-        |  CAST(round(CAST(SUM(cell) AS DOUBLE), 6) AS DOUBLE) AS jsd,
-        |  CAST(round(CAST(SUM(cell) AS DOUBLE) / ln(2.0), 6) AS DOUBLE)
-        |    AS jsd_norm
-        |FROM cells GROUP BY source ORDER BY source""".stripMargin,
-
     // Gopher rule gate (split/size/filter/aggregate HOF dialect)
     "text_gopher_rules" ->
       """WITH base AS (
@@ -1181,67 +632,6 @@ object SqlCatalog {
         |    OR (bb.lw_dec = aa.lw_dec AND bb.doc_id < aa.doc_id)
         |GROUP BY aa.doc_id, aa.n_tok, aa.lw_dec
         |ORDER BY rnk""".stripMargin,
-
-    // DoReMi mixture step (explode dialect)
-    "text_doremi_step" ->
-      """WITH toks AS (
-        |  SELECT source, explode(split(text, ' ')) AS tok FROM documents),
-        |counts AS (SELECT tok, COUNT(*) AS c FROM toks GROUP BY tok),
-        |vocab AS (SELECT tok, c FROM counts ORDER BY c DESC, tok LIMIT 256),
-        |tot AS (SELECT SUM(c) AS n FROM counts),
-        |vt AS (SELECT SUM(c) AS nv FROM vocab),
-        |inv AS (
-        |  SELECT tok, CAST(round(-ln(CAST(c AS DOUBLE)
-        |    / CAST(n AS DOUBLE)), 8) AS DECIMAL(20,8)) AS nlp
-        |  FROM vocab CROSS JOIN tot),
-        |oov AS (
-        |  SELECT CAST(round(-ln(CAST(greatest(n - nv, 1) AS DOUBLE)
-        |    / CAST(n AS DOUBLE)), 8) AS DECIMAL(20,8)) AS nlp_oov
-        |  FROM tot CROSS JOIN vt),
-        |scored AS (
-        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |    SUM(COALESCE(inv.nlp, oov.nlp_oov)) AS loss_dec
-        |  FROM toks LEFT JOIN inv USING (tok) CROSS JOIN oov
-        |  GROUP BY source),
-        |k AS (SELECT COUNT(*) AS nd FROM scored),
-        |stepped AS (
-        |  SELECT source, n_tokens,
-        |    CAST(loss_dec AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS loss,
-        |    1.0 / CAST(nd AS DOUBLE) AS w_old,
-        |    CAST(round((1.0 / CAST(nd AS DOUBLE))
-        |      * exp(CAST(loss_dec AS DOUBLE) / CAST(n_tokens AS DOUBLE)), 8)
-        |      AS DECIMAL(20,8)) AS w_exp
-        |  FROM scored CROSS JOIN k),
-        |z AS (SELECT SUM(w_exp) AS z FROM stepped)
-        |SELECT source, n_tokens, CAST(round(loss, 6) AS DOUBLE) AS loss,
-        |  CAST(round(w_old, 6) AS DOUBLE) AS w_old,
-        |  CAST(round(CAST(w_exp AS DOUBLE) / CAST(z.z AS DOUBLE), 6)
-        |    AS DOUBLE) AS w_new
-        |FROM stepped CROSS JOIN z ORDER BY source""".stripMargin,
-
-    // per-doc token entropy (explode dialect)
-    "text_token_entropy" ->
-      """WITH counts AS (
-        |  SELECT doc_id, tok, COUNT(*) AS c FROM (
-        |    SELECT doc_id, explode(split(text, ' ')) AS tok FROM documents)
-        |  GROUP BY doc_id, tok),
-        |wn AS (
-        |  SELECT doc_id, tok, c, SUM(c) OVER (PARTITION BY doc_id) AS n
-        |  FROM counts),
-        |terms AS (
-        |  SELECT doc_id, n,
-        |    CAST(round(-(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-        |      * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)), 8)
-        |      AS DECIMAL(20,8)) AS term
-        |  FROM wn)
-        |SELECT doc_id, CAST(MAX(n) AS BIGINT) AS n_tokens,
-        |  CAST(COUNT(*) AS BIGINT) AS n_distinct,
-        |  CAST(round(CAST(SUM(term) AS DOUBLE), 6) AS DOUBLE) AS entropy,
-        |  CAST(CASE WHEN COUNT(*) > 1 THEN
-        |      round(CAST(SUM(term) AS DOUBLE)
-        |        / ln(CAST(COUNT(*) AS DOUBLE)), 6)
-        |    ELSE 0.0D END AS DOUBLE) AS norm_entropy
-        |FROM terms GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     // binary-quantized Hamming top-k (float_dot + HOF mask dialect; the
     // semantic all-candidate form — the DataFrame plan blocks by bit-block
@@ -1967,34 +1357,6 @@ object SqlCatalog {
         |  AND y >= cy - 0.08 AND y <= cy + 0.08
         |GROUP BY n_nationkey ORDER BY n_nationkey""".stripMargin,
 
-    // watermark late-data audit (quoted-INTERVAL + unix_micros dialect)
-    "stream_late_audit" ->
-      """WITH shifted AS (
-        |  SELECT event_type, event_id,
-        |    CASE WHEN event_id % 17 = 0
-        |      THEN ts - (event_id % 7 + 1) * INTERVAL '1' HOUR
-        |      ELSE ts END AS ts2
-        |  FROM events),
-        |aud AS (
-        |  SELECT event_type, ts2,
-        |    MAX(ts2) OVER (PARTITION BY event_type ORDER BY event_id
-        |      ROWS UNBOUNDED PRECEDING) AS wm
-        |  FROM shifted),
-        |flagged AS (
-        |  SELECT event_type,
-        |    CASE WHEN ts2 < wm - INTERVAL '2' HOUR THEN 1L ELSE 0L END AS late,
-        |    CASE WHEN ts2 < wm - INTERVAL '2' HOUR
-        |      THEN unix_micros(wm) - unix_micros(ts2) ELSE 0L END AS lag_us
-        |  FROM aud)
-        |SELECT event_type, COUNT(*) AS n,
-        |  SUM(late) AS n_late,
-        |  CAST(round(CAST(SUM(late) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-        |    AS DOUBLE) AS late_share,
-        |  CAST(round(CAST(SUM(lag_us) AS DOUBLE)
-        |    / CAST(greatest(SUM(late), 1L) AS DOUBLE) / 60000000.0, 6)
-        |    AS DOUBLE) AS avg_late_minutes
-        |FROM flagged GROUP BY event_type ORDER BY event_type""".stripMargin,
-
     // PQ encode (posexplode dialect; same micro-unit algebra)
     "embed_pq" ->
       """WITH q AS (
@@ -2194,47 +1556,6 @@ object SqlCatalog {
         |    ) / CAST(n_chars AS DOUBLE), 8) AS DOUBLE) AS ekey
         |FROM documents
         |ORDER BY ekey, doc_id LIMIT 20""".stripMargin,
-
-    // mergeable weekly→monthly theta rollup (theta_sketch_agg dialect)
-    "agg_sketch_rollup" ->
-      """WITH cells AS (
-        |  SELECT CAST(date_trunc('month', ts) AS DATE) AS mon,
-        |    CAST(date_trunc('week', ts) AS DATE) AS wk,
-        |    theta_sketch_agg(user_id) AS sk
-        |  FROM events GROUP BY 1, 2),
-        |est AS (
-        |  SELECT mon, wk, sk, round(theta_estimate(sk), 1) AS wk_est
-        |  FROM cells)
-        |SELECT mon, CAST(COUNT(*) AS BIGINT) AS n_weeks,
-        |  CAST(SUM(CAST(wk_est AS DECIMAL(20,1))) AS DOUBLE) AS naive_sum,
-        |  round(theta_estimate(theta_sketch_agg(sk)), 1) AS merged_users,
-        |  round(CAST(SUM(CAST(wk_est AS DECIMAL(20,1))) AS DOUBLE)
-        |    - round(theta_estimate(theta_sketch_agg(sk)), 1), 1)
-        |    AS cross_week_overlap
-        |FROM est GROUP BY mon ORDER BY mon""".stripMargin,
-
-    // seasonal-naive forecast (date_add dialect of the INTERVAL oracle)
-    "events_forecast" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT d.event_type, abs(d.n - p.n) AS err
-        |  FROM daily d JOIN daily p ON d.event_type = p.event_type
-        |    AND date_add(p.day, 7) = d.day),
-        |mae AS (
-        |  SELECT event_type, COUNT(*) AS n_days,
-        |    CAST(round(CAST(SUM(err) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-        |      AS DOUBLE) AS mae
-        |  FROM scored GROUP BY event_type),
-        |maxd AS (SELECT event_type, MAX(day) AS maxd FROM daily
-        |         GROUP BY event_type),
-        |fc AS (SELECT d.event_type, d.n AS forecast_next
-        |  FROM daily d JOIN maxd m ON d.event_type = m.event_type
-        |    AND d.day = date_sub(m.maxd, 6))
-        |SELECT mae.event_type, mae.n_days, mae.mae, fc.forecast_next
-        |FROM mae LEFT JOIN fc ON mae.event_type = fc.event_type
-        |ORDER BY mae.event_type""".stripMargin,
 
     // CEP regex over journeys (sorted-struct concat + regexp_extract_all
     // + stack dialect)
@@ -2541,19 +1862,6 @@ object SqlCatalog {
         |  ((sy1 - slope100 * sx) / nd) / 1e2 AS intercept
         |FROM sl ORDER BY o_orderstatus""".stripMargin,
 
-    // Spark `^` is bitwise XOR (DuckDB's is power — its oracle uses xor())
-    "fn_bitwise" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_orderkey & 255 AS k_and,
-        |  l_orderkey | 4096 AS k_or,
-        |  l_orderkey ^ l_partkey AS k_xor,
-        |  ~l_orderkey AS k_not,
-        |  shiftleft(l_orderkey, 3) AS k_shl,
-        |  shiftright(l_partkey, 2) AS k_shr,
-        |  CAST(bit_count(l_partkey) AS INT) AS k_pop
-        |FROM lineitem WHERE l_orderkey < 200
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
     // Spark regex backreferences are `$1` (DuckDB's oracle uses `\1`);
     // regexp_count / rlike are the Spark spellings
     "fn_regex" ->
@@ -2565,29 +1873,7 @@ object SqlCatalog {
         |  p_name RLIKE '^(small|large)' AS is_sized
         |FROM part ORDER BY p_partkey""".stripMargin,
 
-    // Spark has structured parse_url; the DuckDB oracle recomputes the
-    // parts from the planted key columns instead
-    "fn_url" ->
-      """SELECT event_id, url,
-        |  parse_url(url, 'HOST') AS host,
-        |  parse_url(url, 'PATH') AS path,
-        |  CAST(parse_url(url, 'QUERY', 'q') AS BIGINT) AS q_val
-        |FROM (
-        |  SELECT event_id,
-        |    concat('https://ex', CAST(event_id % 5 AS STRING), '.com/p/',
-        |      CAST(user_id AS STRING), '?q=', CAST(event_id % 7 AS STRING),
-        |      '&s=1') AS url
-        |  FROM events WHERE event_id % 97 = 0)
-        |ORDER BY event_id""".stripMargin,
-
     // ------------------------------------------- advanced aggs / windows
-    "agg_percentile" ->
-      """SELECT o_orderstatus,
-        |  round(percentile(o_totalprice, 0.5), 2) AS p50,
-        |  round(percentile(o_totalprice, 0.95), 2) AS p95,
-        |  COUNT(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
     "agg_pivot" ->
       """SELECT o_orderstatus,
         |  COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS p1,
@@ -2596,27 +1882,6 @@ object SqlCatalog {
         |  COUNT(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS p4,
         |  COUNT(*) FILTER (WHERE o_orderpriority = '5-LOW') AS p5
         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "window_range_frame" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice, n_nearby
-        |FROM (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice,
-        |    COUNT(*) OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice
-        |      RANGE BETWEEN 5000.0 PRECEDING AND 5000.0 FOLLOWING) AS n_nearby
-        |  FROM orders)
-        |WHERE o_orderkey % 25 = 0 ORDER BY o_orderkey""".stripMargin,
-
-    "fn_null" ->
-      """SELECT c_custkey,
-        |  round(coalesce(bal_or_null, 0.0), 2) AS bal0,
-        |  nullif(c_mktsegment, 'BUILDING') AS seg_nb,
-        |  (bal_or_null <=> CAST(NULL AS DOUBLE)) AS is_null_safe,
-        |  (bal_or_null IS NULL) AS is_null
-        |FROM (
-        |  SELECT c_custkey, c_mktsegment,
-        |    CASE WHEN c_custkey % 3 = 0 THEN NULL ELSE c_acctbal END AS bal_or_null
-        |  FROM customer)
-        |ORDER BY c_custkey""".stripMargin,
 
     // the partitioned-lag shape (lag within calendar year + edge-row
     // stitch), mirroring the DataFrame plan — no partition-less window in
@@ -2655,24 +1920,6 @@ object SqlCatalog {
         |  COUNT(*) AS n_events
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
 
-    // sequence + explode is the Spark spelling of the oracle's
-    // generate_series + unnest (both inclusive)
-    "agg_active_users" ->
-      """WITH grid AS (
-        |  SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
-        |dau AS (SELECT day, COUNT(DISTINCT user_id) AS dau
-        |        FROM grid GROUP BY day),
-        |ex AS (SELECT user_id,
-        |         explode(sequence(day, day + INTERVAL 6 DAY,
-        |                          INTERVAL 1 DAY)) AS day
-        |       FROM grid),
-        |wau AS (SELECT day, COUNT(DISTINCT user_id) AS wau
-        |        FROM ex GROUP BY day)
-        |SELECT d.day, d.dau, w.wau,
-        |  round(CAST(d.dau AS DOUBLE) / CAST(w.wau AS DOUBLE), 4) AS stickiness
-        |FROM dau d JOIN wau w ON d.day = w.day
-        |ORDER BY d.day""".stripMargin,
-
     // Spark's datediff takes (end, start) where DuckDB's date_diff takes
     // ('day', start, end) — dialect twin of the oracle
     "agg_retention" ->
@@ -2687,23 +1934,6 @@ object SqlCatalog {
         |WHERE datediff(day, cohort_day) IN (0, 1, 3, 7)
         |GROUP BY cohort_day, CAST(datediff(day, cohort_day) AS BIGINT)
         |ORDER BY cohort_day, day_offset""".stripMargin,
-
-    // theta sketches via the engine-registered native aggregate — the SQL
-    // text runs the same two-level sketch→merge→intersect plan
-    "agg_theta_sketch" ->
-      """WITH per_status AS (
-        |  SELECT l_returnflag, l_linestatus,
-        |    theta_sketch_agg(l_partkey) AS sk
-        |  FROM lineitem GROUP BY l_returnflag, l_linestatus),
-        |per_flag AS (
-        |  SELECT l_returnflag, theta_sketch_agg(sk) AS sk
-        |  FROM per_status GROUP BY l_returnflag)
-        |SELECT a.l_returnflag AS flag_a, b.l_returnflag AS flag_b,
-        |  round(theta_estimate(a.sk), 1) AS approx_a,
-        |  round(theta_estimate(b.sk), 1) AS approx_b,
-        |  round(theta_estimate(theta_intersect(a.sk, b.sk)), 1) AS approx_shared
-        |FROM per_flag a JOIN per_flag b ON a.l_returnflag < b.l_returnflag
-        |ORDER BY flag_a, flag_b""".stripMargin,
 
     "agg_hll_sketch" ->
       """WITH per_group AS (
@@ -2752,14 +1982,6 @@ object SqlCatalog {
          |FROM events
          |GROUP BY window(ts, '1 hour', '15 minutes'), event_type
          |ORDER BY ws, event_type""".stripMargin,
-
-    "stream_session" ->
-      """SELECT session_window.start AS session_start,
-        |  session_window.end AS session_end,
-        |  user_id, COUNT(*) AS n_events
-        |FROM events
-        |GROUP BY session_window(ts, '10 minutes'), user_id
-        |ORDER BY user_id, session_start""".stripMargin,
 
     // ------------------------------------------------------ dedup family
     "dedup_exact" ->
@@ -3024,33 +2246,6 @@ object SqlCatalog {
          |FROM m ORDER BY event_type""".stripMargin
     },
 
-    "text_bm25" ->
-      """WITH terms AS (
-        |  SELECT doc_id, explode(split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY doc_id, term),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM terms GROUP BY doc_id),
-        |dfc AS (SELECT term, COUNT(*) AS df
-        |        FROM (SELECT DISTINCT doc_id, term FROM terms) GROUP BY term),
-        |scal AS (SELECT
-        |    (SELECT COUNT(*) FROM documents) AS n_total,
-        |    CAST((SELECT COUNT(*) FROM terms) AS DOUBLE)
-        |      / CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS avgdl),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, dfc.df, dl.dl,
-        |    round(ln((CAST(scal.n_total AS DOUBLE) - CAST(dfc.df AS DOUBLE) + 0.5)
-        |            / (CAST(dfc.df AS DOUBLE) + 0.5) + 1.0)
-        |      * (CAST(tf.tf AS DOUBLE) * 2.2)
-        |      / (CAST(tf.tf AS DOUBLE)
-        |         + 1.2 * (0.25 + 0.75 * CAST(dl.dl AS DOUBLE) / scal.avgdl)),
-        |      6) AS score
-        |  FROM tf JOIN dfc USING (term) JOIN dl USING (doc_id) CROSS JOIN scal),
-        |ranked AS (
-        |  SELECT doc_id, term, tf, df, dl, score,
-        |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rnk
-        |  FROM scored)
-        |SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, term, tf, df, dl, score
-        |FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-
     "dedup_embed" ->
       s"""WITH $vecCorpusSql,
          |cents AS (
@@ -3204,28 +2399,6 @@ object SqlCatalog {
          |  FROM scored)
          |SELECT probe_id, CAST(rnk AS BIGINT) AS rnk, cand_id, cos
          |FROM ranked WHERE rnk <= 5 ORDER BY probe_id, rnk""".stripMargin,
-
-    // round-13: Spark twins for the tokenizer/hash/vector-helper keys
-    // (DuckDB oracle uses string_split/md5-prefix/list-subquery forms)
-    "agg_chapman" ->
-      """WITH toks AS (
-        |  SELECT doc_id % 2 = 0 AS even, explode(split(text, ' ')) AS tok
-        |  FROM documents),
-        |flags AS (
-        |  SELECT tok, MAX(CASE WHEN even THEN 1 ELSE 0 END) AS in_a,
-        |    MAX(CASE WHEN even THEN 0 ELSE 1 END) AS in_b
-        |  FROM toks GROUP BY tok),
-        |m AS (SELECT SUM(in_a) AS n_a, SUM(in_b) AS n_b,
-        |  SUM(in_a * in_b) AS o, COUNT(*) AS v_true FROM flags)
-        |SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |  CAST(o AS BIGINT) AS overlap, CAST(v_true AS BIGINT) AS v_true,
-        |  CAST(ROUND((CAST(n_a AS DOUBLE) + 1.0) * (CAST(n_b AS DOUBLE) + 1.0)
-        |    / (CAST(o AS DOUBLE) + 1.0) - 1.0, 4) AS DOUBLE) AS n_hat,
-        |  CAST(ROUND(((CAST(n_a AS DOUBLE) + 1.0)
-        |      * (CAST(n_b AS DOUBLE) + 1.0)
-        |      / (CAST(o AS DOUBLE) + 1.0) - 1.0)
-        |    / CAST(v_true AS DOUBLE), 6) AS DOUBLE) AS est_over_true
-        |FROM m""".stripMargin,
 
     // round-13b: Spark twins for the two tokenizer keys (DuckDB oracle
     // uses string_split/len/list-comprehension forms)
@@ -3555,18 +2728,6 @@ object SqlCatalog {
         |  ON g.hour = h.hour AND g.event_type = h.event_type
         |ORDER BY g.hour, g.event_type""".stripMargin,
 
-    "fn_struct" ->
-      """SELECT o_custkey, latest.o_orderdate AS latest_date,
-        |  latest.o_orderkey AS latest_key,
-        |  latest.o_totalprice AS latest_price, n_orders
-        |FROM (
-        |  SELECT o_custkey,
-        |    max(named_struct('o_orderdate', o_orderdate, 'o_orderkey', o_orderkey,
-        |      'o_totalprice', o_totalprice)) AS latest,
-        |    count(*) AS n_orders
-        |  FROM orders GROUP BY o_custkey)
-        |ORDER BY o_custkey""".stripMargin,
-
     "text_unigram_lm" ->
       """WITH toks AS (SELECT doc_id, explode(split(text, ' ')) AS tok
         |              FROM documents),
@@ -3599,19 +2760,6 @@ object SqlCatalog {
         |ORDER BY o_orderstatus""".stripMargin,
 
     // ------------------------------------------------------ text analysis
-    "text_stats" ->
-      """SELECT d.lang, d.source, n_docs, avg_chars, n_tokens, n_vocab
-        |FROM (SELECT lang, source, count(*) AS n_docs,
-        |        CAST(sum(n_chars) AS DOUBLE) / count(*) AS avg_chars
-        |      FROM documents GROUP BY lang, source) d
-        |JOIN (SELECT lang, source, count(*) AS n_tokens,
-        |        count(DISTINCT tok) AS n_vocab
-        |      FROM (SELECT lang, source, explode(split(text, ' ')) AS tok
-        |            FROM documents)
-        |      GROUP BY lang, source) t
-        |  ON d.lang = t.lang AND d.source = t.source
-        |ORDER BY d.lang, d.source""".stripMargin,
-
     "text_lang" ->
       """SELECT doc_id, lang,
         |  CASE WHEN en_score >= 2 THEN 'en' ELSE 'und' END AS predicted,
@@ -3706,24 +2854,6 @@ object SqlCatalog {
         |FROM stats s JOIN mx m ON s.doc_id = m.doc_id
         |ORDER BY s.doc_id""".stripMargin,
 
-    "text_tfidf" ->
-      """WITH terms AS (
-        |  SELECT doc_id, explode(split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY doc_id, term),
-        |df AS (SELECT term, COUNT(*) AS df
-        |       FROM (SELECT DISTINCT doc_id, term FROM terms) GROUP BY term),
-        |n AS (SELECT COUNT(*) AS n_total FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-        |    round(tf.tf * ln(CAST(n.n_total + 1 AS DOUBLE) / (df.df + 1)), 6) AS score
-        |  FROM tf JOIN df USING (term) CROSS JOIN n),
-        |ranked AS (
-        |  SELECT doc_id, term, tf, df, score,
-        |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rnk
-        |  FROM scored)
-        |SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, term, tf, df, score
-        |FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-
     "text_fingerprint" ->
       s"""WITH tok AS (SELECT doc_id, split(text, ' ') l FROM documents),
          |sh AS (SELECT doc_id, explode(array_distinct($shingles)) s
@@ -3801,33 +2931,6 @@ object SqlCatalog {
         |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
         |GROUP BY d.lang, e.label ORDER BY d.lang, e.label""".stripMargin,
 
-    // Spark dialect: HOF gram extraction via transform + LATERAL VIEW
-    // (DuckDB uses a LATERAL generate_series)
-    "match_fuzzy" ->
-      """WITH grams AS (
-        |  SELECT DISTINCT c_custkey, c_nationkey, g
-        |  FROM customer
-        |  LATERAL VIEW explode(transform(sequence(1, length(c_name) - 2),
-        |    i -> substring(c_name, i, 3))) t AS g
-        |  WHERE length(c_name) >= 3),
-        |rare AS (
-        |  SELECT g FROM (
-        |    SELECT g, COUNT(DISTINCT c_custkey) AS df FROM grams GROUP BY g)
-        |  WHERE df <= 40),
-        |keyed AS (SELECT grams.* FROM grams JOIN rare USING (g)),
-        |cand AS (
-        |  SELECT DISTINCT a.c_custkey AS ka, b.c_custkey AS kb
-        |  FROM keyed a JOIN keyed b
-        |    ON a.g = b.g AND a.c_nationkey = b.c_nationkey
-        |    AND a.c_custkey < b.c_custkey)
-        |SELECT ka, kb, ca.c_name AS name_a, cb.c_name AS name_b,
-        |  CAST(levenshtein(ca.c_name, cb.c_name) AS BIGINT) AS dist
-        |FROM cand
-        |JOIN customer ca ON ka = ca.c_custkey
-        |JOIN customer cb ON kb = cb.c_custkey
-        |WHERE levenshtein(ca.c_name, cb.c_name) <= 2
-        |ORDER BY ka, kb""".stripMargin,
-
     // Spark dialect: the sketch itself via the registered count_min UDAF
     // + md5_48 lookups (DuckDB rebuilds the grid from exact counts)
     "agg_count_min" ->
@@ -3896,11 +2999,6 @@ object SqlCatalog {
         |       ELSE -((-s8 * 2 + n_bigrams * 100) DIV (n_bigrams * 200)) END AS DOUBLE)
         |    / 1000000.0 AS mean_logp
         |FROM agg ORDER BY doc_id""".stripMargin,
-
-    "mm_meta" ->
-      """SELECT doc_id, length(unhex(md5(text))) AS n_bytes,
-        |  4 AS width, 4 AS height, 'gray8' AS fmt, 16 AS n_px
-        |FROM documents ORDER BY doc_id""".stripMargin,
 
     "mm_pixels" ->
       s"""WITH px AS (SELECT doc_id, $mediaPx AS p FROM documents)
@@ -4307,34 +3405,7 @@ object SqlCatalog {
         |  MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
         |FROM g GROUP BY split ORDER BY split""".stripMargin,
 
-    "text_oov_rate" ->
-      """WITH tokr AS (
-        |  SELECT doc_id, explode(split(text, ' ')) AS tok FROM documents),
-        |vc AS (SELECT tok, COUNT(*) AS c FROM tokr GROUP BY tok),
-        |vocab AS (SELECT tok FROM vc ORDER BY c DESC, tok LIMIT 256)
-        |SELECT t.doc_id, COUNT(*) AS n_tokens,
-        |  CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-        |  round(CAST(SUM(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE), 6) AS oov_rate
-        |FROM tokr t LEFT JOIN vocab v ON t.tok = v.tok
-        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-
     // --------------------------------------- round-4 additions (this file)
-    // mergeable exact distinct via Spark's bitmap functions — the SQL text
-    // runs the REAL bitmap plan (not the COUNT DISTINCT the oracle pins)
-    "agg_bitmap" ->
-      """WITH per_status AS (
-        |  SELECT l_returnflag, l_linestatus,
-        |    bitmap_bucket_number(l_partkey) AS bucket,
-        |    bitmap_construct_agg(bitmap_bit_position(l_partkey)) AS bm
-        |  FROM lineitem
-        |  GROUP BY l_returnflag, l_linestatus, bitmap_bucket_number(l_partkey)),
-        |per_bucket AS (
-        |  SELECT l_returnflag, bucket, bitmap_count(bitmap_or_agg(bm)) AS bucket_nd
-        |  FROM per_status GROUP BY l_returnflag, bucket)
-        |SELECT l_returnflag, SUM(bucket_nd) AS distinct_parts
-        |FROM per_bucket GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
     "text_pack" ->
       """WITH t AS (
         |  SELECT doc_id, lang,
@@ -4427,35 +3498,6 @@ object SqlCatalog {
          |FROM packed GROUP BY lang, CAST(floor(cum_before / 1024.0) AS BIGINT)
          |ORDER BY lang, seq""".stripMargin,
 
-    // statement form of the footer introspection: the layout summary a
-    // faithful writer must produce, recomputed from the source table
-    "meta_layout" ->
-      """SELECT CAST(0 AS INT) AS row_group,
-        |  min(l_orderkey) AS min_key, max(l_orderkey) AS max_key,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM lineitem""".stripMargin,
-
-    // statement form of the clustered rewrite: the write is proven
-    // lossless by the oracle, so the SQL text is the same slice taken
-    // straight from the catalog table
-    "sink_zorder" ->
-      """SELECT event_id, user_id, ts, event_type, value
-        |FROM events
-        |WHERE user_id BETWEEN 10 AND 30
-        |  AND ts >= TIMESTAMP '2024-01-10 00:00:00'
-        |  AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |ORDER BY event_id""".stripMargin,
-
-    // the GENUINE sketch path in statement form: the native misra_gries
-    // aggregate (GraftExtensions) exploded back to rows
-    "agg_heavy_hitters" ->
-      """SELECT day, e.item AS item, e.est_count AS est_count
-        |FROM (SELECT date_trunc('DAY', ts) AS day,
-        |        misra_gries(event_type, 8) AS hh
-        |      FROM events GROUP BY date_trunc('DAY', ts)) g
-        |LATERAL VIEW explode(hh) t AS e
-        |ORDER BY day, est_count DESC, item""".stripMargin,
-
     // Spark dialect: datediff(end, start) + DIV for the integer week age
     "agg_decay" ->
       """WITH mx AS (SELECT date_trunc('DAY', max(ts)) AS d1 FROM events),
@@ -4541,85 +3583,6 @@ object SqlCatalog {
         |    ON c.user_id = p.user_id)
         |WHERE rn = 1 ORDER BY event_id""".stripMargin,
 
-    // gaps-and-islands: DuckDB's DATE - INTEGER arithmetic is date_sub here
-    "events_streak" ->
-      """WITH days AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |isl AS (
-        |  SELECT user_id, day,
-        |    date_sub(day, ROW_NUMBER() OVER (PARTITION BY user_id
-        |                    ORDER BY day)) AS anchor
-        |  FROM days),
-        |streaks AS (
-        |  SELECT user_id, anchor, COUNT(*) AS len FROM isl GROUP BY 1, 2)
-        |SELECT user_id, COUNT(*) AS n_streaks,
-        |  SUM(len) AS active_days,
-        |  MAX(len) AS longest_streak
-        |FROM streaks GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // the REAL argmax aggregate surface (the oracle spells it row_number):
-    // struct-ordered max_by/min_by, deterministic under ties
-    "agg_argmax" ->
-      """SELECT o_orderstatus,
-        |  max_by(o_orderkey, struct(o_totalprice, o_orderkey)) AS top_key,
-        |  round(MAX(o_totalprice), 2) AS top_price,
-        |  min_by(o_orderkey, struct(o_totalprice, o_orderkey)) AS bottom_key,
-        |  round(MIN(o_totalprice), 2) AS bottom_price,
-        |  COUNT(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // interval-overlap via the day-bucket equi join (the oracle spells the
-    // naive windows-LEFT-JOIN-sessions band predicate)
-    "join_interval" ->
-      """WITH marked AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts > LAG(ts) OVER w + INTERVAL 30 MINUTE
-        |         THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS is_new
-        |  FROM events WHERE user_id % 5 = 0
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (
-        |  SELECT user_id, ts,
-        |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
-        |  FROM marked),
-        |sess AS (SELECT user_id, session_no, MIN(ts) AS st, MAX(ts) AS en
-        |  FROM numbered GROUP BY user_id, session_no),
-        |intra AS (SELECT *, CAST(st AS DATE) AS day FROM sess
-        |          WHERE CAST(st AS DATE) = CAST(en AS DATE)),
-        |wins AS (
-        |  SELECT day, w_id,
-        |    CAST(day AS TIMESTAMP) + CASE WHEN w_id = 1 THEN INTERVAL 10 HOURS
-        |      ELSE INTERVAL 18 HOURS END AS w_start,
-        |    CAST(day AS TIMESTAMP) + CASE WHEN w_id = 1 THEN INTERVAL 14 HOURS
-        |      ELSE INTERVAL 20 HOURS END AS w_end
-        |  FROM (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events) d
-        |  LATERAL VIEW explode(array(1, 2)) v AS w_id),
-        |hits AS (
-        |  SELECT s.day, w.w_id, COUNT(*) AS ns,
-        |    COUNT(DISTINCT s.user_id) AS nu
-        |  FROM intra s JOIN wins w
-        |    ON s.day = w.day AND s.st < w.w_end AND s.en >= w.w_start
-        |  GROUP BY s.day, w.w_id)
-        |SELECT w.day, w.w_id,
-        |  coalesce(h.ns, CAST(0 AS BIGINT)) AS n_sessions,
-        |  coalesce(h.nu, CAST(0 AS BIGINT)) AS n_users
-        |FROM wins w LEFT JOIN hits h ON w.day = h.day AND w.w_id = h.w_id
-        |ORDER BY w.day, w.w_id""".stripMargin,
-
-    // runtime bloom pruning in SQL text: the engine-registered bloom_agg /
-    // bloom_contains functions, the scalar-subquery sketch standing in for
-    // the DataFrame path's 1-row broadcast
-    "join_bloom" ->
-      """WITH dim AS (SELECT c_custkey, c_name FROM customer
-        |            WHERE c_mktsegment = 'BUILDING'),
-        |bf AS (SELECT bloom_agg(c_custkey, 131072, 5) AS bf FROM dim)
-        |SELECT /*+ SHUFFLE_HASH(dim) */ o_orderkey, c_name, o_totalprice
-        |FROM orders CROSS JOIN bf
-        |JOIN dim ON o_custkey = c_custkey
-        |WHERE bloom_contains(bf.bf, o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
     // int8 min-max quantization: posexplode is the Spark spelling of the
     // oracle's zipped parallel unnests
     "embed_quantize" ->
@@ -4639,42 +3602,6 @@ object SqlCatalog {
         |  SUM(code) AS sum_codes,
         |  MIN(code) AS min_code, MAX(code) AS max_code
         |FROM codes GROUP BY label ORDER BY label""".stripMargin,
-
-    // day-partitioned sweep line over intra-day session boundaries
-    "events_concurrency" ->
-      """WITH marked AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts > LAG(ts) OVER w + INTERVAL 30 MINUTE
-        |         THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS is_new
-        |  FROM events WHERE user_id % 5 = 0
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |numbered AS (
-        |  SELECT user_id, ts,
-        |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_no
-        |  FROM marked),
-        |sess AS (
-        |  SELECT user_id, session_no, MIN(ts) AS st, MAX(ts) AS en
-        |  FROM numbered GROUP BY user_id, session_no),
-        |sd AS (SELECT * FROM sess WHERE CAST(st AS DATE) = CAST(en AS DATE)),
-        |pts AS (
-        |  SELECT CAST(st AS DATE) AS day, st AS t, 1 AS delta, 0 AS tie,
-        |    user_id, session_no
-        |  FROM sd
-        |  UNION ALL
-        |  SELECT CAST(st AS DATE) AS day, en AS t, -1 AS delta, 1 AS tie,
-        |    user_id, session_no
-        |  FROM sd),
-        |sw AS (
-        |  SELECT day, tie,
-        |    SUM(delta) OVER (PARTITION BY day
-        |      ORDER BY t, tie, user_id, session_no
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS active
-        |  FROM pts)
-        |SELECT day, MAX(active) AS peak_concurrent,
-        |  SUM(CASE WHEN tie = 0 THEN 1 ELSE 0 END) AS n_sessions
-        |FROM sw GROUP BY day ORDER BY day""".stripMargin,
 
     // statement form of the binaryFile round trip: like mm_batch_stats,
     // the write+readback is proven lossless by the oracle, so the SQL
@@ -4763,27 +3690,6 @@ object SqlCatalog {
         |FROM g LATERAL VIEW explode(sequence(0, n_chunks - 2)) t AS i
         |ORDER BY doc_id, pair_idx""".stripMargin,
 
-    "agg_autocorr" ->
-      """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1.event_type, l.lag, d1.n AS x, d2.n AS y
-        |  FROM daily d1
-        |  CROSS JOIN (SELECT 1 AS lag UNION ALL SELECT 7) l
-        |  JOIN daily d2 ON d2.event_type = d1.event_type
-        |    AND d2.day = date_add(d1.day, l.lag)),
-        |m AS (SELECT event_type, lag, COUNT(*) AS np,
-        |  SUM(CAST(x AS DECIMAL(19,0))) AS sx, SUM(CAST(y AS DECIMAL(19,0))) AS sy,
-        |  SUM(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0))) AS sxx,
-        |  SUM(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0))) AS syy,
-        |  SUM(CAST(x AS DECIMAL(19,0)) * CAST(y AS DECIMAL(19,0))) AS sxy
-        |  FROM pairs GROUP BY 1, 2)
-        |SELECT event_type, CAST(lag AS BIGINT) AS lag, CAST(np AS BIGINT) AS n_pairs,
-        |  CAST(round((CAST(np AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (sqrt(CAST(np AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      * sqrt(CAST(np AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS DOUBLE) AS autocorr
-        |FROM m ORDER BY event_type, lag""".stripMargin,
-
     "events_gaps" ->
       """WITH g AS (SELECT user_id,
         |  unix_timestamp(ts) - lag(unix_timestamp(ts))
@@ -4818,27 +3724,6 @@ object SqlCatalog {
         |  FROM s WHERE cos >= 0.05 AND cos < 0.2)
         |SELECT probe_id, CAST(rnk AS BIGINT) AS rnk, cand_id, cos
         |FROM b WHERE rnk <= 5 ORDER BY probe_id, rnk""".stripMargin,
-
-    "text_domain_drift" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN CAST(substr(source, 4, 10) AS INT) < 10 THEN 'a' ELSE 'b' END AS grp,
-        |  text FROM documents),
-        |tot AS (SELECT
-        |  SUM(CASE WHEN grp = 'a' THEN 1 ELSE 0 END) AS na,
-        |  SUM(CASE WHEN grp = 'b' THEN 1 ELSE 0 END) AS nb FROM d),
-        |td AS (SELECT DISTINCT doc_id, grp, term
-        |  FROM d LATERAL VIEW explode(split(text, ' ')) s AS term),
-        |dfs AS (SELECT term,
-        |  SUM(CASE WHEN grp = 'a' THEN 1 ELSE 0 END) AS dfa,
-        |  SUM(CASE WHEN grp = 'b' THEN 1 ELSE 0 END) AS dfb
-        |  FROM td GROUP BY term),
-        |rates AS (SELECT term,
-        |  CAST(round(CAST(dfa AS DOUBLE) / CAST(tot.na AS DOUBLE), 6) AS DOUBLE) AS rate_a,
-        |  CAST(round(CAST(dfb AS DOUBLE) / CAST(tot.nb AS DOUBLE), 6) AS DOUBLE) AS rate_b
-        |  FROM dfs CROSS JOIN tot)
-        |SELECT term, rate_a, rate_b,
-        |  CAST(round(abs(rate_a - rate_b), 6) AS DOUBLE) AS drift
-        |FROM rates ORDER BY drift DESC, term LIMIT 20""".stripMargin,
 
     "sim_radius" ->
       """WITH e AS (SELECT vec_id, embedding,
@@ -4946,52 +3831,6 @@ object SqlCatalog {
         |    AS intercept
         |FROM m ORDER BY lang""".stripMargin,
 
-    // exact-microsecond lag vs the corpus watermark (unix_micros dialect)
-    "meta_freshness" ->
-      """WITH pt AS (SELECT event_type, COUNT(*) AS n_events, MAX(ts) AS last_ts
-        |  FROM events GROUP BY 1),
-        |wm AS (SELECT MAX(last_ts) AS wm_ts FROM pt)
-        |SELECT event_type, n_events, last_ts,
-        |  CAST(round(CAST(unix_micros(wm_ts) - unix_micros(last_ts) AS DOUBLE)
-        |    / 60000000.0, 6) AS DOUBLE) AS lag_minutes,
-        |  (unix_micros(wm_ts) - unix_micros(last_ts)) > 3600000000 AS stale
-        |FROM pt CROSS JOIN wm ORDER BY event_type""".stripMargin,
-
-    // interval lookback + rank-interpolated per-hour latency percentiles
-    "events_time_to_convert" ->
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id AS v_user_id, ts AS view_ts
-        |  FROM events WHERE event_type = 'view'),
-        |lat0 AS (SELECT p.purchase_id, p.purchase_ts, MAX(v.view_ts) AS last_view_ts
-        |  FROM p JOIN v ON p.user_id = v.v_user_id
-        |    AND v.view_ts >= p.purchase_ts - INTERVAL 2 HOUR
-        |    AND v.view_ts <= p.purchase_ts
-        |  GROUP BY 1, 2),
-        |lat AS (SELECT CAST(hour(purchase_ts) AS BIGINT) AS hod,
-        |    unix_micros(purchase_ts) - unix_micros(last_view_ts) AS lat_us
-        |  FROM lat0),
-        |r AS (SELECT hod, lat_us,
-        |    ROW_NUMBER() OVER (PARTITION BY hod ORDER BY lat_us) - 1 AS r,
-        |    COUNT(*) OVER (PARTITION BY hod) AS n
-        |  FROM lat),
-        |picked AS (
-        |  SELECT hod, n,
-        |    MAX(CASE WHEN r = CAST(floor(CAST(0.5 AS DOUBLE) * (n - 1)) AS BIGINT) THEN lat_us END) AS lo50,
-        |    MAX(CASE WHEN r = CAST(ceil(CAST(0.5 AS DOUBLE) * (n - 1)) AS BIGINT) THEN lat_us END) AS hi50,
-        |    MAX(CASE WHEN r = CAST(floor(CAST(0.95 AS DOUBLE) * (n - 1)) AS BIGINT) THEN lat_us END) AS lo95,
-        |    MAX(CASE WHEN r = CAST(ceil(CAST(0.95 AS DOUBLE) * (n - 1)) AS BIGINT) THEN lat_us END) AS hi95
-        |  FROM r
-        |  WHERE r = CAST(floor(CAST(0.5 AS DOUBLE) * (n - 1)) AS BIGINT) OR r = CAST(ceil(CAST(0.5 AS DOUBLE) * (n - 1)) AS BIGINT)
-        |     OR r = CAST(floor(CAST(0.95 AS DOUBLE) * (n - 1)) AS BIGINT) OR r = CAST(ceil(CAST(0.95 AS DOUBLE) * (n - 1)) AS BIGINT)
-        |  GROUP BY hod, n)
-        |SELECT hod, n,
-        |  CAST(round((lo50 + (CAST(0.5 AS DOUBLE) * (n - 1) - floor(CAST(0.5 AS DOUBLE) * (n - 1))) * (hi50 - lo50))
-        |    / 60000000.0, 6) AS DOUBLE) AS p50_minutes,
-        |  CAST(round((lo95 + (CAST(0.95 AS DOUBLE) * (n - 1) - floor(CAST(0.95 AS DOUBLE) * (n - 1))) * (hi95 - lo95))
-        |    / 60000000.0, 6) AS DOUBLE) AS p95_minutes
-        |FROM picked ORDER BY hod""".stripMargin,
-
     // micro-unit cohort sums; cleared-denominator decimal distance
     "embed_drift" ->
       """WITH q AS (
@@ -5054,15 +3893,24 @@ object SqlCatalog {
         |WHERE r.rk <= t.target ORDER BY r.lang, r.rk""".stripMargin,
   )
 
-  /** SQL text per declared query key, runnable via [[sql]]. */
-  val queriesSql: Map[String, String] =
-    sharedWithOracle.map(k => k -> oracleOf(k)).toMap ++
-      Composite.oracles ++ sparkDialect +
+  /** Spark-dialect text for the keys whose oracle text cannot run in
+    * Spark, does not return the DataFrame path's exact rows or plans a
+    * partition-less window, plus the approximate-sketch keys that have no
+    * oracle text. */
+  private[graft] val sparkOverrides: Map[String, String] =
+    sparkDialect +
       // the persisted-index probes' statement-level contract IS the
       // in-flight IVF routing (results pinned identical); the index
       // write/append itself is the DataFrame path's storage concern
       ("sim_index_persist" -> sparkDialect("sim_topk_ivf")) +
       ("sim_index_delta" -> sparkDialect("sim_topk_ivf"))
+
+  /** SQL text per declared query key, runnable via [[sql]]: the key's
+    * oracle text ([[SparkEntry.oracleSql]]) unless [[sparkOverrides]] has
+    * one. Script keys ([[queriesScript]]) and `meta_vacuum` have none. */
+  lazy val queriesSql: Map[String, String] =
+    (SparkEntry.oracleSql -- queriesScript.keys - "meta_vacuum") ++
+      sparkOverrides
 
   /** Run a declared query from SQL text against the catalog views. */
   def sql(name: String)(spark: SparkSession, sfDir: String): DataFrame = {

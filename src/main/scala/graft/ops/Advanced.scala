@@ -2276,8 +2276,8 @@ object Advanced {
     // integer phase classes, full 7-day windows only (ANSI, dual-dialect)
     // RANGE frame on the epoch-day index (not ROWS): a missing calendar
     // day must shrink the window (edge drops), not silently widen the
-    // averaged span (ADVICE r9). DuckDB spells the index as date
-    // subtraction; the Spark statement text uses datediff.
+    // averaged span (ADVICE r9). The index is a date subtraction, which
+    // both dialects accept.
     "events_trend_decompose" ->
       s"""WITH daily AS (
          |  SELECT event_type, CAST(ts AS DATE) AS day,
@@ -3100,7 +3100,8 @@ object Advanced {
          |WHERE event_type = 'purchase' AND channel IS NOT NULL
          |GROUP BY channel ORDER BY channel""".stripMargin,
 
-    // DuckDB dialect: generate_series (inclusive, like Spark's sequence)
+    // generate_series is inclusive; Spark runs this text through the
+    // DuckDB-semantics generate_series/unnest that GraftExtensions registers
     "agg_active_users" ->
       """WITH grid AS (
         |  SELECT DISTINCT user_id,
@@ -3127,8 +3128,8 @@ object Advanced {
         |FROM events GROUP BY 1, 2
         |ORDER BY day, est_count DESC, item""".stripMargin,
 
-    // DuckDB dialect: LATERAL generate_series for the gram positions
-    // (Spark catalog carries the transform/LATERAL VIEW variant)
+    // LATERAL generate_series for the gram positions (Spark runs it through
+    // the DuckDB-semantics generate_series/unnest of GraftExtensions)
     "match_fuzzy" ->
       """WITH grams AS (
         |  SELECT DISTINCT c_custkey, c_nationkey, substr(c_name, i, 3) AS g
@@ -3426,8 +3427,8 @@ object Advanced {
         |LEFT JOIN nid ON base.c_mktsegment = nid.c_mktsegment
         |ORDER BY base.c_mktsegment""".stripMargin,
 
-    // gaps-and-islands anchor trick; DuckDB DATE - INTEGER arithmetic
-    // (the Spark front-door text spells it date_sub)
+    // gaps-and-islands anchor trick; DATE - INTEGER arithmetic, which
+    // both dialects accept
     "events_streak" ->
       """WITH days AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),

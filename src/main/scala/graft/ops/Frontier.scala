@@ -501,9 +501,10 @@ object Frontier {
       |    JOIN deg dj ON dj.p = dir.j)
       |  WHERE rnk = 1)""".stripMargin
 
-  /** DuckDB oracle texts. graph_louvain_pass is dual-dialect ANSI (listed
-    * in SqlCatalog.ansiKeys); the two text keys tokenize, so each dialect
-    * spells its own list primitives. */
+  /** DuckDB oracle texts. SqlCatalog serves all but two as is (text_bm25
+    * through the DuckDB-named functions GraftExtensions registers);
+    * dedup_decontaminate and dedup_threshold_sweep use list primitives,
+    * so each dialect spells its own. */
   val oracles: Map[String, String] = Map(
     "dedup_decontaminate" -> {
       val h = LlmPipeline.h48Sql("g")

@@ -782,9 +782,10 @@ object Frontier2 {
     "sample_ess" -> sampleEss,
   )
 
-  /** DuckDB oracle texts. graph_hits is dual-dialect ANSI (listed in
-    * SqlCatalog.sharedWithOracle); the others tokenize or use date
-    * arithmetic, so each dialect spells its own primitives. */
+  /** DuckDB oracle texts. graph_hits, graph_scc and meta_lineage are
+    * dual-dialect ANSI, so SqlCatalog serves them as is; the others
+    * tokenize or use date arithmetic, so each dialect spells its own
+    * primitives. */
   val oracles: Map[String, String] = Map(
     "text_feature_hash" -> {
       val h = (e: String) => LlmPipeline.h48Sql(e)
@@ -1104,7 +1105,7 @@ object Frontier2 {
 
     // lineage is a STATIC property of the fixed query texts — the pinned
     // edge list IS the declarative truth (meta_layout contract class);
-    // dual-dialect VALUES (listed in SqlCatalog.sharedWithOracle)
+    // dual-dialect VALUES (SqlCatalog serves it as is)
     "meta_lineage" ->
       """SELECT query, out_col, src_table, src_col FROM (VALUES
         |  ('agg_hash', 'avg_disc', 'lineitem', 'l_discount'),

@@ -619,9 +619,9 @@ object Frontier3 {
     "sample_ares" -> sampleAres,
   )
 
-  /** DuckDB oracle texts. graph_louvain_multi, agg_anova and agg_kruskal
-    * are dual-dialect ANSI (listed in SqlCatalog.sharedWithOracle); the
-    * array/hash keys spell their own primitives per dialect. */
+  /** DuckDB oracle texts. All but sim_ivf_pq, embed_outlier and
+    * sample_ares are dual-dialect ANSI (SqlCatalog serves them as is);
+    * those array/hash keys spell their own primitives per dialect. */
   val oracles: Map[String, String] = Map(
     "sim_ivf_pq" ->
       """WITH q AS (SELECT vec_id, i - 1 AS dim,

@@ -439,9 +439,9 @@ object Frontier5 {
   )
 
   /** DuckDB oracle texts. All but `agg_cohens_kappa` and
-    * `text_self_bleu` are dual-dialect ANSI (listed in
-    * SqlCatalog.sharedWithOracle); those two tokenize, so each dialect
-    * spells its own split primitives. */
+    * `text_self_bleu` are dual-dialect ANSI (SqlCatalog serves them as
+    * is); those two tokenize, so each dialect spells its own split
+    * primitives. */
   val oracles: Map[String, String] = Map(
     // dual-dialect ANSI
     "agg_kendall" ->

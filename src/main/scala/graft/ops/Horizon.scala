@@ -40,7 +40,7 @@ object Horizon {
     * bₜ = β·(lₜ−lₜ₋₁) + (1−β)·bₜ₋₁. Returns struct(l, b). The lambda
     * spells lₜ twice (HOFs have no let-binding); both evaluations are the
     * same IEEE expression. */
-  private[graft] val holtFoldSql: String =
+  private val holtFoldSql: String =
     """aggregate(
       |  slice(ys, 3, size(ys) - 2),
       |  named_struct('l', CAST(element_at(ys, 2) AS DOUBLE),
@@ -183,7 +183,7 @@ object Horizon {
     * 100 TB shape: identical to agg_holt — the corpus folds map-side to
     * the (type × day) grid and the recursion is one bounded per-type
     * fold; the horizon explode is 7 rows per type. */
-  private[graft] val hwFoldSql: String =
+  private val hwFoldSql: String =
     """aggregate(
       |  zip_with(sequence(8, size(ys)), slice(ys, 8, size(ys) - 7),
       |    (i, y) -> named_struct('i', i, 'y', y)),
@@ -723,11 +723,10 @@ object Horizon {
        |FROM cents8 ORDER BY rank""".stripMargin
   }
 
-  /** Dialect-parameterized text for agg_qq_drift — identical except the
-    * 9-row decile generator (`range` in DuckDB, `explode(sequence)` in
-    * Spark). */
-  private[graft] def qqDriftSqlGen(decCte: String): String =
-    s"""WITH ev AS (
+  /** Oracle text for agg_qq_drift; Spark runs it unchanged (the decile
+    * generator `range(1, 10)` is a table function in both dialects). */
+  private val qqDriftSql: String =
+    """WITH ev AS (
        |  SELECT CASE WHEN EXTRACT(DAY FROM ts) <= 15
        |    THEN 'ref' ELSE 'cur' END AS cohort, value
        |  FROM events),
@@ -739,7 +738,7 @@ object Horizon {
        |      AS BIGINT) - 1 AS r,
        |    n.n
        |  FROM ev JOIN n ON ev.cohort = n.cohort),
-       |dec AS ($decCte),
+       |dec AS (SELECT r.i AS dec FROM range(1, 10) r(i)),
        |kept AS (
        |  SELECT cohort, dec, n,
        |    MAX(CASE WHEN r = floor((CAST(dec AS DOUBLE) / 10.0)
@@ -1053,8 +1052,7 @@ object Horizon {
 
     "graph_betweenness" -> betweennessSql,
 
-    "agg_qq_drift" -> qqDriftSqlGen(
-      "SELECT r.i AS dec FROM range(1, 10) r(i)"),
+    "agg_qq_drift" -> qqDriftSql,
 
     "sample_kcenter" -> kcenterSqlGen(
       "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))",

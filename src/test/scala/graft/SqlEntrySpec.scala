@@ -125,6 +125,12 @@ class SqlEntrySpec extends SparkSpecBase {
     val uncovered = SparkEntry.queries.keySet -- covered
     assert(uncovered == Set("meta_vacuum"),
       s"keys without any statement-text path: ${uncovered.toSeq.sorted}")
+    // one text per key: an override that repeats its key's oracle text
+    // byte for byte is a redundant copy
+    val redundant = SqlCatalog.sparkOverrides.collect {
+      case (k, t) if SparkEntry.oracleSql.get(k).contains(t) => k }
+    assert(redundant.isEmpty,
+      s"Spark overrides identical to the oracle text: ${redundant.toSeq.sorted}")
   }
 
   test("upstream limitation pinned: recursive CTE rejects UNION-distinct") {
