@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.api.CheckpointStrategy
 import graft.core.{Tables => T}
 import graft.core.Numeric._
 
@@ -656,16 +655,9 @@ object Advanced {
     * counted. One lag window partitioned by user + one hash aggregate on
     * the bounded (from, to) type grid — raw volume shuffles once on
     * user_id, the aggregate state is |types|². */
-  val eventsPath: Q = (s, d) => {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    T.events(s, d)
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("n_transitions"))
+  val eventsPath: Q = (s, d) =>
+    Graph.transitions(T.events(s, d), "from_type", "to_type", "n_transitions")
       .orderBy(col("from_type"), col("to_type"))
-  }
 
   /** Last-touch ATTRIBUTION — the marketing-analytics staple: each
     * purchase is credited to the user's most recent preceding
@@ -713,48 +705,6 @@ object Advanced {
       .agg(dsum(col("decayed")).as("decayed_value"),
         count(lit(1)).as("n_events"))
       .orderBy(col("user_id"))
-  }
-
-  /** PAGERANK over the event-type transition graph — iterative GRAPH
-    * analytics beyond connected components (`dedup_cluster`): edges are
-    * the lag-window transition counts (`events_path`'s matrix), and two
-    * damped power-iteration rounds run in EXACT fixed-point micro-units
-    * (ranks ×1e6, contributions via [[graft.core.Numeric.idiv]] — the
-    * same integer discipline as `cluster_kmeans`, so a DuckDB oracle with
-    * unrolled-CTE iterations matches bit-for-bit; float PageRank would
-    * drift by summation order). Scale shape: raw events reduce to the
-    * edge list ONCE (one user-key shuffle, aggregated on the bounded
-    * |types|² grid, lineage truncated); each iteration is one
-    * rank-to-edge equi-join + one aggregate on the destination key — the
-    * standard distributed PageRank round, O(|E|) per iteration, never
-    * touching raw event volume again. Dangling mass is dropped (no
-    * outgoing edges → contribution lost), documented and mirrored by the
-    * oracle. */
-  def graphPagerank(cp: CheckpointStrategy = CheckpointStrategy.Local): Q =
-    (s, d) => {
-    val win = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val edges = cp.materialize(T.events(s, d)
-      .withColumn("from_type", lag(col("event_type"), 1).over(win))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("w")))
-    val nodes = cp.materialize(edges.select(col("from_type").as("t"))
-      .union(edges.select(col("to_type"))).distinct())
-    val outw = edges.groupBy(col("from_type")).agg(sum(col("w")).as("ow"))
-    val e = edges.join(outw, Seq("from_type"))
-    val nn = nodes.count() // scalar driver agg, like dedup_cluster's check
-    var ranks = nodes.select(col("t"), idiv(lit(1000000L), lit(nn)).as("r"))
-    for (_ <- 1 to 2) {
-      val contrib = e.join(ranks.withColumnRenamed("t", "from_type"), Seq("from_type"))
-        .groupBy(col("to_type"))
-        .agg(sum(idiv(col("r") * col("w"), col("ow"))).as("c"))
-      ranks = nodes.join(contrib, nodes("t") === contrib("to_type"), "left")
-        .select(col("t"),
-          (idiv(lit(150000L), lit(nn)) +
-            idiv(lit(85L) * coalesce(col("c"), lit(0L)), lit(100L))).as("r"))
-    }
-    ranks.select(col("t").as("event_type"), col("r").as("rank_micro"))
-      .orderBy(desc("rank_micro"), col("event_type"))
   }
 
   /** WEEKLY COHORT RETENTION MATRIX — the classic growth-analytics grid
@@ -1377,101 +1327,6 @@ object Advanced {
       .orderBy(col("event_type"), col("day"))
   }
 
-  /** Triangle counting on the user co-occurrence graph — the third graph
-    * primitive next to `graph_pagerank` and the connected components in
-    * `dedup_cluster`. Nodes: a deterministic 1-in-2 user slice; edges:
-    * users co-active in the same (event_type, hour) bucket, where the
-    * bucket holds ≤ 100 distinct users (the co-occurrence df cap — the
-    * same declared-semantics rule as `match_fuzzy`'s rare-gram filter:
-    * pathologically popular buckets carry no signal and their |bucket|²
-    * pair expansion is the one quadratic term in the query, so the cap
-    * is part of the query definition and mirrored in the oracle).
-    *
-    * Enumeration is DEGREE-ORIENTED wedge counting (the O(m^1.5) bound):
-    * each undirected edge is directed from its (degree, id)-smaller
-    * endpoint to its larger one, wedges pair the out-neighbors of each
-    * source (so per-vertex wedge fan-out is out-degree², and orienting
-    * toward higher degree caps out-degree at O(√m)), and a wedge
-    * (s → b, s → c) with b ≺ c closes iff the directed edge b → c
-    * exists — an equi-join on the two endpoint ids. Each triangle
-    * a ≺ b ≺ c is found exactly once, at its smallest corner, so the
-    * per-node credit (one ×3 corner explode, then count) is identical to
-    * unoriented enumeration — orientation is result-invariant. At bench
-    * scale the dir list is a few MB, AQE broadcasts it, and the wedge
-    * stream never shuffles; at 100 TB the orientation is what keeps the
-    * wedge join sub-quadratic under degree skew. */
-  val graphTriangles: Q = (s, d) => {
-    val bucketCap = 100
-    // r14 edge build (guide §2.4): was distinct (exchange) → bucket-size
-    // window (exchange) → SMJ self-join on (event_type, hr) (exchange) →
-    // distinct (exchange). ONE collect_set aggregate per bucket dedups
-    // users (≡ the old distinct), size(us) ≡ the old window bucket count,
-    // and the ordered-pair explode is map-side — identical edge set, two
-    // exchanges, no join. The cap bounds the per-bucket array (≤100), so
-    // the explode fan-out is ≤ C(100,2) per bucket.
-    val buckets = T.events(s, d)
-      .filter(col("user_id") % 2 === 0)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
-      .agg(collect_set(col("user_id")).as("us"))
-      .filter(size(col("us")) <= bucketCap)
-    val edges = buckets
-      .select(explode(col("us")).as("u1"), col("us"))
-      .select(col("u1"), explode(col("us")).as("u2"))
-      .filter(col("u1") < col("u2"))
-      .dropDuplicates("u1", "u2")
-    val deg = edges.select(col("u1").as("u"))
-      .unionAll(edges.select(col("u2").as("u")))
-      .groupBy(col("u")).agg(count(lit(1)).as("deg"))
-    val withDeg = edges
-      .join(deg.select(col("u").as("u1"), col("deg").as("d1")), "u1")
-      .join(deg.select(col("u").as("u2"), col("deg").as("d2")), "u2")
-    // the (degree, id) total order is kept as two flat long columns —
-    // the wedge condition is evaluated ~|wedge-candidates| times inside
-    // the broadcast probe loop, and flat long compares stay in codegen
-    // with no per-pair struct allocation
-    def ltKey(da: Column, ua: Column, db: Column, ub: Column): Column =
-      da < db || (da === db && ua < ub)
-    val isFwd = ltKey(col("d1"), col("u1"), col("d2"), col("u2"))
-    val dir = withDeg.select(
-      when(isFwd, col("u1")).otherwise(col("u2")).as("src"),
-      when(isFwd, col("u2")).otherwise(col("u1")).as("du"),
-      greatest(col("d1"), col("d2")).as("dd"))
-    // The wedge expansion is the heavy stage: each dir row fans out to
-    // out-degree(src) wedges, so the STREAM side must keep full task
-    // parallelism. AQE sees only the pre-expansion size (a few MB) and
-    // would coalesce the stream to ~1 partition, serializing the fan-out
-    // — an explicit partition count on the probe side blocks that while
-    // the small build sides still broadcast.
-    val np = s.sessionState.conf.numShufflePartitions
-    // r14 (guide §5): dirP is read by THREE consumers (both wedge sides +
-    // the closing-edge probe) and nothing upstream was materialized, so
-    // the whole edge-build subtree replicated ~15× in the plan
-    // (plans/r14/graph_triangles_before.txt, ~109 Exchanges). One barrier
-    // on the oriented edge list keeps the plan linear; the stored
-    // src-partitioning survives the checkpoint, so the wedge join reads
-    // it exchange-free.
-    val dirP = CheckpointStrategy.Local.materializeHashed(
-      dir, np, Seq("src"))
-    val w1 = dirP.select(col("src"), col("du").as("u_b"), col("dd").as("d_b"))
-    val w2 = dirP.select(col("src"), col("du").as("u_c"), col("dd").as("d_c"))
-    // closing-edge membership probes once per wedge — the hot loop. A
-    // single-long key (src<<32 | dst; non-negative ids < 2^31, true of
-    // the user-id domain — the standard 64-bit packed-edge encoding)
-    // lets the broadcast build a dense LongHashedRelation instead of a
-    // compound-key UnsafeHashedRelation: ~5× cheaper per probe at 33M
-    // probes. The general (unbounded-id) form would keep the two-column
-    // key and pay the compound probe.
-    val tri = w1.join(w2, Seq("src"))
-      .filter(ltKey(col("d_b"), col("u_b"), col("d_c"), col("u_c")))
-      .join(dirP.select((shiftleft(col("src"), 32) + col("du")).as("bc")),
-        shiftleft(col("u_b"), 32) + col("u_c") === col("bc"))
-    tri.select(explode(array(col("src"), col("u_b"), col("u_c")))
-        .as("user_id"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_triangles"))
-      .orderBy(col("user_id"))
-  }
-
   /** MARKOV CHAIN over per-user event sequences — the predictive model
     * [[eventsPath]]'s raw pair counts feed: the row-normalized transition
     * matrix P(next | prev) = n(prev→next) / Σ n(prev→·), plus the
@@ -1490,14 +1345,8 @@ object Advanced {
     * the MODEL-sized |event_types|² table, so the quadratic step never
     * touches row-scale data. */
   val eventsTransition: Q = (s, d) => {
-    val e = T.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val counts = e.withColumn("prev", lag(col("event_type"), 1).over(w))
-      .filter(col("prev").isNotNull)
-      .groupBy(col("prev"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
+    val counts = Graph.transitions(T.events(s, d)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type")))
     val wRow = Window.partitionBy(col("prev"))
     val p1 = counts
       .select(col("prev").as("from_type"), col("event_type").as("to_type"),
@@ -1661,87 +1510,6 @@ object Advanced {
       .orderBy(col("pattern"))
   }
 
-  /** LINK-PREDICTION Jaccard over the co-purchase graph — the
-    * "customers who bought X also bought Y" affinity score: parts are
-    * nodes, co-occurrence in an order is an edge, and each existing edge
-    * (a,b) scores J = |N(a)∩N(b)| / |N(a)∪N(b)\{a,b}|. The common-
-    * neighbor count |N(a)∩N(b)| is exactly the per-EDGE triangle count,
-    * so the heavy stage reuses [[graphTriangles]]'s degree-oriented
-    * wedge enumeration (orient each edge low-degree→high-degree, expand
-    * wedges from the low side only — the O(m^1.5) bound) with the same
-    * packed-long closing-edge probe; each found triangle then credits
-    * its three canonical edges. Pair generation is bounded by
-    * lines-per-order (≤7), and the declared query samples 1/3 of orders
-    * — the periodic-refresh discipline a production affinity job uses.
-    * Denominator (d_a−1)+(d_b−1)−t ≥ t ≥ 1, so no zero division. */
-  def graphJaccard(cp: CheckpointStrategy = CheckpointStrategy.Local): Q =
-    (s, d) => {
-    // r14 edge build (guide §2.4): the distinct → SMJ self-join → distinct
-    // prologue is replaced by one collect_set aggregate + a map-side
-    // ordered-pair explode (baskets bounded at ≤7 lineitems/order) —
-    // identical edge set, two exchanges instead of three, no join.
-    val baskets = T.lineitem(s, d).filter(col("l_orderkey") % 3 === 0)
-      .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("ps"))
-    // ONE materialization barrier for the whole prologue: the degree-
-    // annotated edge list is the value every later stage (orientation,
-    // closing-edge probe, final score join) reads, so that is the single
-    // reuse point. The basket self-join appears three times in withDeg's
-    // own plan (edges + the two degree scans), but those are IDENTICAL
-    // subtrees sharing one Exchange — ReuseExchange collapses them within
-    // the single materializing job. Empirically settled by the r8
-    // isolation audit: this shape runs 2.9 s (median-of-5, fresh JVM,
-    // sf0.1) vs 7.7 s for the round-6 double-barrier (edges AND withDeg
-    // both checkpointed). The 19-20 s readings in BENCH_r07/r08 were NOT
-    // this query's plan: a round-9 repro at the driver's exact config
-    // (cpus=32, full 296-key suite, 8g heap) measured 3.88 s median on
-    // identical code — the inflation only appears when the machine is
-    // otherwise loaded, because this is the checkpoint-heaviest key and
-    // async block release raced the next sample for storage memory.
-    // Bench.scala now unpersists SYNCHRONOUSLY (+ GC) between samples;
-    // SCALING.md's round-9 section carries the full variance analysis.
-    val edges = baskets.select(explode(col("ps")).as("pa"), col("ps"))
-      .select(col("pa"), explode(col("ps")).as("pb"))
-      .filter(col("pa") < col("pb"))
-      .dropDuplicates("pa", "pb")
-    val deg = edges.select(col("pa").as("p"))
-      .unionAll(edges.select(col("pb").as("p")))
-      .groupBy(col("p")).agg(count(lit(1)).as("deg"))
-    val withDeg = cp.materialize(edges
-      .join(deg.select(col("p").as("pa"), col("deg").as("da")), "pa")
-      .join(deg.select(col("p").as("pb"), col("deg").as("db")), "pb"))
-    def ltKey(da: Column, ua: Column, db: Column, ub: Column): Column =
-      da < db || (da === db && ua < ub)
-    val isFwd = ltKey(col("da"), col("pa"), col("db"), col("pb"))
-    val dir = withDeg.select(
-      when(isFwd, col("pa")).otherwise(col("pb")).as("src"),
-      when(isFwd, col("pb")).otherwise(col("pa")).as("dst"),
-      greatest(col("da"), col("db")).as("dd"))
-    val np = s.sessionState.conf.numShufflePartitions
-    val dirP = dir.repartition(np, col("src"))
-    val w1 = dirP.select(col("src"), col("dst").as("u_b"), col("dd").as("d_b"))
-    val w2 = dirP.select(col("src"), col("dst").as("u_c"), col("dd").as("d_c"))
-    val tri = w1.join(w2, Seq("src"))
-      .filter(ltKey(col("d_b"), col("u_b"), col("d_c"), col("u_c")))
-      .join(dirP.select((shiftleft(col("src"), 32) + col("dst")).as("bc")),
-        shiftleft(col("u_b"), 32) + col("u_c") === col("bc"))
-    val triEdges = tri.select(explode(array(
-        struct(least(col("src"), col("u_b")).as("pa"),
-          greatest(col("src"), col("u_b")).as("pb")),
-        struct(least(col("src"), col("u_c")).as("pa"),
-          greatest(col("src"), col("u_c")).as("pb")),
-        struct(least(col("u_b"), col("u_c")).as("pa"),
-          greatest(col("u_b"), col("u_c")).as("pb")))).as("e"))
-      .select(col("e.pa").as("pa"), col("e.pb").as("pb"))
-      .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("t"))
-    withDeg.join(triEdges, Seq("pa", "pb"))
-      .select(col("pa"), col("pb"), col("t"),
-        round(col("t").cast("double")
-          / (col("da") + col("db") - lit(2) - col("t")).cast("double"), 6)
-          .as("jaccard"))
-      .orderBy(col("jaccard").desc, col("pa"), col("pb"))
-      .limit(20)
-  }
-
   /** GRID-BLOCKED SPATIAL JOIN — the distributed point-in-region join
     * (the GeoSpark/Sedona partitioning shape, reduced to its relational
     * core): points and query rectangles both map to fixed 0.1-wide grid
@@ -1896,11 +1664,7 @@ object Advanced {
     * scoring is map-side against the lag stream; one user_id shuffle
     * for the mean. */
   val eventsSeqAnomaly: Q = (s, d) => {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val seq0 = T.events(s, d)
-      .withColumn("prev", lag(col("event_type"), 1).over(w))
-      .filter(col("prev").isNotNull)
+    val seq0 = Graph.transitionSteps(T.events(s, d))
       .select(col("user_id"), col("prev"), col("event_type"))
     val counts = seq0.groupBy(col("prev"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -1949,57 +1713,6 @@ object Advanced {
         round(col("n").cast("double") / col("nt").cast("double") * 7.0, 4)
           .as("seasonal_index"))
       .orderBy(col("event_type"), col("dow"))
-  }
-
-  /** MULTI-SOURCE BFS over the co-purchase graph — k-hop reachability
-    * from a seed set (the "expand a trusted-domain neighborhood" /
-    * blast-radius primitive; [[graphJaccard]] scores edges, this walks
-    * them): seeds = every 500th part, three unrolled frontier
-    * expansions with a min-hop aggregate barrier between rounds
-    * (pregel's superstep as join + agg), report = node count per
-    * minimum hop distance, unreached parts at hop −1.
-    *
-    * 100 TB shape: each superstep is ONE join of the reached set
-    * against the edge list on the source key (both sides hash-partition
-    * on node id, so supersteps reuse the partitioning) + one min-agg;
-    * the reached set is bounded by the k-hop neighborhood, never the
-    * full graph. Fixed depth ⇒ fixed plan — no driver-side iteration
-    * state beyond the 3-round unroll. */
-  val graphBfs: Q = (s, d) => {
-    // r14 edge build (guide §2.4): was distinct → SMJ self-join on
-    // l_orderkey → distinct — three corpus-scale exchanges plus a join;
-    // baskets are bounded (≤7 lineitems/order), so one collect_set
-    // aggregate + a map-side ordered-pair explode emits the identical
-    // edge SET with two exchanges and no join.
-    val baskets = T.lineitem(s, d).filter(col("l_orderkey") % 3 === 0)
-      .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("ps"))
-    // Fully LAZY like the r13 shape (A/B'd, the graph_closeness lesson):
-    // all three superstep references to `edges` are textually identical
-    // subtrees, so ReuseExchange computes the edge build ONCE within the
-    // single job; materialization barriers (plain or hash-partitioned)
-    // only added jobs and measured worse under interleaved controls.
-    val edges = baskets.select(explode(col("ps")).as("src"), col("ps"))
-      .select(col("src"), explode(col("ps")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .dropDuplicates("src", "dst")
-    val seeds = T.part(s, d).filter(col("p_partkey") % 500 === 0)
-      .select(col("p_partkey").as("node"), lit(0L).as("hop"))
-    // expand only the FRONTIER (nodes first reached last round): a node at
-    // distance h is a neighbor of some distance-(h−1) node, so re-walking
-    // the whole reached set each superstep buys nothing and triples the
-    // join input on dense neighborhoods
-    val reached = (1 to 3).foldLeft(seeds) { (cur, h) =>
-      cur.unionAll(
-        cur.filter(col("hop") === (h - 1).toLong)
-          .join(edges, col("node") === edges("src"))
-          .select(col("dst").as("node"), lit(h.toLong).as("hop")))
-        .groupBy(col("node")).agg(min(col("hop")).as("hop"))
-    }
-    T.part(s, d).select(col("p_partkey").as("node"))
-      .join(reached, Seq("node"), "left")
-      .select(coalesce(col("hop"), lit(-1L)).as("hop"))
-      .groupBy(col("hop")).agg(count(lit(1)).as("n_nodes"))
-      .orderBy(col("hop"))
   }
 
   /** PERIOD-OVER-PERIOD GROWTH — the day-over-day and week-over-week
@@ -2071,57 +1784,6 @@ object Advanced {
       .orderBy(col("event_type"), col("day"))
   }
 
-  /** CLOSENESS CENTRALITY (3-hop ball) — how central each probe node sits
-    * in the co-purchase graph ([[graphBfs]] maps reachability of ONE seed
-    * set; this scores EACH seed separately: closeness = (reached−1)/Σhops,
-    * the local variant production graph systems compute within a bounded
-    * radius because exact all-pairs closeness is O(n·m)): seeds = every
-    * 500th part, per-seed labeled BFS — the same three unrolled
-    * frontier-only supersteps keyed by (seed, node) — then one per-seed
-    * fold of reach count and hop sum. All integer until the one reported
-    * division.
-    *
-    * 100 TB shape: state is seeds × their 3-hop neighborhoods (bounded by
-    * the probe budget, not the graph); each superstep joins the frontier
-    * to the edge list on the node key. */
-  val graphCloseness: Q = (s, d) => {
-    // r14: examined and LEFT at the r13 shape. Both the collect_set edge
-    // build + edge barrier and the per-level frontier barriers (the
-    // graph_bfs/graph_betweenness devices) were applied and MEASURED
-    // WORSE here (5.8-6.1 s vs a 1.2× environment control over the 2.23 s
-    // committed median): this key's lazy fold broadcast-joins the tiny
-    // labeled frontier against the shared edge subtree, and ReuseExchange
-    // already collapses the three identical superstep edge derivations
-    // within the ONE job — splitting them into materialization jobs only
-    // added fixed costs. Reverted; the (seed, node) frontier variants of
-    // this shape that DO win carry barriers where consumers multiply
-    // (graph_betweenness) or plans double per level (graph_bfs).
-    val li = T.lineitem(s, d).filter(col("l_orderkey") % 3 === 0)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val edges = li.select(col("l_orderkey"), col("l_partkey").as("src"))
-      .join(li.select(col("l_orderkey"), col("l_partkey").as("dst")),
-        Seq("l_orderkey"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst")).distinct()
-    val seeds = T.part(s, d).filter(col("p_partkey") % 500 === 0)
-      .select(col("p_partkey").as("seed"), col("p_partkey").as("node"),
-        lit(0L).as("hop"))
-    val reached = (1 to 3).foldLeft(seeds) { (cur, h) =>
-      cur.unionAll(
-        cur.filter(col("hop") === (h - 1).toLong)
-          .join(edges, col("node") === edges("src"))
-          .select(col("seed"), col("dst").as("node"), lit(h.toLong).as("hop")))
-        .groupBy(col("seed"), col("node")).agg(min(col("hop")).as("hop"))
-    }
-    reached.groupBy(col("seed"))
-      .agg((count(lit(1)) - 1L).as("n_reach"), sum(col("hop")).as("sum_d"))
-      .select(col("seed"), col("n_reach"), col("sum_d"),
-        when(col("sum_d") > 0L,
-          round(col("n_reach").cast("double") / col("sum_d").cast("double"),
-            6)).otherwise(lit(0.0)).as("closeness"))
-      .orderBy(col("seed"))
-  }
-
   /** COHORT LTV CURVE — cumulative purchase value per cohort user by day
     * age (the growth-accounting readout next to [[eventsCohort]]'s
     * retention grid: retention counts heads, LTV counts value): each
@@ -2162,8 +1824,6 @@ object Advanced {
   }
 
   val queries: Map[String, Q] = Map(
-    "graph_bfs" -> graphBfs,
-    "graph_closeness" -> graphCloseness,
     "events_ltv" -> eventsLtv,
     "agg_period_growth" -> aggPeriodGrowth,
     "events_trend_decompose" -> eventsTrendDecompose,
@@ -2175,7 +1835,6 @@ object Advanced {
     "events_seq_anomaly" -> eventsSeqAnomaly,
     "agg_ohlc" -> aggOhlc,
     "join_spatial" -> joinSpatial,
-    "graph_jaccard" -> graphJaccard(),
     "events_forecast" -> eventsForecast,
     "agg_ab_test" -> aggAbTest,
     "events_pattern" -> eventsPattern,
@@ -2183,7 +1842,6 @@ object Advanced {
     "agg_gini" -> aggGini,
     "agg_conditional" -> aggConditional,
     "events_anomaly" -> eventsAnomaly,
-    "graph_triangles" -> graphTriangles,
     "agg_salted" -> aggSalted,
     "agg_hll_sketch" -> aggHllSketch,
     "agg_stats" -> aggStats,
@@ -2219,7 +1877,6 @@ object Advanced {
     "match_fuzzy" -> matchFuzzy,
     "events_sessionize" -> eventsSessionize,
     "meta_profile" -> metaProfile,
-    "graph_pagerank" -> graphPagerank(),
     "agg_decay" -> aggDecay,
     "join_skew_salted" -> joinSkewSalted,
     "sample_reservoir" -> sampleReservoir,
@@ -2235,43 +1892,6 @@ object Advanced {
   )
 
   val oracles: Map[String, String] = Map(
-    // unrolled 3-superstep BFS: UNION ALL + MIN(hop) per round is the
-    // declarative spelling of the frontier expansion (ANSI, dual-dialect)
-    "graph_bfs" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |  WHERE l_orderkey % 3 = 0),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey <> b.l_partkey),
-        |d0 AS (
-        |  SELECT p_partkey AS node, CAST(0 AS BIGINT) AS hop
-        |  FROM part WHERE p_partkey % 500 = 0),
-        |d1 AS (SELECT node, MIN(hop) AS hop FROM (
-        |    SELECT node, hop FROM d0
-        |    UNION ALL
-        |    SELECT e.dst AS node, CAST(1 AS BIGINT) AS hop
-        |    FROM d0 JOIN edges e ON d0.node = e.src
-        |    WHERE d0.hop = 0) x1 GROUP BY node),
-        |d2 AS (SELECT node, MIN(hop) AS hop FROM (
-        |    SELECT node, hop FROM d1
-        |    UNION ALL
-        |    SELECT e.dst AS node, CAST(2 AS BIGINT) AS hop
-        |    FROM d1 JOIN edges e ON d1.node = e.src
-        |    WHERE d1.hop = 1) x2 GROUP BY node),
-        |d3 AS (SELECT node, MIN(hop) AS hop FROM (
-        |    SELECT node, hop FROM d2
-        |    UNION ALL
-        |    SELECT e.dst AS node, CAST(3 AS BIGINT) AS hop
-        |    FROM d2 JOIN edges e ON d2.node = e.src
-        |    WHERE d2.hop = 2) x3 GROUP BY node)
-        |SELECT COALESCE(d3.hop, CAST(-1 AS BIGINT)) AS hop,
-        |  CAST(COUNT(*) AS BIGINT) AS n_nodes
-        |FROM part LEFT JOIN d3 ON part.p_partkey = d3.node
-        |GROUP BY COALESCE(d3.hop, CAST(-1 AS BIGINT))
-        |ORDER BY hop""".stripMargin,
-
     // additive decomposition on the daily grid: decimal frame sums,
     // integer phase classes, full 7-day windows only (ANSI, dual-dialect)
     // RANGE frame on the epoch-day index (not ROWS): a missing calendar
@@ -2332,45 +1952,6 @@ object Advanced {
          |  CAST(CASE WHEN prev7 > 0
          |    THEN round((rev - prev7) / prev7, 6) END AS DOUBLE) AS wow_pct
          |FROM lagged ORDER BY event_type, day""".stripMargin,
-
-    // per-seed labeled BFS, same unrolled-CTE spelling as graph_bfs with
-    // a seed key carried through every round (ANSI, dual-dialect)
-    "graph_closeness" ->
-      """WITH li AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |  WHERE l_orderkey % 3 = 0),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey <> b.l_partkey),
-        |d0 AS (
-        |  SELECT p_partkey AS seed, p_partkey AS node, CAST(0 AS BIGINT) AS hop
-        |  FROM part WHERE p_partkey % 500 = 0),
-        |d1 AS (SELECT seed, node, MIN(hop) AS hop FROM (
-        |    SELECT seed, node, hop FROM d0
-        |    UNION ALL
-        |    SELECT d0.seed, e.dst AS node, CAST(1 AS BIGINT) AS hop
-        |    FROM d0 JOIN edges e ON d0.node = e.src
-        |    WHERE d0.hop = 0) x1 GROUP BY seed, node),
-        |d2 AS (SELECT seed, node, MIN(hop) AS hop FROM (
-        |    SELECT seed, node, hop FROM d1
-        |    UNION ALL
-        |    SELECT d1.seed, e.dst AS node, CAST(2 AS BIGINT) AS hop
-        |    FROM d1 JOIN edges e ON d1.node = e.src
-        |    WHERE d1.hop = 1) x2 GROUP BY seed, node),
-        |d3 AS (SELECT seed, node, MIN(hop) AS hop FROM (
-        |    SELECT seed, node, hop FROM d2
-        |    UNION ALL
-        |    SELECT d2.seed, e.dst AS node, CAST(3 AS BIGINT) AS hop
-        |    FROM d2 JOIN edges e ON d2.node = e.src
-        |    WHERE d2.hop = 2) x3 GROUP BY seed, node)
-        |SELECT seed, CAST(COUNT(*) - 1 AS BIGINT) AS n_reach,
-        |  CAST(SUM(hop) AS BIGINT) AS sum_d,
-        |  CAST(CASE WHEN SUM(hop) > 0
-        |    THEN round(CAST(COUNT(*) - 1 AS DOUBLE)
-        |      / CAST(SUM(hop) AS DOUBLE), 6)
-        |    ELSE 0.0 END AS DOUBLE) AS closeness
-        |FROM d3 GROUP BY seed ORDER BY seed""".stripMargin,
 
     // integer day index year*366+dayofyear keeps cohort ages
     // interval-free; cents sums exact; cumulative window per cohort
@@ -2591,32 +2172,6 @@ object Advanced {
         |  AND y >= cy - 0.08 AND y <= cy + 0.08
         |GROUP BY n_nationkey ORDER BY n_nationkey""".stripMargin,
 
-    // edge Jaccard: the oracle enumerates triangles naively in canonical
-    // a<b<c id order (orientation is result-invariant); all counts exact,
-    // one double division, round 6, ties break on the pair itself
-    "graph_jaccard" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |            WHERE l_orderkey % 3 = 0),
-        |e AS (SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey),
-        |deg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-        |    SELECT pa AS p FROM e UNION ALL SELECT pb FROM e) GROUP BY p),
-        |tri AS (SELECT e1.pa AS a, e1.pb AS b, e2.pb AS c
-        |  FROM e e1 JOIN e e2 ON e1.pa = e2.pa AND e1.pb < e2.pb
-        |  JOIN e e3 ON e3.pa = e1.pb AND e3.pb = e2.pb),
-        |te AS (SELECT pa, pb, CAST(COUNT(*) AS BIGINT) AS t FROM (
-        |    SELECT a AS pa, b AS pb FROM tri
-        |    UNION ALL SELECT a, c FROM tri
-        |    UNION ALL SELECT b, c FROM tri) GROUP BY pa, pb)
-        |SELECT e.pa, e.pb, te.t,
-        |  CAST(round(CAST(te.t AS DOUBLE)
-        |    / CAST(da.deg + db.deg - 2 - te.t AS DOUBLE), 6) AS DOUBLE)
-        |    AS jaccard
-        |FROM e JOIN te ON e.pa = te.pa AND e.pb = te.pb
-        |JOIN deg da ON e.pa = da.p JOIN deg db ON e.pb = db.p
-        |ORDER BY jaccard DESC, e.pa, e.pb LIMIT 20""".stripMargin,
-
     // seasonal naive: exact grid counts, same-weekday equi-join by date
     // arithmetic; MAE divides exact integers once in double, then rounds
     "events_forecast" ->
@@ -2794,36 +2349,6 @@ object Advanced {
         |      > 9 * (prev_days * prev_ss - prev_sum * prev_sum) AS is_anomaly
         |FROM win
         |ORDER BY event_type, day""".stripMargin,
-
-    // canonical two-hop triangle enumeration with a < b < c — each
-    // triangle materializes exactly once; per-node counts via the
-    // three-corner union
-    "graph_triangles" ->
-      """WITH nodes AS (
-        |  SELECT DISTINCT event_type, date_trunc('hour', ts) AS hr, user_id
-        |  FROM events WHERE user_id % 2 = 0
-        |), capped AS (
-        |  SELECT event_type, hr, user_id FROM (
-        |    SELECT event_type, hr, user_id,
-        |           COUNT(*) OVER (PARTITION BY event_type, hr) AS bsz
-        |    FROM nodes)
-        |  WHERE bsz <= 100
-        |), edges AS (
-        |  SELECT DISTINCT a.user_id AS u1, b.user_id AS u2
-        |  FROM capped a JOIN capped b
-        |    ON a.event_type = b.event_type AND a.hr = b.hr
-        |   AND a.user_id < b.user_id
-        |), tri AS (
-        |  SELECT e1.u1 AS a, e1.u2 AS b, e2.u2 AS c
-        |  FROM edges e1
-        |  JOIN edges e2 ON e2.u1 = e1.u2
-        |  JOIN edges e3 ON e3.u1 = e1.u1 AND e3.u2 = e2.u2
-        |), corners AS (
-        |  SELECT a AS user_id FROM tri
-        |  UNION ALL SELECT b AS user_id FROM tri
-        |  UNION ALL SELECT c AS user_id FROM tri)
-        |SELECT user_id, COUNT(*) AS n_triangles
-        |FROM corners GROUP BY user_id ORDER BY user_id""".stripMargin,
 
     "agg_salted" ->
       s"""SELECT l_returnflag, COUNT(*) AS n, ${dsumSql("l_quantity")} AS sum_qty
@@ -3278,39 +2803,6 @@ object Advanced {
         |    COUNT(DISTINCT l_suppkey), MIN(l_suppkey), MAX(l_suppkey)
         |  FROM lineitem)
         |ORDER BY col_name""".stripMargin,
-
-    // DuckDB dialect (// integer division); two unrolled power iterations
-    // in exact micro-units — bit-identical to the DataFrame loop
-    "graph_pagerank" ->
-      """WITH e0 AS (
-        |  SELECT user_id, event_id, event_type,
-        |    LAG(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS from_type
-        |  FROM events),
-        |edges AS (
-        |  SELECT from_type, event_type AS to_type, COUNT(*) AS w
-        |  FROM e0 WHERE from_type IS NOT NULL GROUP BY 1, 2),
-        |nodes AS (
-        |  SELECT from_type AS t FROM edges UNION SELECT to_type FROM edges),
-        |outw AS (SELECT from_type, SUM(w) AS ow FROM edges GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS nn FROM nodes),
-        |r0 AS (SELECT t, 1000000 // (SELECT nn FROM n) AS r FROM nodes),
-        |c1 AS (SELECT e.to_type AS t, SUM((r0.r * e.w) // o.ow) AS c
-        |       FROM edges e JOIN r0 ON e.from_type = r0.t
-        |       JOIN outw o ON e.from_type = o.from_type GROUP BY 1),
-        |r1 AS (SELECT nodes.t,
-        |         150000 // (SELECT nn FROM n)
-        |           + (85 * COALESCE(c1.c, 0)) // 100 AS r
-        |       FROM nodes LEFT JOIN c1 ON nodes.t = c1.t),
-        |c2 AS (SELECT e.to_type AS t, SUM((r1.r * e.w) // o.ow) AS c
-        |       FROM edges e JOIN r1 ON e.from_type = r1.t
-        |       JOIN outw o ON e.from_type = o.from_type GROUP BY 1),
-        |r2 AS (SELECT nodes.t,
-        |         150000 // (SELECT nn FROM n)
-        |           + (85 * COALESCE(c2.c, 0)) // 100 AS r
-        |       FROM nodes LEFT JOIN c2 ON nodes.t = c2.t)
-        |SELECT t AS event_type, CAST(r AS BIGINT) AS rank_micro
-        |FROM r2 ORDER BY rank_micro DESC, event_type""".stripMargin,
 
     // power-of-two half-life + integer week age: pow(0.5, w) is exact and
     // the per-row product is an exponent shift, so the dsum recipe holds

@@ -7,12 +7,12 @@ import org.apache.spark.sql.expressions.Window
 import graft.core.Bands
 import graft.core.{Tables => T}
 
-/** Round-11 operator batch (VERDICT r10 #4): benchmark decontamination,
-  * BM25 lexical scoring, and a bounded Louvain modularity pass — each the
-  * next step a production user of the existing surface would reach for
-  * (the dedup family lacked the train-vs-eval containment gate; text_tfidf
-  * lacked its retrieval-scoring sibling; graph_modularity scores a given
-  * partition but nothing yet PROPOSES one).
+/** Round-11 operator batch (VERDICT r10 #4): benchmark decontamination
+  * and BM25 lexical scoring — each the next step a production user of
+  * the existing surface would reach for (the dedup family lacked the
+  * train-vs-eval containment gate; text_tfidf lacked its
+  * retrieval-scoring sibling). The batch's Louvain keys live in
+  * [[Graph]].
   *
   * Reference semantics anchor: statements over scanned tables with
   * engine-invariant arithmetic (`/root/reference/db.cpp:487-502`
@@ -125,117 +125,6 @@ object Frontier {
       .select(col("doc_id"), col("rnk").cast("long").as("rnk"),
         col("term"), col("tf"), col("df"), col("dl"), col("score"))
       .orderBy(col("doc_id"), col("rnk"))
-  }
-
-  // --------------------------------------------------- graph_louvain_pass
-
-  /** ONE LOUVAIN MODULARITY PASS over the co-purchase graph —
-    * `graph_modularity` scores a GIVEN partition; this key runs the move
-    * step that PROPOSES one: from singleton communities, every node
-    * simultaneously evaluates joining each neighbor's community and
-    * takes the best positive-modularity-gain move (the synchronous
-    * first-superstep of every distributed Louvain/Leiden
-    * implementation; full Louvain iterates passes + graph coarsening —
-    * one pass is the bounded, oracle-checkable unit).
-    *
-    * From singletons the gain of i joining {j} collapses to
-    * `ΔQ = 1/m − k_i·k_j/(2m²) = (2m − k_i·k_j) / (2m²)` — argmax over
-    * neighbors is simply the MINIMUM-DEGREE neighbor (ties → smallest
-    * id), and the move happens iff the integer numerator `2m − k_i·k_j`
-    * is positive. Everything is integer-exact except the one reported
-    * IEEE division (num/2m², engine-invariant, deliberately UNROUNDED —
-    * with m arbitrary, 2m² can be a 2^a5^b decimal-terminating
-    * denominator, exactly the r10 half-rounding trap).
-    *
-    * 100 TB shape: the basket self-join is the only corpus-scale stage
-    * (the shared graph cost class), materialized ONCE — four consumers
-    * (both directions of `dir`, the degree aggregate, the edge count)
-    * would otherwise each re-run it (the graph_jaccard lesson:
-    * ReuseExchange does not collapse logical subtrees); degrees are one
-    * aggregate; the argmin rides a window partitioned by node over the
-    * edge list — model-sized, no iteration. */
-  /** Shared louvain-move machinery: the materialized edge list and the
-    * per-node move decision (node, deg, best_nbr, moved, community,
-    * delta_q) — consumed by [[graphLouvainPass]] (the declared per-node
-    * view) and [[graphLouvainCoarsen]] (the level-2 graph built on the
-    * resulting partition). */
-  private[ops] def louvainCore(cp: graft.api.CheckpointStrategy)(
-      s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    // r14 edge build (guide §2.4): was distinct → SMJ self-join on
-    // l_orderkey → distinct — three corpus-scale exchanges plus a join.
-    // Baskets are bounded (≤7 lineitems/order), so ONE collect_set
-    // aggregate + a map-side ordered-pair explode emits the identical
-    // edge SET with two exchanges and no join (same device as
-    // graph_betweenness / graph_bfs; plans/r14/graph_louvain_*_.txt).
-    val baskets = T.lineitem(s, d).filter(col("l_orderkey") % 5 === 0)
-      .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("ps"))
-    val edges = cp.materialize(
-      baskets.select(explode(col("ps")).as("pa"), col("ps"))
-        .select(col("pa"), explode(col("ps")).as("pb"))
-        .filter(col("pa") < col("pb"))
-        .dropDuplicates("pa", "pb"))
-    val dir = edges.select(col("pa").as("i"), col("pb").as("j"))
-      .unionAll(edges.select(col("pb").as("i"), col("pa").as("j")))
-    val deg = dir.groupBy(col("i").as("p")).agg(count(lit(1)).as("deg"))
-    val m = edges.agg(count(lit(1)).as("m"))
-    // r14 A/B, SETTLED ON THE WINDOW: the argmin was rewritten as a
-    // min(struct(kj, j)) aggregate (map-side partials, no sort) and
-    // measured interleaved 3× vs this form — pass/coarsen parity, multi
-    // ~0.4 s WORSE (quiet round: 5.0-5.2 s agg vs 4.6-4.9 s window).
-    // Spark 4's WindowGroupLimit already bounds the top-1-per-key sort,
-    // so the aggregate only re-keys the ki join. Window kept.
-    val w = Window.partitionBy(col("i")).orderBy(col("kj").asc, col("j").asc)
-    val moves = dir
-      .join(deg.select(col("p").as("i"), col("deg").as("ki")), "i")
-      .join(deg.select(col("p").as("j"), col("deg").as("kj")), "j")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") === 1)
-      .crossJoin(broadcast(m))
-      .withColumn("gain_num", lit(2L) * col("m") - col("ki") * col("kj"))
-      .select(col("i").as("node"), col("ki").as("deg"),
-        col("j").as("best_nbr"),
-        (col("gain_num") > 0L).as("moved"),
-        when(col("gain_num") > 0L, col("j")).otherwise(col("i"))
-          .as("community"),
-        (col("gain_num").cast("double")
-          / (lit(2L) * col("m") * col("m")).cast("double")).as("delta_q"))
-    (edges, moves)
-  }
-
-  def graphLouvainPass(
-      cp: graft.api.CheckpointStrategy = graft.api.CheckpointStrategy.Local): Q =
-    (s, d) => louvainCore(cp)(s, d)._2.orderBy(col("node"))
-
-  /** LOUVAIN COARSENING — the second half of a Louvain LEVEL (the move
-    * step [[graphLouvainPass]] proposes the partition; this builds the
-    * SUPER-GRAPH the next level runs on): every original edge maps its
-    * endpoints through the community assignment and the coarse edge
-    * (ca ≤ cb) carries the count of original edges it absorbs — the
-    * self-pair (ca = cb) rows are the intra-community edge mass that
-    * becomes the next level's self-loops. Together the two keys are one
-    * full Louvain level expressed as bounded relational units: full
-    * Louvain is a driver-side composition (level k+1 = the same pair on
-    * a strictly smaller graph).
-    *
-    * 100 TB shape: one node-keyed equi-join per endpoint (the community
-    * map is node-count-sized — at cluster scale a shuffle-hash join on
-    * the node key, never a product) and ONE (ca, cb) aggregate whose
-    * output is the coarse graph — strictly smaller than the input by
-    * the move step's merges. All counts integer-exact. */
-  def graphLouvainCoarsen(
-      cp: graft.api.CheckpointStrategy = graft.api.CheckpointStrategy.Local): Q =
-    (s, d) => {
-    val (edges, moves) = louvainCore(cp)(s, d)
-    val comm = moves.select(col("node"), col("community"))
-    edges
-      .join(comm.select(col("node").as("pa"), col("community").as("x")), "pa")
-      .join(comm.select(col("node").as("pb"), col("community").as("y")), "pb")
-      .groupBy(least(col("x"), col("y")).as("ca"),
-        greatest(col("x"), col("y")).as("cb"))
-      .agg(count(lit(1)).as("n_edges"))
-      .select(col("ca"), col("cb"), col("n_edges"),
-        (col("ca") === col("cb")).as("is_self"))
-      .orderBy(col("ca"), col("cb"))
   }
 
   // --------------------------------------------------- dedup_threshold_sweep
@@ -469,37 +358,11 @@ object Frontier {
   val queries: Map[String, Q] = Map(
     "dedup_decontaminate" -> dedupDecontaminate,
     "text_bm25" -> textBm25,
-    "graph_louvain_pass" -> graphLouvainPass(),
-    "graph_louvain_coarsen" -> graphLouvainCoarsen(),
     "events_cusum_chart" -> eventsCusumChart,
     "events_page_hinkley" -> eventsPageHinkley,
     "dedup_threshold_sweep" -> dedupThresholdSweep,
     "agg_kll" -> aggKll,
   )
-
-  /** Shared ANSI CTE chain for the louvain keys: edge build, degrees,
-    * edge count, best positive-gain move per node. */
-  private[ops] val louvainCoreSql: String =
-    """li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |  WHERE l_orderkey % 5 = 0),
-      |edges AS (
-      |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |  WHERE a.l_partkey < b.l_partkey),
-      |dir AS (SELECT pa AS i, pb AS j FROM edges
-      |        UNION ALL SELECT pb AS i, pa AS j FROM edges),
-      |deg AS (SELECT i AS p, COUNT(*) AS deg FROM dir GROUP BY i),
-      |m AS (SELECT COUNT(*) AS m FROM edges),
-      |best AS (
-      |  SELECT i, ki, j, kj FROM (
-      |    SELECT dir.i, di.deg AS ki, dir.j, dj.deg AS kj,
-      |      ROW_NUMBER() OVER (PARTITION BY dir.i
-      |        ORDER BY dj.deg ASC, dir.j ASC) AS rnk
-      |    FROM dir
-      |    JOIN deg di ON di.p = dir.i
-      |    JOIN deg dj ON dj.p = dir.j)
-      |  WHERE rnk = 1)""".stripMargin
 
   /** DuckDB oracle texts. SqlCatalog serves all but two as is (text_bm25
     * through the DuckDB-named functions GraftExtensions registers);
@@ -617,31 +480,6 @@ object Frontier {
          |JOIN lims ON idx.event_type = lims.event_type
          |ORDER BY idx.event_type, idx.day""".stripMargin
     },
-
-    "graph_louvain_pass" ->
-      s"""WITH $louvainCoreSql
-         |SELECT i AS node, ki AS deg, j AS best_nbr,
-         |  (2 * m.m - ki * kj > 0) AS moved,
-         |  CASE WHEN 2 * m.m - ki * kj > 0 THEN j ELSE i END AS community,
-         |  CAST(2 * m.m - ki * kj AS DOUBLE) / CAST(2 * m.m * m.m AS DOUBLE)
-         |    AS delta_q
-         |FROM best CROSS JOIN m
-         |ORDER BY node""".stripMargin,
-
-    "graph_louvain_coarsen" ->
-      s"""WITH $louvainCoreSql,
-         |comm AS (
-         |  SELECT i AS node,
-         |    CASE WHEN 2 * m.m - ki * kj > 0 THEN j ELSE i END AS c
-         |  FROM best CROSS JOIN m)
-         |SELECT LEAST(x.c, y.c) AS ca, GREATEST(x.c, y.c) AS cb,
-         |  COUNT(*) AS n_edges,
-         |  (LEAST(x.c, y.c) = GREATEST(x.c, y.c)) AS is_self
-         |FROM edges e
-         |JOIN comm x ON e.pa = x.node
-         |JOIN comm y ON e.pb = y.node
-         |GROUP BY LEAST(x.c, y.c), GREATEST(x.c, y.c)
-         |ORDER BY ca, cb""".stripMargin,
 
     // threshold sweep over ONE materialized candidate set; grid rows with
     // zero survivors zero-fill (cramers_v grid-completion rule)

@@ -8,12 +8,12 @@ import graft.core.Bands
 import graft.core.{Tables => T}
 
 /** Round-11 second operator batch: feature hashing (the hashing-trick
-  * vectorizer every sparse-features pipeline starts from), HITS
-  * hubs/authorities (the second classic link-analysis score next to
-  * `graph_pagerank`), interrupted time-series estimation (the
-  * pre/post-intervention causal read next to `events_did`), and CCNet-style
-  * perplexity bucketing (the head/middle/tail quality split on top of
-  * `text_perplexity`'s per-doc scores).
+  * vectorizer every sparse-features pipeline starts from), interrupted
+  * time-series estimation (the pre/post-intervention causal read next to
+  * `events_did`), and CCNet-style perplexity bucketing (the
+  * head/middle/tail quality split on top of `text_perplexity`'s per-doc
+  * scores). The batch's graph keys (`graph_hits`, `graph_scc`) live in
+  * [[Graph]].
   *
   * Reference semantics anchor: statements over scanned tables with
   * engine-invariant arithmetic (`/root/reference/db.cpp:487-502`
@@ -83,89 +83,6 @@ object Frontier2 {
         (coalesce(col("n_tokens"), lit(0L)).cast("double")
           / col("n_total").cast("double")).as("mass_share"))
       .orderBy(col("bucket"))
-  }
-
-  // ------------------------------------------------------------ graph_hits
-
-  /** HITS (Kleinberg 1999) on the customer→supplier purchase graph — the
-    * second classic link-analysis score next to `graph_pagerank`, and the
-    * one built for BIPARTITE endorsement structure: customers are hubs
-    * (they point), suppliers are authorities (they are pointed at), and
-    * two mutual-reinforcement iterations from h₀ = 1 score both sides:
-    * a₁ = indegree, h₁ = Σ_neighbors a₁, a₂ = Σ_neighbors h₁,
-    * h₂ = Σ_neighbors a₂. The declared result is the top-10 per role at
-    * iteration depth 2 with the UNNORMALIZED integer score — HITS'
-    * eigenvector direction is determined by the un-normalized iterate
-    * (normalization only rescales), so staying in integer space makes the
-    * ranking EXACT and engine-invariant where the textbook L2-normalized
-    * float iteration is neither. Scores ACCUMULATE in DECIMAL(38,0): the
-    * iterate grows like (edge degree)² per level, so int64 is the wrong
-    * accumulator at cluster scale — the same overflow guard as the
-    * checksum keys. The DECLARED output casts the score to BIGINT at the
-    * very end (r12, VERDICT r11 #2): the r11 driver gate recorded one
-    * hash_match=false on this key that never reproduced locally
-    * (rows+schema matched; value-exact PASS on re-run) — the one
-    * engine-variant surface left was the decimal RENDERING of the wide
-    * type in the harness's hasher, so the declared column is now the
-    * trivially-canonical int64. Safe at harness scale: the top score at
-    * sf0.1 is ~1e12 (PropertySpec pins 1024x headroom below Long.Max at
-    * two SFs); at cluster scale the internal accumulator still never
-    * overflows and only this final cast would widen.
-    *
-    * 100 TB shape: the edge list is one orders⋈lineitem equi-join +
-    * distinct (shuffled on the order key, then the pair grain); each HITS
-    * level is ONE node-keyed equi-join of the edge list against the
-    * previous level's node-score table (node-count-sized — broadcast at
-    * harness scale, shuffle-hash on the node key at cluster scale) + one
-    * map-side-combined aggregate. Exactly 2 levels per side — bounded, no
-    * convergence loop. The top-10 is TakeOrderedAndProject (never a global
-    * sort), and the rank window runs on the 10 surviving rows.
-    *
-    * Edge-list reuse is deliberately left to ReuseExchange, NOT a
-    * checkpoint: unlike the louvain/jaccard cases (where a union of both
-    * edge directions makes each consumer's subtree textually different),
-    * every HITS consumer references the IDENTICAL distinct-pair subtree,
-    * so the physical exchange reuses across all five consumers. Measured
-    * at sf0.1/32 threads: 2.95 s as-is vs 5.37 s with an eager
-    * localCheckpoint — the checkpoint write costs more than it saves. */
-  val graphHits: Q = (s, d) => {
-    val dec38 = (c: Column) => c.cast("decimal(38,0)")
-    val edges = T.orders(s, d)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(T.lineitem(s, d)
-        .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),
-        "o_orderkey")
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
-      .distinct()
-    val a1 = edges.groupBy(col("p"))
-      .agg(dec38(count(lit(1))).as("a1"))
-    val h1 = edges.join(a1, "p").groupBy(col("c"))
-      .agg(sum(col("a1")).as("h1"))
-    val a2 = edges.join(h1, "c").groupBy(col("p"))
-      .agg(sum(col("h1")).as("a2"))
-    val h2 = edges.join(a2, "p").groupBy(col("c"))
-      .agg(sum(col("a2")).as("h2"))
-    def top10(df: DataFrame, node: String, score: String, role: String) =
-      df.orderBy(col(score).desc, col(node).asc).limit(10)
-        .select(lit(role).as("role"), col(node).as("node"),
-          // in-path overflow assertion (ADVICE r12): the DECIMAL(38,0)
-          // score narrows to BIGINT for the declared schema; with ANSI
-          // off an overflowing cast silently NULLs (mis-sorting the rank
-          // window) while the oracle's CAST AS BIGINT hard-errors —
-          // raise_error here makes BOTH engines fail loudly at the same
-          // boundary instead of diverging past the headroom sweeps
-          when(col(score) > lit(Long.MaxValue).cast("decimal(38,0)"),
-            raise_error(lit(s"graph_hits: $score overflows BIGINT")))
-            .otherwise(col(score).cast("long")).as("score"))
-    // one role-partitioned rank window over the 20 surviving rows — never
-    // a partition-less Window (the all-query sweep pin)
-    val w = Window.partitionBy(col("role"))
-      .orderBy(col("score").desc, col("node").asc)
-    top10(a2, "p", "a2", "authority")
-      .unionByName(top10(h2, "c", "h2", "hub"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .select(col("role"), col("rnk"), col("node"), col("score"))
-      .orderBy(col("role"), col("rnk"))
   }
 
   // ------------------------------------------------------------ events_its
@@ -651,76 +568,6 @@ object Frontier2 {
       .orderBy(col("lang_true"), col("lang_pred"))
   }
 
-  // -------------------------------------------------------------- graph_scc
-
-  /** STRONGLY CONNECTED COMPONENTS of the event-type DOMINANCE digraph —
-    * the directed closure the graph family lacked (`dedup_cluster` is
-    * undirected CC; `graph_bfs` is single-source): the transition counts
-    * of `events_transition` reduce to a tournament (edge a→b iff
-    * strictly more a→b transitions than b→a; ties drop), and its SCCs
-    * are the behavioral TIERS — event types that dominate each other
-    * cyclically collapse into one component, and the condensation is a
-    * total order (a tournament's condensation always is). Reachability
-    * closes by POINTER DOUBLING: reach₀ = edges ∪ identity, two doubling
-    * rounds cover paths of length 4 ≥ the harness type-graph's diameter
-    * (bounded-depth is what makes the key oracle-checkable — full SCC on
-    * an unbounded graph is the dedup_cluster driver-loop composition,
-    * log-diameter rounds of this exact unit). scc_id(v) = min{u :
-    * v→*u ∧ u→*v} — pure integer/string min, engine-exact.
-    *
-    * 100 TB shape: the transition aggregate is one (prev, type) hash agg
-    * over the corpus (map-side combined); everything downstream lives on
-    * the TYPE grid (|V|² at worst) — the doubling joins are model-sized.
-    * On a node-scale graph each doubling is an equi-join shuffled on the
-    * midpoint key, |reach| ≤ |V|·|V| — the declared CC cost class. */
-  /** The event-type DOMINANCE digraph shared by `graph_scc` (directed
-    * closure) and `graph_wcc` (Frontier5 — undirected closure): edge a→b
-    * iff strictly more a→b transitions than b→a (ties drop). */
-  def dominanceEdges(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val cnt = T.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev", lag(col("event_type"), 1).over(w))
-      .filter(col("prev").isNotNull)
-      .groupBy(col("prev").as("a"), col("event_type").as("b"))
-      .agg(count(lit(1)).as("n"))
-    cnt.as("x")
-      .join(cnt.as("y"), col("x.a") === col("y.b") && col("x.b") === col("y.a"),
-        "left")
-      .filter(col("x.a") =!= col("x.b") &&
-        col("x.n") > coalesce(col("y.n"), lit(0L)))
-      .select(col("x.a").as("src"), col("x.b").as("dst"))
-  }
-
-  val graphScc: Q = (s, d) => {
-    // r14 (guide §5, truncate huge plans): each doubling references its
-    // input THREE times (the union + both self-join sides) and the final
-    // closure twice more, so the lazy composition re-derived the r0
-    // subtree (events window + transition agg + dominance self-join) ~18×
-    // — a 387 KB physical plan, 279 Exchanges
-    // (plans/r14/graph_scc_before.txt); planning time alone dominated the
-    // key. The reach sets are TYPE-GRID sized (≤|V|²), so a barrier per
-    // round is microscopic and the plan stays linear in rounds.
-    val cp = graft.api.CheckpointStrategy.Local
-    val edges = dominanceEdges(s, d)
-    val nodes = T.events(s, d).select(col("event_type").as("v")).distinct()
-    val r0 = cp.materialize(edges.unionByName(
-      nodes.select(col("v").as("src"), col("v").as("dst"))).distinct())
-    def dbl(r: DataFrame): DataFrame = cp.materialize(r.unionByName(
-      r.as("p").join(r.as("q"), col("p.dst") === col("q.src"))
-        .select(col("p.src").as("src"), col("q.dst").as("dst"))).distinct())
-    val reach = dbl(dbl(r0))
-    val scc = reach.as("f")
-      .join(reach.as("b"),
-        col("f.src") === col("b.dst") && col("f.dst") === col("b.src"))
-      .groupBy(col("f.src").as("node"))
-      .agg(min(col("f.dst")).as("scc_id"))
-    val sizes = scc.groupBy(col("scc_id")).agg(count(lit(1)).as("scc_size"))
-    scc.join(sizes, "scc_id")
-      .select(col("node"), col("scc_id"), col("scc_size"))
-      .orderBy(col("node"))
-  }
-
   // -------------------------------------------------------------- sample_ess
 
   /** KISH EFFECTIVE SAMPLE SIZE (Kish 1965; the importance-sampling
@@ -769,7 +616,6 @@ object Frontier2 {
 
   val queries: Map[String, Q] = Map(
     "text_feature_hash" -> textFeatureHash,
-    "graph_hits" -> graphHits,
     "events_its" -> eventsIts,
     "text_ppl_bucket" -> textPplBucket,
     "agg_psi" -> aggPsi,
@@ -778,12 +624,11 @@ object Frontier2 {
     "text_ppl_holdout" -> textPplHoldout,
     "meta_lineage" -> metaLineage,
     "text_lang_ngram" -> textLangNgram,
-    "graph_scc" -> graphScc,
     "sample_ess" -> sampleEss,
   )
 
-  /** DuckDB oracle texts. graph_hits, graph_scc and meta_lineage are
-    * dual-dialect ANSI, so SqlCatalog serves them as is; the others
+  /** DuckDB oracle texts. meta_lineage is dual-dialect ANSI, so
+    * SqlCatalog serves it as is; the others
     * tokenize or use date arithmetic, so each dialect spells its own
     * primitives. */
   val oracles: Map[String, String] = Map(
@@ -813,32 +658,6 @@ object Frontier2 {
          |CROSS JOIN tot
          |ORDER BY g.bucket""".stripMargin
     },
-
-    "graph_hits" ->
-      """WITH edges AS (
-        |  SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS p
-        |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        |a1 AS (SELECT p, CAST(COUNT(*) AS DECIMAL(38,0)) AS a1
-        |       FROM edges GROUP BY p),
-        |h1 AS (SELECT c, SUM(a1) AS h1
-        |       FROM edges JOIN a1 USING (p) GROUP BY c),
-        |a2 AS (SELECT p, SUM(h1) AS a2
-        |       FROM edges JOIN h1 USING (c) GROUP BY p),
-        |h2 AS (SELECT c, SUM(a2) AS h2
-        |       FROM edges JOIN a2 USING (p) GROUP BY c),
-        |u AS (
-        |  SELECT 'authority' AS role, p AS node,
-        |    CAST(a2 AS BIGINT) AS score FROM a2
-        |  UNION ALL
-        |  SELECT 'hub' AS role, c AS node,
-        |    CAST(h2 AS BIGINT) AS score FROM h2),
-        |r AS (SELECT role, node, score,
-        |    ROW_NUMBER() OVER (PARTITION BY role
-        |      ORDER BY score DESC, node ASC) AS rnk
-        |  FROM u)
-        |SELECT role, CAST(rnk AS BIGINT) AS rnk, node, score
-        |FROM r WHERE rnk <= 10
-        |ORDER BY role, rnk""".stripMargin,
 
     "events_its" -> {
       val fit = (n: String, sx: String, sy: String, sxy: String, sxx: String) => {
@@ -1152,33 +971,6 @@ object Frontier2 {
          |    AS ess_ratio
          |FROM m ORDER BY scope""".stripMargin
     },
-
-    "graph_scc" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |cnt AS (SELECT prev AS a, event_type AS b, COUNT(*) AS n
-        |        FROM seq WHERE prev IS NOT NULL GROUP BY prev, event_type),
-        |edges AS (
-        |  SELECT x.a AS src, x.b AS dst FROM cnt x
-        |  LEFT JOIN cnt y ON x.a = y.b AND x.b = y.a
-        |  WHERE x.a <> x.b AND x.n > COALESCE(y.n, 0)),
-        |nodes AS (SELECT DISTINCT event_type AS v FROM events),
-        |r0 AS (SELECT src, dst FROM edges UNION SELECT v, v FROM nodes),
-        |r1 AS (SELECT src, dst FROM r0
-        |       UNION
-        |       SELECT p.src, q.dst FROM r0 p JOIN r0 q ON p.dst = q.src),
-        |r2 AS (SELECT src, dst FROM r1
-        |       UNION
-        |       SELECT p.src, q.dst FROM r1 p JOIN r1 q ON p.dst = q.src),
-        |scc AS (SELECT f.src AS node, MIN(f.dst) AS scc_id
-        |        FROM r2 f JOIN r2 b ON f.src = b.dst AND f.dst = b.src
-        |        GROUP BY f.src),
-        |sizes AS (SELECT scc_id, COUNT(*) AS scc_size FROM scc GROUP BY scc_id)
-        |SELECT node, scc_id, scc_size FROM scc JOIN sizes USING (scc_id)
-        |ORDER BY node""".stripMargin,
 
     "text_lang_ngram" -> {
       val h = LlmPipeline.h48Sql("'langid:' || CAST(doc_id AS VARCHAR)")

@@ -8,12 +8,12 @@ import graft.core.Numeric.dbl
 import graft.core.{Tables => T}
 
 /** Round-12 operator batch: the production ANN shape (IVF cell pruning ×
-  * PQ distance with a built-in recall audit), two-level Louvain with
-  * per-level modularity, one-way ANOVA and Kruskal-Wallis (the parametric
-  * and rank k-group tests next to `agg_ab_test`/`agg_mannwhitney`),
-  * robust embedding-outlier flagging, and weighted
-  * sampling-without-replacement via the exponential race (the
-  * distributed A-Res / Gumbel-top-k device).
+  * PQ distance with a built-in recall audit), one-way ANOVA and
+  * Kruskal-Wallis (the parametric and rank k-group tests next to
+  * `agg_ab_test`/`agg_mannwhitney`), robust embedding-outlier flagging,
+  * and weighted sampling-without-replacement via the exponential race
+  * (the distributed A-Res / Gumbel-top-k device). The batch's two-level
+  * Louvain lives in [[Graph]].
   *
   * Reference semantics anchor: statements over scanned tables with
   * engine-invariant arithmetic (`/root/reference/db.cpp:487-502`
@@ -158,105 +158,6 @@ object Frontier3 {
         coalesce(col("grnk").cast("long"), lit(0L)).as("gt_rnk"),
         col("grnk").isNotNull.as("hit"))
       .orderBy(col("probe_id"), col("rnk"))
-  }
-
-  // ------------------------------------------------------- graph_louvain_multi
-
-  /** TWO-LEVEL LOUVAIN (Blondel et al. 2008 — the full pass→coarsen→pass
-    * composition; `graph_louvain_pass` and `graph_louvain_coarsen` each
-    * declare ONE half of one level): level 1 is the singleton move pass
-    * on the co-purchase graph, coarsening builds the weighted
-    * super-graph (absorbed-edge weights, intra mass as self-loops), and
-    * level 2 runs the WEIGHTED move pass on it — each super-node takes
-    * the neighbor community maximizing the integer gain numerator
-    * `2m·w_ij − k_i·k_j` (the general weighted form whose w_ij = 1
-    * special case is the min-degree shortcut of the singleton pass).
-    * The declared result is the real community-detection deliverable:
-    * per level (0 = singletons, 1, 2), community count, intra-community
-    * edge count and the modularity of that partition ON THE ORIGINAL
-    * graph — Q = (4m·intra − Σ_c D_c²) / 4m², an INTEGER numerator over
-    * an integer denominator, so the only float is one engine-invariant
-    * IEEE division (the `graph_louvain_pass` delta_q discipline, and
-    * deliberately UNROUNDED for the same decimal-terminating-denominator
-    * reason). Level-over-level modularity increase is the property test.
-    *
-    * 100 TB shape: the basket self-join materializes ONCE (localCheckpoint
-    * at harness scale, reliable checkpoint on a cluster) and every
-    * consumer — moves, coarse graph, three per-level intra/degree
-    * aggregates — reads the materialized edge list; the coarse graph and
-    * everything after it is community-count-sized (strictly shrinking by
-    * construction); the per-level modularity is two aggregates each. No
-    * convergence loop: two levels are the declared bound, the open
-    * iteration is the same driver-side composition on shrinking graphs. */
-  val graphLouvainMulti: Q = (s, d) => {
-    val dec38 = (c: Column) => c.cast("decimal(38,0)")
-    val cp = graft.api.CheckpointStrategy.Local
-    val (edges, moves) = Frontier.louvainCore(cp)(s, d)
-    // every model-sized stage materializes before fan-out: comm1 feeds
-    // coarse (×2) and the final map, coarse feeds wdeg/dir2 (×4), and the
-    // level table replays 3× into the modularity aggregates — without the
-    // barriers the composed logical plan re-derives each subtree per
-    // consumer (the graph_jaccard lesson: ReuseExchange never collapses
-    // logical subtrees; the un-materialized form planned 499 joins)
-    val comm1 = cp.materialize(
-      moves.select(col("node"), col("deg"), col("community").as("c1")))
-    val m = edges.agg(count(lit(1)).as("m"))
-    val coarse = cp.materialize(edges
-      .join(comm1.select(col("node").as("pa"), col("c1").as("x")), "pa")
-      .join(comm1.select(col("node").as("pb"), col("c1").as("y")), "pb")
-      .groupBy(least(col("x"), col("y")).as("ca"),
-        greatest(col("x"), col("y")).as("cb"))
-      .agg(count(lit(1)).as("w")))
-    // weighted degree on the super-graph: self-loops count twice
-    val wdeg = coarse.select(col("ca").as("c"),
-        when(col("ca") === col("cb"), lit(2L) * col("w"))
-          .otherwise(col("w")).as("k"))
-      .unionAll(coarse.filter(col("ca") =!= col("cb"))
-        .select(col("cb").as("c"), col("w").as("k")))
-      .groupBy(col("c")).agg(sum(col("k")).as("kc"))
-    val dir2 = coarse.filter(col("ca") =!= col("cb"))
-      .select(col("ca").as("i"), col("cb").as("j"), col("w"))
-      .unionAll(coarse.filter(col("ca") =!= col("cb"))
-        .select(col("cb").as("i"), col("ca").as("j"), col("w")))
-    val w2 = Window.partitionBy(col("i"))
-      .orderBy(col("gain").desc, col("j").asc)
-    val moves2 = dir2
-      .join(wdeg.select(col("c").as("i"), col("kc").as("ki")), "i")
-      .join(wdeg.select(col("c").as("j"), col("kc").as("kj")), "j")
-      .crossJoin(broadcast(m))
-      .withColumn("gain",
-        dec38(lit(2L) * col("m")) * col("w") - dec38(col("ki")) * col("kj"))
-      .withColumn("rnk", row_number().over(w2)).filter(col("rnk") === 1)
-      .select(col("i").as("c1"),
-        when(col("gain") > 0, col("j")).otherwise(col("i")).as("c2"))
-    // node -> c1 -> c2; a community with no inter-community edge keeps itself
-    val full = cp.materialize(comm1.join(moves2, Seq("c1"), "left")
-      .select(col("node"), col("deg"), col("c1"),
-        coalesce(col("c2"), col("c1")).as("c2")))
-    val lv = full.select(lit(0L).as("level"), col("node"), col("deg"),
-        col("node").as("comm"))
-      .unionAll(full.select(lit(1L).as("level"), col("node"), col("deg"),
-        col("c1").as("comm")))
-      .unionAll(full.select(lit(2L).as("level"), col("node"), col("deg"),
-        col("c2").as("comm")))
-    val intra = edges
-      .join(lv.select(col("node").as("pa"), col("level"), col("comm").as("x")),
-        Seq("pa"))
-      .join(lv.select(col("node").as("pb"), col("level"), col("comm").as("y")),
-        Seq("pb", "level"))
-      .groupBy(col("level"))
-      .agg(sum(when(col("x") === col("y"), 1L).otherwise(0L)).as("n_intra"))
-    val dsq = lv.groupBy(col("level"), col("comm"))
-      .agg(sum(col("deg")).as("dc"))
-      .groupBy(col("level"))
-      .agg(count(lit(1)).as("n_comms"),
-        sum(dec38(col("dc")) * col("dc")).as("sumsq"))
-    dsq.join(intra, Seq("level")).crossJoin(broadcast(m))
-      .select(col("level"), col("n_comms"), col("n_intra"),
-        ((dec38(lit(4L) * col("m")) * col("n_intra") - col("sumsq"))
-          .cast("double")
-          / dec38(lit(4L) * col("m") * col("m")).cast("double")).as("q"))
-      .orderBy(col("level"))
   }
 
   // ------------------------------------------------------------- agg_anova
@@ -609,7 +510,6 @@ object Frontier3 {
 
   val queries: Map[String, Q] = Map(
     "sim_ivf_pq" -> simIvfPq,
-    "graph_louvain_multi" -> graphLouvainMulti,
     "agg_anova" -> aggAnova,
     "agg_kruskal" -> aggKruskal,
     "agg_levene" -> aggLevene,
@@ -704,77 +604,6 @@ object Frontier3 {
         |FROM res LEFT JOIN gt
         |  ON gt.probe_id = res.probe_id AND gt.vec_id = res.vec_id
         |ORDER BY res.probe_id, res.rnk""".stripMargin,
-
-    "graph_louvain_multi" ->
-      s"""WITH ${Frontier.louvainCoreSql},
-         |comm AS (
-         |  SELECT i AS node, ki AS deg,
-         |    CASE WHEN 2 * m.m - ki * kj > 0 THEN j ELSE i END AS c1
-         |  FROM best CROSS JOIN m),
-         |coarse AS (
-         |  SELECT LEAST(x.c1, y.c1) AS ca, GREATEST(x.c1, y.c1) AS cb,
-         |    COUNT(*) AS w
-         |  FROM edges e
-         |  JOIN comm x ON e.pa = x.node
-         |  JOIN comm y ON e.pb = y.node
-         |  GROUP BY LEAST(x.c1, y.c1), GREATEST(x.c1, y.c1)),
-         |wdeg AS (
-         |  SELECT c, SUM(k) AS kc FROM (
-         |    SELECT ca AS c, CASE WHEN ca = cb THEN 2 * w ELSE w END AS k
-         |    FROM coarse
-         |    UNION ALL
-         |    SELECT cb AS c, w AS k FROM coarse WHERE ca <> cb) u
-         |  GROUP BY c),
-         |dir2 AS (
-         |  SELECT ca AS i, cb AS j, w FROM coarse WHERE ca <> cb
-         |  UNION ALL
-         |  SELECT cb AS i, ca AS j, w FROM coarse WHERE ca <> cb),
-         |best2 AS (
-         |  SELECT i, j, gain FROM (
-         |    SELECT d.i, d.j,
-         |      CAST(2 * m.m AS DECIMAL(38,0)) * d.w
-         |        - CAST(ki.kc AS DECIMAL(38,0)) * kj.kc AS gain,
-         |      ROW_NUMBER() OVER (PARTITION BY d.i ORDER BY
-         |        CAST(2 * m.m AS DECIMAL(38,0)) * d.w
-         |          - CAST(ki.kc AS DECIMAL(38,0)) * kj.kc DESC,
-         |        d.j ASC) AS rnk
-         |    FROM dir2 d
-         |    JOIN wdeg ki ON ki.c = d.i
-         |    JOIN wdeg kj ON kj.c = d.j
-         |    CROSS JOIN m) t
-         |  WHERE rnk = 1),
-         |fin AS (
-         |  SELECT comm.node, comm.deg, comm.c1,
-         |    COALESCE(CASE WHEN b.gain > 0 THEN b.j ELSE b.i END, comm.c1)
-         |      AS c2
-         |  FROM comm LEFT JOIN best2 b ON b.i = comm.c1),
-         |lv AS (
-         |  SELECT 0 AS level, node, deg, node AS comm FROM fin
-         |  UNION ALL SELECT 1 AS level, node, deg, c1 AS comm FROM fin
-         |  UNION ALL SELECT 2 AS level, node, deg, c2 AS comm FROM fin),
-         |intra AS (
-         |  SELECT x.level,
-         |    SUM(CASE WHEN x.comm = y.comm THEN 1 ELSE 0 END) AS n_intra
-         |  FROM edges e
-         |  JOIN lv x ON e.pa = x.node
-         |  JOIN lv y ON e.pb = y.node AND y.level = x.level
-         |  GROUP BY x.level),
-         |dsq AS (
-         |  SELECT level, COUNT(*) AS n_comms,
-         |    SUM(CAST(dc AS DECIMAL(38,0)) * dc) AS sumsq
-         |  FROM (SELECT level, comm, SUM(deg) AS dc FROM lv
-         |        GROUP BY level, comm) g
-         |  GROUP BY level)
-         |SELECT CAST(d.level AS BIGINT) AS level,
-         |  CAST(d.n_comms AS BIGINT) AS n_comms,
-         |  CAST(i.n_intra AS BIGINT) AS n_intra,
-         |  CAST(CAST(4 * m.m AS DECIMAL(38,0)) * i.n_intra - d.sumsq
-         |      AS DOUBLE)
-         |    / CAST(CAST(4 * m.m * m.m AS DECIMAL(38,0)) AS DOUBLE) AS q
-         |FROM dsq d
-         |JOIN intra i ON i.level = d.level
-         |CROSS JOIN m
-         |ORDER BY level""".stripMargin,
 
     "agg_anova" ->
       """WITH g AS (

@@ -14,9 +14,8 @@ import graft.core.{Tables => T}
   * plus the round's widening batch: paired inference (`agg_ttest_paired`,
   * `sample_poisson_boot`), capture-recapture cardinality estimation
   * (`agg_chapman`), vocabulary-growth law fitting (`text_heaps`),
-  * dedup-saturation audit (`dedup_saturation`), directed-graph
-  * reciprocity (`graph_reciprocity`), and two retrieval-fusion/audit
-  * keys (`sim_rrf`, `sim_recall_curve`).
+  * dedup-saturation audit (`dedup_saturation`), and two
+  * retrieval-fusion/audit keys (`sim_rrf`, `sim_recall_curve`).
   *
   * Reference semantics anchor: statements over scanned tables with
   * engine-invariant arithmetic (`/root/reference/db.cpp:487-502`
@@ -152,47 +151,6 @@ object Frontier4 {
       round(mean / 100.0, 6).as("mean_diff"),
       when(wellPosed, round(mean / sqrt(vr / dbl("n")), 6)).as("t"),
       (col("n") - 1L).as("df"))
-  }
-
-  // ------------------------------------------------------- graph_reciprocity
-
-  /** DIRECTED-GRAPH RECIPROCITY — what fraction of directed edges have a
-    * reverse edge (the classic directed-network statistic: near 1 for
-    * mutual-follow social graphs, near 0 for citation DAGs). The directed
-    * edge set is the temporal HANDOFF graph over the co-occurrence
-    * buckets the undirected graph keys share (`graph_triangles`'
-    * (event_type, hour) buckets): within each bucket, users ordered by
-    * first-event time (ties → user_id) and each user points at the NEXT —
-    * who picked up the activity after me. Per event type: |E|, the number
-    * of reciprocated edges, and their ratio.
-    *
-    * 100 TB shape: one (type, hour, user) fold (map-side), one
-    * bucket-partitioned LEAD window on that grid, one distinct, and the
-    * reciprocity probe is a self equi-join on the flipped key — every
-    * stage keyed, nothing |V|². */
-  val graphReciprocity: Q = (s, d) => {
-    val firsts = T.events(s, d)
-      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"),
-        col("user_id"))
-      .agg(min(col("ts")).as("fts"))
-    val wB = Window.partitionBy(col("event_type"), col("hr"))
-      .orderBy(col("fts"), col("user_id"))
-    val edges = firsts
-      .withColumn("dst", lead(col("user_id"), 1).over(wB))
-      .filter(col("dst").isNotNull)
-      .select(col("event_type"), col("user_id").as("src"), col("dst"))
-      .distinct()
-    val rev = edges.select(col("event_type"), col("src").as("dst"),
-      col("dst").as("src"))
-    val recip = edges.join(rev, Seq("event_type", "src", "dst"), "left_semi")
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n_recip"))
-    edges.groupBy(col("event_type")).agg(count(lit(1)).as("n_edges"))
-      .join(recip, Seq("event_type"), "left")
-      .select(col("event_type"), col("n_edges"),
-        coalesce(col("n_recip"), lit(0L)).as("n_recip"),
-        round(coalesce(col("n_recip"), lit(0L)).cast("double")
-          / col("n_edges"), 6).as("reciprocity"))
-      .orderBy(col("event_type"))
   }
 
   // ----------------------------------------------------------- agg_chapman
@@ -505,7 +463,6 @@ object Frontier4 {
   val queries: Map[String, Q] = Map(
     "meta_analyze" -> metaAnalyze,
     "agg_ttest_paired" -> aggTtestPaired,
-    "graph_reciprocity" -> graphReciprocity,
     "agg_chapman" -> aggChapman,
     "text_heaps" -> textHeaps,
     "dedup_saturation" -> dedupSaturation,
@@ -556,36 +513,6 @@ object Frontier4 {
         |        / CAST(n AS DOUBLE)), 6) END AS DOUBLE) AS t,
         |  CAST(n - 1 AS BIGINT) AS df
         |FROM m""".stripMargin,
-
-    // dual-dialect ANSI
-    "graph_reciprocity" ->
-      """WITH firsts AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS hr, user_id,
-        |    MIN(ts) AS fts
-        |  FROM events GROUP BY event_type, date_trunc('hour', ts), user_id),
-        |hand AS (
-        |  SELECT event_type, user_id AS src,
-        |    LEAD(user_id) OVER (PARTITION BY event_type, hr
-        |      ORDER BY fts, user_id) AS dst
-        |  FROM firsts),
-        |edges AS (
-        |  SELECT DISTINCT event_type, src, dst FROM hand
-        |  WHERE dst IS NOT NULL),
-        |recip AS (
-        |  SELECT e.event_type, COUNT(*) AS n_recip
-        |  FROM edges e JOIN edges r
-        |    ON e.event_type = r.event_type AND e.src = r.dst
-        |      AND e.dst = r.src
-        |  GROUP BY e.event_type),
-        |tot AS (
-        |  SELECT event_type, COUNT(*) AS n_edges FROM edges
-        |  GROUP BY event_type)
-        |SELECT t.event_type, t.n_edges,
-        |  CAST(COALESCE(r.n_recip, 0) AS BIGINT) AS n_recip,
-        |  CAST(ROUND(CAST(COALESCE(r.n_recip, 0) AS DOUBLE)
-        |    / CAST(t.n_edges AS DOUBLE), 6) AS DOUBLE) AS reciprocity
-        |FROM tot t LEFT JOIN recip r ON t.event_type = r.event_type
-        |ORDER BY t.event_type""".stripMargin,
 
     "agg_chapman" ->
       """WITH toks AS (

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,7 +8,8 @@ import graft.core.Numeric.dbl
 import graft.core.{Tables => T}
 
 /** Round-13 second widening batch — the inference/agreement gap in the
-  * statistics family plus three pipeline-audit keys:
+  * statistics family plus two pipeline-audit keys (the batch's
+  * `graph_wcc` lives in [[Graph]]):
   *
   *   - rank statistics on bounded grids (`agg_kendall`, `agg_friedman`)
   *   - paired / categorical agreement (`agg_mcnemar`, `agg_cohens_kappa`)
@@ -17,8 +18,6 @@ import graft.core.{Tables => T}
   *     overlap, the diversity audit next to `text_novelty`)
   *   - sequential decision (`events_sprt` — Wald's SPRT reduced to an
   *     EXACT integer random walk, zero float in the stopping rule)
-  *   - undirected graph closure (`graph_wcc` — the weakly-connected
-  *     complement of `graph_scc` on the same dominance digraph)
   *
   * Reference semantics anchor: deterministic statements over scanned
   * tables (`/root/reference/db.cpp:487-502` executeSelect discipline);
@@ -382,49 +381,6 @@ object Frontier5 {
       .orderBy(col("event_type"))
   }
 
-  // ---------------------------------------------------------------- graph_wcc
-
-  /** WEAKLY CONNECTED COMPONENTS of the event-type dominance digraph —
-    * the undirected closure next to `graph_scc`'s directed one (WCC asks
-    * "which types interact AT ALL", SCC asks "which dominate each other
-    * cyclically"; every SCC is contained in one WCC, the containment the
-    * spec pins). Same bounded-depth reachability declaration as
-    * `graph_scc`: symmetrize the dominance edges, close by POINTER
-    * DOUBLING — THREE rounds here (paths ≤ 8 ≥ the type graph's
-    * undirected diameter; undirected chains run longer than dominance
-    * paths, hence one more round than scc's two) — then wcc_id(v) =
-    * min{u : v ↔* u}, pure string MIN, engine-exact.
-    *
-    * 100 TB shape: the transition aggregate is one (prev, type) corpus
-    * fold; the closure lives on the TYPE grid (≤ |V|² rows). On a
-    * node-scale graph each doubling is an equi-join shuffled on the
-    * midpoint key — the declared log-diameter CC cost class
-    * (`dedup_cluster`'s driver-loop composition, one round per key). */
-  val graphWcc: Q = (s, d) => {
-    // r14 (guide §5, truncate huge plans — the graph_scc fix): three lazy
-    // doubling rounds each referencing their input 3× re-derived the
-    // dominance-edge subtree ~27-54×; a barrier per round keeps the plan
-    // linear. Reach sets are type-grid sized, so each barrier is
-    // microscopic.
-    val cp = graft.api.CheckpointStrategy.Local
-    val e0 = Frontier2.dominanceEdges(s, d)
-    val nodes = T.events(s, d).select(col("event_type").as("v")).distinct()
-    val r0 = cp.materialize(e0
-      .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .unionByName(nodes.select(col("v").as("src"), col("v").as("dst")))
-      .distinct())
-    def dblRound(r: DataFrame): DataFrame = cp.materialize(r.unionByName(
-      r.as("p").join(r.as("q"), col("p.dst") === col("q.src"))
-        .select(col("p.src").as("src"), col("q.dst").as("dst"))).distinct())
-    val reach = dblRound(dblRound(dblRound(r0)))
-    val wcc = reach.groupBy(col("src").as("node"))
-      .agg(min(col("dst")).as("wcc_id"))
-    val sizes = wcc.groupBy(col("wcc_id")).agg(count(lit(1)).as("wcc_size"))
-    wcc.join(sizes, "wcc_id")
-      .select(col("node"), col("wcc_id"), col("wcc_size"))
-      .orderBy(col("node"))
-  }
-
   // --------------------------------------------------------------- registry
 
   val queries: Map[String, Q] = Map(
@@ -435,7 +391,6 @@ object Frontier5 {
     "agg_jackknife" -> aggJackknife,
     "text_self_bleu" -> textSelfBleu,
     "events_sprt" -> eventsSprt,
-    "graph_wcc" -> graphWcc,
   )
 
   /** DuckDB oracle texts. All but `agg_cohens_kappa` and
@@ -674,38 +629,5 @@ object Frontier5 {
         |  ON dec.event_type = w.event_type AND dec.n_seen = w.rn
         |ORDER BY dec.event_type""".stripMargin,
 
-    // dual-dialect ANSI
-    "graph_wcc" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM events),
-        |cnt AS (SELECT prev AS a, event_type AS b, COUNT(*) AS n
-        |        FROM seq WHERE prev IS NOT NULL GROUP BY prev, event_type),
-        |edges AS (
-        |  SELECT x.a AS src, x.b AS dst FROM cnt x
-        |  LEFT JOIN cnt y ON x.a = y.b AND x.b = y.a
-        |  WHERE x.a <> x.b AND x.n > COALESCE(y.n, 0)),
-        |nodes AS (SELECT DISTINCT event_type AS v FROM events),
-        |r0 AS (SELECT src, dst FROM edges
-        |       UNION SELECT dst, src FROM edges
-        |       UNION SELECT v, v FROM nodes),
-        |r1 AS (SELECT src, dst FROM r0
-        |       UNION
-        |       SELECT p.src, q.dst FROM r0 p JOIN r0 q ON p.dst = q.src),
-        |r2 AS (SELECT src, dst FROM r1
-        |       UNION
-        |       SELECT p.src, q.dst FROM r1 p JOIN r1 q ON p.dst = q.src),
-        |r3 AS (SELECT src, dst FROM r2
-        |       UNION
-        |       SELECT p.src, q.dst FROM r2 p JOIN r2 q ON p.dst = q.src),
-        |wcc AS (SELECT src AS node, MIN(dst) AS wcc_id
-        |        FROM r3 GROUP BY src),
-        |sizes AS (SELECT wcc_id AS wid, COUNT(*) AS wcc_size
-        |          FROM wcc GROUP BY wcc_id)
-        |SELECT node, wcc_id, CAST(wcc_size AS BIGINT) AS wcc_size
-        |FROM wcc JOIN sizes ON wcc.wcc_id = sizes.wid
-        |ORDER BY node""".stripMargin,
   )
 }

@@ -9,10 +9,9 @@ import graft.core.{Tables => T}
 import graft.core.Numeric.{dsum, dsumSql}
 
 /** Round-10 operators: sequential-recursion FORECASTING (Holt level-trend
-  * smoothing and its cohort-LTV projection), bounded BETWEENNESS
-  * centrality (the Brandes dependency accumulation, probe-budgeted the
-  * way `graph_closeness` bounds its radius), and SENSITIVITY-SAMPLED
+  * smoothing and its cohort-LTV projection) and SENSITIVITY-SAMPLED
   * CORESETS (the lightweight-coreset summary next to `sample_dsir`).
+  * The batch's `graph_betweenness` lives in [[Graph]].
   *
   * Reference basis: the reference engine (db.cpp) has no analytics
   * surface — every key here is a BASELINE.json north-star capability
@@ -298,154 +297,6 @@ object Horizon {
       .orderBy(col("cohort_day"))
   }
 
-  // --------------------------------------------------- graph_betweenness
-
-  /** BOUNDED BETWEENNESS CENTRALITY — which products BROKER the
-    * co-purchase graph ([[Advanced.graphCloseness]] scores how NEAR a
-    * probe sits; betweenness scores how often a node lies ON shortest
-    * paths — the classic cut-point/bridge signal): Brandes' algorithm,
-    * probe-budgeted and radius-bounded exactly like graph_closeness —
-    * seeds are every 500th part (the closeness budget; a half-budget
-    * A/B read 6.6 vs 7.0 s, i.e. the cost lives in the shared edge-list
-    * build, not the seed count — Brandes-Pich source sampling remains
-    * the declared dial), forward BFS 3 unrolled supersteps
-    * accumulating shortest-path counts σ (integer sums over predecessor
-    * frontiers, min-hop enforced by level anti-joins), then the backward
-    * dependency pass δ(v) = Σ_w σ(v)/σ(w)·(1+δ(w)) unrolled hop 3 → 1.
-    * Each δ term is one IEEE division (+1 multiply) rounded to 8
-    * decimals; sums run as exact DECIMAL, so seed order and partition
-    * order cannot move the result. Exact all-pairs betweenness is
-    * O(n·m) and correctly NOT attempted — the probe budget is the
-    * declared sampling knob (Brandes-Pich source sampling).
-    *
-    * 100 TB shape: state is seeds × their 3-hop balls (bounded by the
-    * probe budget); every superstep and both backward passes are
-    * node-keyed equi-joins against the edge list; the final fold is one
-    * node-keyed aggregate + top-20. */
-  def graphBetweenness(
-      cp: CheckpointStrategy = CheckpointStrategy.Local): Q = (s, d) => {
-    val np = s.sessionState.conf.numShufflePartitions
-    // r14 edge build (guide §2.4, remove shuffles outright): the r13 shape
-    // was distinct → SMJ self-join on l_orderkey → distinct — three
-    // corpus-scale exchanges plus a join. Baskets are bounded (≤7
-    // lineitems/order), so ONE collect_set aggregate + a map-side
-    // ordered-pair explode emits the identical edge SET with two
-    // exchanges and no join. materializeHashed stores the edge list
-    // hash-partitioned on src and DECLARES that layout through the
-    // checkpoint (a plain localCheckpoint under AQE reports
-    // UnknownPartitioning — see Bridge.checkpointHashPartitioned), so
-    // downstream node-keyed joins never re-shuffle the edge side; only
-    // the much smaller frontier side moves (§2.4 "two operations keyed
-    // the same way share one exchange").
-    val baskets = T.lineitem(s, d).filter(col("l_orderkey") % 3 === 0)
-      .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("ps"))
-    // r14 session 2: repartition on src BEFORE the dedup aggregate —
-    // hashpartitioning(src) satisfies dropDuplicates' (src, dst)
-    // clustering, and the checkpoint's own repartition(np, src) is then
-    // elided by EnsureRequirements (child partitioning already matches):
-    // 3 exchanges → 2 on the edge build, measured 1.20 → 0.97 s warm.
-    val edges = cp.materializeHashed(
-      baskets.select(explode(col("ps")).as("src"), col("ps"))
-        .select(col("src"), explode(col("ps")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .repartition(np, col("src"))
-        .dropDuplicates("src", "dst"),
-      np, Seq("src"))
-    val l0 = T.part(s, d).filter(col("p_partkey") % 500 === 0)
-      .select(col("p_partkey").as("seed"), col("p_partkey").as("node"),
-        lit(1L).as("sig"))
-    // one superstep: σ of the next level = sum of predecessor σ over
-    // edges; `prev` (all shallower levels) anti-joins away every node
-    // already reached, which is exactly the min-hop rule
-    def expand(cur: DataFrame, prev: DataFrame): DataFrame =
-      cur.select(col("seed"), col("node").as("u"), col("sig"))
-        .join(edges, col("u") === col("src"))
-        .groupBy(col("seed"), col("dst"))
-        .agg(sum(col("sig")).as("sig"))
-        .withColumnRenamed("dst", "node")
-        .join(prev.select(col("seed"), col("node")),
-          Seq("seed", "node"), "left_anti")
-    val l1 = cp.materialize(expand(l0, l0))
-    val l2 = cp.materialize(expand(l1, l0.unionByName(l1)))
-    // r14: the level-3 superstep and δ₂'s numerator both consume the SAME
-    // l2 ⋈ edges fan-out (the largest join in the query: |l2| × out-degree
-    // rows) — r13 executed it twice, once inside expand(l2, ·) and once
-    // inside dep(l2, l3). j3 materializes that fan-out ONCE, pre-
-    // partitioned on (seed, dst), so σ₃'s aggregate, the min-hop
-    // anti-join AND δ₂'s (seed, dst) equi-join all run exchange-free on
-    // it (§2.4: operations keyed the same way share one exchange).
-    val j3 = cp.materializeHashed(
-      l2.select(col("seed"), col("node").as("u"), col("sig"))
-        .join(edges, col("u") === col("src"))
-        .select(col("seed"), col("u"), col("sig"), col("dst")),
-      np, Seq("seed", "dst"))
-    // σ₃ with the min-hop rule; consumed once (by δ₂), so no barrier
-    val l3 = j3.groupBy(col("seed"), col("dst"))
-      .agg(sum(col("sig")).as("sig"))
-      .withColumnRenamed("dst", "node")
-      .join(l0.unionByName(l1).unionByName(l2)
-          .select(col("seed"), col("node")),
-        Seq("seed", "node"), "left_anti")
-    // backward pass, hop 3 → 2: δ₃ ≡ 0, so each (v∈l2, w∈l3) edge
-    // contributes σ(v)/σ(w). ONLY the integer ratio σv/σw takes an IEEE
-    // division (rounded to 8); the ·(1+δw) multiply and the final
-    // 8-decimal term rounding run in EXACT DECIMAL — δw has 8 decimals,
-    // so (1+δw)·(a dyadic ratio like 1/2) routinely lands on a decimal
-    // 9th-digit HALF, and a double-space round there resolves
-    // differently per engine (a realized 1-ulp oracle mismatch, not a
-    // theoretical one). Sums stay exact DECIMAL (order-free).
-    def dep(vs: DataFrame, ws: DataFrame): DataFrame =
-      vs.select(col("seed"), col("node").as("v"), col("sig").as("sv"))
-        .join(edges, col("v") === col("src"))
-        .join(ws.select(col("seed").as("wseed"), col("node").as("wn"),
-          col("sig").as("sw"), col("dw")),
-          col("dst") === col("wn") && col("seed") === col("wseed"))
-        .select(col("seed"), col("v").as("node"),
-          round(round(col("sv").cast("double") / col("sw").cast("double"), 8)
-              .cast("decimal(12,8)")
-            * (lit(1).cast("decimal(21,8)") + col("dw")), 8)
-            .cast("decimal(20,8)").as("term"))
-        .groupBy(col("seed"), col("node"))
-        .agg(sum(col("term")).as("dd"))
-    val zeroD = lit(0).cast("decimal(21,8)")
-    // r14: materialize δ₂ — it feeds BOTH d1's (1+δw) join and the final
-    // union, and without a barrier the whole dep(l2, l3) subtree (the
-    // largest join in the query: |l2|×out-degree against the 3-hop ball)
-    // was planned and EXECUTED twice (plans/r14/graph_betweenness_before
-    // .txt operators 15-34 vs 43-62 — identical duplicated subtrees).
-    // δ₂ itself is frontier-sized (≤|l2| rows), so the barrier is cheap.
-    // δ₂ reads the materialized j3 fan-out directly (same term arithmetic
-    // as dep(), dw ≡ 0): the (seed, dst) join keys match j3's stored
-    // partitioning, so neither join side exchanges.
-    val d2 = cp.materialize(
-      j3.select(col("seed"), col("u").as("v"), col("sig").as("sv"),
-          col("dst"))
-        .join(l3.withColumn("dw", zeroD)
-            .select(col("seed"), col("node").as("dst"), col("sig").as("sw"),
-              col("dw")),
-          Seq("seed", "dst"))
-        .select(col("seed"), col("v").as("node"),
-          round(round(col("sv").cast("double") / col("sw").cast("double"), 8)
-              .cast("decimal(12,8)")
-            * (lit(1).cast("decimal(21,8)") + col("dw")), 8)
-            .cast("decimal(20,8)").as("term"))
-        .groupBy(col("seed"), col("node"))
-        .agg(sum(col("term")).as("dd")))
-    val d1 = dep(l1, l2.join(d2, Seq("seed", "node"), "left")
-      .withColumn("dw", coalesce(col("dd").cast("decimal(21,8)"), zeroD))
-      .select(col("seed"), col("node"), col("sig"), col("dw")))
-    // round 8-decimal dyadic terms in DECIMAL space BEFORE the double
-    // cast: σ ratios are dyadic rationals, so the exact sum routinely
-    // ends in ...50 — a half-way case at 6 decimals that a
-    // round-the-binary-double would resolve differently per engine
-    d1.unionByName(d2)
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("n_contrib"),
-        round(sum(col("dd")), 6).cast("double").as("bc"))
-      .orderBy(col("bc").desc, col("node"))
-      .limit(20)
-  }
-
   // ------------------------------------------------------- sample_coreset
 
   /** SENSITIVITY-SAMPLED CORESET — the lightweight k-means coreset
@@ -674,7 +525,6 @@ object Horizon {
     "agg_holt_winters" -> aggHoltWinters,
     "events_ewma_chart" -> eventsEwmaChart,
     "events_ltv_forecast" -> eventsLtvForecast,
-    "graph_betweenness" -> graphBetweenness(),
     "sample_coreset" -> sampleCoreset,
     "agg_qq_drift" -> aggQqDrift,
     "sample_kcenter" -> sampleKcenter(),
@@ -767,75 +617,6 @@ object Horizon {
        |  CAST(round(MAX(CASE WHEN cohort = 'cur' THEN qv END)
        |    - MAX(CASE WHEN cohort = 'ref' THEN qv END), 6) AS DOUBLE) AS gap
        |FROM q GROUP BY dec ORDER BY dec""".stripMargin
-
-  /** Shared ANSI text for graph_betweenness — runs unchanged in DuckDB
-    * (oracle) and Spark (statement front door). */
-  private[graft] val betweennessSql: String =
-    """WITH li AS (
-      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-      |  WHERE l_orderkey % 3 = 0),
-      |edges AS (
-      |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-      |  WHERE a.l_partkey <> b.l_partkey),
-      |l0 AS (
-      |  SELECT p_partkey AS seed, p_partkey AS node, CAST(1 AS BIGINT) AS sig
-      |  FROM part WHERE p_partkey % 500 = 0),
-      |e1 AS (
-      |  SELECT l0.seed, e.dst AS node, CAST(SUM(l0.sig) AS BIGINT) AS sig
-      |  FROM l0 JOIN edges e ON l0.node = e.src GROUP BY l0.seed, e.dst),
-      |l1 AS (
-      |  SELECT * FROM e1 WHERE NOT EXISTS (
-      |    SELECT 1 FROM l0 WHERE l0.seed = e1.seed AND l0.node = e1.node)),
-      |e2 AS (
-      |  SELECT l1.seed, e.dst AS node, CAST(SUM(l1.sig) AS BIGINT) AS sig
-      |  FROM l1 JOIN edges e ON l1.node = e.src GROUP BY l1.seed, e.dst),
-      |l2 AS (
-      |  SELECT * FROM e2 WHERE NOT EXISTS (
-      |      SELECT 1 FROM l0 WHERE l0.seed = e2.seed AND l0.node = e2.node)
-      |    AND NOT EXISTS (
-      |      SELECT 1 FROM l1 WHERE l1.seed = e2.seed AND l1.node = e2.node)),
-      |e3 AS (
-      |  SELECT l2.seed, e.dst AS node, CAST(SUM(l2.sig) AS BIGINT) AS sig
-      |  FROM l2 JOIN edges e ON l2.node = e.src GROUP BY l2.seed, e.dst),
-      |l3 AS (
-      |  SELECT * FROM e3 WHERE NOT EXISTS (
-      |      SELECT 1 FROM l0 WHERE l0.seed = e3.seed AND l0.node = e3.node)
-      |    AND NOT EXISTS (
-      |      SELECT 1 FROM l1 WHERE l1.seed = e3.seed AND l1.node = e3.node)
-      |    AND NOT EXISTS (
-      |      SELECT 1 FROM l2 WHERE l2.seed = e3.seed AND l2.node = e3.node)),
-      |d2 AS (
-      |  SELECT v.seed, v.node,
-      |    SUM(CAST(round(
-      |      CAST(round(CAST(v.sig AS DOUBLE) / CAST(w.sig AS DOUBLE), 8)
-      |        AS DECIMAL(12,8))
-      |      * (CAST(1 AS DECIMAL(21,8)) + CAST(0 AS DECIMAL(21,8))), 8)
-      |      AS DECIMAL(20,8))) AS dd
-      |  FROM l2 v JOIN edges e ON v.node = e.src
-      |  JOIN l3 w ON w.seed = v.seed AND w.node = e.dst
-      |  GROUP BY v.seed, v.node),
-      |d1 AS (
-      |  SELECT v.seed, v.node,
-      |    SUM(CAST(round(
-      |      CAST(round(CAST(v.sig AS DOUBLE) / CAST(w.sig AS DOUBLE), 8)
-      |        AS DECIMAL(12,8))
-      |      * (CAST(1 AS DECIMAL(21,8))
-      |         + COALESCE(CAST(d2.dd AS DECIMAL(21,8)),
-      |             CAST(0 AS DECIMAL(21,8)))), 8)
-      |      AS DECIMAL(20,8))) AS dd
-      |  FROM l1 v JOIN edges e ON v.node = e.src
-      |  JOIN l2 w ON w.seed = v.seed AND w.node = e.dst
-      |  LEFT JOIN d2 ON d2.seed = w.seed AND d2.node = w.node
-      |  GROUP BY v.seed, v.node),
-      |un AS (
-      |  SELECT seed, node, dd FROM d1
-      |  UNION ALL
-      |  SELECT seed, node, dd FROM d2)
-      |SELECT node, CAST(COUNT(*) AS BIGINT) AS n_contrib,
-      |  CAST(round(SUM(dd), 6) AS DOUBLE) AS bc
-      |FROM un GROUP BY node
-      |ORDER BY bc DESC, node LIMIT 20""".stripMargin
 
   /** agg_holt_winters oracle: the (l, b, s₁..s₇) state as a RECURSIVE
     * CTE with one column per seasonal phase — each step updates exactly
@@ -1049,8 +830,6 @@ object Horizon {
          |  CAST(round(b, 6) AS DOUBLE) AS trend,
          |  CAST(round(l + CAST(7 AS DOUBLE) * b, 6) AS DOUBLE) AS fc_7
          |FROM fin ORDER BY cohort_day""".stripMargin,
-
-    "graph_betweenness" -> betweennessSql,
 
     "agg_qq_drift" -> qqDriftSql,
 

@@ -12,8 +12,8 @@ import graft.core.{Tables => T}
   * surface (SURVEY §2.2) past the reference's two-statement scope
   * (`/root/reference/db.cpp:428-441`): corpus-balancing samplers, skew
   * observability, blocklist filtering, contrastive-pair mining, exact
-  * correlation, activity CCDF, and the degree/k-core graph profile that
-  * complements `graph_jaccard`/`graph_triangles`. Every op follows the
+  * correlation and activity CCDF (the graph keys of this batch live in
+  * [[Graph]]). Every op follows the
   * engine's determinism discipline (portable hashes, exact decimal or
   * integer moments, round-then-cast doubles, total ORDER BY) so the
   * DuckDB oracle hash-matches bit-for-bit.
@@ -193,79 +193,6 @@ object Insights {
           .as("share"))
       .orderBy(col("min_events"))
   }
-
-  /** Co-purchase edge list shared by [[graphDegreeDist]] and
-    * [[graphKcore]] — the `graph_jaccard` graph (parts co-occurring in a
-    * 1-in-3 order slice), kept identical so the three keys profile ONE
-    * graph: distinct (order, part) pairs self-join on the order basket.
-    * The basket join is the only edge-building shuffle; `distinct`
-    * bounds multi-line baskets. */
-  private def coEdges(s: SparkSession, d: String): DataFrame = {
-    // r14 edge build (guide §2.4): one collect_set aggregate + a map-side
-    // ordered-pair explode replaces distinct → SMJ self-join → distinct
-    // (identical edge set, two exchanges instead of three, no join —
-    // the graph_betweenness device; baskets bounded ≤7 lineitems/order).
-    val baskets = T.lineitem(s, d).filter(col("l_orderkey") % 3 === 0)
-      .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("ps"))
-    baskets.select(explode(col("ps")).as("pa"), col("ps"))
-      .select(col("pa"), explode(col("ps")).as("pb"))
-      .filter(col("pa") < col("pb"))
-      .dropDuplicates("pa", "pb")
-  }
-
-  /** Undirected degree of every node in [[coEdges]]. */
-  private def degrees(edges: DataFrame): DataFrame =
-    edges.select(col("pa").as("p")).unionAll(edges.select(col("pb").as("p")))
-      .groupBy(col("p")).agg(count(lit(1)).as("deg"))
-
-  /** DEGREE DISTRIBUTION of the co-purchase graph — the first thing a
-    * graph pipeline reports (and the input to every skew decision the
-    * iterative ops make: a heavy-tailed histogram is what mandates
-    * `graph_triangles`' degree orientation). Buckets are power-of-two
-    * CASE bands — an explicit ladder, NOT floor(log2(deg)) computed in
-    * floating point, where `ln(8)/ln(2) = 2.999…` floors to the wrong
-    * bucket and libm rounding may differ between engines. Output is the
-    * bounded histogram; the only data-sized shuffles are the edge build
-    * and one degree aggregate. */
-  val graphDegreeDist: Q = (s, d) => {
-    val deg = degrees(coEdges(s, d))
-    val bucket = when(col("deg") === 1, 1L).when(col("deg") <= 3, 2L)
-      .when(col("deg") <= 7, 4L).when(col("deg") <= 15, 8L)
-      .when(col("deg") <= 31, 16L).when(col("deg") <= 63, 32L)
-      .otherwise(64L)
-    deg.select(bucket.as("bucket_lo"), col("deg"))
-      .groupBy(col("bucket_lo"))
-      .agg(count(lit(1)).as("n_nodes"), min(col("deg")).as("min_deg"),
-        max(col("deg")).as("max_deg"))
-      .orderBy(col("bucket_lo"))
-  }
-
-  /** K-CORE peel (k = 32, exactly TWO declared rounds) — the density
-    * filter that isolates the graph's stable community backbone (nodes
-    * that keep ≥ k neighbors even after their weak neighbors vanish).
-    * Each round drops sub-k nodes, restricts edges to survivors (two
-    * broadcast-able semi-joins), and recomputes degrees. The full k-core
-    * iterates to fixpoint — an open loop like
-    * [[graft.api.TextDedup.connectedComponents]]'s — but the DECLARED
-    * key pins two unrolled rounds so the oracle is closed-form SQL; the
-    * round count is part of the query contract, exactly like
-    * `graph_pagerank`'s fixed iteration count. The edge list is the
-    * multiply-consumed value (degrees ×2, restrictions ×2), so it is the
-    * one [[CheckpointStrategy]] barrier; per-round cost is two
-    * aggregates + two semi-joins — linear in edges, and the edge set
-    * only shrinks. */
-  def graphKcore(cp: CheckpointStrategy = CheckpointStrategy.Local): Q =
-    (s, d) => {
-      val k = 32
-      val e0 = cp.materialize(coEdges(s, d))
-      val keep0 = degrees(e0).filter(col("deg") >= k).select(col("p"))
-      val e1 = cp.materialize(e0
-        .join(keep0.select(col("p").as("pa")), Seq("pa"), "left_semi")
-        .join(keep0.select(col("p").as("pb")), Seq("pb"), "left_semi"))
-      degrees(e1).filter(col("deg") >= k)
-        .select(col("p").as("node"), col("deg"))
-        .orderBy(col("node"))
-    }
 
   /** RADIUS (range) similarity search — the threshold companion to
     * `sim_topk`'s rank cut: every corpus vector within cosine ≥ 0.2 of
@@ -485,71 +412,6 @@ object Insights {
       .limit(20)
   }
 
-  /** GRAPH MODULARITY of a given partition — the quality score community
-    * pipelines quote for their clustering (`graph_label_prop` finds
-    * communities; modularity says whether they beat chance): on the
-    * basket co-purchase graph, with communities given by the part's
-    * BRAND (a dimension attribute — the "does purchasing cluster along
-    * brand lines?" question), Q = Σ_c [e_c/m − (d_c/2m)²]. Everything
-    * up to the two divisions is integer-exact (edge counts, degree
-    * sums); each community's contribution rounds to 8 and sums as exact
-    * decimals, so Q is engine-invariant.
-    *
-    * 100 TB shape: the basket self-join is the only corpus-scale stage
-    * (same bounded-basket discipline as `graph_jaccard`); brand lookup
-    * BROADCASTS the part dimension, and every aggregate after the edge
-    * list is community-grid-sized. Scoring a different partition
-    * (label_prop output, a model's cluster ids) swaps one broadcast. */
-  def graphModularity(cp: CheckpointStrategy = CheckpointStrategy.Local): Q =
-    (s, d) => {
-    // r14 edge build (guide §2.4): collect_set + ordered-pair explode —
-    // see coEdges / graph_betweenness; identical edge set, no self-join.
-    val baskets = T.lineitem(s, d).filter(col("l_orderkey") % 5 === 0)
-      .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("ps"))
-    val edges = baskets.select(explode(col("ps")).as("pa"), col("ps"))
-      .select(col("pa"), explode(col("ps")).as("pb"))
-      .filter(col("pa") < col("pb"))
-      .dropDuplicates("pa", "pb")
-    val brand = T.part(s, d).select(col("p_partkey"), col("p_brand"))
-    // ONE materialization of the brand-annotated edge list — four
-    // consumers (m, degree sum, in-community count, node roster) read
-    // it; without the barrier each would re-run the distinct basket
-    // self-join (the graph_jaccard lesson: ReuseExchange does NOT
-    // collapse the subtree across separate actions/joins)
-    val eb = cp.materialize(edges
-      .join(broadcast(brand.select(col("p_partkey").as("pa"),
-        col("p_brand").as("ca"))), "pa")
-      .join(broadcast(brand.select(col("p_partkey").as("pb"),
-        col("p_brand").as("cb"))), "pb"))
-    val m = eb.agg(count(lit(1)).as("m"))
-    val dTot = eb.select(col("ca").as("c"))
-      .unionAll(eb.select(col("cb").as("c")))
-      .groupBy(col("c")).agg(count(lit(1)).as("d_tot"))
-    val eIn = eb.filter(col("ca") === col("cb"))
-      .groupBy(col("ca").as("c")).agg(count(lit(1)).as("e_in"))
-    val nNodes = eb.select(col("pa").as("p"), col("ca").as("c"))
-      .unionAll(eb.select(col("pb").as("p"), col("cb").as("c"))).distinct()
-      .groupBy(col("c")).agg(count(lit(1)).as("n_nodes"))
-    val per = dTot
-      .join(eIn, Seq("c"), "left")
-      .join(nNodes, "c")
-      .crossJoin(broadcast(m))
-      .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
-      .withColumn("contrib",
-        round(col("e_in").cast("double") / col("m").cast("double")
-          - (col("d_tot").cast("double")
-              / (lit(2.0) * col("m").cast("double")))
-            * (col("d_tot").cast("double")
-              / (lit(2.0) * col("m").cast("double"))), 8))
-    val q = per.agg(
-      sum(col("contrib").cast("decimal(20,8)")).cast("double").as("q"))
-    per.crossJoin(broadcast(q))
-      .select(col("c").as("community"), col("n_nodes"), col("e_in"),
-        col("d_tot"), round(col("contrib"), 6).as("contrib"),
-        round(col("q"), 6).as("modularity"))
-      .orderBy(col("community"))
-  }
-
   /** GROWTH ACCOUNTING — the weekly user-lifecycle ledger (new /
     * retained / resurrected / churned) every consumer dashboard leads
     * with, and the decomposition that explains a flat active-user curve:
@@ -634,56 +496,6 @@ object Insights {
     frontier.join(atPoint, Seq("p_brand", "price", "sz"))
       .select(col("p_brand"), col("price"), col("sz"), col("n_parts"))
       .orderBy(col("p_brand"), col("price"))
-  }
-
-  /** DEGREE ASSORTATIVITY of the basket co-purchase graph — do
-    * well-connected parts co-purchase with other hubs (r > 0, social
-    * shape) or with leaves (r < 0, hub-and-spoke)? The number that says
-    * whether `join_skew_salted`-style hot-key handling will hit one
-    * mega-hub or a clique of them. Pearson correlation of endpoint
-    * degrees over both orientations of every undirected edge: all five
-    * moments (2m, Σd, Σd², Σd·d') are integer-exact (degree products in
-    * DECIMAL(38,0), the `embed_drift` rule); by symmetry the x and y
-    * margins coincide, so r = (n·Σxy − (Σx)²)/(n·Σx² − (Σx)²) with ONE
-    * fixed double division at the end.
-    *
-    * 100 TB shape: the bounded-basket self-join builds edges once and
-    * MATERIALIZES them (the `graph_jaccard` lesson — three consumers:
-    * degrees, the symmetric orientation union, the node count); degrees
-    * join back by node key (node-sized shuffle); the moment fold is one
-    * map-side-partial aggregate to a single row. */
-  def graphAssortativity(
-      cp: CheckpointStrategy = CheckpointStrategy.Local): Q = (s, d) => {
-    // r14 edge build (guide §2.4): collect_set + ordered-pair explode —
-    // see coEdges / graph_betweenness; identical edge set, no self-join.
-    val baskets = T.lineitem(s, d).filter(col("l_orderkey") % 5 === 0)
-      .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("ps"))
-    val edges = cp.materialize(
-      baskets.select(explode(col("ps")).as("pa"), col("ps"))
-        .select(col("pa"), explode(col("ps")).as("pb"))
-        .filter(col("pa") < col("pb"))
-        .dropDuplicates("pa", "pb"))
-    val deg = edges.select(col("pa").as("p"))
-      .unionAll(edges.select(col("pb").as("p")))
-      .groupBy(col("p")).agg(count(lit(1)).as("dg"))
-    val sym = edges.select(col("pa").as("x"), col("pb").as("y"))
-      .unionAll(edges.select(col("pb").as("x"), col("pa").as("y")))
-    val ed = sym
-      .join(deg.select(col("p").as("x"), col("dg").as("dx")), "x")
-      .join(deg.select(col("p").as("y"), col("dg").as("dy")), "y")
-    val mo = ed.agg(count(lit(1)).as("n"), sum(col("dx")).as("sx"),
-      sum(col("dx").cast("decimal(38,0)") * col("dx")).as("sxx"),
-      sum(col("dx").cast("decimal(38,0)") * col("dy")).as("sxy"))
-    val nodes = deg.agg(count(lit(1)).as("n_nodes"))
-    mo.crossJoin(broadcast(nodes))
-      .select(col("n_nodes"), (col("n") / 2).cast("long").as("n_edges"),
-        round(col("sx").cast("double") / col("n").cast("double"), 6)
-          .as("mean_endpoint_deg"),
-        round((col("n").cast("decimal(38,0)") * col("sxy")
-            - col("sx").cast("decimal(38,0)") * col("sx")).cast("double")
-          / (col("n").cast("decimal(38,0)") * col("sxx")
-            - col("sx").cast("decimal(38,0)") * col("sx")).cast("double"), 6)
-          .as("assortativity"))
   }
 
   /** INTERVAL-UNION COVERAGE — per user, the merged covered time of
@@ -932,18 +744,14 @@ object Insights {
     "sample_balanced" -> sampleBalanced,
     "agg_skyline" -> aggSkyline,
     "agg_lorenz_bands" -> aggLorenzBands,
-    "graph_assortativity" -> graphAssortativity(),
     "events_coverage" -> eventsCoverage,
     "events_stickiness" -> eventsStickiness,
-    "graph_modularity" -> graphModularity(),
     "events_lifecycle" -> eventsLifecycle(),
     "meta_skew_report" -> metaSkewReport,
     "text_blocklist" -> textBlocklist,
     "text_contrastive_pairs" -> textContrastivePairs,
     "agg_corr_matrix" -> aggCorrMatrix,
     "events_ccdf" -> eventsCcdf,
-    "graph_degree_dist" -> graphDegreeDist,
-    "graph_kcore" -> graphKcore(),
     "sim_radius" -> simRadius,
     "agg_autocorr" -> aggAutocorr,
     "events_gaps" -> eventsGaps,
@@ -957,52 +765,6 @@ object Insights {
     * LlmPipeline oracle convention). */
   private def dotSql(a: String, b: String): String =
     s"(SELECT sum(CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)) FROM range(1, 65) r(i))"
-
-  /** BOUNDED LABEL PROPAGATION — community seeding on the basket
-    * co-occurrence graph in a FIXED number of supersteps (3 rounds of
-    * synchronous min-label: each node takes the minimum of its own and
-    * its neighbors' labels). The bounded-depth sibling of
-    * `dedup_cluster`'s loop-to-fixpoint connected components: when the
-    * interesting structure has small diameter (near-dup clusters,
-    * co-purchase pockets), a fixed superstep budget makes the op fully
-    * DECLARATIVE — the oracle unrolls the same 3 joins — and the cost
-    * exactly 3 node-keyed shuffles. Declared result: per surviving label,
-    * member count + node range (singleton communities dropped).
-    *
-    * 100 TB shape: each round is one (edges ⋈ labels) hash join + a
-    * node-keyed min — the Pregel superstep reduced to relational form;
-    * rounds materialize via localCheckpoint so round k+1 reads a O(V)
-    * table, not a doubling lineage (the `dedup_cluster` barrier rule). */
-  def graphLabelProp(cp: CheckpointStrategy = CheckpointStrategy.Local): Q =
-    (s, d) => {
-    // r14 edge build (guide §2.4): collect_set + ordered-pair explode —
-    // see coEdges / graph_betweenness; identical edge set, no self-join.
-    val baskets = T.lineitem(s, d).filter(col("l_orderkey") % 5 === 0)
-      .groupBy(col("l_orderkey")).agg(collect_set(col("l_partkey")).as("ps"))
-    val edges = cp.materialize(
-      baskets.select(explode(col("ps")).as("pa"), col("ps"))
-        .select(col("pa"), explode(col("ps")).as("pb"))
-        .filter(col("pa") < col("pb"))
-        .dropDuplicates("pa", "pb"))
-    val msgs = edges.select(col("pa").as("node"), col("pb").as("nbr"))
-      .unionAll(edges.select(col("pb").as("node"), col("pa").as("nbr")))
-    var lab = T.lineitem(s, d).filter(col("l_orderkey") % 5 === 0)
-      .select(col("l_partkey").as("node")).distinct()
-      .withColumn("lab", col("node"))
-    for (_ <- 1 to 3) {
-      val incoming = msgs
-        .join(lab.select(col("node").as("nbr"), col("lab")), "nbr")
-        .select(col("node"), col("lab"))
-      lab = cp.materialize(lab.select(col("node"), col("lab"))
-        .unionAll(incoming)
-        .groupBy(col("node")).agg(min(col("lab")).as("lab")))
-    }
-    lab.groupBy(col("lab"))
-      .agg(count(lit(1)).as("n_members"), min(col("node")).as("min_node"),
-        max(col("node")).as("max_node"))
-      .filter(col("n_members") >= 2)
-      .orderBy(col("lab"))
-  }
 
   val oracles: Map[String, String] = Map(
     // hourly arrival grid + exact decimal moments; ANSI dual-dialect
@@ -1151,39 +913,6 @@ object Insights {
         |  AND fr.price = ap.price AND fr.sz = ap.sz
         |ORDER BY fr.p_brand, fr.price""".stripMargin,
 
-    "graph_assortativity" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |            WHERE l_orderkey % 5 = 0),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey),
-        |deg AS (
-        |  SELECT p, COUNT(*) AS dg FROM (
-        |    SELECT pa AS p FROM edges UNION ALL SELECT pb AS p FROM edges)
-        |  GROUP BY p),
-        |sym AS (
-        |  SELECT pa AS x, pb AS y FROM edges
-        |  UNION ALL SELECT pb AS x, pa AS y FROM edges),
-        |ed AS (
-        |  SELECT dx.dg AS dx, dy.dg AS dy
-        |  FROM sym JOIN deg dx ON sym.x = dx.p JOIN deg dy ON sym.y = dy.p),
-        |mo AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(dx) AS sx,
-        |    SUM(CAST(dx AS DECIMAL(38,0)) * dx) AS sxx,
-        |    SUM(CAST(dx AS DECIMAL(38,0)) * dy) AS sxy
-        |  FROM ed),
-        |nodes AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM deg)
-        |SELECT n_nodes, CAST(n / 2 AS BIGINT) AS n_edges,
-        |  CAST(round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS DOUBLE)
-        |    AS mean_endpoint_deg,
-        |  CAST(round(CAST(CAST(n AS DECIMAL(38,0)) * sxy
-        |      - CAST(sx AS DECIMAL(38,0)) * sx AS DOUBLE)
-        |    / CAST(CAST(n AS DECIMAL(38,0)) * sxx
-        |      - CAST(sx AS DECIMAL(38,0)) * sx AS DOUBLE), 6) AS DOUBLE)
-        |    AS assortativity
-        |FROM mo CROSS JOIN nodes""".stripMargin,
-
     "events_coverage" ->
       """WITH e AS (
         |  SELECT user_id, event_id,
@@ -1232,48 +961,6 @@ object Insights {
         |FROM grid JOIN days ON grid.day <= d AND grid.day >= d - 27
         |GROUP BY d ORDER BY day""".stripMargin,
 
-    "graph_modularity" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |            WHERE l_orderkey % 5 = 0),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey),
-        |eb AS (
-        |  SELECT pa, pb, ba.p_brand AS ca, bb.p_brand AS cb
-        |  FROM edges
-        |  JOIN part ba ON edges.pa = ba.p_partkey
-        |  JOIN part bb ON edges.pb = bb.p_partkey),
-        |m AS (SELECT COUNT(*) AS m FROM eb),
-        |dt AS (
-        |  SELECT c, COUNT(*) AS d_tot FROM (
-        |    SELECT ca AS c FROM eb UNION ALL SELECT cb AS c FROM eb)
-        |  GROUP BY c),
-        |ei AS (
-        |  SELECT ca AS c, COUNT(*) AS e_in FROM eb WHERE ca = cb
-        |  GROUP BY ca),
-        |nn AS (
-        |  SELECT p_brand AS c, COUNT(*) AS n_nodes FROM (
-        |    SELECT DISTINCT p FROM (
-        |      SELECT pa AS p FROM edges UNION ALL SELECT pb AS p FROM edges))
-        |  JOIN part ON p = p_partkey GROUP BY p_brand),
-        |per AS (
-        |  SELECT dt.c, n_nodes, COALESCE(e_in, 0) AS e_in, d_tot,
-        |    round(CAST(COALESCE(e_in, 0) AS DOUBLE) / CAST(m.m AS DOUBLE)
-        |      - (CAST(d_tot AS DOUBLE) / (2.0 * CAST(m.m AS DOUBLE)))
-        |        * (CAST(d_tot AS DOUBLE) / (2.0 * CAST(m.m AS DOUBLE))), 8)
-        |      AS contrib
-        |  FROM dt LEFT JOIN ei ON dt.c = ei.c
-        |  JOIN nn ON dt.c = nn.c CROSS JOIN m),
-        |q AS (
-        |  SELECT CAST(SUM(CAST(contrib AS DECIMAL(20,8))) AS DOUBLE) AS q
-        |  FROM per)
-        |SELECT c AS community, CAST(n_nodes AS BIGINT) AS n_nodes,
-        |  CAST(e_in AS BIGINT) AS e_in, CAST(d_tot AS BIGINT) AS d_tot,
-        |  CAST(round(contrib, 6) AS DOUBLE) AS contrib,
-        |  CAST(round(q, 6) AS DOUBLE) AS modularity
-        |FROM per CROSS JOIN q ORDER BY community""".stripMargin,
-
     "events_lifecycle" ->
       """WITH uw AS (
         |  SELECT DISTINCT user_id,
@@ -1314,38 +1001,6 @@ object Insights {
         |    AS DOUBLE) AS quick_ratio
         |FROM active LEFT JOIN churn ON active.wk = churn.wk
         |ORDER BY active.wk""".stripMargin,
-
-    // 3 unrolled min-label supersteps — integer-exact in any engine
-    "graph_label_prop" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |            WHERE l_orderkey % 5 = 0),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |  WHERE a.l_partkey < b.l_partkey),
-        |msgs AS (
-        |  SELECT pa AS node, pb AS nbr FROM edges
-        |  UNION ALL
-        |  SELECT pb AS node, pa AS nbr FROM edges),
-        |l0 AS (SELECT DISTINCT l_partkey AS node, l_partkey AS lab FROM li),
-        |l1 AS (SELECT node, MIN(lab) AS lab FROM (
-        |    SELECT node, lab FROM l0
-        |    UNION ALL
-        |    SELECT m.node, l.lab FROM msgs m JOIN l0 l ON m.nbr = l.node)
-        |  GROUP BY node),
-        |l2 AS (SELECT node, MIN(lab) AS lab FROM (
-        |    SELECT node, lab FROM l1
-        |    UNION ALL
-        |    SELECT m.node, l.lab FROM msgs m JOIN l1 l ON m.nbr = l.node)
-        |  GROUP BY node),
-        |l3 AS (SELECT node, MIN(lab) AS lab FROM (
-        |    SELECT node, lab FROM l2
-        |    UNION ALL
-        |    SELECT m.node, l.lab FROM msgs m JOIN l2 l ON m.nbr = l.node)
-        |  GROUP BY node)
-        |SELECT lab, COUNT(*) AS n_members, MIN(node) AS min_node,
-        |  MAX(node) AS max_node
-        |FROM l3 GROUP BY lab HAVING COUNT(*) >= 2 ORDER BY lab""".stripMargin,
 
     // portable md5-48 order, rank cap per class
     "sample_balanced" ->
@@ -1427,39 +1082,6 @@ object Insights {
         |  CAST(round(CAST(SUM(c) OVER (ORDER BY min_events DESC) AS DOUBLE)
         |    / CAST(tot.nu AS DOUBLE), 6) AS DOUBLE) AS share
         |FROM g CROSS JOIN tot ORDER BY min_events""".stripMargin,
-
-    // explicit power-of-two CASE ladder (no float log2)
-    "graph_degree_dist" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |            WHERE l_orderkey % 3 = 0),
-        |e AS (SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey),
-        |deg AS (SELECT p, COUNT(*) AS deg FROM (
-        |    SELECT pa AS p FROM e UNION ALL SELECT pb FROM e) u GROUP BY p)
-        |SELECT CAST(CASE WHEN deg = 1 THEN 1 WHEN deg <= 3 THEN 2
-        |    WHEN deg <= 7 THEN 4 WHEN deg <= 15 THEN 8 WHEN deg <= 31 THEN 16
-        |    WHEN deg <= 63 THEN 32 ELSE 64 END AS BIGINT) AS bucket_lo,
-        |  COUNT(*) AS n_nodes, CAST(MIN(deg) AS BIGINT) AS min_deg,
-        |  CAST(MAX(deg) AS BIGINT) AS max_deg
-        |FROM deg GROUP BY 1 ORDER BY bucket_lo""".stripMargin,
-
-    // two unrolled peel rounds, k = 32 — the declared contract
-    "graph_kcore" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-        |            WHERE l_orderkey % 3 = 0),
-        |e0 AS (SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        |  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey),
-        |d0 AS (SELECT p, COUNT(*) AS deg FROM (
-        |    SELECT pa AS p FROM e0 UNION ALL SELECT pb FROM e0) u GROUP BY p),
-        |k0 AS (SELECT p FROM d0 WHERE deg >= 32),
-        |e1 AS (SELECT pa, pb FROM e0
-        |  WHERE pa IN (SELECT p FROM k0) AND pb IN (SELECT p FROM k0)),
-        |d1 AS (SELECT p, COUNT(*) AS deg FROM (
-        |    SELECT pa AS p FROM e1 UNION ALL SELECT pb FROM e1) u GROUP BY p)
-        |SELECT CAST(p AS BIGINT) AS node, CAST(deg AS BIGINT) AS deg
-        |FROM d1 WHERE deg >= 32 ORDER BY node""".stripMargin,
 
     // exact integer moments on the (type, day) grid; lag pairing by date
     // arithmetic; Pearson closed form in fixed IEEE order

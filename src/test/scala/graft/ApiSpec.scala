@@ -427,7 +427,7 @@ class ApiSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt7")
     spark.sparkContext.setCheckpointDir(dir.toString)
     def pr(cp: graft.api.CheckpointStrategy): Seq[Seq[Any]] =
-      graft.ops.Advanced.graphPagerank(cp)(spark, sf0001)
+      graft.ops.Graph.graphPagerank(cp)(spark, sf0001)
         .collect().toSeq.map(_.toSeq)
     assert(pr(graft.api.CheckpointStrategy.Local) ===
       pr(graft.api.CheckpointStrategy.Reliable))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Insights
+import graft.ops.{Graph, Insights}
 
 /** Property-level assertions for the round-7b insight operators — the
   * invariants the DuckDB oracle's value equality does NOT directly state
@@ -90,7 +90,7 @@ class InsightsSpec extends SparkSpecBase {
   }
 
   test("graph_degree_dist: buckets tile the degree range and cover all nodes") {
-    val rows = Insights.graphDegreeDist(spark, sf0001).collect()
+    val rows = Graph.graphDegreeDist(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.nonEmpty)
     rows.foreach { case (lo, _, mn, mx) =>
@@ -100,7 +100,7 @@ class InsightsSpec extends SparkSpecBase {
   }
 
   test("graph_kcore: survivors keep >= k degree and shrink monotonically") {
-    val out = Insights.graphKcore()(spark, sf0001).collect()
+    val out = Graph.graphKcore()(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     out.foreach { case (_, deg) => assert(deg >= 32L) }
     // survivors of the declared 2-round peel are a subset of round-1 keeps:

@@ -635,7 +635,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("graph_triangles enumerates via equi-joins only (never |V|^2)") {
-    val df = graft.ops.Advanced.graphTriangles(spark, sf0001)
+    val df = graft.ops.Graph.graphTriangles(spark, sf0001)
     val p = planString(df)
     assert(!p.contains("CartesianProduct"),
       "triangle enumeration degenerated to a cartesian product")
@@ -925,14 +925,14 @@ class PlanSpec extends SparkSpecBase {
     // edges and each frontier level checkpoint before reuse: the final
     // plan must read them as existing RDD scans, not re-derive the
     // basket self-join per consumer
-    val o = graft.ops.Horizon.graphBetweenness()(spark, sf0001)
+    val o = graft.ops.Graph.graphBetweenness()(spark, sf0001)
       .queryExecution.optimizedPlan
     import org.apache.spark.sql.execution.LogicalRDD
     val rdds = o.collect { case r: LogicalRDD => r }
     assert(rdds.nonEmpty,
       "no materialization barrier found — every backward join would " +
         "re-derive the full forward expansion")
-    val p = planString(graft.ops.Horizon.graphBetweenness()(spark, sf0001))
+    val p = planString(graft.ops.Graph.graphBetweenness()(spark, sf0001))
     assert(!p.contains("CartesianProduct"),
       "dependency accumulation degenerated to a product")
   }
@@ -993,7 +993,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("graph_louvain_pass: one argmin window over the MATERIALIZED edge list") {
-    val df = graft.ops.Frontier.graphLouvainPass()(spark, sf0001)
+    val df = graft.ops.Graph.graphLouvainPass()(spark, sf0001)
     val p = planString(df)
     // the move step is single-pass: degree joins are equi, the 1-row m
     // broadcasts, and the per-node argmin is one partitioned window
@@ -1011,7 +1011,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("graph_louvain_coarsen: two node-keyed equi-joins over the materialized edges, no product") {
-    val df = graft.ops.Frontier.graphLouvainCoarsen()(spark, sf0001)
+    val df = graft.ops.Graph.graphLouvainCoarsen()(spark, sf0001)
     val p = planString(df)
     assert(!p.contains("CartesianProduct"),
       "community-map join degenerated to a product")
@@ -1060,7 +1060,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("graph_hits: bounded level joins + TakeOrderedAndProject top-10, no product, no global sort") {
-    val df = graft.ops.Frontier2.graphHits(spark, sf0001)
+    val df = graft.ops.Graph.graphHits(spark, sf0001)
     val p = planString(df)
     assert(!p.contains("CartesianProduct"),
       "a HITS level join degenerated to a product")
@@ -1177,7 +1177,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("graph_scc: one transition hash agg, then type-grid-sized doubling joins only") {
-    val p = planString(graft.ops.Frontier2.graphScc(spark, sf0001))
+    val p = planString(graft.ops.Graph.graphScc(spark, sf0001))
     assert(p.contains("HashAggregate"), "transition counts not a hash aggregate")
     assert(!p.contains("CartesianProduct"),
       "a doubling join degenerated to a product")
@@ -1235,7 +1235,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("graph_louvain_multi: materialized edges, bounded joins, no product") {
-    val df = graft.ops.Frontier3.graphLouvainMulti(spark, sf0001)
+    val df = graft.ops.Graph.graphLouvainMulti(spark, sf0001)
     val p = planString(df)
     assert(!p.contains("CartesianProduct"),
       "a community-map join degenerated to a product")

@@ -480,7 +480,7 @@ class PropertySpec extends SparkSpecBase {
     // (c) the MAX score keeps >=1024x headroom below Long.MaxValue at both
     // the test and the driver-gate scale factors.
     Seq(sf0001, "/root/testdata/sf0.01").foreach { d =>
-      val rows = graft.ops.Frontier2.graphHits(spark, d).collect()
+      val rows = graft.ops.Graph.graphHits(spark, d).collect()
       assert(rows.length == 20, s"$d: expected 20 rows, got ${rows.length}")
       rows.foreach { r =>
         assert(!r.isNullAt(3), s"$d: NULL score — the BIGINT cast overflowed")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.{Tables => T}
-import graft.ops.Horizon
+import graft.ops.{Graph, Horizon}
 
 /** Round-10 operator invariants: the Holt recursion (replayed locally in
   * Scala and compared state-for-state), the cohort-LTV projection,
@@ -188,7 +188,7 @@ class Round10OpsSpec extends SparkSpecBase {
       .map { case (n, d) => (n, d.setScale(6, BigDecimal.RoundingMode.HALF_UP)
         .toDouble) }
       .sortBy { case (n, bc) => (-bc, n) }.take(20)
-    val rows = Horizon.graphBetweenness()(spark, sf0001).collect()
+    val rows = Graph.graphBetweenness()(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(rows.length == expected.length)
     rows.zip(expected).foreach { case ((n, nc, bc), (en, ebc)) =>

@@ -50,7 +50,7 @@ class Round12OpsSpec extends SparkSpecBase {
     // hold) the partition's modularity ON THE ORIGINAL graph while the
     // community count shrinks
     Seq(sf0001, "/root/testdata/sf0.01").foreach { d =>
-      val rows = graft.ops.Frontier3.graphLouvainMulti(spark, d)
+      val rows = graft.ops.Graph.graphLouvainMulti(spark, d)
         .collect().sortBy(_.getLong(0))
       assert(rows.length == 3, s"$d: expected 3 level rows")
       val q = rows.map(_.getDouble(3))

@@ -67,7 +67,7 @@ class Round13OpsSpec extends SparkSpecBase {
   }
 
   test("graph_reciprocity: bounded ratio and partition-invariant") {
-    val rows = graft.ops.Frontier4.graphReciprocity(spark, sf0001).collect()
+    val rows = graft.ops.Graph.graphReciprocity(spark, sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(2) <= r.getLong(1), "n_recip exceeds n_edges")
@@ -75,7 +75,7 @@ class Round13OpsSpec extends SparkSpecBase {
     }
     // the handoff edge set is a pure function of the data, never of the
     // partitioning: 1-partition replay equals the 32-partition run
-    val one = graft.ops.Frontier4.graphReciprocity(spark, sf0001)
+    val one = graft.ops.Graph.graphReciprocity(spark, sf0001)
       .coalesce(1).collect()
     assert(rows.toSeq == one.toSeq, "reciprocity is partition-dependent")
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.{Tables => T}
-import graft.ops.Frontier5
+import graft.ops.{Frontier5, Graph}
 
 /** Round-13b operator tests: local Scala replays (an independent
   * implementation of each statistic folded driver-side at sf0.001) plus
@@ -196,9 +196,9 @@ class Round13bOpsSpec extends SparkSpecBase {
 
   test("graph_wcc: every SCC is contained in one WCC and sizes partition " +
       "the node set") {
-    val wcc = Frontier5.graphWcc(spark, sf0001).collect()
+    val wcc = Graph.graphWcc(spark, sf0001).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    val scc = graft.ops.Frontier2.graphScc(spark, sf0001).collect()
+    val scc = Graph.graphScc(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getString(1)))
     // nodes agree between the two closures
     assert(wcc.keySet == scc.map(_._1).toSet, "same node set as graph_scc")
@@ -212,7 +212,7 @@ class Round13bOpsSpec extends SparkSpecBase {
     wcc.groupBy(_._2).foreach { case (wid, members) =>
       assert(members.keys.min == wid, s"wcc_id $wid is not the min member")
     }
-    val sizes = Frontier5.graphWcc(spark, sf0001).collect()
+    val sizes = Graph.graphWcc(spark, sf0001).collect()
       .map(r => r.getString(1) -> r.getLong(2)).toMap
     assert(sizes.values.sum == wcc.size, "sizes partition the node set")
   }

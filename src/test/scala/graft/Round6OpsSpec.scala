@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Advanced, Functions, LlmPipeline, Multimodal, Relational,
+import graft.ops.{Advanced, Functions, Graph, LlmPipeline, Multimodal, Relational,
   Sources, Streaming}
 
 /** Property-level assertions for the round-6 operator additions — the
@@ -67,7 +67,7 @@ class Round6OpsSpec extends SparkSpecBase {
   }
 
   test("graph_jaccard: scores in (0, 1], canonical pair order, support >= 1") {
-    val rows = Advanced.graphJaccard()(spark, sf0001)
+    val rows = Graph.graphJaccard()(spark, sf0001)
       .select(col("pa"), col("pb"), col("t"), col("jaccard")).collect()
     assert(rows.nonEmpty, "co-purchase graph produced no scored edges")
     rows.foreach { r =>

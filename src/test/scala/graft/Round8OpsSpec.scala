@@ -180,7 +180,7 @@ class Round8OpsSpec extends SparkSpecBase {
   }
 
   test("graph_label_prop: labels are component representatives after 3 rounds") {
-    val rows = graft.ops.Insights.graphLabelProp()(spark, sf0001)
+    val rows = graft.ops.Graph.graphLabelProp()(spark, sf0001)
       .select(col("lab"), col("n_members"), col("min_node"), col("max_node"))
       .collect()
     assert(rows.nonEmpty)
@@ -387,7 +387,7 @@ class Round8OpsSpec extends SparkSpecBase {
   }
 
   test("graph_modularity: degree closure and contribution sum") {
-    val rows = graft.ops.Insights.graphModularity()(spark, sf0001)
+    val rows = graft.ops.Graph.graphModularity()(spark, sf0001)
       .select(col("community"), col("n_nodes"), col("e_in"), col("d_tot"),
         col("contrib"), col("modularity"))
       .collect()
@@ -448,7 +448,7 @@ class Round8OpsSpec extends SparkSpecBase {
   }
 
   test("graph_assortativity: r in [-1,1], symmetric-moment consistency") {
-    val r = graft.ops.Insights.graphAssortativity()(spark, sf0001)
+    val r = graft.ops.Graph.graphAssortativity()(spark, sf0001)
       .collect().head
     val (nNodes, nEdges, meanDeg, rho) =
       (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))

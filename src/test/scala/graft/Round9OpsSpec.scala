@@ -149,7 +149,7 @@ class Round9OpsSpec extends SparkSpecBase {
   }
 
   test("graph_bfs: hop partition covers all parts, seeds at hop 0") {
-    val rows = graft.ops.Advanced.graphBfs(spark, sf0001).collect()
+    val rows = graft.ops.Graph.graphBfs(spark, sf0001).collect()
     val parts = T.part(spark, sf0001)
     assert(rows.map(_.getLong(1)).sum == parts.count(),
       "hop histogram must partition the node universe")
@@ -265,7 +265,7 @@ class Round9OpsSpec extends SparkSpecBase {
   }
 
   test("graph_closeness: bounded by 1, hop sums dominate reach counts") {
-    val rows = graft.ops.Advanced.graphCloseness(spark, sf0001).collect()
+    val rows = graft.ops.Graph.graphCloseness(spark, sf0001).collect()
     val seeds = T.part(spark, sf0001)
       .filter(col("p_partkey") % 500 === 0).count()
     assert(rows.length == seeds, "one row per seed")

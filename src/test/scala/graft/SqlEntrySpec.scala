@@ -131,6 +131,16 @@ class SqlEntrySpec extends SparkSpecBase {
       case (k, t) if SparkEntry.oracleSql.get(k).contains(t) => k }
     assert(redundant.isEmpty,
       s"Spark overrides identical to the oracle text: ${redundant.toSeq.sorted}")
+    // registration census: `++` keeps the last of two equal keys silently,
+    // so the per-module maps must be disjoint — their sizes add up to the
+    // size of the folded map
+    def dupes(maps: Seq[Map[String, _]]): Seq[String] =
+      maps.flatMap(_.keys).groupBy(identity).collect {
+        case (k, ks) if ks.size > 1 => k }.toSeq.sorted
+    assert(SparkEntry.queryMaps.map(_.size).sum == SparkEntry.queries.size,
+      s"keys in two queries maps: ${dupes(SparkEntry.queryMaps)}")
+    assert(SparkEntry.oracleMaps.map(_.size).sum == SparkEntry.oracleSql.size,
+      s"keys in two oracle maps: ${dupes(SparkEntry.oracleMaps)}")
   }
 
   test("upstream limitation pinned: recursive CTE rejects UNION-distinct") {
