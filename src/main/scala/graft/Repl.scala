@@ -1,7 +1,16 @@
 package graft
 
 import java.io.PrintStream
+import java.util.UUID
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.Bridge
@@ -41,13 +50,17 @@ import graft.core.{Ingest, Meta}
   *     row-group key map of the persisted db ([[Meta.layout]], the
   *     physical dual of `.btree`).
   *
-  * Persistence mirrors `db_open`/`db_close` (`db.cpp:546,519`): rows load
-  * from the db path at open (one job: the db's fixed schema, sorted by
-  * insertion index on the driver) and are written back once at `.exit`,
-  * as `db_close` flushes its pages once — only if the session changed the
-  * table or the file does not exist yet. A read-only session leaves the
-  * file untouched. This is the keeps-data-after-closing spec
-  * (`spec/main_spec.rb:93-109`).
+  * Persistence mirrors `db_open`/`db_close` (`db.cpp:546,519`) and, like
+  * them, is plain file I/O on the driver: no Spark job runs at open or at
+  * `.exit`. The db path is a directory of parquet files over [[DbSchema]].
+  * Open reads every visible `*.parquet` file in it with the parquet-hadoop
+  * reader and sorts the rows by insertion index, so a directory written
+  * by Spark's own writer opens too. `.exit` writes the table back once, as
+  * `db_close` flushes its pages once, and only if the session changed the
+  * table or the db does not exist yet: one file, written in full with the
+  * session's parquet codec under a hidden name, then swapped in for the
+  * old files. A read-only session leaves the files untouched. This is the
+  * keeps-data-after-closing spec (`spec/main_spec.rb:93-109`).
   *
   * Scale note: the REPL is a driver-side interactive shell by contract —
   * its `users` table is REPL state (like the reference's single page):
@@ -64,9 +77,59 @@ object Repl {
     StructField("username", StringType),
     StructField("email", StringType)))
 
-  /** The persisted db file: the users table plus its insertion index. */
-  private val DbSchema =
-    StructType(StructField("idx", LongType, nullable = false) +: UsersSchema.fields)
+  /** The persisted db file: the users table plus its insertion index.
+    * Spark reads it as `struct<idx:bigint,id:bigint,username:string,
+    * email:string>`. */
+  private val DbSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  required int64 idx;
+      |  required int64 id;
+      |  optional binary username (STRING);
+      |  optional binary email (STRING);
+      |}""".stripMargin)
+
+  /** The db's rows in insertion order, read on the driver. */
+  private def readDb(spark: SparkSession, dir: Path): Seq[InternalRow] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def str(g: Group, f: String) =
+      if (g.getFieldRepetitionCount(f) == 0) null
+      else UTF8String.fromBytes(g.getBinary(f, 0).getBytes)
+    Meta.parquetFiles(dir.getFileSystem(conf), dir).flatMap { f =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), f.getPath)
+        .withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        g.getLong("idx", 0) -> InternalRow(g.getLong("id", 0),
+          str(g, "username"), str(g, "email"))
+      }.toVector finally reader.close()
+    }.sortBy(_._1).map(_._2)
+  }
+
+  /** Replaces the db in `dir` with one file holding `users`. The file is
+    * written in full under a name readers skip (a leading `_`, and no
+    * `.parquet` suffix) before any old file is removed. */
+  private def writeDb(spark: SparkSession, dir: Path, users: Seq[InternalRow]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    val old = if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath).toSeq else Nil
+    val tmp = new Path(dir, s"_flush-${UUID.randomUUID()}.tmp")
+    val codec = spark.conf.get("spark.sql.parquet.compression.codec").toLowerCase match {
+      case "none" => CompressionCodecName.UNCOMPRESSED
+      case c => CompressionCodecName.fromConf(c)
+    }
+    val writer = ExampleParquetWriter.builder(tmp).withConf(conf).withType(DbSchema)
+      .withCompressionCodec(codec).build()
+    val groups = new SimpleGroupFactory(DbSchema)
+    try users.zipWithIndex.foreach { case (u, i) =>
+      val g = groups.newGroup().append("idx", i.toLong).append("id", u.getLong(0))
+      Seq("username" -> 1, "email" -> 2).foreach { case (f, k) =>
+        if (!u.isNullAt(k)) g.add(f, Binary.fromConstantByteArray(u.getUTF8String(k).getBytes))
+      }
+      writer.write(g)
+    } finally writer.close()
+    old.foreach(fs.delete(_, true))
+    if (!fs.rename(tmp, new Path(dir, "part-0.parquet")))
+      throw new java.io.IOException(s"could not rename $tmp into $dir")
+  }
 
   /** One REPL session over explicit input/output streams — the testable
     * core (`ReplSpec` drives it with scripted stdin exactly like the
@@ -81,14 +144,10 @@ object Repl {
       users += InternalRow(u.id, UTF8String.fromString(u.username),
         UTF8String.fromString(u.email))
 
-    // db_open: only flush writes the db, so its schema is known and read
-    // without inference; the rows are few and sorted by idx on the driver
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(dbPath))
-    if (exists)
-      spark.read.schema(DbSchema).parquet(dbPath).collect().sortBy(_.getLong(0))
-        .foreach(r => append(Ingest.User(r.getLong(1), r.getString(2), r.getString(3))))
+    // db_open: the rows are few, read and sorted by idx on the driver
+    val dir = new Path(dbPath)
+    val exists = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)
+    if (exists) users ++= readDb(spark, dir)
 
     // the users view lags the table until a line that goes through Spark
     // needs it; one partition, so a global aggregate over it plans no
@@ -103,11 +162,7 @@ object Repl {
     // create the db file db_open would have created
     var dirty = !exists
     def flush(): Unit = if (dirty) {
-      val rows = users.indices.map { i =>
-        val u = users(i)
-        InternalRow(i.toLong, u.getLong(0), u.getUTF8String(1), u.getUTF8String(2))
-      }
-      Bridge.localFrame(spark, DbSchema, rows).write.mode("overwrite").parquet(dbPath)
+      writeDb(spark, dir, users.toSeq)
       dirty = false
     }
 

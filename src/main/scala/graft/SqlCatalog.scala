@@ -1,6 +1,10 @@
 package graft
 
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 import graft.core.Tables
 import graft.core.Numeric.dsumSql
@@ -67,15 +71,33 @@ import graft.core.Numeric.dsumSql
   */
 object SqlCatalog {
 
+  /** What [[registerViews]] last registered per session: table name →
+    * (file stamp, catalog entry). Weak keys, as in [[graft.core.Tables]]. */
+  private val registered = Collections.synchronizedMap(
+    new WeakHashMap[SparkSession, ConcurrentHashMap[String, ((String, Long, Long), AnyRef)]]())
+
   /** Register every harness table under its canonical name. Idempotent;
     * the scans stay pushed-down parquet reads (no materialization). The
-    * first call in a session runs one schema-inference job per table;
-    * [[graft.core.Tables]] memoizes the schemas, so later calls run no
-    * Spark job. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
+    * first call in a session runs one schema-inference job per table
+    * ([[graft.core.Tables]] memoizes the schemas). A later call re-registers
+    * a table only if its file's stamp (path, mtime, length) differs, which
+    * also covers another `sfDir`, or if the session catalog no longer holds
+    * the exact entry registered here (a user's `CREATE OR REPLACE TEMP
+    * VIEW` or `DROP VIEW`). Otherwise it costs one `getFileStatus` and one
+    * catalog lookup per table, and runs no Spark job. */
+  def registerViews(spark: SparkSession, sfDir: String): Unit = {
+    val memo = registered.computeIfAbsent(spark, _ => new ConcurrentHashMap())
     Tables.All.foreach { t =>
-      Tables(spark, sfDir, t).createOrReplaceTempView(t)
+      val stamp = Tables.stamp(spark, Tables.path(sfDir, t))
+      val current = Option(memo.get(t)).exists { case (s, entry) =>
+        s == stamp && Bridge.tempView(spark, t).exists(_ eq entry)
+      }
+      if (!current) {
+        Tables(spark, sfDir, t).createOrReplaceTempView(t)
+        memo.put(t, (stamp, Bridge.tempView(spark, t).get))
+      }
     }
+  }
 
   // ------------------------------------------------- Spark-dialect helpers
 

@@ -2,7 +2,7 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -40,6 +40,15 @@ object Meta {
       .toDF("name", "value")
   }
 
+  /** The data files of a parquet directory, by name: the `*.parquet` files
+    * Spark's reader would list, skipping hidden ones (a leading `_` or
+    * `.`, as writers' temp files and markers have). */
+  private[graft] def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+
   /** Per-row-group long-key ranges of a parquet directory, in (file,
     * row-group) order — the `.btree` analogue: the storage-order key map
     * a point lookup prunes against. Output:
@@ -48,11 +57,7 @@ object Meta {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    val files = fs.listStatus(root).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val rows = files.flatMap { f =>
+    val rows = parquetFiles(root.getFileSystem(conf), root).flatMap { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
       try {
         reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.map {

@@ -38,11 +38,20 @@ object Tables {
   private val schemas = Collections.synchronizedMap(
     new WeakHashMap[SparkSession, ConcurrentHashMap[(String, Long, Long), StructType]]())
 
-  /** A fresh parquet read of `path`, with its schema from the memo. */
-  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+  /** The file's qualified path, modification time and length: a file
+    * rewritten in place gets a new stamp. One `getFileStatus`, no job. */
+  private[graft] def stamp(spark: SparkSession, path: String): (String, Long, Long) = {
     val p = new Path(path)
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen)
+    (st.getPath.toString, st.getModificationTime, st.getLen)
+  }
+
+  /** The file of harness table `name` in `sfDir`. */
+  private[graft] def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** A fresh parquet read of `path`, with its schema from the memo. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = stamp(spark, path)
     val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
     Option(memo.get(key)) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
@@ -77,7 +86,7 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(All.contains(name), s"unknown table: $name")
     if (name == "events") {
-      val raw = readParquet(spark, s"$sfDir/events.parquet")
+      val raw = readParquet(spark, path(sfDir, name))
       val ts = raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           timestamp_micros(expr("ts div 1000"))
@@ -86,7 +95,7 @@ object Tables {
         case _ => col("ts")
       }
       raw.withColumn("ts", ts)
-    } else readParquet(spark, s"$sfDir/$name.parquet")
+    } else readParquet(spark, path(sfDir, name))
     // r14 note (guide §2.5, measured and REVERTED): a reader-level
     // round-robin fan-out for documents/embeddings (their single-row-
     // group files plan 1-task scans) was A/B'd across the full bench —

@@ -1,13 +1,13 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
 import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType, TemporaryViewRelation}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
 /** Column ↔ Expression bridge. `ExpressionUtils` is `private[sql]` in
@@ -35,19 +35,12 @@ object Bridge {
     Repartition(1, shuffle = false,
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
-  /** A DataFrame over driver-held rows ([[localPlan]]) via `Dataset.ofRows`,
-    * the route [[checkpointHashPartitioned]] also takes. Unlike
-    * `createDataset` it derives no encoder and generates no code. */
-  def localFrame(spark: SparkSession, schema: StructType,
-      rows: Seq[InternalRow]): DataFrame =
-    Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], localPlan(schema, rows))
-
   /** Creates or replaces temp view `name` over driver-held rows
     * ([[localPlan]]). It puts in the session catalog the entry that
-    * `localFrame(...).createOrReplaceTempView(name)` would, without that
-    * command's analysis pass and SQL execution: 0.13 ms instead of 7.5 ms
-    * per call (median, 100 rows, warm JVM, 4 vCPU). The plan is resolved
-    * as built, so the catalog can hold it unanalyzed. */
+    * `createOrReplaceTempView(name)` on a frame over that plan would,
+    * without that command's analysis pass and SQL execution: 0.13 ms
+    * instead of 7.5 ms per call (median, 100 rows, warm JVM, 4 vCPU). The
+    * plan is resolved as built, so the catalog can hold it unanalyzed. */
   def replaceLocalView(spark: SparkSession, name: String, schema: StructType,
       rows: Seq[InternalRow]): Unit = {
     val plan = localPlan(schema, rows)
@@ -60,6 +53,17 @@ object Bridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog
       .createTempView(name, TemporaryViewRelation(meta, Some(plan)), overrideIfExists = true)
   }
+
+  /** The session catalog's entry for temp view `name`, if there is one.
+    * A `CREATE OR REPLACE` or a drop changes it, so callers compare it by
+    * reference to tell whether a view is still the one they registered. */
+  def tempView(spark: SparkSession, name: String): Option[AnyRef] =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog.getRawTempView(name)
+
+  /** Waits until every event posted so far reached its listeners
+    * (`QueryExecutionListener`s run on the listener bus, after the action). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Eager materialization that PRESERVES hash-partitioning (r14, guide
     * §2.4 "two operations keyed the same way share one exchange").

@@ -290,12 +290,67 @@ class ReplSpec extends SparkSpecBase {
     assert(out.containsSlice(Seq("db > (50)", "Executed.")))
     assert(jobs("insert") == 0, jobs)
     assert(jobs("count") == 1, jobs)
-    assert(jobs("exit") == 1, jobs) // the one write of the changed table
+    assert(jobs("exit") == 0, jobs) // the write of the changed table is driver-side
     val (reread, rejobs) = session(db, "select" -> "select", "exit" -> ".exit")
     assert(reread.length == 52, "50 rows + Executed. + prompt")
-    assert(rejobs("open") == 1, rejobs)
+    assert(rejobs("open") == 0, rejobs) // a driver-side read
     assert(rejobs("select") == 0, rejobs)
     assert(rejobs("exit") == 0, rejobs) // read-only: nothing to write
+  }
+
+  test("a db directory written by Spark's writer opens in insertion order") {
+    val s = spark
+    import s.implicits._
+    val db = dbDir("spark_written"); rm(db)
+    // the rows out of idx order, one part file plus _SUCCESS and .crc files
+    Seq((2L, 5L, "user5", "e@x.com"), (0L, 9L, "user9", "c@x.com"), (1L, 3L, "user3", "d@x.com"))
+      .toDF("idx", "id", "username", "email").coalesce(1).write.parquet(db)
+    assert(new java.io.File(db).list().exists(_.startsWith("part-")))
+    assert(runScript(db, Seq("select", ".exit")) == Seq(
+      "db > (9, user9, c@x.com)",
+      "(3, user3, d@x.com)",
+      "(5, user5, e@x.com)",
+      "Executed.",
+      "db > "))
+  }
+
+  test("a driver-side flush is read by Spark with the fixed schema and one row group") {
+    val db = dbDir("driver_flush"); rm(db)
+    runScript(db, Seq("insert 7 u7 a@x.com", "insert 3 u3 b@x.com", "insert 9 u9 c@x.com",
+      ".exit"))
+    val stored = spark.read.parquet(db)
+    assert(stored.schema.simpleString ==
+      "struct<idx:bigint,id:bigint,username:string,email:string>")
+    assert(stored.orderBy("idx").collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3))).toSeq == Seq(
+      (0L, 7L, "u7", "a@x.com"), (1L, 3L, "u3", "b@x.com"), (2L, 9L, "u9", "c@x.com")))
+    val out = runScript(db, Seq(".layout", ".exit"))
+    val layout = out.dropWhile(_ != "db > Layout:").drop(1).takeWhile(!_.startsWith("db > "))
+    assert(layout.size == 1, out)
+    assert(layout.head.contains("rg=0 keys=[3, 9] rows=3"), out)
+  }
+
+  test("a hidden temp file in the db directory changes nothing open reads") {
+    val db = dbDir("hidden_tmp"); rm(db)
+    runScript(db, Seq("insert 1 user1 a@example.com", ".exit"))
+    val dir = new java.io.File(db)
+    val part = dir.listFiles().find(_.getName.endsWith(".parquet")).get.toPath
+    // a valid parquet file under hidden names, and a torn temp file
+    for (n <- Seq("_flush-left.tmp", "_copy.parquet", ".copy.parquet"))
+      java.nio.file.Files.copy(part, dir.toPath.resolve(n))
+    java.nio.file.Files.write(dir.toPath.resolve("_flush-torn.tmp"), Array[Byte](1, 2, 3))
+    assert(runScript(db, Seq("select", ".layout", ".exit")) == Seq(
+      "db > (1, user1, a@example.com)",
+      "Executed.",
+      "db > Layout:",
+      "  part-0.parquet rg=0 keys=[1, 1] rows=1",
+      "db > "))
+    assert(runScript(db, Seq("insert 2 user2 b@example.com", ".exit")) ==
+      Seq("db > Executed.", "db > "))
+    assert(dir.list().filterNot(_.endsWith(".crc")).toSeq == Seq("part-0.parquet"),
+      "a flush replaces every old file")
+    assert(runScript(db, Seq("select", ".exit")).take(2) == Seq(
+      "db > (1, user1, a@example.com)", "(2, user2, b@example.com)"))
   }
 
   test("scalar parseLine agrees with the columnar parseStatements surface") {
