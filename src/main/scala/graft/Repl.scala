@@ -10,9 +10,9 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -58,9 +58,11 @@ import graft.core.{Ingest, Meta}
   * by Spark's own writer opens too. `.exit` writes the table back once, as
   * `db_close` flushes its pages once, and only if the session changed the
   * table or the db does not exist yet: one file, written in full with the
-  * session's parquet codec under a hidden name, then swapped in for the
-  * old files. A read-only session leaves the files untouched. This is the
-  * keeps-data-after-closing spec (`spec/main_spec.rb:93-109`).
+  * session's parquet codec under a hidden name, then renamed to the next
+  * `part-<generation>.parquet` before the old files are removed, so a
+  * crash leaves the old rows or the new ones. A read-only session leaves
+  * the files untouched. This is the keeps-data-after-closing spec
+  * (`spec/main_spec.rb:93-109`).
   *
   * Scale note: the REPL is a driver-side interactive shell by contract —
   * its `users` table is REPL state (like the reference's single page):
@@ -77,58 +79,72 @@ object Repl {
     StructField("username", StringType),
     StructField("email", StringType)))
 
-  /** The persisted db file: the users table plus its insertion index.
-    * Spark reads it as `struct<idx:bigint,id:bigint,username:string,
-    * email:string>`. */
-  private val DbSchema = MessageTypeParser.parseMessageType(
-    """message spark_schema {
-      |  required int64 idx;
-      |  required int64 id;
-      |  optional binary username (STRING);
-      |  optional binary email (STRING);
-      |}""".stripMargin)
+  /** The persisted db file: the users table plus its insertion index. */
+  private val IdxField = StructField("idx", LongType, nullable = false)
+  private val DbSchema = StructType(IdxField +: UsersSchema.fields)
+  private val DbMessage = new SparkToParquetSchemaConverter().convert(DbSchema)
 
-  /** The db's rows in insertion order, read on the driver. */
+  /** The names [[writeDb]] commits the db under, `part-<generation>.parquet`;
+    * Spark's writer never writes such a name. */
+  private val DbFile = """part-(\d+)\.parquet""".r
+  private def generation(p: Path): Option[Long] =
+    DbFile.unapplySeq(p.getName).map(_.head.toLong)
+
+  /** The db's rows in insertion order, read on the driver. The [[DbFile]]
+    * of the greatest generation is the whole db; without one, as in a
+    * directory from Spark's writer, every visible `*.parquet` file is. */
   private def readDb(spark: SparkSession, dir: Path): Seq[InternalRow] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def str(g: Group, f: String) =
-      if (g.getFieldRepetitionCount(f) == 0) null
-      else UTF8String.fromBytes(g.getBinary(f, 0).getBytes)
-    Meta.parquetFiles(dir.getFileSystem(conf), dir).flatMap { f =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), f.getPath)
-        .withConf(conf).build()
+    val files = Meta.parquetFiles(dir.getFileSystem(conf), dir).map(_.getPath)
+    val current = files.flatMap(f => generation(f).map(_ -> f)).maxByOption(_._1).map(_._2)
+    def value(g: Group, f: StructField): Any =
+      if (g.getFieldRepetitionCount(f.name) == 0) null
+      else f.dataType match {
+        case LongType => g.getLong(f.name, 0)
+        case StringType => UTF8String.fromBytes(g.getBinary(f.name, 0).getBytes)
+      }
+    current.fold(files)(Seq(_)).flatMap { f =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), f).withConf(conf).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-        g.getLong("idx", 0) -> InternalRow(g.getLong("id", 0),
-          str(g, "username"), str(g, "email"))
+        g.getLong(IdxField.name, 0) ->
+          InternalRow.fromSeq(UsersSchema.fields.toSeq.map(value(g, _)))
       }.toVector finally reader.close()
     }.sortBy(_._1).map(_._2)
   }
 
   /** Replaces the db in `dir` with one file holding `users`. The file is
     * written in full under a name readers skip (a leading `_`, and no
-    * `.parquet` suffix) before any old file is removed. */
+    * `.parquet` suffix), then renamed to the next [[DbFile]] generation, a
+    * name no file has; only then are the old files removed. A crash at any
+    * point leaves either the old rows or the new ones for [[readDb]]. */
   private def writeDb(spark: SparkSession, dir: Path, users: Seq[InternalRow]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = dir.getFileSystem(conf)
     val old = if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath).toSeq else Nil
+    val gen = old.flatMap(generation).maxOption.fold(0L)(_ + 1)
+    val next = new Path(dir, s"part-$gen.parquet")
     val tmp = new Path(dir, s"_flush-${UUID.randomUUID()}.tmp")
     val codec = spark.conf.get("spark.sql.parquet.compression.codec").toLowerCase match {
       case "none" => CompressionCodecName.UNCOMPRESSED
       case c => CompressionCodecName.fromConf(c)
     }
-    val writer = ExampleParquetWriter.builder(tmp).withConf(conf).withType(DbSchema)
+    val writer = ExampleParquetWriter.builder(tmp).withConf(conf).withType(DbMessage)
       .withCompressionCodec(codec).build()
-    val groups = new SimpleGroupFactory(DbSchema)
+    val groups = new SimpleGroupFactory(DbMessage)
     try users.zipWithIndex.foreach { case (u, i) =>
-      val g = groups.newGroup().append("idx", i.toLong).append("id", u.getLong(0))
-      Seq("username" -> 1, "email" -> 2).foreach { case (f, k) =>
-        if (!u.isNullAt(k)) g.add(f, Binary.fromConstantByteArray(u.getUTF8String(k).getBytes))
+      val g = groups.newGroup().append(IdxField.name, i.toLong)
+      UsersSchema.fields.zipWithIndex.foreach { case (f, k) =>
+        if (!u.isNullAt(k)) f.dataType match {
+          case LongType => g.add(k + 1, u.getLong(k))
+          case StringType =>
+            g.add(k + 1, Binary.fromConstantByteArray(u.getUTF8String(k).getBytes))
+        }
       }
       writer.write(g)
     } finally writer.close()
+    if (!fs.rename(tmp, next))
+      throw new java.io.IOException(s"could not rename $tmp to $next")
     old.foreach(fs.delete(_, true))
-    if (!fs.rename(tmp, new Path(dir, "part-0.parquet")))
-      throw new java.io.IOException(s"could not rename $tmp into $dir")
   }
 
   /** One REPL session over explicit input/output streams — the testable

@@ -347,10 +347,35 @@ class ReplSpec extends SparkSpecBase {
       "db > "))
     assert(runScript(db, Seq("insert 2 user2 b@example.com", ".exit")) ==
       Seq("db > Executed.", "db > "))
-    assert(dir.list().filterNot(_.endsWith(".crc")).toSeq == Seq("part-0.parquet"),
+    assert(dir.list().filterNot(_.endsWith(".crc")).toSeq == Seq("part-1.parquet"),
       "a flush replaces every old file")
     assert(runScript(db, Seq("select", ".exit")).take(2) == Seq(
       "db > (1, user1, a@example.com)", "(2, user2, b@example.com)"))
+  }
+
+  test("a flush cut off after its rename opens as the new db") {
+    val s = spark
+    import s.implicits._
+    val db = dbDir("cut_flush"); rm(db)
+    val dir = new java.io.File(db)
+    def visible() = dir.list().filterNot(_.endsWith(".crc")).sorted.toSeq
+    // the old db from Spark's writer, and a first-generation db file
+    // renamed in beside it before the old files were removed
+    Seq((0L, 5L, "user5", "old@x.com")).toDF("idx", "id", "username", "email")
+      .coalesce(1).write.parquet(db)
+    val other = dbDir("cut_flush_new"); rm(other)
+    runScript(other, Seq("insert 7 user7 new@x.com", "insert 8 user8 new@x.com", ".exit"))
+    val gen0 = new java.io.File(other, "part-0.parquet").toPath
+    java.nio.file.Files.copy(gen0, dir.toPath.resolve("part-0.parquet"))
+    assert(runScript(db, Seq("select", ".exit")) == Seq(
+      "db > (7, user7, new@x.com)", "(8, user8, new@x.com)", "Executed.", "db > "))
+    assert(runScript(db, Seq("insert 9 user9 new@x.com", ".exit")) ==
+      Seq("db > Executed.", "db > "))
+    assert(visible() == Seq("part-1.parquet"), "the next flush removes the old files")
+    // generation 1 committed, generation 0 not yet removed
+    java.nio.file.Files.copy(gen0, dir.toPath.resolve("part-0.parquet"))
+    assert(runScript(db, Seq("select", ".exit")).take(3) == Seq(
+      "db > (7, user7, new@x.com)", "(8, user8, new@x.com)", "(9, user9, new@x.com)"))
   }
 
   test("scalar parseLine agrees with the columnar parseStatements surface") {

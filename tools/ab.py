@@ -4,16 +4,15 @@ working tree.
 
 Usage, from anywhere inside the repository:
   python3 tools/ab.py --workload <olap_sql|curation|repl_session>
-      [--rev HEAD] [--pairs 10] [--seed0 101] [--seconds 10] [--trace 0]
-      [--workdir DIR] [--no-warmup]
+      [--rev HEAD] [--pairs 10] [--seed0 101] [--trace 0] [--workdir DIR]
 
 Side "parent" is `git archive <rev>`; side "change" is a copy of the working
 tree (tracked files plus untracked ones git does not ignore). Each side lives
 in its own directory under --workdir and runs `graftbench/run.py` unchanged,
-so each keeps its own build in its own `.bench_build/`. Pair k runs seed
-seed0 + k on both sides; the side that runs first alternates per pair. By
-default one uncounted run per side (seed seed0 - 1) first builds the side and
-warms the file cache.
+so each keeps its own build in its own `.bench_build/`. Every run lasts
+BENCHMARK.json's `run_seconds`. One uncounted run per side (seed seed0 - 1)
+first builds the side and warms the file cache. Pair k then runs seed
+seed0 + k on both sides; the side that runs first alternates per pair.
 
 Prints each metric per seed, both sides' medians, the parent's interquartile
 range, how many pairs the change won (ties count for neither), and the env
@@ -76,9 +75,12 @@ def export_tree(root, dest):
         shutil.copy2(src, os.path.join(dest, f))
 
 
-def directions(root):
+def benchmark(root):
     with open(os.path.join(root, "BENCHMARK.json")) as f:
-        bench = json.load(f)
+        return json.load(f)
+
+
+def directions(bench):
     return {m["name"]: m["better"]
             for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
 
@@ -93,9 +95,9 @@ def better(name, known):
     return None
 
 
-def run(side_dir, a, seed):
+def run(side_dir, a, seconds, seed):
     cmd = [sys.executable, "graftbench/run.py", "--workload", a.workload,
-           "--seed", str(seed), "--seconds", str(a.seconds), "--trace", str(a.trace)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(a.trace)]
     p = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE,
                        stderr=subprocess.PIPE, text=True)
     if p.returncode != 0:
@@ -131,27 +133,26 @@ def main():
     ap.add_argument("--rev", default="HEAD")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, default=101)
-    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--workdir", default=os.path.join(tempfile.gettempdir(), "graft-ab"))
-    ap.add_argument("--no-warmup", dest="warmup", action="store_false")
     a = ap.parse_args()
 
     root = git(os.path.dirname(os.path.abspath(__file__)),
                "rev-parse", "--show-toplevel").decode().strip()
+    bench = benchmark(root)
+    seconds = bench["run_seconds"]
     dirs = {s: os.path.join(a.workdir, s) for s in SIDES}
     export_rev(root, a.rev, dirs["parent"])
     export_tree(root, dirs["change"])
     print(f"[ab] {a.workload}: parent = {a.rev} "
           f"({git(root, 'rev-parse', '--short', a.rev).decode().strip()}), "
-          f"change = working tree; {a.pairs} pairs, --seconds {a.seconds}, "
+          f"change = working tree; {a.pairs} pairs, --seconds {seconds}, "
           f"--trace {a.trace}", flush=True)
 
-    if a.warmup:
-        for s in SIDES:
-            run(dirs[s], a, a.seed0 - 1)
-            print(f"[ab] {s}: built and warmed up (seed {a.seed0 - 1}, not counted)",
-                  flush=True)
+    for s in SIDES:
+        run(dirs[s], a, seconds, a.seed0 - 1)
+        print(f"[ab] {s}: built and warmed up (seed {a.seed0 - 1}, not counted)",
+              flush=True)
 
     got = {s: [] for s in SIDES}
     envs = {}
@@ -159,7 +160,7 @@ def main():
         seed = a.seed0 + k
         order = SIDES if k % 2 == 0 else SIDES[::-1]
         for s in order:
-            values, env, result = run(dirs[s], a, seed)
+            values, env, result = run(dirs[s], a, seconds, seed)
             got[s].append((seed, values))
             envs[s] = env
             ok = "ok" if result["correct"] and result["failed"] == 0 else \
@@ -169,7 +170,7 @@ def main():
                                 if m in values)
             print(f"[ab] pair {k + 1} seed {seed} {s}: {summary} ({ok})", flush=True)
 
-    known = directions(root)
+    known = directions(bench)
     names = [n for n in got["parent"][0][1] if all(n in v for _, v in got["change"])
              and all(n in v for _, v in got["parent"])]
     print()
