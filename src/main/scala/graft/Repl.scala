@@ -70,7 +70,15 @@ import graft.core.{Ingest, Meta}
   * writes into the cached page, and runs no Spark work. The `users` view
   * is a one-partition local relation over those rows, rebuilt on demand
   * before the next line that goes through Spark (SQL, `.schema`).
-  * Arbitrary SQL the REPL accepts runs as normal distributed plans.
+  *
+  * A SQL line whose physical plan reads only those driver-held rows
+  * (every leaf a local scan, no exchange, no subquery, one partition:
+  * any `users`-only line over a non-empty table) skips the scheduler. It
+  * runs on the REPL's thread through [[Bridge.collectOnDriver]], with no
+  * Spark job, and prints the rows `collect()` would. Such a line starts
+  * no SQL execution, so it fires no `QueryExecutionListener` and no SQL
+  * UI event. Every other line (one that reads a harness view, for
+  * example) runs as a normal distributed plan through `collect()`.
   */
 object Repl {
 
@@ -240,8 +248,9 @@ object Repl {
         } else {
           try {
             refreshView()
-            val rows = spark.sql(input)
-            rows.collect().foreach(r => out.println(renderRow(r.toSeq)))
+            val df = spark.sql(input)
+            Bridge.collectOnDriver(df).getOrElse(df.collect())
+              .foreach(r => out.println(renderRow(r.toSeq)))
             out.println("Executed.")
           } catch {
             case _: org.apache.spark.sql.AnalysisException |

@@ -77,9 +77,9 @@ object SqlCatalog {
     new WeakHashMap[SparkSession, ConcurrentHashMap[String, ((String, Long, Long), AnyRef)]]())
 
   /** Register every harness table under its canonical name. Idempotent;
-    * the scans stay pushed-down parquet reads (no materialization). The
-    * first call in a session runs one schema-inference job per table
-    * ([[graft.core.Tables]] memoizes the schemas). A later call re-registers
+    * the scans stay pushed-down parquet reads (no materialization), and no
+    * call runs a Spark job: [[graft.core.Tables]] reads each file's schema
+    * from its footer on the driver, once per session. A later call re-registers
     * a table only if its file's stamp (path, mtime, length) differs, which
     * also covers another `sfDir`, or if the session catalog no longer holds
     * the exact entry registered here (a user's `CREATE OR REPLACE TEMP

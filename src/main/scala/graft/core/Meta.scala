@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -49,6 +50,13 @@ object Meta {
       f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
     }.sortBy(_.getPath.getName)
 
+  /** The footer of parquet file `path`, read on the driver. */
+  private[graft] def footer(spark: SparkSession, path: Path): ParquetMetadata = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    try reader.getFooter finally reader.close()
+  }
+
   /** Per-row-group long-key ranges of a parquet directory, in (file,
     * row-group) order — the `.btree` analogue: the storage-order key map
     * a point lookup prunes against. Output:
@@ -58,21 +66,18 @@ object Meta {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(dir)
     val rows = parquetFiles(root.getFileSystem(conf), root).flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-      try {
-        reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.map {
-          case (block, i) =>
-            val col = block.getColumns.asScala
-              .find(_.getPath.toDotString == keyCol)
-              .getOrElse(throw new IllegalArgumentException(
-                s"column $keyCol not found in ${f.getPath}"))
-            val stats = col.getStatistics
-            (f.getPath.getName, i,
-              stats.genericGetMin.asInstanceOf[Number].longValue(),
-              stats.genericGetMax.asInstanceOf[Number].longValue(),
-              block.getRowCount)
-        }
-      } finally reader.close()
+      footer(spark, f.getPath).getBlocks.asScala.toSeq.zipWithIndex.map {
+        case (block, i) =>
+          val col = block.getColumns.asScala
+            .find(_.getPath.toDotString == keyCol)
+            .getOrElse(throw new IllegalArgumentException(
+              s"column $keyCol not found in ${f.getPath}"))
+          val stats = col.getStatistics
+          (f.getPath.getName, i,
+            stats.genericGetMin.asInstanceOf[Number].longValue(),
+            stats.genericGetMax.asInstanceOf[Number].longValue(),
+            block.getRowCount)
+      }
     }
     rows.toDF("file", "row_group", "min_key", "max_key", "n_rows")
   }

@@ -3,10 +3,13 @@ package graft.core
 import java.util.{Collections, WeakHashMap}
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Readers for the harness tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -19,12 +22,12 @@ import org.apache.spark.sql.types.StructType
   * plan shape against a single file.
   *
   * Like `db_open`, a table's layout is learned once per session: the first
-  * read of a file infers its Parquet schema (one Spark job reading the
-  * footer) and every later read passes that schema back to the reader, so
-  * re-registering views or rebuilding a query runs no schema job. The memo
+  * read of a file takes its Parquet schema from the footer, read on the
+  * driver with no Spark job, and every read passes that schema to the
+  * reader, so no read of a harness table runs a schema job. The memo
   * is keyed by the file's qualified path, modification time and length; a
-  * file rewritten in place has a new mtime or length, so its schema is
-  * inferred afresh (a directory table's mtime moves when a file is added,
+  * file rewritten in place has a new mtime or length, so its footer is
+  * read afresh (a directory table's mtime moves when a file is added,
   * removed or renamed in it, as Spark's writers do). Each call still
   * returns a new DataFrame with its own file listing, so self-joins, plans
   * and statistics are those of a plain `spark.read.parquet`.
@@ -33,7 +36,7 @@ object Tables {
   val All: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred schemas per session; weak keys, so a discarded session drops
+  /** Footer schemas per session; weak keys, so a discarded session drops
     * its memo with it. */
   private val schemas = Collections.synchronizedMap(
     new WeakHashMap[SparkSession, ConcurrentHashMap[(String, Long, Long), StructType]]())
@@ -49,17 +52,29 @@ object Tables {
   /** The file of harness table `name` in `sfDir`. */
   private[graft] def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
+  /** The Spark schema of parquet table `path`, from one footer read on the
+    * driver, as `spark.read.parquet` infers it without schema merging: the
+    * file itself, or a directory's first visible data file. Spark's own
+    * row metadata when its writer left some, else the footer's message
+    * converted under the session's conf. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val file = if (!fs.getFileStatus(p).isDirectory) p
+      else Meta.parquetFiles(fs, p).headOption.map(_.getPath).getOrElse(
+        throw new IllegalArgumentException(s"no parquet data file in $path"))
+    val footer = Meta.footer(spark, file).getFileMetaData
+    Option(footer.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption)
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(footer.getSchema))
+  }
+
   /** A fresh parquet read of `path`, with its schema from the memo. */
   private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val key = stamp(spark, path)
     val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
-    Option(memo.get(key)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        memo.put(key, df.schema)
-        df
-    }
+    val schema = memo.computeIfAbsent(stamp(spark, path), _ => footerSchema(spark, path))
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Read one harness table from `sfDir`.

@@ -1,6 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.memory.TaskMemoryManager
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
 import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType, TemporaryViewRelation}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -8,13 +13,22 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, 
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.Utils
 
-/** Column ↔ Expression bridge. `ExpressionUtils` is `private[sql]` in
-  * Spark 4, so the one-line forwarders live in an `org.apache.spark.sql`
+/** Forwarders to Spark internals that are `private[sql]` or
+  * `private[spark]` in Spark 4, so they live in an `org.apache.spark.sql`
   * subpackage — the standard technique for libraries that contribute
   * native Catalyst expressions (the public `udf()` route would lose
-  * codegen). Nothing else in this repo lives outside `graft.*`. */
+  * codegen). Besides the Column ↔ Expression bridge: function
+  * registration, temp views over driver-held rows, catalog lookups,
+  * hash-partitioned checkpoints, and [[collectOnDriver]], which runs a
+  * plan over driver-held rows on the calling thread. Nothing else in this
+  * repo lives outside `graft.*`. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -59,6 +73,72 @@ object Bridge {
     * reference to tell whether a view is still the one they registered. */
   def tempView(spark: SparkSession, name: String): Option[AnyRef] =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog.getRawTempView(name)
+
+  /** Negative task attempt ids for [[collectOnDriver]]: the scheduler
+    * numbers its tasks from 0, so no scheduled task shares one. */
+  private val driverAttempts = new AtomicLong(0L)
+
+  /** The rows of `df`, computed on the calling thread with no Spark job,
+    * when its physical plan reads only rows the driver already holds:
+    * every leaf a `LocalTableScanExec`, no `Exchange`, no subquery, and
+    * one partition. This extends Spark's own rule for local data
+    * (`ConvertToLocalRelation`, `LocalTableScanExec.executeCollect`) to
+    * the aggregate, sort and window operators above a local scan.
+    *
+    * The check reads AQE's initial plan (the input plan after the rules
+    * that insert exchanges) before anything runs: `finalPhysicalPlan`
+    * would already launch the stage jobs of a plan with exchanges. Rows
+    * are decoded with the frame's own encoder, as `collect()` decodes
+    * them.
+    *
+    * Returns `None`, having run no job, for any other plan; the caller
+    * then collects as usual. No SQL execution is started, so the line
+    * fires no `QueryExecutionListener` and no SQL UI event. */
+  def collectOnDriver(df: DataFrame): Option[Array[Row]] = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val plan = ds.queryExecution.executedPlan
+    val prepared = plan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val local = prepared.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]) &&
+      !prepared.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty)
+    // with no exchange there is no stage to run, so execute() starts no job
+    if (!local) None
+    else Some(plan.execute()).filter(_.getNumPartitions == 1).map { rdd =>
+      val spark = ds.sparkSession
+      val fromRow = ds.exprEnc
+        .resolveAndBind(ds.logicalPlan.output, spark.sessionState.analyzer).createDeserializer()
+      runTask(spark, task => rdd.iterator(rdd.partitions.head, task).map(fromRow).toArray)
+    }
+  }
+
+  /** Runs `body` on the calling thread as the one task of a stage, as an
+    * executor would: under a `TaskContextImpl` with its own
+    * `TaskMemoryManager` and a negative attempt id, with the session's SQL
+    * conf. The task is then marked completed, or failed, and its execution
+    * memory freed. */
+  private def runTask[T](spark: classic.SparkSession, body: TaskContextImpl => T): T = {
+    val env = SparkEnv.get
+    val attempt = driverAttempts.decrementAndGet()
+    val memory = new TaskMemoryManager(env.memoryManager, attempt)
+    val task = new TaskContextImpl(stageId = -1, stageAttemptNumber = 0, partitionId = 0,
+      taskAttemptId = attempt, attemptNumber = 0, numPartitions = 1,
+      taskMemoryManager = memory,
+      localProperties = Utils.cloneProperties(spark.sparkContext.getLocalProperties),
+      metricsSystem = env.metricsSystem, taskMetrics = TaskMetrics.empty)
+    try TaskContext.withTaskContext(task) {
+      SQLConf.withExistingConf(spark.sessionState.conf) {
+        val result = try body(task) catch {
+          case e: Throwable =>
+            try task.markTaskFailed(e) finally task.markTaskCompleted(Some(e))
+            throw e
+        }
+        task.markTaskCompleted(None)
+        result
+      }
+    } finally memory.cleanUpAllAllocatedMemory()
+  }
 
   /** Waits until every event posted so far reached its listeners
     * (`QueryExecutionListener`s run on the listener bus, after the action). */

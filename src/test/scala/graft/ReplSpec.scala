@@ -2,6 +2,10 @@ package graft
 
 import java.io.{ByteArrayOutputStream, PrintStream}
 
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.graft.Bridge
+
 import graft.core.Ingest
 
 /** End-to-end REPL parity with the reference's golden specs
@@ -289,13 +293,109 @@ class ReplSpec extends SparkSpecBase {
       "count" -> "select count(*) from users", "exit" -> ".exit"): _*)
     assert(out.containsSlice(Seq("db > (50)", "Executed.")))
     assert(jobs("insert") == 0, jobs)
-    assert(jobs("count") == 1, jobs)
+    assert(jobs("count") == 0, jobs) // over driver-held rows, on the REPL's thread
     assert(jobs("exit") == 0, jobs) // the write of the changed table is driver-side
     val (reread, rejobs) = session(db, "select" -> "select", "exit" -> ".exit")
     assert(reread.length == 52, "50 rows + Executed. + prompt")
     assert(rejobs("open") == 0, rejobs) // a driver-side read
     assert(rejobs("select") == 0, rejobs)
     assert(rejobs("exit") == 0, rejobs) // read-only: nothing to write
+  }
+
+  /** `users`-only lines the REPL runs on its own thread, with no job. */
+  private val usersLines = Seq(
+    "select count(*) from users",
+    "select max(id) from users",
+    "select count(*) from users where id < 3",
+    "select id, username from users where email like '%b%'",
+    "select id, email from users order by id desc",
+    "select length(username) % 2 as k, count(*), sum(id) from users group by 1 order by 1",
+    "select length(username) % 2, min(email) from users group by 1",
+    "select distinct length(email) from users order by 1",
+    "select username, row_number() over (order by id desc) from users",
+    "select id, sum(id) over (partition by length(username) order by id) from users",
+    "select * from users",
+    "select * from users limit 2",
+    "select * from users order by username limit 2")
+
+  /** Each line's rows on the driver path, if it takes it (with no job),
+    * next to `Dataset.collect()`'s. */
+  private def driverAndCollect(): Seq[(String, Option[Seq[Row]], Seq[Row])] =
+    usersLines.map { line =>
+      var onDriver: Option[Array[Row]] = None
+      assert(jobsDuring { onDriver = Bridge.collectOnDriver(spark.sql(line)) } == 0, line)
+      (line, onDriver.map(_.toSeq), spark.sql(line).collect().toSeq)
+    }
+
+  /** Every line takes the driver path and returns collect()'s rows. */
+  private def allOnDriver(): Seq[Seq[Row]] = driverAndCollect().map {
+    case (line, local, collected) =>
+      assert(local.isDefined, s"not run on the driver: $line")
+      assert(local.get == collected, line)
+      collected
+  }
+
+  test("users-only lines return the same rows on the driver as through collect()") {
+    val db = dbDir("local_grid"); rm(db)
+    // over no rows, Spark's optimizer drops the view's one-partition
+    // Repartition, so a global aggregate plans an Exchange and collects
+    assert(runScript(db, Seq("select count(*) from users", ".exit")) ==
+      Seq("db > (0)", "Executed.", "db > "))
+    val empty = driverAndCollect()
+    empty.foreach { case (line, local, collected) =>
+      local.foreach(rows => assert(rows == collected, line))
+    }
+    assert(empty.exists(_._2.isDefined), "some lines over no rows run on the driver")
+    assert(empty.head._3 == Seq(Row(0L)))
+    runScript(db, Seq("insert 3 user3 c@example.com", "insert 1 user1 a@example.com",
+      "insert 2 user22 b@example.com", "select count(*) from users", ".exit"))
+    val before = allOnDriver()
+    assert(before.head == Seq(Row(3L)))
+    runScript(db, Seq("insert 4 user4 bb@example.com", "select count(*) from users", ".exit"))
+    val after = allOnDriver()
+    assert(after.head == Seq(Row(4L)))
+  }
+
+  test("a users-only line failing at run time frees its memory and keeps the session") {
+    val db = dbDir("local_fail"); rm(db)
+    spark.sparkContext // SparkEnv starts with the session
+    val memory = SparkEnv.get.memoryManager
+    def used() = memory.executionMemoryUsed
+    val level = used()
+    var during = -1L
+    val out = runScript(db, Seq(
+      "insert 1 user1 a@example.com",
+      "insert 2 user2 b@example.com",
+      // ANSI: 'user1' is no int; the sort holds memory when the cast throws
+      "select cast(username as int) from users order by id",
+      "select",
+      ".exit").to(LazyList).map { l => if (l == "select") during = used(); l })
+    assert(out.exists(_.startsWith("db > Error: ")), out)
+    assert(out.containsSlice(Seq("db > (1, user1, a@example.com)", "(2, user2, b@example.com)")),
+      out)
+    assert(during == level, "the failed line's execution memory is released")
+    assert(used() == level)
+  }
+
+  test("lines over harness tables still run jobs and return their rows") {
+    val db = dbDir("local_fallback"); rm(db)
+    val in = Seq("insert 3 user3 c@example.com", "insert 7 user7 d@example.com")
+    val lines = Seq(
+      "join" -> ("select u.username, n.n_name from users u join nation n " +
+        "on u.id = n.n_nationkey order by u.id"),
+      "nation" -> "select count(*) from nation where n_regionkey = 1")
+    val bos = new ByteArrayOutputStream()
+    val jobs = jobsByGroup {
+      val it = in.iterator ++ lines.iterator.map { case (tag, line) => jobGroup(tag); line } ++
+        Iterator(".exit")
+      Repl.loop(spark, db, Some(sf0001), it, new PrintStream(bos, true, "UTF-8"))
+    }
+    val out = bos.toString("UTF-8").split("\n", -1).toSeq
+    assert(out.containsSlice(Seq("db > (user3, NATION_3)", "(user7, NATION_7)", "Executed.")),
+      out)
+    assert(out.containsSlice(Seq("db > (5)", "Executed.")), out)
+    assert(jobs("join") > 0, jobs)
+    assert(jobs("nation") > 0, jobs)
   }
 
   test("a db directory written by Spark's writer opens in insertion order") {

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.TimestampType
 import graft.core.Tables
 
 /** The per-session schema memo of [[graft.core.Tables]]: a table's Parquet
-  * schema is inferred once, later reads and view registrations run no
-  * Spark job, a rewritten file is inferred again, and every read is still
-  * an independent DataFrame. And the per-session view memo of
+  * schema is read from its footer once, no read or view registration runs
+  * a Spark job, a rewritten file's footer is read again, and every read is
+  * still an independent DataFrame. And the per-session view memo of
   * [[SqlCatalog.registerViews]]: a view is registered again only when its
   * file, its directory or its catalog entry changed. */
 class TablesSpec extends SparkSpecBase {
@@ -32,6 +32,12 @@ class TablesSpec extends SparkSpecBase {
     Tables(spark, sf0001, "lineitem")
     assert(jobsDuring(Tables(spark, sf0001, "lineitem")) === 0)
     assert(jobsDuring(Tables.All.foreach(Tables(spark, sf0001, _))) === 0)
+  }
+
+  test("the first registerViews in a new session runs no Spark job") {
+    val fresh = spark.newSession()
+    assert(jobsDuring(SqlCatalog.registerViews(fresh, sf0001)) === 0)
+    assert(fresh.table("region").count() === 5)
   }
 
   test("SqlCatalog.sql builds with no Spark job once views are registered") {
@@ -54,15 +60,25 @@ class TablesSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("graft-tables")
     val target = dir.resolve("region.parquet")
     writeFile(Seq((0, "AFRICA")).toDF("r_regionkey", "r_name"), target)
-    assert(jobsDuring(Tables(spark, dir.toString, "region")) > 0)
+    assert(jobsDuring(Tables(spark, dir.toString, "region")) === 0)
     assert(Tables(spark, dir.toString, "region").columns.toSeq ===
       Seq("r_regionkey", "r_name"))
     writeFile(Seq((0, "AFRICA", "lar deposits")).toDF("r_regionkey", "r_name", "r_comment"),
       target)
     var df: DataFrame = null
-    assert(jobsDuring { df = Tables(spark, dir.toString, "region") } > 0)
+    assert(jobsDuring { df = Tables(spark, dir.toString, "region") } === 0)
     assert(df.columns.toSeq === Seq("r_regionkey", "r_name", "r_comment"))
     assert(df.collect().map(_.getString(2)).toSeq === Seq("lar deposits"))
+  }
+
+  test("a directory table from Spark's writer is read with its schema and no job") {
+    val dir = Files.createTempDirectory("graft-tables-dir")
+    val target = dir.resolve("region.parquet").toString
+    oneRegion().coalesce(1).write.parquet(target) // part file, _SUCCESS and .crc files
+    var df: DataFrame = null
+    assert(jobsDuring { df = Tables(spark, dir.toString, "region") } === 0)
+    assert(df.schema === spark.read.parquet(target).schema)
+    assert(df.collect().map(_.getString(2)).toSeq === Seq("only"))
   }
 
   test("a self-join of two lineitem reads resolves its column references") {
