@@ -72,13 +72,14 @@ import graft.core.{Ingest, Meta}
   * before the next line that goes through Spark (SQL, `.schema`).
   *
   * A SQL line whose physical plan reads only those driver-held rows
-  * (every leaf a local scan, no exchange, no subquery, one partition:
-  * any `users`-only line over a non-empty table) skips the scheduler. It
-  * runs on the REPL's thread through [[Bridge.collectOnDriver]], with no
-  * Spark job, and prints the rows `collect()` would. Such a line starts
-  * no SQL execution, so it fires no `QueryExecutionListener` and no SQL
-  * UI event. Every other line (one that reads a harness view, for
-  * example) runs as a normal distributed plan through `collect()`.
+  * (every leaf a local scan, no exchange, no subquery, one partition
+  * that reads no shuffle: any `users`-only line over a non-empty table)
+  * skips the scheduler. It runs on the REPL's thread through
+  * [[Bridge.collectOnDriver]], with no Spark job, and prints the rows
+  * `collect()` would. Such a line starts no SQL execution, so it fires
+  * no `QueryExecutionListener` and no SQL UI event. Every other line (one
+  * that reads a harness view, for example) runs as a normal distributed
+  * plan through `collect()`.
   */
 object Repl {
 

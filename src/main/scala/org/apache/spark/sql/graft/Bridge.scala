@@ -2,9 +2,10 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.{SparkEnv, TaskContext, TaskContextImpl}
+import org.apache.spark.{ShuffleDependency, SparkEnv, TaskContext, TaskContextImpl}
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.memory.TaskMemoryManager
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
 import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType, TemporaryViewRelation}
@@ -81,7 +82,7 @@ object Bridge {
   /** The rows of `df`, computed on the calling thread with no Spark job,
     * when its physical plan reads only rows the driver already holds:
     * every leaf a `LocalTableScanExec`, no `Exchange`, no subquery, and
-    * one partition. This extends Spark's own rule for local data
+    * one partition whose lineage reads no shuffle. This extends Spark's own rule for local data
     * (`ConvertToLocalRelation`, `LocalTableScanExec.executeCollect`) to
     * the aggregate, sort and window operators above a local scan.
     *
@@ -104,13 +105,23 @@ object Bridge {
     val local = prepared.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]) &&
       !prepared.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty)
     // with no exchange there is no stage to run, so execute() starts no job
-    if (!local) None
-    else Some(plan.execute()).filter(_.getNumPartitions == 1).map { rdd =>
-      val spark = ds.sparkSession
-      val fromRow = ds.exprEnc
-        .resolveAndBind(ds.logicalPlan.output, spark.sessionState.analyzer).createDeserializer()
-      runTask(spark, task => rdd.iterator(rdd.partitions.head, task).map(fromRow).toArray)
-    }
+    Option.when(local)(plan.execute())
+      .filter(rdd => rdd.getNumPartitions == 1 && !readsShuffle(rdd)).map { rdd =>
+        val spark = ds.sparkSession
+        val fromRow = ds.exprEnc
+          .resolveAndBind(ds.logicalPlan.output, spark.sessionState.analyzer).createDeserializer()
+        runTask(spark, task => rdd.iterator(rdd.partitions.head, task).map(fromRow).toArray)
+      }
+  }
+
+  /** Whether `rdd`'s lineage reads a shuffle. `TakeOrderedAndProjectExec`
+    * and `CollectLimitExec` shuffle a child of several partitions into one
+    * inside their own `doExecute`, with no `Exchange` in the plan; only a
+    * job runs a shuffle's map side, so read on the driver such a partition
+    * would be empty. */
+  private def readsShuffle(rdd: RDD[_]): Boolean = rdd.dependencies.exists {
+    case _: ShuffleDependency[_, _, _] => true
+    case d => readsShuffle(d.rdd)
   }
 
   /** Runs `body` on the calling thread as the one task of a stage, as an

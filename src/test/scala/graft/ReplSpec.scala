@@ -320,8 +320,9 @@ class ReplSpec extends SparkSpecBase {
 
   /** Each line's rows on the driver path, if it takes it (with no job),
     * next to `Dataset.collect()`'s. */
-  private def driverAndCollect(): Seq[(String, Option[Seq[Row]], Seq[Row])] =
-    usersLines.map { line =>
+  private def driverAndCollect(lines: Seq[String] = usersLines)
+      : Seq[(String, Option[Seq[Row]], Seq[Row])] =
+    lines.map { line =>
       var onDriver: Option[Array[Row]] = None
       assert(jobsDuring { onDriver = Bridge.collectOnDriver(spark.sql(line)) } == 0, line)
       (line, onDriver.map(_.toSeq), spark.sql(line).collect().toSeq)
@@ -354,6 +355,35 @@ class ReplSpec extends SparkSpecBase {
     runScript(db, Seq("insert 4 user4 bb@example.com", "select count(*) from users", ".exit"))
     val after = allOnDriver()
     assert(after.head == Seq(Row(4L)))
+  }
+
+  test("lines whose top-K or limit shuffles inside its operator fall back to collect()") {
+    val db = dbDir("local_shuffle"); rm(db)
+    runScript(db, Seq("insert 3 user3 c@example.com", "insert 1 user1 a@example.com",
+      "insert 2 user22 b@example.com", "select count(*) from users", ".exit"))
+    // a multi-row VALUES scan has one partition per row (up to the cores),
+    // which a top-K or limit shuffles into one inside its own operator:
+    // only a job can run that shuffle's map side
+    val values = Seq(
+      "select a from values (3), (1), (2), (5), (4) as t(a) order by a limit 2",
+      "select a from values (3), (1), (2), (5), (4) as t(a) order by a desc limit 3")
+    assert(spark.sparkContext.defaultParallelism > 1)
+    driverAndCollect(values).foreach { case (line, local, collected) =>
+      assert(local.isEmpty, s"run on the driver: $line")
+      assert(collected.nonEmpty, line)
+    }
+    // a union of two users scans: on the driver only with collect()'s rows
+    val unions = Seq(
+      "select id from users union all select id from users order by id limit 3",
+      "select id from users union all select id from users order by id desc limit 4",
+      "select count(*) from (select id from users union all select id from users limit 4)")
+    driverAndCollect(unions).foreach { case (line, local, collected) =>
+      assert(collected.nonEmpty, line)
+      local.foreach(rows => assert(rows == collected, line))
+    }
+    val out = runScript(db, Seq(values.head, unions.head, ".exit"))
+    assert(out == Seq("db > (1)", "(2)", "Executed.", "db > (1)", "(1)", "(2)", "Executed.",
+      "db > "), out)
   }
 
   test("a users-only line failing at run time frees its memory and keeps the session") {
