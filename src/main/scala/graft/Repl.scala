@@ -71,15 +71,20 @@ import graft.core.{Ingest, Meta}
   * is a one-partition local relation over those rows, rebuilt on demand
   * before the next line that goes through Spark (SQL, `.schema`).
   *
-  * A SQL line whose physical plan reads only those driver-held rows
-  * (every leaf a local scan, no exchange, no subquery, one partition
-  * that reads no shuffle: any `users`-only line over a non-empty table)
-  * skips the scheduler. It runs on the REPL's thread through
+  * A SQL line whose physical plan reads only those driver-held rows or
+  * harness tables of one input split each (every leaf a local scan or a
+  * one-partition file scan, no exchange, no subquery, one partition that
+  * reads no shuffle: any `users`-only line over a non-empty table, and
+  * most lines over `nation`, `region` and the other small harness files)
+  * skips the scheduler, as Hive's fetch-task conversion runs a small
+  * query without a MapReduce job. It runs on the REPL's thread through
   * [[Bridge.collectOnDriver]], with no Spark job, and prints the rows
-  * `collect()` would. Such a line starts no SQL execution, so it fires
-  * no `QueryExecutionListener` and no SQL UI event. Every other line (one
-  * that reads a harness view, for example) runs as a normal distributed
-  * plan through `collect()`.
+  * `collect()` would; a line with no `ORDER BY` prints them in the order
+  * of its one partition. Such a line starts no SQL execution, so it fires
+  * no `QueryExecutionListener` and no SQL UI event. Every other line (a
+  * broadcast join, a subquery, a scan of several splits such as
+  * `lineitem` at sf0.1) runs as a normal distributed plan through
+  * `collect()`.
   */
 object Repl {
 

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import java.util.{Collections, LinkedHashMap => JLinkedHashMap, Map => JMap}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.{ShuffleDependency, SparkEnv, TaskContext, TaskContextImpl}
@@ -9,13 +10,15 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
 import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable, CatalogTableType, TemporaryViewRelation}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -28,8 +31,8 @@ import org.apache.spark.util.Utils
   * codegen). Besides the Column ↔ Expression bridge: function
   * registration, temp views over driver-held rows, catalog lookups,
   * hash-partitioned checkpoints, and [[collectOnDriver]], which runs a
-  * plan over driver-held rows on the calling thread. Nothing else in this
-  * repo lives outside `graft.*`. */
+  * plan over driver-held rows or one-split file scans on the calling
+  * thread. Nothing else in this repo lives outside `graft.*`. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -75,16 +78,38 @@ object Bridge {
   def tempView(spark: SparkSession, name: String): Option[AnyRef] =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog.getRawTempView(name)
 
-  /** Negative task attempt ids for [[collectOnDriver]]: the scheduler
-    * numbers its tasks from 0, so no scheduled task shares one. */
-  private val driverAttempts = new AtomicLong(0L)
+  /** Task attempt ids for [[collectOnDriver]]: the scheduler numbers its
+    * tasks from 0, and the `BlockInfoManager` reserves -1 (no writer) and
+    * -1024 (a writer outside any task), so these count down from -1025. */
+  private val driverAttempts = new AtomicLong(-1024L)
+
+  /** Bound row encoders by their unbound form, which compares structurally:
+    * a conf that changes the encoder (`spark.sql.datetime.java8API.enabled`)
+    * changes the key. Binding costs ~3 ms a line; at most 64 are kept. */
+  private val boundEncoders = Collections.synchronizedMap(
+    new JLinkedHashMap[ExpressionEncoder[Row], ExpressionEncoder[Row]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: JMap.Entry[ExpressionEncoder[Row], ExpressionEncoder[Row]]): Boolean = size > 64
+    })
 
   /** The rows of `df`, computed on the calling thread with no Spark job,
-    * when its physical plan reads only rows the driver already holds:
-    * every leaf a `LocalTableScanExec`, no `Exchange`, no subquery, and
-    * one partition whose lineage reads no shuffle. This extends Spark's own rule for local data
-    * (`ConvertToLocalRelation`, `LocalTableScanExec.executeCollect`) to
-    * the aggregate, sort and window operators above a local scan.
+    * when its physical plan reads only rows the driver holds or one input
+    * split per file: every leaf a `LocalTableScanExec` or a
+    * `FileSourceScanExec` of one partition, no `Exchange`, no subquery,
+    * and one partition whose lineage reads no shuffle. This extends
+    * Spark's own rule for local data (`ConvertToLocalRelation`,
+    * `LocalTableScanExec.executeCollect`) to the aggregate, sort and window
+    * operators above a local scan, and, like Hive's fetch-task conversion,
+    * to small file scans: the driver reads at most the one split per file
+    * that one executor task would.
+    *
+    * A frame that reads files is planned again from its logical plan
+    * (where a command that already ran is a `CommandResult` leaf, so no
+    * command runs twice) with each file relation under a shuffle-free
+    * `Repartition(1)` ([[oneSplitPlan]]), so a global aggregate or window
+    * over it plans no Exchange; a frame over a file listing larger than
+    * one split is not, and falls back after one planning. Rows of a line
+    * with no `ORDER BY` come in the order of that one partition.
     *
     * The check reads AQE's initial plan (the input plan after the rules
     * that insert exchanges) before anything runs: `finalPhysicalPlan`
@@ -93,25 +118,61 @@ object Bridge {
     * them.
     *
     * Returns `None`, having run no job, for any other plan; the caller
-    * then collects as usual. No SQL execution is started, so the line
+    * then collects `df` as usual. No SQL execution is started, so the line
     * fires no `QueryExecutionListener` and no SQL UI event. */
   def collectOnDriver(df: DataFrame): Option[Array[Row]] = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val plan = ds.queryExecution.executedPlan
+    val spark = ds.sparkSession
+    // not `queryExecution.analyzed`: that still holds a command `spark.sql`
+    // already ran, and a rebuild of it would run it again (an INSERT
+    // writing its rows twice)
+    val run = oneSplitPlan(spark, ds.logicalPlan)
+      .fold(ds)(classic.Dataset.ofRows(spark, _))
+    val plan = run.queryExecution.executedPlan
     val prepared = plan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }
-    val local = prepared.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]) &&
-      !prepared.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty)
+    val local = !prepared.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty) &&
+      prepared.collectLeaves().forall {
+        case _: LocalTableScanExec => true
+        case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions == 1
+        case _ => false
+      }
     // with no exchange there is no stage to run, so execute() starts no job
     Option.when(local)(plan.execute())
       .filter(rdd => rdd.getNumPartitions == 1 && !readsShuffle(rdd)).map { rdd =>
-        val spark = ds.sparkSession
-        val fromRow = ds.exprEnc
-          .resolveAndBind(ds.logicalPlan.output, spark.sessionState.analyzer).createDeserializer()
+        val fromRow = boundEncoders.computeIfAbsent(ds.exprEnc,
+          _.resolveAndBind(ds.logicalPlan.output, spark.sessionState.analyzer))
+          .createDeserializer()
         runTask(spark, task => rdd.iterator(rdd.partitions.head, task).map(fromRow).toArray)
       }
+  }
+
+  /** `plan` with each file relation under a shuffle-free `Repartition(1)`,
+    * when every leaf is a local or file relation, at least one reads files,
+    * and each file relation's listing fits one input split: its files,
+    * with Spark's open cost between them, are no larger than
+    * `FilePartition.maxSplitBytes`, so the scan packs them into one
+    * partition. Otherwise `None`, and the plan is used as it is. */
+  private def oneSplitPlan(spark: classic.SparkSession, plan: LogicalPlan): Option[LogicalPlan] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    def oneSplit(files: HadoopFsRelation): Boolean = {
+      val listing = files.location.listFiles(Nil, Nil)
+      val sizes = listing.flatMap(_.files.map(_.getLen))
+      sizes.nonEmpty &&
+        sizes.sum + openCost * (sizes.size - 1) <= FilePartition.maxSplitBytes(spark, listing)
+    }
+    val leaves = plan.collectLeaves()
+    val reads = leaves.exists(_.isInstanceOf[LogicalRelation]) && leaves.forall {
+      case _: LocalRelation => true
+      case LogicalRelation(files: HadoopFsRelation, _, _, _, _) => oneSplit(files)
+      case _ => false
+    }
+    Option.when(reads)(plan.transformUp {
+      case r @ LogicalRelation(_: HadoopFsRelation, _, _, _, _) =>
+        Repartition(1, shuffle = false, r)
+    })
   }
 
   /** Whether `rdd`'s lineage reads a shuffle. `TakeOrderedAndProjectExec`
@@ -127,8 +188,10 @@ object Bridge {
   /** Runs `body` on the calling thread as the one task of a stage, as an
     * executor would: under a `TaskContextImpl` with its own
     * `TaskMemoryManager` and a negative attempt id, with the session's SQL
-    * conf. The task is then marked completed, or failed, and its execution
-    * memory freed. */
+    * conf, and registered with the `BlockManager`, whose lock table a scan
+    * needs to read its Hadoop-conf broadcast. The task is then marked
+    * completed, or failed, and, as `Task.run` and the executor do, its
+    * block locks are released and its execution memory freed. */
   private def runTask[T](spark: classic.SparkSession, body: TaskContextImpl => T): T = {
     val env = SparkEnv.get
     val attempt = driverAttempts.decrementAndGet()
@@ -138,6 +201,7 @@ object Bridge {
       taskMemoryManager = memory,
       localProperties = Utils.cloneProperties(spark.sparkContext.getLocalProperties),
       metricsSystem = env.metricsSystem, taskMetrics = TaskMetrics.empty)
+    env.blockManager.registerTask(attempt)
     try TaskContext.withTaskContext(task) {
       SQLConf.withExistingConf(spark.sessionState.conf) {
         val result = try body(task) catch {
@@ -148,7 +212,10 @@ object Bridge {
         task.markTaskCompleted(None)
         result
       }
-    } finally memory.cleanUpAllAllocatedMemory()
+    } finally {
+      env.blockManager.releaseAllLocksForTask(attempt)
+      memory.cleanUpAllAllocatedMemory()
+    }
   }
 
   /** Waits until every event posted so far reached its listeners

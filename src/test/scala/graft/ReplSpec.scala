@@ -5,6 +5,7 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.storage.BlockLocks
 
 import graft.core.Ingest
 
@@ -275,18 +276,22 @@ class ReplSpec extends SparkSpecBase {
       "db > "))
   }
 
-  test("job counts: inserts run none, a users aggregate and a reopen one each") {
-    // each line's Spark jobs are counted under the group its tag names;
-    // opening the db runs under "open"
-    def session(db: String, lines: (String, String)*): (Seq[String], Map[String, Int]) = {
-      val bos = new ByteArrayOutputStream()
-      val jobs = jobsByGroup {
-        jobGroup("open")
-        val in = lines.iterator.map { case (tag, line) => jobGroup(tag); line }
-        Repl.loop(spark, db, None, in, new PrintStream(bos, true, "UTF-8"))
-      }
-      (bos.toString("UTF-8").split("\n", -1).toSeq, jobs)
+  /** One REPL session over tagged lines: its output, and each line's Spark
+    * jobs counted under the group its tag names; opening the db (and
+    * registering the views) runs under "open". */
+  private def tagged(db: String, sfDir: Option[String], lines: (String, String)*)
+      : (Seq[String], Map[String, Int]) = {
+    val bos = new ByteArrayOutputStream()
+    val jobs = jobsByGroup {
+      jobGroup("open")
+      val in = lines.iterator.map { case (tag, line) => jobGroup(tag); line }
+      Repl.loop(spark, db, sfDir, in, new PrintStream(bos, true, "UTF-8"))
     }
+    (bos.toString("UTF-8").split("\n", -1).toSeq, jobs)
+  }
+
+  test("job counts: inserts run none, a users aggregate and a reopen one each") {
+    def session(db: String, lines: (String, String)*) = tagged(db, None, lines: _*)
     val db = dbDir("jobs"); rm(db)
     val inserts = (1 to 50).map(i => "insert" -> s"insert $i user$i person$i@example.com")
     val (out, jobs) = session(db, inserts ++ Seq(
@@ -409,23 +414,152 @@ class ReplSpec extends SparkSpecBase {
 
   test("lines over harness tables still run jobs and return their rows") {
     val db = dbDir("local_fallback"); rm(db)
-    val in = Seq("insert 3 user3 c@example.com", "insert 7 user7 d@example.com")
-    val lines = Seq(
+    val (out, jobs) = tagged(db, Some(sf0001),
+      "insert" -> "insert 3 user3 c@example.com", "insert" -> "insert 7 user7 d@example.com",
       "join" -> ("select u.username, n.n_name from users u join nation n " +
         "on u.id = n.n_nationkey order by u.id"),
-      "nation" -> "select count(*) from nation where n_regionkey = 1")
-    val bos = new ByteArrayOutputStream()
-    val jobs = jobsByGroup {
-      val it = in.iterator ++ lines.iterator.map { case (tag, line) => jobGroup(tag); line } ++
-        Iterator(".exit")
-      Repl.loop(spark, db, Some(sf0001), it, new PrintStream(bos, true, "UTF-8"))
-    }
-    val out = bos.toString("UTF-8").split("\n", -1).toSeq
+      "nation" -> "select count(*) from nation where n_regionkey = 1",
+      "nr" -> ("select n_name, r_name from nation join region on n_regionkey = r_regionkey " +
+        "where n_nationkey < 2 order by n_name"),
+      "exit" -> ".exit")
     assert(out.containsSlice(Seq("db > (user3, NATION_3)", "(user7, NATION_7)", "Executed.")),
       out)
     assert(out.containsSlice(Seq("db > (5)", "Executed.")), out)
+    assert(out.containsSlice(Seq("db > (NATION_0, AFRICA)", "(NATION_1, AMERICA)", "Executed.")),
+      out)
     assert(jobs("join") > 0, jobs)
-    assert(jobs("nation") > 0, jobs)
+    assert(jobs("nation") == 0, jobs) // one input split, read on the REPL's thread
+    assert(jobs("nr") > 0, jobs) // a broadcast join
+  }
+
+  /** Whether [[BlockLocks]] is back at `level` within 10 s: the context
+    * cleaner removes blocks, under a brief write lock, as it goes. */
+  private def locksBackTo(level: (Int, Long)): Boolean = {
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (BlockLocks() != level && System.nanoTime() < deadline) Thread.sleep(10)
+    BlockLocks() == level
+  }
+
+  /** Lines over one-split harness tables: a line with a final `ORDER BY`
+    * returns collect()'s rows in collect()'s order; any other line, with
+    * no shuffle on the driver path, the same rows in one-partition order. */
+  private val harnessLines = Seq(
+    "select n_name from nation where n_regionkey = 1",
+    "select count(*) from nation where n_regionkey = 1",
+    "select n_regionkey, count(*), min(n_name) from nation group by n_regionkey",
+    "select distinct n_regionkey from nation",
+    "select n_nationkey, n_name from nation order by n_name desc",
+    "select n_name, row_number() over (partition by n_regionkey order by n_nationkey) from nation",
+    "select * from nation limit 3",
+    "select * from region",
+    "select r_regionkey from region where r_name = 'ASIA'",
+    "select count(*) from region",
+    "select o_orderstatus, count(*), max(o_totalprice) from orders group by 1 order by 1",
+    "select o_orderkey, o_orderdate from orders where o_orderpriority = '1-URGENT' " +
+      "order by o_orderkey limit 5",
+    "select count(distinct o_custkey) from orders",
+    "select event_type, count(*) from events group by event_type order by event_type",
+    "select event_id, ts from events where event_type = 'error' order by ts, event_id limit 4",
+    "select max(ts), min(value) from events",
+    "select user_id, sum(value) over (partition by user_id order by event_id) from events " +
+      "where user_id < 20")
+
+  private val FinalOrder = """(?i)order by [^)]*$""".r
+
+  test("lines over one-split harness tables return collect()'s rows on the driver") {
+    SqlCatalog.registerViews(spark, sf0001)
+    val level = BlockLocks()
+    harnessLines.iterator.flatMap(l => driverAndCollect(Seq(l))).foreach {
+      case (line, local, collected) =>
+        assert(local.isDefined, s"not run on the driver: $line")
+        assert(collected.nonEmpty, line)
+        if (FinalOrder.findFirstIn(line).isDefined) assert(local.get == collected, line)
+        else assert(local.get.sortBy(_.toString) == collected.sortBy(_.toString), line)
+        assert(locksBackTo(level), s"$line left block locks: ${BlockLocks()} vs $level")
+    }
+  }
+
+  test("harness lines over several splits, or with a subquery, fall back to collect()") {
+    val db = dbDir("split_fallback"); rm(db)
+    SqlCatalog.registerViews(spark, sf0001)
+    val subquery = "select n_name from nation " +
+      "where n_regionkey = (select max(r_regionkey) from region) order by n_name limit 2"
+    val split = "select n_name from nation where n_regionkey = 2 order by n_name"
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    def session(lines: (String, String)*) = tagged(db, Some(sf0001), lines: _*)
+    /** What the REPL prints for `line`'s rows, as collect() returns them. */
+    def printed(line: String): Seq[String] = {
+      val rows = spark.sql(line).collect().toSeq.map(_.toSeq.mkString("(", ", ", ")"))
+      assert(rows.nonEmpty, line)
+      ("db > " + rows.head) +: rows.tail :+ "Executed."
+    }
+    val (out, jobs) = session("subquery" -> subquery, "exit" -> ".exit")
+    assert(out == printed(subquery) :+ "db > ", out)
+    assert(jobs("subquery") > 0, jobs)
+    assert(driverAndCollect(Seq(subquery)).head._2.isEmpty)
+    spark.conf.set(key, "512") // nation.parquet is ~2.7 KB: several splits
+    try {
+      assert(spark.table("nation").rdd.getNumPartitions > 1)
+      val unordered = "select n_name from nation where n_regionkey = 2"
+      driverAndCollect(Seq(split, unordered, "select count(*) from nation")).foreach {
+        case (line, local, collected) =>
+          assert(local.isEmpty, s"run on the driver: $line")
+          assert(collected.nonEmpty, line)
+      }
+      val (splitOut, splitJobs) = session("split" -> split, "exit" -> ".exit")
+      assert(splitOut == printed(split) :+ "db > ", splitOut)
+      assert(splitJobs("split") > 0, splitJobs)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("an INSERT … SELECT over a one-split table writes its rows once") {
+    val db = dbDir("insert_select"); rm(db)
+    val table = "repl_insert_select"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    // a previously-failed run can leave an orphan managed-table location
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"spark-warehouse/$table"))
+    try {
+      // upper case, so the REPL hands the INSERT to spark.sql, not to Ingest
+      val out = runScript(db, Seq(
+        s"CREATE TABLE $table (a BIGINT) USING parquet",
+        s"INSERT INTO $table SELECT n_nationkey FROM nation",
+        s"select count(*) from $table",
+        ".exit"), sfDir = Some(sf0001))
+      assert(out.containsSlice(Seq("db > (25)", "Executed.")), out)
+      assert(spark.table(table).count() == 25)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("a harness line failing at run time frees its memory and locks and keeps the session") {
+    val db = dbDir("file_fail"); rm(db)
+    spark.sparkContext // SparkEnv starts with the session
+    val memory = SparkEnv.get.memoryManager
+    SqlCatalog.registerViews(spark, sf0001)
+    val level = (memory.executionMemoryUsed, BlockLocks())
+    val seen = scala.collection.mutable.Map[String, (Long, (Int, Long))]()
+    val lines = Seq(
+      "insert 1 user1 a@example.com",
+      // ANSI: 'NATION_0' is no int; the sort holds memory when the cast throws
+      "select cast(n_name as int) from nation order by n_nationkey",
+      "select cast(n_name as int) from nation",
+      "select n_name from nation where n_nationkey = 3",
+      "select",
+      ".exit")
+    var out = Seq.empty[String]
+    val jobs = jobsDuring {
+      out = runScript(db, lines.to(LazyList).map { l =>
+        if (locksBackTo(level._2)) seen(l) = (memory.executionMemoryUsed, BlockLocks())
+        l
+      }, sfDir = Some(sf0001))
+    }
+    assert(jobs == 0, "every line runs on the REPL's thread")
+    assert(out.count(_.startsWith("db > Error: ")) == 2, out)
+    assert(out.containsSlice(Seq("db > (NATION_3)", "Executed.")), out)
+    assert(out.containsSlice(Seq("db > (1, user1, a@example.com)", "Executed.")), out)
+    // each line is seen after the one before it ran
+    for (l <- lines.drop(2))
+      assert(seen.get(l).contains(level), s"before '$l': ${seen.get(l)} vs $level")
   }
 
   test("a db directory written by Spark's writer opens in insertion order") {
