@@ -221,21 +221,6 @@ object Advanced {
       .orderBy(col("p_type"))
   }
 
-  /** Null-semantics pack: coalesce, nullif, null-safe equality (<=>),
-    * and null-aware counts over a column made sparsely null. */
-  val fnNull: Q = (s, d) => {
-    val c = T.customer(s, d)
-      .withColumn("bal_or_null",
-        when(col("c_custkey") % 3 === 0, lit(null).cast("double"))
-          .otherwise(col("c_acctbal")))
-    c.select(col("c_custkey"),
-        round(coalesce(col("bal_or_null"), lit(0.0)), 2).as("bal0"),
-        nullif(col("c_mktsegment"), lit("BUILDING")).as("seg_nb"),
-        (col("bal_or_null") <=> lit(null).cast("double")).as("is_null_safe"),
-        col("bal_or_null").isNull.as("is_null"))
-      .orderBy(col("c_custkey"))
-  }
-
   /** Deterministic hash sampling — the scale-safe alternative to
     * `TABLESAMPLE` (whose result depends on partitioning): keep rows whose
     * portable 48-bit md5 hash of the key ≡ 0 (mod 10). Same recipe works
@@ -941,45 +926,6 @@ object Advanced {
       .orderBy(col("user_id"), col("session_no"))
   }
 
-  /** Correlated EXISTS / NOT EXISTS — the subquery surface a SQL front
-    * door must take, DECLARED through `spark.sql` so Catalyst's
-    * RewritePredicateSubquery is the implementation: both subqueries
-    * decorrelate to hash joins (EXISTS → left semi, NOT EXISTS → left
-    * anti — PlanSpec pins both and that no per-row subquery survives).
-    * At 100 TB a correlated subquery executed per row is death by a
-    * million scans; decorrelation makes it two equi joins. */
-  val subqExists: Q = (s, d) => {
-    Seq("customer", "orders").foreach { t =>
-      T(s, d, t).createOrReplaceTempView(t)
-    }
-    s.sql("""
-      SELECT c_custkey, c_name FROM customer c
-      WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-                    AND o.o_totalprice > 400000)
-        AND NOT EXISTS (SELECT 1 FROM orders o2
-                        WHERE o2.o_custkey = c.c_custkey
-                        AND o2.o_orderstatus = 'F')
-      ORDER BY c_custkey""")
-  }
-
-  /** Correlated LATERAL subquery with ORDER BY + LIMIT — top-2 suppliers
-    * per nation, spelled the way an analyst writes it. Catalyst
-    * decorrelates to `WindowGroupLimit` (a bounded per-group top-k that
-    * keeps ≤ k rows per group at the MAP side, before the shuffle) + one
-    * equi join — the per-nation subquery never executes per row, and
-    * nothing sorts a whole group (PlanSpec pins WindowGroupLimit). */
-  val subqLateral: Q = (s, d) => {
-    Seq("nation", "supplier").foreach { t =>
-      T(s, d, t).createOrReplaceTempView(t)
-    }
-    s.sql("""
-      SELECT n_name, s_name, s_acctbal FROM nation n,
-      LATERAL (SELECT s_name, s_acctbal FROM supplier
-               WHERE s_nationkey = n.n_nationkey
-               ORDER BY s_acctbal DESC, s_name LIMIT 2)
-      ORDER BY n_name, s_acctbal DESC, s_name""")
-  }
-
   /** NOT IN vs NOT EXISTS under NULLs — the three-valued-logic trap
     * every SQL engine must honor: `x NOT IN (subquery)` is UNKNOWN (not
     * TRUE) for every x the moment the subquery yields a single NULL, so
@@ -1464,52 +1410,6 @@ object Advanced {
       .orderBy(col("event_type"))
   }
 
-  /** SEQUENCE-PATTERN matching over per-user journeys — the CEP /
-    * MATCH_RECOGNIZE shape ([[eventsFunnel]] tests ONE fixed ordered
-    * path; this matches arbitrary REGULAR EXPRESSIONS over the event
-    * alphabet): each user's journey compresses to a string of event-type
-    * initials (c/e/p/s/v — distinct by construction) in (ts, event_id)
-    * order, and three behavioral patterns are counted per user in one
-    * pass — signup→eventual purchase, ≥2-error burst, view→purchase
-    * with only clicks/errors between. Patterns stay in the
-    * leftmost-greedy common subset where Java regex and RE2 agree.
-    *
-    * 100 TB shape: ONE shuffle on user_id builds every journey
-    * (per-user strings are session-bounded); all three patterns evaluate
-    * per-row on that pass (no per-pattern rescan), and the result
-    * crosses the final exchange as |patterns| rows via stack. */
-  val eventsPattern: Q = (s, d) => {
-    val j = T.events(s, d)
-      .groupBy(col("user_id"))
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("ts"), col("event_id"),
-          col("event_type")))),
-        x => substring(x.getField("event_type"), 1, 1)), "").as("journey"))
-    val perUser = j.select(
-      size(expr("regexp_extract_all(journey, 's.*p', 0)")).as("m1"),
-      size(expr("regexp_extract_all(journey, 'ee+', 0)")).as("m2"),
-      size(expr("regexp_extract_all(journey, 'v[ce]*p', 0)")).as("m3"))
-    val one = perUser.agg(
-      count(lit(1)).as("total"),
-      sum(when(col("m1") > 0, 1L).otherwise(0L)).as("u1"),
-      sum(col("m1").cast("long")).as("c1"),
-      sum(when(col("m2") > 0, 1L).otherwise(0L)).as("u2"),
-      sum(col("m2").cast("long")).as("c2"),
-      sum(when(col("m3") > 0, 1L).otherwise(0L)).as("u3"),
-      sum(col("m3").cast("long")).as("c3"))
-    one.select(expr(
-      """stack(3,
-        |  'error_burst', u2, c2,
-        |  'signup_to_purchase', u1, c1,
-        |  'view_to_purchase_direct', u3, c3) AS (pattern, n_users, n_matches)
-        |""".stripMargin),
-      col("total"))
-      .select(col("pattern"), col("n_users"), col("n_matches"),
-        round(col("n_users").cast("double") / col("total").cast("double"), 6)
-          .as("share"))
-      .orderBy(col("pattern"))
-  }
-
   /** GRID-BLOCKED SPATIAL JOIN — the distributed point-in-region join
     * (the GeoSpark/Sedona partitioning shape, reduced to its relational
     * core): points and query rectangles both map to fixed 0.1-wide grid
@@ -1689,61 +1589,9 @@ object Advanced {
       .orderBy(col("user_id"))
   }
 
-  /** DAY-OF-WEEK SEASONALITY profile — the seasonal index
-    * [[eventsForecast]]'s same-weekday model implicitly assumes, made
-    * explicit: per (type, weekday) the event count, the share of the
-    * type's volume, and the seasonal INDEX share·7 (1.0 = flat; the
-    * capacity-planning multiplier). Exact counts; one double division
-    * per cell, rounded. Weekday numbering pinned to Sunday=0 (Spark's
-    * dayofweek is 1-based, DuckDB's 0-based — the subtraction is the
-    * dialect bridge).
-    *
-    * 100 TB shape: one two-phase hash aggregate to the |types|·7 grid;
-    * the per-type totals join ON the grid. */
-  val aggSeasonality: Q = (s, d) => {
-    val grid = T.events(s, d)
-      .groupBy(col("event_type"),
-        (dayofweek(to_date(col("ts"))) - 1).cast("long").as("dow"))
-      .agg(count(lit(1)).as("n"))
-    val totals = grid.groupBy(col("event_type")).agg(sum(col("n")).as("nt"))
-    grid.join(totals, "event_type")
-      .select(col("event_type"), col("dow"), col("n"),
-        round(col("n").cast("double") / col("nt").cast("double"), 6)
-          .as("share"),
-        round(col("n").cast("double") / col("nt").cast("double") * 7.0, 4)
-          .as("seasonal_index"))
-      .orderBy(col("event_type"), col("dow"))
-  }
-
-  /** PERIOD-OVER-PERIOD GROWTH — the day-over-day and week-over-week
-    * deltas every metrics dashboard leads with ([[aggOhlc]] reports the
-    * day's shape, [[aggSeasonality]] the weekly profile; this reports
-    * CHANGE): per event type, daily exact-decimal value (dsum), then
-    * lag-1 and lag-7 percent changes over the type-partitioned day
-    * window — NULL where the comparison period is missing or zero, never
-    * a fabricated 0%.
-    *
-    * 100 TB shape: the corpus folds map-side onto the (type × day) grid;
-    * both lags ride ONE model-sized window. */
-  val aggPeriodGrowth: Q = (s, d) => {
-    val daily = T.events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(dsum(col("value")).as("rev"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-    daily
-      .withColumn("prev1", lag(col("rev"), 1).over(w))
-      .withColumn("prev7", lag(col("rev"), 7).over(w))
-      .select(col("event_type"), col("day"), col("rev"),
-        when(col("prev1") > 0,
-          round((col("rev") - col("prev1")) / col("prev1"), 6)).as("dod_pct"),
-        when(col("prev7") > 0,
-          round((col("rev") - col("prev7")) / col("prev7"), 6)).as("wow_pct"))
-      .orderBy(col("event_type"), col("day"))
-  }
-
   /** CLASSICAL ADDITIVE DECOMPOSITION (STL-lite) — value = trend +
     * seasonal + residual, the monitoring split run before alarming on a
-    * raw series ([[aggSeasonality]] profiles the weekly shape,
+    * raw series (`agg_seasonality` profiles the weekly shape,
     * [[eventsAnomaly]] flags z-outliers; this SEPARATES the components so
     * each can be judged alone): per type, daily exact-decimal value;
     * trend = 7-day centered moving average over a RANGE frame keyed on
@@ -1825,9 +1673,7 @@ object Advanced {
 
   val queries: Map[String, Q] = Map(
     "events_ltv" -> eventsLtv,
-    "agg_period_growth" -> aggPeriodGrowth,
     "events_trend_decompose" -> eventsTrendDecompose,
-    "agg_seasonality" -> aggSeasonality,
     "events_rfm" -> eventsRfm,
     "events_cohort" -> eventsCohort,
     "events_features" -> eventsFeatures,
@@ -1837,7 +1683,6 @@ object Advanced {
     "join_spatial" -> joinSpatial,
     "events_forecast" -> eventsForecast,
     "agg_ab_test" -> aggAbTest,
-    "events_pattern" -> eventsPattern,
     "events_transition" -> eventsTransition,
     "agg_gini" -> aggGini,
     "agg_conditional" -> aggConditional,
@@ -1852,7 +1697,6 @@ object Advanced {
     "window_range_frame" -> windowRangeFrame,
     "subq_scalar" -> subqScalar,
     "agg_pivot" -> aggPivot,
-    "fn_null" -> fnNull,
     "sample_hash" -> sampleHash,
     "sample_stratified" -> sampleStratified,
     "sample_weighted" -> sampleWeighted,
@@ -1882,9 +1726,7 @@ object Advanced {
     "sample_reservoir" -> sampleReservoir,
     "agg_linreg" -> aggLinreg,
     "events_concurrency" -> eventsConcurrency,
-    "subq_exists" -> subqExists,
     "subq_notin_null" -> subqNotinNull,
-    "subq_lateral" -> subqLateral,
     "events_streak" -> eventsStreak,
     "agg_argmax" -> aggArgmax,
     "join_interval" -> joinInterval,

@@ -91,20 +91,6 @@ object Composite {
         round(col("c_acctbal"), 2).as("c_acctbal"), col("n_name"), col("revenue"))
   }
 
-  /** TPC-H Q6 shape (forecasting revenue change): pure filter + one-row
-    * aggregate over the fact table — zero joins, zero wide shuffles. At
-    * 100 TB this is the scan-speed benchmark: all four predicates push to
-    * the parquet reader, the partial sums combine map-side, and exactly
-    * one row crosses the final exchange. */
-  val tpchQ6: Q = (s, d) => {
-    val y0 = lit("1995-01-01").cast("timestamp")
-    val y1 = lit("1996-01-01").cast("timestamp")
-    T.lineitem(s, d)
-      .filter(col("l_shipdate") >= y0 && col("l_shipdate") < y1 &&
-        col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-      .agg(dsum(col("l_extendedprice") * col("l_discount")).as("revenue"))
-  }
-
   /** TPC-H Q12 shape (shipping-mode priority): harness lineitem has no
     * l_shipmode/l_commitdate, so the adapted form keeps Q12's plan shape
     * exactly — fact-to-fact join + conditional two-way counts — grouping
@@ -272,22 +258,6 @@ object Composite {
       .orderBy(col("o_year"))
   }
 
-  /** TPC-H Q13 shape (customer order-count distribution): left join
-    * customer→(filtered) orders, count per customer, then histogram the
-    * counts. Two shuffles total — custkey, then the tiny count key — and
-    * the left join keeps zero-order customers as count 0. */
-  val tpchQ13: Q = (s, d) => {
-    val o = T.orders(s, d).filter(col("o_orderpriority") =!= "1-URGENT")
-      .select(col("o_orderkey"), col("o_custkey"))
-    T.customer(s, d).select(col("c_custkey"))
-      .join(o, col("c_custkey") === col("o_custkey"), "left")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy(col("c_count"))
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-  }
-
   /** TPC-H Q15 shape (top supplier): quarterly revenue per supplier, keep
     * the max. The max is a 1-row aggregate joined back as an EQUI key
     * (BroadcastHashJoin, not a nested-loop) and the winner set — by
@@ -366,28 +336,6 @@ object Composite {
       .groupBy((col("c_nationkey") % 10).cast("long").as("cntrycode"))
       .agg(count(lit(1)).as("numcust"), dsum(col("c_acctbal")).as("totacctbal"))
       .orderBy(col("cntrycode"))
-  }
-
-  /** TPC-H Q1 shape (pricing summary report): the canonical full-scan
-    * 8-metric rollup per (returnflag, linestatus). 100 TB plan: pure
-    * pushed-down scan + two-phase hash aggregate onto a 6-group key — the
-    * only exchange carries 6 rows. Averages use the decimal-sum/round
-    * discipline ([[graft.core.Numeric.davg]]) so the doubles are
-    * bit-identical engine-to-engine. */
-  val tpchQ1: Q = (s, d) => {
-    val cutoff = lit("1998-09-01").cast("timestamp")
-    T.lineitem(s, d).filter(col("l_shipdate") <= cutoff)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice")).as("sum_base_price"),
-        dsum(revenue).as("sum_disc_price"),
-        dsum(revenue * (lit(1.0) + col("l_tax"))).as("sum_charge"),
-        davg(col("l_quantity")).as("avg_qty"),
-        davg(col("l_extendedprice")).as("avg_price"),
-        davg(col("l_discount")).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
 
   /** TPC-H Q2 shape (min-cost supplier): the harness has no partsupp, so
@@ -561,7 +509,6 @@ object Composite {
   }
 
   val queries: Map[String, Q] = Map(
-    "tpch_q1" -> tpchQ1,
     "tpch_q2" -> tpchQ2,
     "tpch_q9" -> tpchQ9,
     "tpch_q11" -> tpchQ11,
@@ -571,12 +518,10 @@ object Composite {
     "tpch_q3" -> tpchQ3,
     "tpch_q4" -> tpchQ4,
     "tpch_q5" -> tpchQ5,
-    "tpch_q6" -> tpchQ6,
     "tpch_q7" -> tpchQ7,
     "tpch_q8" -> tpchQ8,
     "tpch_q10" -> tpchQ10,
     "tpch_q12" -> tpchQ12,
-    "tpch_q13" -> tpchQ13,
     "tpch_q14" -> tpchQ14,
     "tpch_q15" -> tpchQ15,
     "tpch_q17" -> tpchQ17,

@@ -710,46 +710,6 @@ object Curation {
 
   private def corpusSql: String = LlmPipeline.corpusSql
 
-  /** CORPUS DATA CARD — the one-pass per-language profile every dataset
-    * release ships (the "datasheet" numbers: how much data, how long,
-    * how duplicated, where from): docs, tokens, exact mean chars,
-    * distinct-content fraction (48-bit content hash — the `dedup_exact`
-    * granularity), and the dominant source with its share. One row per
-    * language; every number derivable by a reader holding only the
-    * parquet.
-    *
-    * 100 TB shape: per-doc stats are map-side; one (lang) aggregate and
-    * one (lang, source) aggregate (both partial-aggregated) carry
-    * model-sized grids; the dominant source resolves with a per-lang
-    * window on the (lang, source) grid. */
-  val corpusCard: Q = (s, d) => {
-    val per = T.documents(s, d).select(col("lang"), col("source"),
-      col("n_chars"), size(split(col("text"), " ")).cast("long").as("toks"),
-      h48(col("text")).as("ch"))
-    val base = per.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"),
-        sum(col("n_chars")).as("sum_chars"),
-        countDistinct(col("ch")).as("n_distinct"))
-    val bySrc = per.groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("ns"))
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("ns").desc, col("source"))
-    val top = bySrc.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("lang"), col("source").as("top_source"),
-        col("ns").as("top_source_docs"))
-    base.join(top, "lang")
-      .select(col("lang"), col("n_docs"), col("n_tokens"),
-        round(col("sum_chars").cast("double") / col("n_docs").cast("double"), 2)
-          .as("avg_chars"),
-        round(col("n_distinct").cast("double") / col("n_docs").cast("double"), 6)
-          .as("distinct_frac"),
-        col("top_source"),
-        round(col("top_source_docs").cast("double")
-          / col("n_docs").cast("double"), 6).as("top_source_share"))
-      .orderBy(col("lang"))
-  }
-
   val oracles: Map[String, String] = Map(
     // coverage curve: strictly-prior-count ranks on the vocab grid,
     // conditional band sums, three UNION ALL rows (no stack in DuckDB)

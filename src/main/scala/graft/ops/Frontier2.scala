@@ -465,7 +465,7 @@ object Frontier2 {
   val metaLineage: Q = (s, d) => {
     val subjects: Seq[(String, Q)] = Seq(
       "tpch_q3" -> Composite.queries("tpch_q3"),
-      "agg_hash" -> Relational.aggHash,
+      "agg_hash" -> graft.SqlCatalog.sql("agg_hash"),
       "window_lag" -> Relational.windowLag)
     val rows = subjects.flatMap { case (qn, fn) =>
       graft.core.Lineage.of(fn(s, d)).map { case (o, t, c) => (qn, o, t, c) }

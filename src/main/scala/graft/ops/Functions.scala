@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.core.{Tables => T}
 
@@ -18,12 +17,6 @@ import graft.core.{Tables => T}
 object Functions {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Per-row exact 2-decimal rounding of a double expression: decimal
-    * round-trip keeps Spark and DuckDB bit-identical (see
-    * [[graft.core.Numeric]]). */
-  private def d2(e: Column): Column =
-    round(e.cast(DecimalType(20, 8)), 2).cast(DoubleType)
-
   /** String pack: upper/lower/substring/length/concat/replace/LIKE —
     * includes R3's length guard (`db.cpp:416-419`) as `length()`. */
   val fnString: Q = (s, d) =>
@@ -37,59 +30,6 @@ object Functions {
       regexp_replace(col("p_name"), " ", "_").as("name_snake"),
       col("p_name").like("%a%").as("has_a"))
       .orderBy(col("p_partkey"))
-
-  /** Date pack: year/month/day/quarter/date_trunc/datediff. */
-  val fnDate: Q = (s, d) =>
-    T.orders(s, d).select(
-      col("o_orderkey"),
-      year(col("o_orderdate")).cast("long").as("y"),
-      month(col("o_orderdate")).cast("long").as("m"),
-      dayofmonth(col("o_orderdate")).cast("long").as("dom"),
-      quarter(col("o_orderdate")).cast("long").as("q"),
-      date_trunc("month", col("o_orderdate")).as("month_start"),
-      datediff(col("o_orderdate"), lit("1995-01-01").cast("date"))
-        .cast("long").as("days_since"))
-      .orderBy(col("o_orderkey"))
-
-  /** Math pack: the revenue expression + abs/ceil/floor/sqrt — all
-    * IEEE-exact or decimal-rounded, so engine-portable. */
-  val fnMath: Q = (s, d) =>
-    T.lineitem(s, d).select(
-      col("l_orderkey"),
-      col("l_linenumber"),
-      d2(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),
-      abs(col("l_discount") - 0.05).as("disc_dev"),
-      ceil(col("l_extendedprice")).as("price_ceil"),
-      floor(col("l_extendedprice")).as("price_floor"),
-      sqrt(col("l_quantity")).as("qty_sqrt"),
-      (col("l_tax") * col("l_tax")).as("tax_sq"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Array pack over the embedding vectors: size / element access /
-    * higher-order aggregate (L2 norm, mean) — ArrayType survives the
-    * whole pipeline without UDFs. */
-  val fnArray: Q = (s, d) =>
-    T.embeddings(s, d).select(
-      col("vec_id"),
-      size(col("embedding")).cast("long").as("n_dims"),
-      element_at(col("embedding"), 1).as("e0"),
-      round(sqrt(aggregate(col("embedding"), lit(0.0),
-        (acc, x) => acc + x.cast("double") * x.cast("double"))), 6).as("l2_norm"),
-      round(aggregate(col("embedding"), lit(0.0),
-        (acc, x) => acc + x.cast("double")) / size(col("embedding")), 6).as("mean_val"))
-      .orderBy(col("vec_id"))
-
-  /** JSON pack: extract `props.k` (string JSON column) two ways —
-    * get_json_object path and from_json with schema — filter on it. */
-  val fnJson: Q = (s, d) =>
-    T.events(s, d).select(
-      col("event_id"),
-      col("event_type"),
-      get_json_object(col("props"), "$.k").cast("long").as("k_val"),
-      from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
-        .getField("k").cast("long").as("k_struct"))
-      .filter(col("k_val") > 50)
-      .orderBy(col("event_id"))
 
   /** Map pack: per-user map(event_type → count), built then exploded —
     * MapType round-trips through an aggregation. */
@@ -119,41 +59,6 @@ object Functions {
         "metric", "value")
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("metric"))
 
-  /** Bitwise pack: AND / OR / XOR / NOT / shifts / popcount over the key
-    * columns — integer-domain operations are engine-exact by nature, the
-    * only portability care is dialect spelling (Spark `^` is XOR where
-    * DuckDB's is power; the oracle uses DuckDB's `xor()`). All codegen'd
-    * built-ins — bit tricks stay inside whole-stage codegen. */
-  val fnBitwise: Q = (s, d) =>
-    T.lineitem(s, d)
-      .filter(col("l_orderkey") < 200)
-      .select(
-        col("l_orderkey"), col("l_linenumber"),
-        col("l_orderkey").bitwiseAND(lit(255L)).as("k_and"),
-        col("l_orderkey").bitwiseOR(lit(4096L)).as("k_or"),
-        col("l_orderkey").bitwiseXOR(col("l_partkey")).as("k_xor"),
-        expr("~l_orderkey").as("k_not"),
-        shiftleft(col("l_orderkey"), 3).as("k_shl"),
-        shiftright(col("l_partkey"), 2).as("k_shr"),
-        expr("bit_count(l_partkey)").cast("int").as("k_pop"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Regex pack: group extract, match counting, backreference swap, RLIKE
-    * — restricted to syntax Java regex and RE2 parse identically (char
-    * classes, anchors, alternation; no backtracking constructs). The
-    * backreference SPELLING differs per dialect (Spark `$1`, DuckDB `\1`)
-    * so the SQL front door carries a Spark-dialect text. All codegen'd
-    * built-ins — at 100 TB regex evaluation fuses into the scan. */
-  val fnRegex: Q = (s, d) =>
-    T.part(s, d).select(
-      col("p_partkey"),
-      regexp_extract(col("p_name"), "([a-z]+)$", 1).as("noun"),
-      regexp_extract(col("p_name"), "^([a-z]+)", 1).as("adj"),
-      regexp_count(col("p_name"), lit("[aeiou]")).cast("long").as("n_vowels"),
-      regexp_replace(col("p_name"), "^([a-z]+) ([a-z]+)$", "$2 $1").as("swapped"),
-      col("p_name").rlike("^(small|large)").as("is_sized"))
-      .orderBy(col("p_partkey"))
-
   /** URL pack: structured extraction (host / path / query param) from a
     * URL column via the native `parse_url`. The harness tables carry no
     * URLs, so the query PLANTS one deterministically from key columns —
@@ -172,27 +77,6 @@ object Functions {
         parse_url(col("url"), lit("PATH")).as("path"),
         parse_url(col("url"), lit("QUERY"), lit("q")).cast("long").as("q_val"))
       .orderBy(col("event_id"))
-
-  /** DATA-MASKING pack — the governance projection a shared analytics
-    * table applies before leaving the trust boundary: deterministic
-    * PSEUDONYMIZATION of the key (portable md5-48 token — stable across
-    * runs and engines, so masked tables still JOIN on the token),
-    * partial redaction of the name (keep a 2-char prefix, star the
-    * rest), coarse generalization of the balance (banded to hundreds)
-    * and the nation kept in the clear. A pure per-row projection — at
-    * 100 TB it fuses into the scan like [[fnRegex]]/[[fnUrl]] (PlanSpec
-    * pins no agg, no join, no shuffle). */
-  val fnMask: Q = (s, d) =>
-    T.customer(s, d)
-      .filter(col("c_custkey") % 7 === 0)
-      .select(
-        graft.expr.Md5Prefix48.md548(col("c_custkey").cast("string"))
-          .as("pseudo_key"),
-        concat(substring(col("c_name"), 1, 2),
-          expr("repeat('*', length(c_name) - 2)")).as("masked_name"),
-        (floor(col("c_acctbal") / 100.0) * 100).cast("long").as("bal_band"),
-        col("c_nationkey"))
-      .orderBy(col("pseudo_key"))
 
   /** TRY-variant error handling — the ingestion-safety pack (ANSI mode
     * turns malformed input into job-killing exceptions; the `try_`
@@ -262,7 +146,7 @@ object Functions {
     * payload plus typed context packs into ONE nested JSON document,
     * `parse_json` encodes it as VARIANT ONCE, and every later field
     * access is a typed `variant_get` path probe against the binary
-    * encoding — [[fnJson]]'s `get_json_object` re-parses the string per
+    * encoding — `fn_json`'s `get_json_object` re-parses the string per
     * call, which at 100 TB is the difference between one decode at
     * ingest and a decode per expression. The declared result folds the
     * variant-extracted fields per event type (exact integer sums), so

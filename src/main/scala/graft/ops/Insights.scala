@@ -25,29 +25,6 @@ object Insights {
     * identical to DuckDB's `CAST('0x'||substr(md5(x),1,12) AS BIGINT)`. */
   private def h48(c: Column): Column = graft.expr.Md5Prefix48.md548(c)
 
-  /** CLASS-BALANCED sampling — cap each class (language) at K docs, the
-    * mixture-rebalancing primitive every multilingual training corpus
-    * needs (a raw web crawl is 10:1 English-heavy; the training mix is
-    * not). Selection within a class follows the portable (md5-48, id)
-    * total order, so the kept set is a pure row property: reproducible
-    * across engines, partitionings and reruns, and STABLE under corpus
-    * appends in the same sense as `sample_split`'s hash gate. The rank
-    * filter is `row_number ≤ K` over (class | hash, id) — Spark rewrites
-    * rank-limit filters into WindowGroupLimit, so each map task keeps a
-    * K-row heap per class and the shuffle carries O(classes · K) rows,
-    * not the corpus: the 100 TB cost is one scan + a bounded shuffle. */
-  val sampleBalanced: Q = (s, d) => {
-    val k = 40
-    val hk = h48(concat(lit("bal:"), col("doc_id").cast("string")))
-    val w = Window.partitionBy(col("lang")).orderBy(col("hk"), col("doc_id"))
-    T.documents(s, d)
-      .select(col("doc_id"), col("lang"), hk.as("hk"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("doc_id"), col("lang"), col("rk"))
-      .orderBy(col("lang"), col("rk"))
-  }
-
   /** JOIN-KEY SKEW REPORT — the observability pass behind every salting /
     * AQE-skew decision in this engine (`join_skew_salted`, `agg_salted`):
     * per-key frequencies for a prospective join key, the top-10 heaviest
@@ -345,39 +322,6 @@ object Insights {
       .orderBy(col("probe_id"), col("rnk"))
   }
 
-  /** Higher-moment distribution profile (mean / sample stddev /
-    * SKEWNESS) per order status — `agg_stats` extended to the third
-    * moment, the long-tail detector a pricing or fraud pipeline reports
-    * before choosing transforms. All three raw moments are exact
-    * decimals in ONE aggregate: S3 multiplies through a staged
-    * (19,2)→(19,4) cast chain so BOTH engines stay on their 128-bit
-    * decimal path with zero scale adjustment (a (12,2)³ spelling
-    * overflows DuckDB's int64 fast path; a (19,4)² spelling trips
-    * Spark's precision-loss scale trim — the staged chain does
-    * neither). The closed forms run on the 3-row stats grid; the
-    * skewness denominator is m2·√m2, NOT pow(m2, 1.5) — pow is not
-    * correctly rounded and may differ by an ulp across libm
-    * implementations, multiply and sqrt are exact/correctly-rounded
-    * everywhere. */
-  val aggMoments: Q = (s, d) => {
-    val p = col("o_totalprice").cast("decimal(19,2)")
-    val m = T.orders(s, d).groupBy(col("o_orderstatus")).agg(
-      count(lit(1)).as("n"),
-      sum(p).as("s1"),
-      sum(p * p).as("s2"),
-      sum((p * p).cast("decimal(19,4)") * p).as("s3"))
-    val mu = dbl("s1") / dbl("n")
-    val m2 = dbl("s2") / dbl("n") - mu * mu
-    val m3 = dbl("s3") / dbl("n") - lit(3) * mu * (dbl("s2") / dbl("n")) +
-      lit(2) * mu * mu * mu
-    m.select(col("o_orderstatus"), col("n"),
-        round(mu, 6).as("mean_price"),
-        round(sqrt((dbl("n") * dbl("s2") - dbl("s1") * dbl("s1"))
-          / (dbl("n") * (col("n") - 1).cast("double"))), 6).as("stddev_price"),
-        round(m3 / (m2 * sqrt(m2)), 6).as("skewness"))
-      .orderBy(col("o_orderstatus"))
-  }
-
   /** DOMAIN-DRIFT screen — document-frequency rates compared between
     * two source cohorts (sources 0–9 vs 10–19), top-20 most-drifted
     * terms: the distribution-shift check run before mixing a new crawl
@@ -463,39 +407,6 @@ object Insights {
           / greatest(coalesce(col("n_churned"), lit(0L)), lit(1L))
             .cast("double"), 6).as("quick_ratio"))
       .orderBy(col("wk"))
-  }
-
-  /** SKYLINE (Pareto frontier) — the classic multi-criteria OLAP
-    * operator ("cheapest at any given size or better"): per brand, the
-    * parts no other part dominates on (minimize retailprice, maximize
-    * size), dominance = (price ≤, size ≥, at least one strict). The 2-D
-    * skyline reduces to ONE sorted window: collapse parts to the
-    * (brand, price) grid with the max size at each price, then a
-    * strictly-prior running max over the price order — a grid row is on
-    * the frontier iff its max size beats every strictly-cheaper price's
-    * max (same-price dominance is already folded into the grid max).
-    * No dominance self-join, no quadratic stage.
-    *
-    * 100 TB shape: the grid agg collapses the corpus per (brand, price)
-    * map-side; the window sorts only the grid WITHIN each brand
-    * partition (bounded, parallel across brands); the join back to
-    * recover the part count at each frontier point is a compound-key
-    * hash join against the same grid-sized frame. */
-  val aggSkyline: Q = (s, d) => {
-    val p = T.part(s, d).select(col("p_brand"),
-      col("p_retailprice").as("price"), col("p_size").as("sz"))
-    val grid = p.groupBy(col("p_brand"), col("price"))
-      .agg(max(col("sz")).as("mx"))
-    val w = Window.partitionBy(col("p_brand")).orderBy(col("price"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val frontier = grid.withColumn("prior_mx", max(col("mx")).over(w))
-      .filter(col("prior_mx").isNull || col("prior_mx") < col("mx"))
-      .select(col("p_brand"), col("price"), col("mx").as("sz"))
-    val atPoint = p.groupBy(col("p_brand"), col("price"), col("sz"))
-      .agg(count(lit(1)).as("n_parts"))
-    frontier.join(atPoint, Seq("p_brand", "price", "sz"))
-      .select(col("p_brand"), col("price"), col("sz"), col("n_parts"))
-      .orderBy(col("p_brand"), col("price"))
   }
 
   /** INTERVAL-UNION COVERAGE — per user, the merged covered time of
@@ -741,8 +652,6 @@ object Insights {
     "events_fano" -> eventsFano,
     "events_overlap" -> eventsOverlap,
     "text_jsd_drift" -> textJsdDrift,
-    "sample_balanced" -> sampleBalanced,
-    "agg_skyline" -> aggSkyline,
     "agg_lorenz_bands" -> aggLorenzBands,
     "events_coverage" -> eventsCoverage,
     "events_stickiness" -> eventsStickiness,
@@ -757,7 +666,6 @@ object Insights {
     "events_gaps" -> eventsGaps,
     "text_novelty" -> textNovelty,
     "sim_hard_negatives" -> simHardNegatives,
-    "agg_moments" -> aggMoments,
     "text_domain_drift" -> textDomainDrift,
   )
 

@@ -97,15 +97,6 @@ object LlmPipeline {
     s"""tok AS (SELECT doc_id, string_split(text, ' ') l FROM corpus),
        |ssets AS (SELECT doc_id, list_distinct($shinglesSql) sset FROM tok WHERE len(l) >= 3)""".stripMargin
 
-  // ------------------------------------------------------------ dedup: exact
-
-  /** Exact dedup by normalized-text hash — [[graft.api.TextDedup.exact]]
-    * on the planted-variant corpus. At 100 TB this is one hash-shuffle
-    * groupBy — the canonical first dedup pass of any training pipeline. */
-  val dedupExact: Q = (s, d) =>
-    graft.api.TextDedup.exact(corpus(s, d), "doc_id", "text")
-      .orderBy(col("kept_id"))
-
   // ---------------------------------------------- dedup: exact shingle Jaccard
 
   /** Near-dup detection by exact 3-gram Jaccard ≥ 0.7, planted variants vs
@@ -295,10 +286,6 @@ object LlmPipeline {
   private def cosine(a: Column, b: Column): Column =
     dotp(a, b) / (sqrt(dotp(a, a)) * sqrt(dotp(b, b)))
 
-  /** Attach the precomputed L2 norm: (id, vec) → (id, vec, norm). */
-  private def withNorm(df: DataFrame, vec: String): DataFrame =
-    df.withColumn("norm", sqrt(dotp(col(vec), col(vec))))
-
   /** DuckDB positional dot product over 64-dim float lists. */
   private[ops] def dotSql(a: String, b: String): String =
     s"(SELECT sum(CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)) FROM range(1, 65) r(i))"
@@ -437,50 +424,6 @@ object LlmPipeline {
       .groupBy(col("doc_id"))
       .agg(min(col("base_id")).as("base_id"), count(lit(1)).as("n_base"))
       .orderBy(col("doc_id"))
-  }
-
-  /** URL-canonicalization dedup — the web-corpus front gate (CommonCrawl
-    * pipelines dedup by canonical URL before any text ever loads): URLs
-    * decorated with the classic noise (scheme/WWW case, `www.` prefix,
-    * default `:443` port, trailing slash, `utm_*` tracking params,
-    * fragments — planted deterministically from doc_id, the text_pii
-    * discipline) normalize through a fixed regex chain to one canonical
-    * form; grouping on it collapses every decoration variant of the same
-    * resource. Pure per-row canonicalization (fused into the scan) + ONE
-    * hash aggregate on the canonical key — `dedup_exact`'s shape with a
-    * normalizer instead of a text hash. The regex chain is RE2-common
-    * syntax, identical in both engines (DuckDB needs the 'g' flag; Spark
-    * replaces all by default). */
-  val dedupUrl: Q = (s, d) => {
-    val pk = (col("doc_id") % 100L).cast("string")
-    val raw = concat(
-      when(col("doc_id") % 4 === 0, lit("HTTPS://")).otherwise(lit("https://")),
-      when(col("doc_id") % 3 === 0, lit("www.")).otherwise(lit("")),
-      col("source"), lit(".Example.com"),
-      when(col("doc_id") % 7 === 0, lit(":443")).otherwise(lit("")),
-      lit("/docs/"), pk,
-      when(col("doc_id") % 5 === 0, lit("/")).otherwise(lit("")),
-      when(col("doc_id") % 2 === 0, lit("?utm_source=feed&utm_campaign=x"))
-        .otherwise(lit("")),
-      when(col("doc_id") % 6 === 0, lit("#sec2")).otherwise(lit("")))
-    def canon(u0: Column): Column = {
-      var u = lower(u0)
-      u = regexp_replace(u, "#.*$", "")            // fragment
-      u = regexp_replace(u, "[?&]utm_[^&#]*", "")  // tracking params
-      u = regexp_replace(u, "\\?&", "?")           // ?& left by a leading utm
-      u = regexp_replace(u, "\\?$", "")            // empty query
-      u = regexp_replace(u, "://www\\.", "://")    // www prefix
-      u = regexp_replace(u, ":443/", "/")          // default https port
-      regexp_replace(u, "/$", "")                  // trailing slash
-    }
-    T.documents(s, d)
-      .withColumn("url", raw)
-      .withColumn("curl", canon(col("url")))
-      .groupBy(col("curl"))
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("url")).as("n_variants"),
-        min(col("doc_id")).as("rep_doc_id"))
-      .orderBy(col("curl"))
   }
 
   // ------------------------------------------------------- similarity search
@@ -860,48 +803,6 @@ object LlmPipeline {
       .orderBy(col("doc_id"))
   }
 
-  /** LINEAR QUALITY CLASSIFIER — the fasttext-style learned filter one
-    * step up from [[textQuality]]'s hand-tuned score (the
-    * CCNet/DCLM-shaped gate: engineer features, apply a FROZEN weight
-    * vector, keep above the decision boundary): five per-doc features
-    * (length saturation, stopword ratio, alpha ratio, mean word length,
-    * digit ratio) each ROUND to 6 decimals — the portability firewall:
-    * the linear form is then a fixed IEEE multiply-add sequence over
-    * identical inputs in both engines — then z = w·x + b decides
-    * keep/drop on the UNROUNDED margin (z > 0 ⟺ p > 0.5 exactly; no
-    * threshold-on-rounded-value edge). The sigmoid probability is
-    * reported rounded 6 (libm exp, the text_perplexity convention). Pure
-    * per-row expressions fused into the scan — at 100 TB the classifier
-    * costs a projection, nothing more. */
-  val textQualityLr: Q = (s, d) => {
-    val toks = split(col("text"), " ")
-    val nTok = size(toks).cast("long")
-    def r6(c: Column): Column = round(c, 6)
-    T.documents(s, d)
-      .withColumn("x_len", r6(least(lit(1.0), nTok.cast("double") / 100.0)))
-      .withColumn("x_stop", r6(
-        size(filter(toks, x => x.isin("the", "a", "value", "data")))
-          .cast("double") / nTok.cast("double")))
-      .withColumn("x_alpha", r6(
-        length(regexp_replace(col("text"), "[^a-z]", "")).cast("double") /
-          length(col("text")).cast("double")))
-      .withColumn("x_wlen", r6(
-        length(regexp_replace(col("text"), " ", "")).cast("double") /
-          nTok.cast("double")))
-      .withColumn("x_digit", r6(
-        length(regexp_replace(col("text"), "[^0-9]", "")).cast("double") /
-          length(col("text")).cast("double")))
-      .withColumn("z",
-        lit(-1.5) + lit(2.1) * col("x_len") - lit(3.0) * col("x_stop")
-          + lit(1.8) * col("x_alpha") + lit(0.12) * col("x_wlen")
-          - lit(2.5) * col("x_digit"))
-      .select(col("doc_id"), col("x_len"), col("x_stop"), col("x_alpha"),
-        col("x_wlen"), col("x_digit"), round(col("z"), 6).as("z"),
-        round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6).as("p_keep"),
-        (col("z") > 0.0).as("keep"))
-      .orderBy(col("doc_id"))
-  }
-
   /** CURRICULUM sampling — the quality-weighted data-mix step between
     * scoring and training: docs tier by their [[textQuality]] score
     * (fixed thresholds — at 100 TB thresholds come from a one-off
@@ -964,18 +865,6 @@ object LlmPipeline {
       .orderBy(col("doc_id"))
   }
 
-  /** Token counting two ways: whitespace split vs regex word extraction vs
-    * a BPE-ish bounded-chunk split (≤ 4 chars per piece). */
-  val textTokens: Q = (s, d) =>
-    T.documents(s, d)
-      .withColumn("ws_tokens", size(split(col("text"), " ")).cast("long"))
-      .withColumn("re_tokens",
-        regexp_count(col("text"), lit("[a-z0-9]+")).cast("long"))
-      .withColumn("bpe_ish",
-        regexp_count(col("text"), lit("[a-z0-9]{1,4}")).cast("long"))
-      .select(col("doc_id"), col("ws_tokens"), col("re_tokens"), col("bpe_ish"))
-      .orderBy(col("doc_id"))
-
   /** Canonical text normalization — the first stage of every training-data
     * pipeline: lowercase, trim, collapse runs of whitespace, then drop
     * stopword tokens ('a'/'the') and empties via an array HOF. Pure per-row
@@ -989,56 +878,6 @@ object LlmPipeline {
       .withColumn("toks", toks)
       .select(col("doc_id"), array_join(col("toks"), " ").as("norm_text"),
         size(col("toks")).cast("long").as("n_tokens_norm"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** PII regexes — shared between the DataFrame path, the Spark-SQL text
-    * and the DuckDB oracle. Restricted to syntax Java regex and RE2 parse
-    * identically (char classes, bounded repeats, `\b`, no backrefs). */
-  val PiiEmailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
-  val PiiIpRe = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
-  val PiiPhoneRe = "\\b555-\\d{3}-\\d{4}\\b"
-
-  /** PII detection + redaction — the scrubbing stage every training-data
-    * pipeline runs before anything else sees the text (emails, IPv4s,
-    * phone numbers → typed placeholders). The harness corpus is synthetic
-    * token soup with no PII, so the query PLANTS deterministic PII derived
-    * from table values (doc_id%3 → an email, %4 → an IP, %5 → a phone —
-    * built identically in the oracle SQL), then counts and redacts it
-    * with engine-portable regexes. Redaction order matters and is fixed:
-    * email → IP → phone (an email contains dots that the IP pattern must
-    * never see first).
-    *
-    * 100 TB shape: pure per-row codegen'd regex work, zero shuffles before
-    * the declared sort — runs at scan speed next to `text_normalize`. */
-  val textPii: Q = (s, d) => {
-    val idS = col("doc_id").cast("string")
-    val pii = T.documents(s, d).select(col("doc_id"), col("source"), col("text"))
-      .withColumn("ptext", concat(col("text"),
-        when(col("doc_id") % 3 === 0,
-          concat(lit(" contact "), col("source"), idS, lit("@example.com")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 4 === 0,
-          concat(lit(" from 10."), (col("doc_id") % 256).cast("string"), lit("."),
-            ((col("doc_id") * 7) % 256).cast("string"), lit("."),
-            ((col("doc_id") * 13) % 256).cast("string")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 5 === 0,
-          concat(lit(" call 555-"), (col("doc_id") % 900 + 100).cast("string"),
-            lit("-"), (col("doc_id") % 9000 + 1000).cast("string")))
-          .otherwise(lit(""))))
-    pii
-      .withColumn("n_emails", regexp_count(col("ptext"), lit(PiiEmailRe)).cast("long"))
-      .withColumn("n_ips", regexp_count(col("ptext"), lit(PiiIpRe)).cast("long"))
-      .withColumn("n_phones", regexp_count(col("ptext"), lit(PiiPhoneRe)).cast("long"))
-      .withColumn("redacted",
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(col("ptext"), PiiEmailRe, "<EMAIL>"),
-            PiiIpRe, "<IP>"),
-          PiiPhoneRe, "<PHONE>"))
-      .select(col("doc_id"), col("n_emails"), col("n_ips"), col("n_phones"),
-        col("redacted"))
       .orderBy(col("doc_id"))
   }
 
@@ -1779,7 +1618,7 @@ object LlmPipeline {
   private val ParaLen = 10
 
   /** Paragraph-level dedup — SEGMENT granularity between document-exact
-    * ([[dedupExact]]) and content-defined chunks ([[dedupCdc]]): each doc
+    * (`dedup_exact`) and content-defined chunks ([[dedupCdc]]): each doc
     * is cut into consecutive 10-token segments (the "paragraphs" of the
     * single-line corpus) and a segment shared verbatim by ≥ 2 distinct
     * docs is duplicate material. Per doc the observable is its

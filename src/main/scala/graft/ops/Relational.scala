@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -12,29 +12,19 @@ import graft.core.Numeric._
   *
   * Generalizes the reference's two-statement surface
   * (`/root/reference/db.cpp:428-441` — `insert`/`select` only): the
-  * full-scan `executeSelect` (`db.cpp:487-502`) becomes a pruned,
-  * pushed-down Parquet scan; the append-only `executeInsert`
-  * (`db.cpp:469-485`) becomes union + append-mode writes; everything else
-  * here is capability the reference lacks, declared Spark-first so
-  * Catalyst picks physical strategies (broadcast vs sort-merge joins,
-  * partial aggregation, AQE skew handling) that survive a 1000-executor
-  * 100 TB deployment.
+  * keys whose SQL text plans the same as a DataFrame would (`scan_full`,
+  * `insert_append`, the plain joins, aggregates and set ops — see
+  * [[graft.SparkEntry.sqlServed]]) run their [[RelationalOracles]] text;
+  * what stays here needs a DataFrame: a broadcast hint, a declared
+  * algorithm ([[graft.api.AsOfJoin]]), or a plan the text does not give.
+  * Declared Spark-first so Catalyst picks physical strategies (broadcast
+  * vs sort-merge joins, partial aggregation, AQE skew handling) that
+  * survive a 1000-executor 100 TB deployment.
   */
 object Relational {
   type Q = (SparkSession, String) => DataFrame
 
   // ---------------------------------------------------------------- scans
-
-  /** Full-table scan in key order — `executeSelect` semantics
-    * (`db.cpp:487-502`) over `lineitem`. All 11 columns, totally ordered.
-    */
-  val scanFull: Q = (s, d) =>
-    T.lineitem(s, d).select(
-      col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-      col("l_linenumber"), col("l_quantity"), col("l_extendedprice"),
-      col("l_discount"), col("l_tax"), col("l_returnflag"),
-      col("l_linestatus"), col("l_shipdate"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
 
   /** Column pruning: 4 of 11 lineitem columns. The Parquet scan must show
     * a 4-column ReadSchema — verified in the plan audit. */
@@ -43,46 +33,6 @@ object Relational {
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("l_shipdate"))
       .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Key-ordered scan — what the reference's B-tree *intends*
-    * (`db.cpp:64-70`; it actually stores insertion order,
-    * `spec/main_spec.rb:131-150`). At scale: sort-on-write + min/max
-    * row-group pruning give the same access path. */
-  val scanOrdered: Q = (s, d) =>
-    T.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_shipdate"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Point lookup by key — the B-tree's raison d'être generalized to a
-    * pushed-down equality predicate (min/max row-group pruning at scale).
-    */
-  val keyLookup: Q = (s, d) =>
-    T.lineitem(s, d)
-      .filter(col("l_orderkey") === 42L)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_suppkey"), col("l_quantity"), col("l_extendedprice"))
-      .orderBy(col("l_linenumber"))
-
-  /** INSERT semantics (R3/R4, `db.cpp:392-426, 469-485`): literal rows
-    * unioned onto a scan, with the reference's constraints (id ≥ 0,
-    * username ≤ 32 chars, email ≤ 255 chars) applied as filters. */
-  val insertAppend: Q = (s, d) => {
-    val base = T.customer(s, d).select(
-      col("c_custkey").as("id"),
-      col("c_name").as("username"),
-      concat(col("c_name"), lit("@example.com")).as("email"))
-    val fresh = s.createDataFrame(Seq(
-      (900001L, "user900001", "person900001@example.com"),
-      (900002L, "user900002", "person900002@example.com"),
-      (-1L, "bad_id", "rejected@example.com"),
-      (900003L, "x" * 33, "too_long_username@example.com")
-    )).toDF("id", "username", "email")
-    base.unionByName(fresh)
-      .filter(col("id") >= 0 && length(col("username")) <= 32 &&
-        length(col("email")) <= 255)
-      .orderBy(col("id"))
-  }
 
   /** The reference REPL's statement-parse path (`prepareStatement` /
     * `prepareInsert`, `/root/reference/db.cpp:392-441`) as a declared
@@ -108,37 +58,8 @@ object Relational {
 
   // ------------------------------------------------------ filters / checks
 
-  /** TPC-H Q6 shape: conjunctive range + equality predicates, all pushed
-    * to the Parquet scan; single-row aggregate. */
-  val filterPred: Q = (s, d) =>
-    T.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-        col("l_discount").between(0.02, 0.04) &&
-        col("l_quantity") < 25)
-      .agg(
-        dsum(col("l_extendedprice") * col("l_discount")).as("revenue"),
-        count(lit(1)).as("n_rows"))
-
-  /** R3's parse-time validation (`db.cpp:404-419`) as a relational op:
-    * classify rows into accepted/rejected with a reason column. */
-  val constraintCheck: Q = (s, d) =>
-    T.customer(s, d)
-      .select(
-        (col("c_custkey") - 5L).as("id"),
-        when(col("c_custkey") % 50 === 0, concat(col("c_name"), lit("x" * 30)))
-          .otherwise(col("c_name")).as("username"),
-        concat(col("c_name"), lit("@example.com")).as("email"))
-      .withColumn("reject_reason",
-        when(col("id") < 0, "ID must be positive.")
-          .when(length(col("username")) > 32, "String is too long.")
-          .when(length(col("email")) > 255, "String is too long.")
-          .otherwise(null))
-      .withColumn("accepted", col("reject_reason").isNull)
-      .orderBy(col("id"))
-
   /** REFERENTIAL-INTEGRITY audit — the cross-table companion of
-    * [[constraintCheck]]'s row-level CHECK (the reference validates only
+    * `constraint_check`'s row-level CHECK (the reference validates only
     * within one row, `/root/reference/db.cpp:455-470`): each FK edge
     * (lineitem→orders, orders→customer) reports child count, orphan
     * count (anti-join against the parent key set) and orphan share.
@@ -208,17 +129,6 @@ object Relational {
 
   // ---------------------------------------------------------------- joins
 
-  /** Equi inner join fact ⋈ fact-side dim (sort-merge / shuffled-hash —
-    * Catalyst's choice; both sides large at scale). */
-  val joinInner: Q = (s, d) => {
-    val li = T.lineitem(s, d)
-    val o  = T.orders(s, d)
-    li.join(o, li("l_orderkey") === o("o_orderkey"), "inner")
-      .select(col("l_orderkey"), col("l_linenumber"), col("o_custkey"),
-        col("o_orderstatus"), col("l_quantity"), col("l_extendedprice"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
-
   /** Star-schema join orders ⋈ customer ⋈ nation ⋈ region with explicit
     * broadcast of every dim — at 100 TB the fact side streams while dims
     * replicate; no shuffle of the fact table at all. */
@@ -234,18 +144,6 @@ object Relational {
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("sum_price"))
       .orderBy(col("r_name"), col("n_name"))
-  }
-
-  /** Left outer join with null-extension: every customer, order stats or
-    * zero. */
-  val joinLeft: Q = (s, d) => {
-    val c = T.customer(s, d)
-    val o = T.orders(s, d)
-    c.join(o, c("c_custkey") === o("o_custkey"), "left")
-      .groupBy(col("c_custkey"), col("c_name"))
-      .agg(count(col("o_orderkey")).as("n_orders"),
-        coalesce(dsum(col("o_totalprice")), lit(0.0)).as("sum_price"))
-      .orderBy(col("c_custkey"))
   }
 
   /** EXISTS — customers with ≥1 urgent order (left-semi: no row
@@ -283,24 +181,6 @@ object Relational {
         col("purchase_ts") <= col("signup_ts") + expr("INTERVAL 5 MINUTES"))
       .select(col("user_id"), col("signup_id"), col("purchase_id"))
       .orderBy(col("user_id"), col("signup_id"), col("purchase_id"))
-  }
-
-  /** FULL OUTER join with unmatched rows on BOTH sides (even keys vs
-    * multiples of 3): null-extension in each direction plus an in_both
-    * marker. Same shuffle shape as the inner join — one hash exchange per
-    * side on the key. */
-  val joinFull: Q = (s, d) => {
-    val o = T.orders(s, d)
-    val a = o.filter(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey").as("ka"), col("o_totalprice").as("pa"))
-    val b = o.filter(col("o_orderkey") % 3 === 0)
-      .select(col("o_orderkey").as("kb"), col("o_totalprice").as("pb"))
-    a.join(b, col("ka") === col("kb"), "full_outer")
-      .select(coalesce(col("ka"), col("kb")).as("o_orderkey"),
-        round(coalesce(col("pa"), lit(0.0)), 2).as("price_a"),
-        round(coalesce(col("pb"), lit(0.0)), 2).as("price_b"),
-        (col("ka").isNotNull && col("kb").isNotNull).as("in_both"))
-      .orderBy(col("o_orderkey"))
   }
 
   /** Explicit CROSS JOIN — legitimate ONLY when one side is a bounded
@@ -399,32 +279,6 @@ object Relational {
 
   // ----------------------------------------------------------- aggregates
 
-  /** TPC-H Q1 shape: hash aggregate with partial (map-side) combine —
-    * the canonical 100 TB aggregation: shuffle carries one row per
-    * (group × partition), not per input row. */
-  val aggHash: Q = (s, d) =>
-    T.lineitem(s, d)
-      .filter(col("l_shipdate") <= lit("2000-09-02").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice")).as("sum_base_price"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("sum_disc_price"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))).as("sum_charge"),
-        davg(col("l_quantity")).as("avg_qty"),
-        davg(col("l_extendedprice")).as("avg_price"),
-        davg(col("l_discount")).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  /** Exact distinct aggregation (expand + two-phase agg under the hood). */
-  val aggDistinct: Q = (s, d) =>
-    T.lineitem(s, d)
-      .groupBy(col("l_suppkey"))
-      .agg(countDistinct(col("l_partkey")).as("n_parts"),
-        count(lit(1)).as("n_rows"))
-      .orderBy(col("l_suppkey"))
-
   /** Approximate distinct (HyperLogLog++): the 100 TB substitute for
     * count(distinct) — no expand, mergeable sketches. No SQL oracle
     * (approx ≠ DuckDB HLL); bounds-checked against exact in ScalaTest. */
@@ -446,32 +300,6 @@ object Relational {
         col("sum_qty"), col("n_rows"))
       .orderBy(col("returnflag"), col("linestatus"))
 
-  /** CUBE over (orderstatus, orderpriority). */
-  val aggCube: Q = (s, d) =>
-    T.orders(s, d)
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(dsum(col("o_totalprice")).as("sum_price"), count(lit(1)).as("n_rows"))
-      .select(
-        coalesce(col("o_orderstatus"), lit("ALL")).as("orderstatus"),
-        coalesce(col("o_orderpriority"), lit("ALL")).as("orderpriority"),
-        col("sum_price"), col("n_rows"))
-      .orderBy(col("orderstatus"), col("orderpriority"))
-
-  /** Explicit GROUPING SETS via SQL. */
-  val aggGroupingSets: Q = (s, d) => {
-    T.orders(s, d).createOrReplaceTempView("orders_gs")
-    s.sql(s"""
-      SELECT
-        COALESCE(o_orderstatus, 'ALL')   AS orderstatus,
-        COALESCE(o_orderpriority, 'ALL') AS orderpriority,
-        ${dsumSql("o_totalprice")}       AS sum_price,
-        COUNT(*)                         AS n_rows
-      FROM orders_gs
-      GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-      ORDER BY orderstatus, orderpriority
-    """)
-  }
-
   // -------------------------------------------------------------- windows
 
   /** Top-3 orders per customer by rank() — partitioned window, no global
@@ -485,20 +313,6 @@ object Relational {
       .select(col("o_custkey"), col("rnk"), col("o_orderkey"), col("o_totalprice"))
       .orderBy(col("o_custkey"), col("rnk"), col("o_orderkey"))
   }
-
-  /** Ordered array aggregation (collect + canonical sort): per-customer
-    * order-key list. The list is emitted as a canonical joined string —
-    * content-identical across engines and partition orders. collect_list
-    * itself is partition-order-dependent; the sort_array makes the
-    * aggregate deterministic, which is the only way an array agg is
-    * declarable at scale. */
-  val aggCollect: Q = (s, d) =>
-    T.orders(s, d).filter(col("o_custkey") % 50 === 0)
-      .groupBy(col("o_custkey"))
-      .agg(array_join(sort_array(collect_list(col("o_orderkey"))), ",")
-          .as("order_keys"),
-        count(lit(1)).as("n_orders"))
-      .orderBy(col("o_custkey"))
 
   /** Running revenue per customer — cumulative frame. Decimal running sum
     * keeps the declared result order-independent. */
@@ -557,34 +371,7 @@ object Relational {
       .orderBy(col("day"))
   }
 
-  // ------------------------------------------------------- sorts / limits
-
-  /** Global top-10 by totalprice — TakeOrderedAndProject: each partition
-    * keeps 10, driver merges 10×partitions rows; no global sort. */
-  val sortLimitTopk: Q = (s, d) =>
-    T.orders(s, d)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(10)
-
   // --------------------------------------------------------------- setops
-
-  private def sliceA(s: SparkSession, d: String): DataFrame =
-    T.customer(s, d).filter(col("c_acctbal") > 5000.0).select(col("c_custkey"))
-  private def sliceB(s: SparkSession, d: String): DataFrame =
-    T.customer(s, d).filter(col("c_nationkey") < 10).select(col("c_custkey"))
-
-  /** UNION (distinct) of two customer slices. */
-  val setUnion: Q = (s, d) =>
-    sliceA(s, d).union(sliceB(s, d)).distinct().orderBy(col("c_custkey"))
-
-  /** INTERSECT. */
-  val setIntersect: Q = (s, d) =>
-    sliceA(s, d).intersect(sliceB(s, d)).orderBy(col("c_custkey"))
-
-  /** EXCEPT. */
-  val setExcept: Q = (s, d) =>
-    sliceA(s, d).except(sliceB(s, d)).orderBy(col("c_custkey"))
 
   // multiset slices for the ALL variants: (partkey, suppkey) pairs REPEAT
   // across lineitems, so bag semantics genuinely differ from set semantics

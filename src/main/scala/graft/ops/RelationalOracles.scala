@@ -13,6 +13,7 @@ object RelationalOracles {
   private def dsum(e: String) = s"CAST(ROUND(SUM(CAST(($e) AS DECIMAL(20,8))), 2) AS DOUBLE)"
 
   val sql: Map[String, String] = Map(
+    // the reference's full-scan executeSelect (`db.cpp:487-502`)
     "scan_full" ->
       """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
         |  l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus,
@@ -23,10 +24,12 @@ object RelationalOracles {
       """SELECT l_orderkey, l_linenumber, l_quantity, l_shipdate
         |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
 
+    // the key order the reference's B-tree intends (`db.cpp:64-70`)
     "scan_ordered" ->
       """SELECT l_orderkey, l_linenumber, l_partkey, l_shipdate
         |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
 
+    // the point lookup a B-tree serves (`db.cpp:64-70`)
     "key_lookup" ->
       """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity,
         |  l_extendedprice
@@ -62,6 +65,7 @@ object RelationalOracles {
         |FROM parsed
         |ORDER BY id, username""".stripMargin,
 
+    // the reference's append-only executeInsert (`db.cpp:469-485`)
     "insert_append" ->
       """SELECT id, username, email FROM (
         |  SELECT c_custkey AS id, c_name AS username,
@@ -126,6 +130,7 @@ object RelationalOracles {
         |    (SELECT COUNT(*) FROM orders WHERE o_orderkey % 97 = 0))
         |ORDER BY fk_edge""".stripMargin,
 
+    // the reference's parse-time validation (`db.cpp:404-419`)
     "constraint_check" ->
       """SELECT id, username, email, reject_reason,
         |  (reject_reason IS NULL) AS accepted

@@ -858,48 +858,7 @@ object Sources {
     asOf(0L).unionByName(asOf(1L)).orderBy(col("version"))
   }
 
-  /** TABLE CONTENT CHECKSUM — the replication / migration audit
-    * primitive ("did the copy, backfill, or engine switch preserve the
-    * data?") that compares two tables WITHOUT moving either: per
-    * segment, an order-independent triple over portable md5-48 row
-    * hashes — exact decimal SUM, BIT_XOR, and the row count. Sum and
-    * xor are commutative-associative, so the checksum is invariant to
-    * partitioning, row order, and engine, and any single-row difference
-    * flips both aggregates with overwhelming probability. Row identity
-    * hashes only integer-exact columns (keys, line numbers,
-    * integral-valued quantities, flags) — float formatting never
-    * crosses the engine boundary.
-    *
-    * 100 TB shape: everything partial-aggregates map-side (sum, xor,
-    * count are all mergeable); the shuffle carries |segments| triples.
-    * Auditing a replica = run the same statement there and diff two
-    * |segments|-row frames — the `table_diff` companion at metadata
-    * cost instead of row cost. */
-  val metaChecksum: Q = (s, d) => {
-    val rh = graft.expr.Md5Prefix48.md548(concat_ws("|",
-      col("l_orderkey"), col("l_linenumber"),
-      col("l_quantity").cast("bigint"), col("l_returnflag"),
-      col("l_linestatus")))
-    T.lineitem(s, d)
-      .select(col("l_returnflag"), rh.as("rh"))
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("rh").cast("decimal(28,0)")).cast("decimal(38,0)")
-          .as("sum_raw"),
-        expr("bit_xor(rh)").as("xor_h"))
-      // fold the 128-bit running sum to BIGINT mod 2^61-1: still
-      // order-independent and single-row-sensitive, but the surfaced type
-      // is a primitive int64 on every engine (decimal128 canonicalization
-      // differs between engines — the SURVEY §2.2 stable-type rule)
-      .select(col("l_returnflag"), col("n_rows"),
-        (col("sum_raw") % lit(2305843009213693951L)).cast("bigint")
-          .as("sum_h"),
-        col("xor_h"))
-      .orderBy(col("l_returnflag"))
-  }
-
   val queries: Map[String, Q] = Map(
-    "meta_checksum" -> metaChecksum,
     "merge_cdc" -> mergeCdc,
     "meta_time_travel" -> metaTimeTravel,
     "merge_mor" -> mergeMor,

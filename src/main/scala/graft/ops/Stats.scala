@@ -554,24 +554,6 @@ object Stats {
       .orderBy(col("label"), col("dim"))
   }
 
-  /** SYSTEMATIC (stride) sampling — every k-th record of a dense
-    * surrogate-key space (offset 7, stride 40): the census-style sampler
-    * for key spaces known to be dense and uncorrelated with the metric.
-    * Complements `sample_hash` (content-hash gate — the default) — the
-    * stride costs NO hash evaluation and prunes at the reader when the
-    * layout clusters by key, but silently biases if the key has periodic
-    * structure; that trade is the declared semantics. Map-side filter,
-    * one audit aggregate. */
-  val sampleSystematic: Q = (s, d) => {
-    import graft.core.Numeric.dsum
-    T.orders(s, d).filter(col("o_orderkey") % 40 === 7)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"),
-        min(col("o_orderkey")).as("first_key"),
-        max(col("o_orderkey")).as("last_key"))
-      .orderBy(col("o_orderstatus"))
-  }
-
   /** STATIONARY DISTRIBUTION of the event-transition Markov chain — the
     * long-run "where do users spend their time" readout on top of
     * `events_transition`'s matrix: 4 fixed power steps of
@@ -942,44 +924,7 @@ object Stats {
        |pi$k AS (SELECT state, CAST(round(upi / tot, 8) AS DOUBLE) AS pi
        |  FROM up$k CROSS JOIN t$k)""".stripMargin
 
-  /** WEIGHTED MEDIAN — the quantity-weighted midpoint price per return
-    * flag (the unweighted `agg_mad`/`agg_percentile` medians treat a
-    * 1-unit and a 50-unit line identically; pricing and inventory
-    * analyses need the unit-weighted center). Weights fold to the
-    * DISTINCT-value grid first (groupBy flag, price), then one
-    * cumulative-weight window over the grid picks the smallest price
-    * whose cumulative weight reaches half the total. All weight
-    * arithmetic is DECIMAL(20,2) sums and the half-total test is
-    * `2·cw ≥ tot` in decimals — no division, no ties ambiguity (equal
-    * prices merge before the window), so both engines select the
-    * identical row.
-    *
-    * 100 TB shape: the heavy fold is the map-side-combinable groupBy to
-    * the distinct-price grid; the window runs on the grid (|flags| ×
-    * |distinct prices| — bounded by price-domain cardinality, not row
-    * count) and range-partitions within each flag. Never a corpus-wide
-    * sort of raw rows. */
-  val aggWeightedMedian: Q = (s, d) => {
-    val g = T.lineitem(s, d)
-      .groupBy(col("l_returnflag").as("f"), col("l_extendedprice").as("v"))
-      .agg(sum(col("l_quantity").cast("decimal(20,2)")).as("w"))
-    val wc = Window.partitionBy(col("f")).orderBy(col("v"))
-    val wt = Window.partitionBy(col("f"))
-    val c = g.select(col("f"), col("v"), col("w"),
-      sum(col("w")).over(wc).as("cw"),
-      sum(col("w")).over(wt).as("tw"))
-    c.filter(col("cw") * 2 >= col("tw"))
-      .groupBy(col("f"))
-      .agg(count(lit(1)).as("n_at_or_above"),
-        min(col("v")).as("weighted_median"),
-        max(col("tw")).as("tw"))
-      .select(col("f").as("l_returnflag"), col("n_at_or_above"),
-        col("weighted_median"),
-        round(col("tw").cast("double"), 2).as("total_weight"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** Shared ANSI text for [[aggWeightedMedian]] (oracle + Spark
+  /** Shared ANSI text for `agg_weighted_median` (oracle + Spark
     * statement — the grid/window/decimal algebra parses identically). */
   private[graft] lazy val weightedMedianSql: String =
     """WITH g AS (

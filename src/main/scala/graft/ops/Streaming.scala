@@ -77,9 +77,6 @@ object Streaming {
   val streamTumbling: Q = (s, d) =>
     tumblingCounts(T.events(s, d)).orderBy(col("ws"), col("event_type"))
 
-  val streamSliding: Q = (s, d) =>
-    slidingCounts(T.events(s, d)).orderBy(col("ws"), col("event_type"))
-
   val streamSession: Q = (s, d) =>
     sessionCounts(T.events(s, d)).orderBy(col("user_id"), col("session_start"))
 

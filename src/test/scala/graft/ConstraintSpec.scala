@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Relational
-
 /** Reference constraint semantics (`/root/reference/db.cpp:404-419`,
   * boundary cases from `/root/reference/spec/main_spec.rb:44-89`):
   * id must be >= 0, username <= 32 chars, email <= 255 chars — accept AT
@@ -45,7 +43,7 @@ class ConstraintSpec extends SparkSpecBase {
   }
 
   test("constraint_check labels each violation with the reference's reason") {
-    val out = Relational.constraintCheck(spark, sf0001)
+    val out = SparkEntry.queries("constraint_check")(spark, sf0001)
     val byReason = out.groupBy("reject_reason").count()
       .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
     assert(byReason.contains(Some("ID must be positive.")))
@@ -72,7 +70,7 @@ class ConstraintSpec extends SparkSpecBase {
   }
 
   test("insert_append drops exactly the constraint-violating fresh rows") {
-    val out = Relational.insertAppend(spark, sf0001)
+    val out = SparkEntry.queries("insert_append")(spark, sf0001)
     val ids = out.select("id").collect().map(_.getLong(0)).toSet
     assert(ids.contains(900001L) && ids.contains(900002L))
     assert(!ids.contains(-1L))     // negative id rejected

@@ -10,7 +10,7 @@ import graft.ops.{Graph, Insights}
 class InsightsSpec extends SparkSpecBase {
 
   test("sample_balanced: per-class cap holds and selection is WindowGroupLimit") {
-    val df = Insights.sampleBalanced(spark, sf0001)
+    val df = SparkEntry.queries("sample_balanced")(spark, sf0001)
     val perLang = df.groupBy("lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val totals = graft.core.Tables.documents(spark, sf0001)
@@ -180,7 +180,7 @@ class InsightsSpec extends SparkSpecBase {
   }
 
   test("agg_moments: matches built-in mean/stddev/skewness within 1e-6") {
-    val rows = Insights.aggMoments(spark, sf0001).collect()
+    val rows = SparkEntry.queries("agg_moments")(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
       .toMap
     val builtin = graft.core.Tables.orders(spark, sf0001)

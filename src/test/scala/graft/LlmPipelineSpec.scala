@@ -11,7 +11,7 @@ import graft.ops.LlmPipeline
 class LlmPipelineSpec extends SparkSpecBase {
 
   test("dedup_exact groups every planted exact-duplicate with its source") {
-    val out = LlmPipeline.dedupExact(spark, sf0001)
+    val out = SparkEntry.queries("dedup_exact")(spark, sf0001)
     // planted: doc_id%10==0 re-appears at +100000 normalized-identical
     val dupGroups = out.filter(col("n_copies") >= 2)
     val keptIds = dupGroups.select("kept_id").collect().map(_.getLong(0))
@@ -135,7 +135,7 @@ class LlmPipelineSpec extends SparkSpecBase {
   }
 
   test("text_tokens: regex token count never exceeds whitespace+1 bound and bpe >= re") {
-    LlmPipeline.textTokens(spark, sf0001).collect().foreach { r =>
+    SparkEntry.queries("text_tokens")(spark, sf0001).collect().foreach { r =>
       val (ws, re, bpe) = (r.getLong(1), r.getLong(2), r.getLong(3))
       assert(re <= ws, "more regex words than whitespace tokens in word-soup corpus")
       assert(bpe >= re, "bounded-chunk pieces must be >= whole-word matches")
@@ -189,7 +189,7 @@ class LlmPipelineSpec extends SparkSpecBase {
   }
 
   test("text_pii: planted PII is counted and fully redacted") {
-    val out = LlmPipeline.textPii(spark, sf0001).collect()
+    val out = SparkEntry.queries("text_pii")(spark, sf0001).collect()
     out.foreach { r =>
       val (id, emails, ips, phones, red) =
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))

@@ -27,14 +27,14 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("key_lookup pushes the key predicate into the parquet scan") {
-    val p = planString(Relational.keyLookup(spark, sf0001))
+    val p = planString(SparkEntry.queries("key_lookup")(spark, sf0001))
     assert(p.contains("PushedFilters:") &&
       p.matches("(?s).*PushedFilters: \\[[^\\]]*l_orderkey[^\\]]*\\].*"),
       s"no pushed filter on l_orderkey:\n${p.take(2000)}")
   }
 
   test("filter_pred pushes range predicates into the scan") {
-    val p = planString(Relational.filterPred(spark, sf0001))
+    val p = planString(SparkEntry.queries("filter_pred")(spark, sf0001))
     assert(p.matches("(?s).*PushedFilters: \\[[^\\]]*l_shipdate[^\\]]*\\].*"),
       "shipdate range not pushed")
     assert(p.matches("(?s).*PushedFilters: \\[[^\\]]*l_discount[^\\]]*\\].*"),
@@ -58,7 +58,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("sort_limit_topk plans TakeOrderedAndProject, not a global sort") {
-    val p = planString(Relational.sortLimitTopk(spark, sf0001))
+    val p = planString(SparkEntry.queries("sort_limit_topk")(spark, sf0001))
     assert(p.contains("TakeOrderedAndProject"), "top-k not TakeOrderedAndProject")
   }
 
@@ -114,7 +114,8 @@ class PlanSpec extends SparkSpecBase {
 
   test("text_pii is shuffle-free before the declared sort") {
     // regex scrubbing must fuse into the scan: per-row work only
-    val o = LlmPipeline.textPii(spark, sf0001).queryExecution.optimizedPlan
+    val o = SparkEntry.queries("text_pii")(spark, sf0001)
+      .queryExecution.optimizedPlan
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     val bad = o.collect { case a: Aggregate => a; case j: Join => j }
     assert(bad.isEmpty, s"text_pii plans ${bad.size} agg/join nodes")
@@ -141,13 +142,13 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("subq_exists decorrelates to semi + anti joins (no per-row subquery)") {
-    val p = planString(graft.ops.Advanced.subqExists(spark, sf0001))
+    val p = planString(SparkEntry.queries("subq_exists")(spark, sf0001))
     assert(p.contains("LeftSemi"), "EXISTS did not become a left semi join")
     assert(p.contains("LeftAnti"), "NOT EXISTS did not become a left anti join")
   }
 
   test("subq_lateral plans a bounded WindowGroupLimit, not per-row subqueries") {
-    val p = planString(graft.ops.Advanced.subqLateral(spark, sf0001))
+    val p = planString(SparkEntry.queries("subq_lateral")(spark, sf0001))
     assert(p.contains("WindowGroupLimit"),
       "lateral top-k did not push a per-group limit below the window")
     assert(!p.contains("CartesianProduct") &&
@@ -437,7 +438,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("tpch_q6 is a pure pushed-down scan + agg: no join, filters at the reader") {
-    val p = planString(graft.ops.Composite.tpchQ6(spark, sf0001))
+    val p = planString(SparkEntry.queries("tpch_q6")(spark, sf0001))
     assert(p.matches("(?s).*PushedFilters: \\[[^\\]]*l_shipdate[^\\]]*\\].*"),
       "shipdate range not pushed to the scan")
     assert(!p.contains("Join"), "Q6 must not plan any join")
@@ -457,7 +458,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("tpch_q1 is scan + ONE two-phase aggregate: no join, shipdate pushed") {
-    val q = graft.ops.Composite.tpchQ1(spark, sf0001)
+    val q = SparkEntry.queries("tpch_q1")(spark, sf0001)
     val p = planString(q)
     assert(!p.contains("Join"), "Q1 must not plan any join")
     assert(p.matches("(?s).*PushedFilters: \\[[^\\]]*l_shipdate[^\\]]*\\].*"),
@@ -679,7 +680,7 @@ class PlanSpec extends SparkSpecBase {
 
   test("fn_regex and fn_url fuse into the scan (no agg, no join)") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    Seq("fn_regex" -> graft.ops.Functions.fnRegex(spark, sf0001),
+    Seq("fn_regex" -> SparkEntry.queries("fn_regex")(spark, sf0001),
       "fn_url" -> graft.ops.Functions.fnUrl(spark, sf0001)).foreach {
       case (name, df) =>
         val bad = df.queryExecution.optimizedPlan.collect {
@@ -690,7 +691,7 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("agg_hash is a two-phase hash aggregate (map-side partial)") {
-    val df = Relational.aggHash(spark, sf0001)
+    val df = SparkEntry.queries("agg_hash")(spark, sf0001)
     df.collect() // materialize THIS query execution so AQE finalizes stages
     val p = planString(df)
     val hashAggs = "HashAggregate".r.findAllIn(p).size
@@ -793,8 +794,8 @@ class PlanSpec extends SparkSpecBase {
 
   test("dedup_url and text_quality_lr fuse into the scan (one aggregate, no join)") {
     Seq(
-      "dedup_url" -> LlmPipeline.dedupUrl(spark, sf0001),
-      "text_quality_lr" -> LlmPipeline.textQualityLr(spark, sf0001)
+      "dedup_url" -> SparkEntry.queries("dedup_url")(spark, sf0001),
+      "text_quality_lr" -> SparkEntry.queries("text_quality_lr")(spark, sf0001)
     ).foreach { case (k, df) =>
       val p = planString(df)
       assert(!p.contains("Join"), s"$k: per-row gate grew a join")

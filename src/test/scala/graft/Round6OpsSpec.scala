@@ -143,7 +143,7 @@ class Round6OpsSpec extends SparkSpecBase {
   test("fn_mask: redaction preserves length, pseudonyms stay joinable") {
     val base = graft.core.Tables.customer(spark, sf0001)
       .filter(col("c_custkey") % 7 === 0)
-    val out = Functions.fnMask(spark, sf0001)
+    val out = SparkEntry.queries("fn_mask")(spark, sf0001)
     assert(out.count() == base.count())
     assert(out.select(countDistinct(col("pseudo_key"))).collect()
       .head.getLong(0) == base.count(),
@@ -213,7 +213,8 @@ class Round6OpsSpec extends SparkSpecBase {
   test("events_pattern: user counts bound match counts and the population") {
     val total = graft.core.Tables.events(spark, sf0001)
       .select(countDistinct(col("user_id"))).collect().head.getLong(0)
-    Advanced.eventsPattern(spark, sf0001).collect().foreach { r =>
+    val rows = SparkEntry.queries("events_pattern")(spark, sf0001).collect()
+    rows.foreach { r =>
       val (users, matches) = (r.getAs[Long]("n_users"), r.getAs[Long]("n_matches"))
       assert(users <= total && matches >= users,
         "each matched user contributes at least one match")

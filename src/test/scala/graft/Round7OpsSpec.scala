@@ -49,7 +49,7 @@ class Round7OpsSpec extends SparkSpecBase {
   }
 
   test("dedup_url: canonical groups partition the corpus; variants collapse") {
-    val df = LlmPipeline.dedupUrl(spark, sf0001)
+    val df = SparkEntry.queries("dedup_url")(spark, sf0001)
     val total = df.agg(sum(col("n_docs"))).head.getLong(0)
     val nDocs = graft.core.Tables.documents(spark, sf0001).count()
     assert(total == nDocs, "canonicalization must partition, not drop, docs")
@@ -66,7 +66,7 @@ class Round7OpsSpec extends SparkSpecBase {
   }
 
   test("text_quality_lr: keep is exactly the sign of the unrounded margin") {
-    val rows = LlmPipeline.textQualityLr(spark, sf0001)
+    val rows = SparkEntry.queries("text_quality_lr")(spark, sf0001)
       .select(col("z"), col("p_keep"), col("keep")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

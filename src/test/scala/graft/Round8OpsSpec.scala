@@ -125,7 +125,7 @@ class Round8OpsSpec extends SparkSpecBase {
   }
 
   test("sample_systematic: audit keys sit on the stride") {
-    val rows = Stats.sampleSystematic(spark, sf0001).collect()
+    val rows = SparkEntry.queries("sample_systematic")(spark, sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(3) % 40 == 7 && r.getLong(4) % 40 == 7)
@@ -268,7 +268,7 @@ class Round8OpsSpec extends SparkSpecBase {
     val total = T.documents(spark, sf0001).count()
     val nSources = T.documents(spark, sf0001).select(col("source"))
       .distinct().count()
-    val rows = graft.ops.Curation.corpusCard(spark, sf0001).collect()
+    val rows = SparkEntry.queries("corpus_card")(spark, sf0001).collect()
     assert(rows.map(_.getLong(1)).sum == total)
     rows.foreach { r =>
       assert(r.getDouble(4) > 0.0 && r.getDouble(4) <= 1.0, "distinct_frac")
@@ -329,7 +329,8 @@ class Round8OpsSpec extends SparkSpecBase {
 
   test("agg_weighted_median: half-weight property, member value, unweighted contrast") {
     val li = T.lineitem(spark, sf0001)
-    val rows = Stats.aggWeightedMedian(spark, sf0001).collect()
+    val rows =
+      SparkEntry.queries("agg_weighted_median")(spark, sf0001).collect()
     assert(rows.length == 3, "one row per return flag")
     rows.foreach { r =>
       val (flag, wm, tot) = (r.getString(0), r.getDouble(2), r.getDouble(3))
@@ -428,7 +429,7 @@ class Round8OpsSpec extends SparkSpecBase {
   }
 
   test("agg_skyline: frontier points are mutually non-dominating parts") {
-    val rows = graft.ops.Insights.aggSkyline(spark, sf0001).collect()
+    val rows = SparkEntry.queries("agg_skyline")(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getInt(2), r.getLong(3)))
     assert(rows.nonEmpty && rows.forall(_._4 >= 1))
     // within a brand no frontier point dominates another
@@ -517,7 +518,7 @@ class Round8OpsSpec extends SparkSpecBase {
   }
 
   test("meta_checksum: order/partition-invariant, flips on any edit") {
-    val base = Sources.metaChecksum(spark, sf0001).collect()
+    val base = SparkEntry.queries("meta_checksum")(spark, sf0001).collect()
     assert(base.map(_.getLong(1)).sum ==
       T.lineitem(spark, sf0001).count(), "counts partition the table")
     // repartitioning must not change any component of the checksum

@@ -304,7 +304,7 @@ class Round9OpsSpec extends SparkSpecBase {
   }
 
   test("agg_period_growth: lag windows leave early rows NULL, grid dense") {
-    val df = graft.ops.Advanced.aggPeriodGrowth(spark, sf0001)
+    val df = SparkEntry.queries("agg_period_growth")(spark, sf0001)
     val rows = df.collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getString(0)).foreach { case (_, rs) =>

@@ -2,13 +2,24 @@ package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 
 /** The SQL-text front door must be a faithful twin of the DataFrame path:
   * for every key in [[SqlCatalog.queriesSql]], running the SQL text against
   * the catalog views returns exactly the DataFrame query's schema and rows
   * (bit-exact — both paths share the decimal-sum/round determinism
-  * discipline, so even doubles must agree).
+  * discipline, so even doubles must agree). A key in
+  * [[SparkEntry.sqlServed]] has no DataFrame path (its `queries` entry is
+  * the text), so it is only run; the DuckDB oracle gate checks its rows.
+  * A twin that plans like its oracle-backed text is redundant and fails
+  * its family, as does a planner hint Spark drops.
   *
   * Split per FAMILY (VERDICT r12 #5): the former single 11-minute test
   * meant any failure needed a full replay to name its key; one test per
@@ -37,12 +48,53 @@ class SqlEntrySpec extends SparkSpecBase {
     * pass below stays fully sequential. */
   private val sequentialFamilies = Set("meta")
 
+  /** Two paths plan alike when their output schemas are equal, their
+    * optimized and executed plans are `sameResult`, and they carry the
+    * same join hints in plan order (`sameResult` ignores hints). */
+  private def plansAlike(a: DataFrame, b: DataFrame): Boolean = {
+    def hints(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j.hint }
+    val (qa, qb) = (a.queryExecution, b.queryExecution)
+    a.schema == b.schema &&
+      qa.optimizedPlan.sameResult(qb.optimizedPlan) &&
+      qa.executedPlan.sameResult(qb.executedPlan) &&
+      hints(a) == hints(b)
+  }
+
+  /** Runs `body` and returns the warnings Spark's `HintErrorLogger`
+    * logged meanwhile: a hint the analyzer cannot resolve or the
+    * optimizer cannot apply is dropped with only that log line. */
+  private def hintWarnings(body: => Unit): Seq[String] = {
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger")
+      .asInstanceOf[Logger]
+    assert(logger.isWarnEnabled, "hint warnings are not logged")
+    val seen = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hint-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    seen.asScala.toSeq
+  }
+
   private def compareKeys(keys: Seq[String],
-      via: String => (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      via: String => (SparkSession, String) => DataFrame,
       label: String, parallel: Boolean): Unit = {
     GraftExtensions.install(spark) // float_dot must be SQL-callable
     def check(k: String): Unit = {
       SparkSession.setActiveSession(spark)
+      if (SparkEntry.sqlServed(k)) via(k)(spark, sf0001).collect()
+      else compare(k)
+    }
+    def compare(k: String): Unit = {
       // collect the DataFrame side BEFORE building the twin: a script twin
       // re-runs the key's DDL (DROP + CTAS), which invalidates the lazy
       // DataFrame's file snapshot (meta_analyze read dropped parquet)
@@ -58,7 +110,25 @@ class SqlEntrySpec extends SparkSpecBase {
       expect.zip(got).zipWithIndex.foreach { case ((e, g), i) =>
         assert(e == g, s"$k: row $i differs — $label=$g df=$e")
       }
+      // keys without an oracle text (the sketches) keep their function:
+      // it is the only reference their text is checked against
+      if (label == "sql" && SparkEntry.oracleSql.contains(k) &&
+          plansAlike(df, twin))
+        fail(s"$k plans identically to its SQL text: add it to " +
+          "`SparkEntry.sqlServed`")
     }
+    val dropped = hintWarnings(runAll(keys, check, parallel))
+    assert(dropped.isEmpty, s"hints dropped while planning: $dropped")
+    // untimed hygiene between families: released HERE (never per-key, and
+    // never concurrently) so a truncated-lineage localCheckpoint can't be
+    // unpersisted out from under a still-running twin
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  private def runAll(keys: Seq[String], check: String => Unit,
+      parallel: Boolean): Unit =
     if (!parallel) keys.foreach(check)
     else {
       // 6 comparison lanes: each lane is 2 sub-second local jobs; wider
@@ -74,13 +144,6 @@ class SqlEntrySpec extends SparkSpecBase {
       assert(pool.awaitTermination(20, TimeUnit.MINUTES), "family timed out")
       if (!errors.isEmpty) throw errors.peek()
     }
-    // untimed hygiene between families: released HERE (never per-key, and
-    // never concurrently) so a truncated-lineage localCheckpoint can't be
-    // unpersisted out from under a still-running twin
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-  }
 
   // one test per family, registered at construction from the live catalog —
   // a new key lands in its family's test with no spec edit
@@ -111,6 +174,8 @@ class SqlEntrySpec extends SparkSpecBase {
     // every SQL entry must correspond to a declared query
     val undeclared = keys.filterNot(SparkEntry.queries.contains)
     assert(undeclared.isEmpty, s"SQL entries without declared query: $undeclared")
+    val textless = SparkEntry.sqlServed -- SqlCatalog.queriesSql.keySet
+    assert(textless.isEmpty, s"SQL-served keys without a SQL text: $textless")
     val undeclaredScript =
       SqlCatalog.queriesScript.keys.filterNot(SparkEntry.queries.contains)
     assert(undeclaredScript.isEmpty,
